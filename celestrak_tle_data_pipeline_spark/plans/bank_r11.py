@@ -41,9 +41,9 @@ fixed scale BEFORE any cross-partition DECIMAL fold; every final float
 rounds; possibly-negative-zero outputs append ``+ 0.0``; every top-k
 carries a total-order tiebreak.
 
-Scale shape: the pooled-ECDF machinery is the ranged global-cumsum
-device (range partition on value + broadcast prefix-sum offsets —
-``plans/common.prefix_offsets``), so no unpartitioned window touches
+Scale shape: the pooled-ECDF machinery is the value-bucket global
+cumsum (in-bucket windows + broadcast bucket offsets —
+``plans/common.exact_cumulative``), so no unpartitioned window touches
 row-grain data anywhere in this module; day-grain queries ride the
 bounded orders calendar (~2.4k rows) exactly like round10.py.
 """
@@ -54,7 +54,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from . import register as _live_register
-from .common import bucket_prefix_totals, dec, t
+from .common import dec, exact_cumulative, t
 
 BANK_QUERIES: dict = {}
 BANK_ORACLES: dict = {}
@@ -109,13 +109,8 @@ _POOL_SQL = """
 def _ecdf2(spark, sf_dir):
     """(value, h, f1, f2) at distinct-value grain plus per-row totals
     (n1, n2) — f1/f2 are EXACT cumulative counts of each sample through
-    the value. r19: the ranged device (repartitionByRange +
-    spark_partition_id, which needed a stability persist and paid a
-    boundary-sampling pass that re-ran the rollup) is replaced by the
-    deterministic value-bucket device — pid = floor(value / 4.0), a
-    domain constant (~141 buckets over the saturating 2-decimal value
-    domain), offsets AND totals from one symmetric
-    ``bucket_prefix_totals`` pass. Identical exact integers."""
+    the value, and n1/n2 the sample totals, from one
+    ``exact_cumulative`` pass."""
     e = t(spark, sf_dir, "events").where(
         F.col("event_type").isin("click", "purchase")
     )
@@ -129,27 +124,15 @@ def _ecdf2(spark, sf_dir):
             F.sum("g1").alias("c1"),
             F.sum(1 - F.col("g1")).alias("c2"),
         )
-        .withColumn(
-            "pid", F.floor(F.col("value") / 4.0).cast("bigint")
-        )
     )
-    ot = bucket_prefix_totals(
-        by_val.groupBy("pid").agg(
-            F.sum("c1").alias("p1"), F.sum("c2").alias("p2")
-        ),
-        {"f1": "p1", "f2": "p2"},
-        symmetric=True,
+    acc, _ = exact_cumulative(
+        by_val, ("value",), {"f1": F.sum("c1"), "f2": F.sum("c2")}
     )
-    w_local = (
-        Window.partitionBy("pid")
-        .orderBy("value")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return by_val.join(F.broadcast(ot), "pid").select(
+    return acc.select(
         "value",
         (F.col("c1") + F.col("c2")).alias("h"),
-        (F.sum("c1").over(w_local) + F.col("off_f1")).alias("f1"),
-        (F.sum("c2").over(w_local) + F.col("off_f2")).alias("f2"),
+        F.col("cum_f1").alias("f1"),
+        F.col("cum_f2").alias("f2"),
         F.col("tot_f1").cast("bigint").alias("n1"),
         F.col("tot_f2").cast("bigint").alias("n2"),
     )
@@ -203,7 +186,7 @@ def cramer_von_mises_watson(spark, sf_dir):
     EXACT DECIMAL(38,0) integer folds; T = Σh·d²/(N²·n1·n2) and
     U² = T − (Σh·d)²/(N³·n1·n2) divide once at the end.
 
-    Plan: the ranged ECDF device (no unpartitioned window), then one
+    Plan: the bucketed ECDF device (no unpartitioned window), then one
     summary fold — identical shuffle shape to ks_two_sample_values."""
     cum = _ecdf2(spark, sf_dir)
     d = F.col("f1") * F.col("n2") - F.col("f2") * F.col("n1")
@@ -274,7 +257,7 @@ def anderson_darling_two_sample(spark, sf_dir):
     integers per distinct value; each term's single division is
     per-row IEEE rounded to 9 before the DECIMAL(38,9) fold (the
     round-before-fold contract), so partial-aggregate order cannot
-    move a bit. Plan: ranged ECDF device + one fold."""
+    move a bit. Plan: bucketed ECDF device + one fold."""
     cum = _ecdf2(spark, sf_dir)
     nn = F.col("n1") + F.col("n2")
     hh = F.col("f1") + F.col("f2")
@@ -336,7 +319,7 @@ def kuiper_two_sample(spark, sf_dir):
     where the cut point of the CDF is arbitrary. Both extrema are
     exact cross-multiplied integers (the KS discipline); each is
     floored at 0 because sup(F−G) is never negative (the gap is 0 at
-    −∞). One ranged-ECDF pass + one summary fold."""
+    −∞). One bucketed-ECDF pass + one summary fold."""
     cum = _ecdf2(spark, sf_dir)
     d = F.col("f1") * F.col("n2") - F.col("f2") * F.col("n1")
     fold = cum.groupBy("n1", "n2").agg(
@@ -416,36 +399,29 @@ def mood_scale_ranks(spark, sf_dir):
     Var[T] = n1·n2(N+1)(N²−4)/180 (documented convention; ties in the
     2-decimal value grid are sparse).
 
-    Plan: the global-midrank device (r19: deterministic value-bucket
-    pid — floor(value / 4.0), a domain constant — replaces the range
-    partition + spark_partition_id, dropping the EVENT-GRAIN stability
-    persist and the boundary-sampling pass; offsets and both sample
-    totals come from one symmetric bucket_prefix_totals pass) + one
-    integer fold. Equal values share a bucket by construction, so
-    midranks are bit-identical."""
+    Plan: the global-midrank device (in-bucket ranks plus broadcast
+    bucket offsets and both sample totals from one
+    ``exact_cumulative`` pass) + one integer fold. Equal values share
+    a bucket by construction, so midranks are bit-identical."""
     e = t(spark, sf_dir, "events").where(
         F.col("event_type").isin("click", "purchase")
     )
-    pool = e.select(
-        "value",
-        (F.col("event_type") == "click").cast("int").alias("g1"),
-    ).withColumn("pid", F.floor(F.col("value") / 4.0).cast("bigint"))
-    ot = bucket_prefix_totals(
-        pool.groupBy("pid").agg(
-            F.count(F.lit(1)).alias("pn"),
-            F.sum("g1").cast("bigint").alias("p1"),
+    pool, w = exact_cumulative(
+        e.select(
+            "value",
+            (F.col("event_type") == "click").cast("int").alias("g1"),
         ),
-        {"pn": "pn", "p1": "p1"},
+        ("value",),
+        {"pn": F.count(F.lit(1)), "p1": F.sum("g1")},
     )
-    local_rank = F.rank().over(Window.partitionBy("pid").orderBy("value"))
     rank2 = (
-        (local_rank.cast("bigint") + F.col("off_pn")) * 2
+        (F.rank().over(w).cast("bigint") + F.col("off_pn")) * 2
         + F.count(F.lit(1))
         .over(Window.partitionBy("pid", "value"))
         .cast("bigint")
         - 1
     )
-    ranked = pool.join(F.broadcast(ot), "pid").select(
+    ranked = pool.select(
         "g1",
         rank2.alias("rank2"),
         F.col("tot_p1").cast("bigint").alias("n1"),
@@ -4574,43 +4550,21 @@ def anderson_darling_k_sample(spark, sf_dir):
     event-type domain is closed); every numerator is an exact integer
     and each distinct value contributes one 9-rounded term to the
     DECIMAL fold. Plan: one (value) rollup + bucket cumsums + fold
-    (r19: deterministic value-bucket pid replaces the range partition
-    + spark_partition_id, dropping the stability persist and the
-    boundary-sampling pass; all five offsets AND all five totals come
-    from one symmetric bucket_prefix_totals pass — exact integers,
-    bit-identical)."""
+    (all five cumulatives AND all five totals come from one
+    ``exact_cumulative`` pass — exact integers)."""
     e = t(spark, sf_dir, "events")
     aggs = [
         F.sum((F.col("event_type") == ty).cast("long")).alias(f"c{i}")
         for i, ty in enumerate(_TYPES)
     ]
-    by_val = (
-        e.groupBy("value")
-        .agg(*aggs)
-        .withColumn(
-            "pid", F.floor(F.col("value") / 4.0).cast("bigint")
-        )
+    acc, _ = exact_cumulative(
+        e.groupBy("value").agg(*aggs),
+        ("value",),
+        {f"f{i}": F.sum(f"c{i}") for i in range(5)},
     )
-    ot = bucket_prefix_totals(
-        by_val.groupBy("pid").agg(
-            *[F.sum(f"c{i}").alias(f"p{i}") for i in range(5)]
-        ),
-        {f"f{i}": f"p{i}" for i in range(5)},
-        symmetric=True,
-    )
-    w_local = (
-        Window.partitionBy("pid")
-        .orderBy("value")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    cum = by_val.join(F.broadcast(ot), "pid").select(
+    cum = acc.select(
         sum(F.col(f"c{i}") for i in range(5)).alias("h"),
-        *[
-            (F.sum(f"c{i}").over(w_local) + F.col(f"off_f{i}")).alias(
-                f"f{i}"
-            )
-            for i in range(5)
-        ],
+        *[F.col(f"cum_f{i}").alias(f"f{i}") for i in range(5)],
         *[
             F.col(f"tot_f{i}").cast("bigint").alias(f"n{i}")
             for i in range(5)

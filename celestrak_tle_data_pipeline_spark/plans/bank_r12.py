@@ -23,8 +23,8 @@ Determinism and scale disciplines are inherited unchanged from
 ``bank_r11`` (see that module's docstring): exact integer/DECIMAL
 folds, round-before-fold for float terms, ``+ 0.0`` on possibly
 negative-zero outputs, total-order top-k, and no unpartitioned window
-over row-grain data (the pooled-ECDF device below is the ranged
-global-cumsum construction from ``plans/common.prefix_offsets``).
+over row-grain data (the pooled-ECDF device below is the value-bucket
+global cumsum from ``plans/common.exact_cumulative``).
 """
 
 from __future__ import annotations
@@ -34,7 +34,7 @@ from pyspark.sql import functions as F
 
 from . import register as _live_register
 from .bank_r11 import _POOL_SQL
-from .common import dec, prefix_offsets, t
+from .common import dec, exact_cumulative, t
 
 BANK_QUERIES: dict = {}
 BANK_ORACLES: dict = {}
@@ -232,7 +232,7 @@ def _ecdf2cs(spark, sf_dir):
     per-group counts AT the value (c1/c2) and exact decimal(38,6)
     prefix sums of the value itself (s1/s2) — enough to evaluate any
     Σ|x-y|-class pair statistic from per-row closed forms, with the
-    same no-single-partition ranged construction."""
+    same no-single-partition ``exact_cumulative`` construction."""
     e = t(spark, sf_dir, "events").where(
         F.col("event_type").isin("click", "purchase")
     )
@@ -247,44 +247,29 @@ def _ecdf2cs(spark, sf_dir):
             F.sum(1 - F.col("g1")).alias("c2"),
         )
         .withColumn("dv", dec("value", 18, 6))
-        .repartitionByRange(8, F.col("value").asc())
-        .withColumn("pid", F.spark_partition_id())
-        .persist()
     )
-    part_tots = by_val.groupBy("pid").agg(
-        F.sum("c1").alias("p1"),
-        F.sum("c2").alias("p2"),
-        F.sum(F.col("c1") * F.col("dv")).alias("q1"),
-        F.sum(F.col("c2") * F.col("dv")).alias("q2"),
+    acc, _ = exact_cumulative(
+        by_val,
+        ("value",),
+        {
+            "f1": F.sum("c1"),
+            "f2": F.sum("c2"),
+            "s1": F.sum(F.col("c1") * F.col("dv")),
+            "s2": F.sum(F.col("c2") * F.col("dv")),
+        },
     )
-    offsets = prefix_offsets(
-        part_tots,
-        {"off1": "p1", "off2": "p2", "soff1": "q1", "soff2": "q2"},
-    )
-    w_local = (
-        Window.partitionBy("pid")
-        .orderBy("value")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    cum = by_val.join(F.broadcast(offsets), "pid").select(
+    return acc.select(
         "value",
         "dv",
         "c1",
         "c2",
-        (F.sum("c1").over(w_local) + F.col("off1")).alias("f1"),
-        (F.sum("c2").over(w_local) + F.col("off2")).alias("f2"),
-        (F.sum(F.col("c1") * F.col("dv")).over(w_local) + F.col("soff1"))
-        .cast("decimal(38,6)")
-        .alias("s1"),
-        (F.sum(F.col("c2") * F.col("dv")).over(w_local) + F.col("soff2"))
-        .cast("decimal(38,6)")
-        .alias("s2"),
+        F.col("cum_f1").alias("f1"),
+        F.col("cum_f2").alias("f2"),
+        F.col("cum_s1").cast("decimal(38,6)").alias("s1"),
+        F.col("cum_s2").cast("decimal(38,6)").alias("s2"),
+        F.col("tot_f1").cast("bigint").alias("n1"),
+        F.col("tot_f2").cast("bigint").alias("n2"),
     )
-    tots = by_val.agg(
-        F.sum("c1").cast("bigint").alias("n1"),
-        F.sum("c2").cast("bigint").alias("n2"),
-    )
-    return cum.crossJoin(F.broadcast(tots))
 
 
 @register(
@@ -325,7 +310,7 @@ def wasserstein1_two_sample(spark, sf_dir):
     The signed companion Σ v_i·(d_{i-1} − d_i) = E[purchase] −
     E[click] ships as a mean-gap cross-check.
 
-    Plan: value-grain rollup → ranged prefix device → one decimal
+    Plan: value-grain rollup → ``exact_cumulative`` → one decimal
     fold. No pair join, no single-partition window, shuffle bounded
     by the distinct-value grid."""
     cum = _ecdf2cs(spark, sf_dir)
@@ -409,7 +394,7 @@ def energy_distance_two_sample(spark, sf_dir):
     counts, exact decimal(38,6) prefix value sums, one decimal fold —
     no O(n²) pair join at any scale.
 
-    Plan: value-grain rollup → ranged prefix device (counts + value
+    Plan: value-grain rollup → ``exact_cumulative`` (counts + value
     sums) → one decimal fold; divisions only in the final projection."""
     cum = _ecdf2cs(spark, sf_dir)
     f1p = F.col("f1") - F.col("c1")
@@ -3452,38 +3437,27 @@ def siegel_tukey_scale(spark, sf_dir):
     squared ranks of deviations): Siegel-Tukey is the one whose null
     is EXACTLY the Wilcoxon null, so its moments are exact. Position
     is a global row number over the documented (value, g1) total
-    order, built with the ranged device (range partition + broadcast
-    prefix offsets — tie blocks are contiguous by construction, so
-    each group's score multiset is deterministic); the alternating
-    score is a closed-form integer of (i, N). z uses the exact
-    Wilcoxon moments. Plan: ranged row-number, map-side score, one
-    fold."""
+    order, the running count of ``exact_cumulative`` (in-bucket counts
+    plus broadcast bucket offsets — tie blocks are contiguous by
+    construction, so each group's score multiset is deterministic);
+    the alternating score is a closed-form integer of (i, N). z uses
+    the exact Wilcoxon moments. Plan: bucketed row-number, map-side
+    score, one fold."""
     e = t(spark, sf_dir, "events").where(
         F.col("event_type").isin("click", "purchase")
     )
-    pool = (
+    acc, _ = exact_cumulative(
         e.select(
             "value",
             (F.col("event_type") == "click").cast("long").alias("g1"),
-        )
-        .repartitionByRange(8, F.col("value").asc(), F.col("g1").asc())
-        .withColumn("pid", F.spark_partition_id())
-        .persist()
+        ),
+        ("value", "g1"),
+        {"i": F.count(F.lit(1))},
     )
-    counts = pool.groupBy("pid").agg(F.count(F.lit(1)).alias("pn"))
-    offsets = prefix_offsets(counts, {"offset": "pn"})
-    nn = pool.agg(F.count(F.lit(1)).cast("bigint").alias("n"))
-    local = F.row_number().over(
-        Window.partitionBy("pid").orderBy("value", "g1")
-    )
-    pos = (
-        pool.join(F.broadcast(offsets), "pid")
-        .crossJoin(F.broadcast(nn))
-        .select(
-            "g1",
-            (local.cast("bigint") + F.col("offset")).alias("i"),
-            "n",
-        )
+    pos = acc.select(
+        "g1",
+        F.col("cum_i").alias("i"),
+        F.col("tot_i").cast("bigint").alias("n"),
     )
     i = F.col("i")
     n = F.col("n")
@@ -3575,9 +3549,10 @@ def conover_squared_ranks(spark, sf_dir):
     which is why Conover is the scale test practitioners default to.
     Deviations are |integer cents - rational group mean| rounded at
     1e-9 (identical IEEE inputs in both engines), midranks come from
-    the ranged global-rank device as exact 2x-scaled integers, and
+    ``exact_cumulative``'s in-bucket ranks as exact 2x-scaled
+    integers, and
     the squared-rank fold rides DECIMAL(38,0) (rank2^2 sums pass
-    int64 at sf100). Plan: one 2-row group-mean broadcast, ranged
+    int64 at sf100). Plan: one 2-row group-mean broadcast, bucketed
     midranks, one fold."""
     e = t(spark, sf_dir, "events").where(
         F.col("event_type").isin("click", "purchase")
@@ -3590,33 +3565,22 @@ def conover_squared_ranks(spark, sf_dir):
         F.sum("x").cast("bigint").alias("s"),
         F.count(F.lit(1)).cast("bigint").alias("c"),
     )
-    dev = (
-        pool.join(F.broadcast(gm), pool.g1 == gm.g)
-        .select(
-            "g1",
-            F.round(
-                F.abs(F.col("x") - F.col("s") * 1.0 / F.col("c"))
-                / 100.0,
-                9,
-            ).alias("d"),
-        )
-        .repartitionByRange(8, F.col("d").asc())
-        .withColumn("pid", F.spark_partition_id())
-        .persist()
+    dev = pool.join(F.broadcast(gm), pool.g1 == gm.g).select(
+        "g1",
+        F.round(
+            F.abs(F.col("x") - F.col("s") * 1.0 / F.col("c")) / 100.0,
+            9,
+        ).alias("d"),
     )
-    counts = dev.groupBy("pid").agg(F.count(F.lit(1)).alias("pn"))
-    offsets = prefix_offsets(counts, {"offset": "pn"})
-    local_rank = F.rank().over(Window.partitionBy("pid").orderBy("d"))
+    acc, w = exact_cumulative(dev, ("d",), {"n": F.count(F.lit(1))})
     rank2 = (
-        (local_rank.cast("bigint") + F.col("offset")) * 2
+        (F.rank().over(w).cast("bigint") + F.col("off_n")) * 2
         + F.count(F.lit(1))
         .over(Window.partitionBy("pid", "d"))
         .cast("bigint")
         - 1
     )
-    ranked = dev.join(F.broadcast(offsets), "pid").select(
-        "g1", rank2.alias("rank2")
-    )
+    ranked = acc.select("g1", rank2.alias("rank2"))
     s = ranked.agg(
         F.sum("g1").cast("bigint").alias("n1"),
         F.sum(1 - F.col("g1")).cast("bigint").alias("n0"),
@@ -4776,39 +4740,32 @@ def ks_exponential_gaps(spark, sf_dir):
     continuous comparison lives). The memorylessness check underneath
     the Poisson-arrival assumptions the registry's rate tests make —
     a big D says arrivals cluster (sessions), so exponential-based
-    capacity math is wrong. ECDF counts are exact integers from the
-    ranged cumulative device over the distinct-gap grid; the fitted
-    CDF is one IEEE expression on the exact (n, s) integers rounded
-    at 1e-12; D is a MAX fold (order-free). Plan: per-user lag,
-    distinct-gap rollup, ranged cumsum, one fold."""
+    capacity math is wrong. ECDF counts are exact integers from
+    ``exact_cumulative`` over the distinct-gap grid (which also
+    carries the (n, s) totals); the fitted CDF is one IEEE expression
+    on the exact (n, s) integers rounded at 1e-12; D is a MAX fold
+    (order-free). Plan: per-user lag, distinct-gap rollup, bucketed
+    cumsum, one fold."""
     e = t(spark, sf_dir, "events")
     wu = Window.partitionBy("user_id").orderBy("ts", "event_id")
     us = F.unix_micros(F.col("ts"))
     seq = e.select((us - F.lag(us).over(wu)).alias("gap")).where(
         F.col("gap").isNotNull() & (F.col("gap") > 0)
     )
-    by_val = (
-        seq.groupBy("gap")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
-        .repartitionByRange(8, F.col("gap").asc())
-        .withColumn("pid", F.spark_partition_id())
-        .persist()
+    by_val = seq.groupBy("gap").agg(
+        F.count(F.lit(1)).cast("bigint").alias("c")
     )
-    tot = by_val.agg(
-        F.sum("c").cast("bigint").alias("n"),
-        F.sum(F.col("gap") * F.col("c")).cast("bigint").alias("s"),
+    acc, _ = exact_cumulative(
+        by_val,
+        ("gap",),
+        {"f": F.sum("c"), "s": F.sum(F.col("gap") * F.col("c"))},
     )
-    counts = by_val.groupBy("pid").agg(F.sum("c").alias("pn"))
-    offsets = prefix_offsets(counts, {"offset": "pn"})
-    local_cum = F.sum("c").over(
-        Window.partitionBy("pid")
-        .orderBy("gap")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    cum = by_val.join(F.broadcast(offsets), "pid").select(
+    cum = acc.select(
         "gap",
         "c",
-        (local_cum + F.col("offset")).cast("bigint").alias("f"),
+        F.col("cum_f").cast("bigint").alias("f"),
+        F.col("tot_f").cast("bigint").alias("n"),
+        F.col("tot_s").cast("bigint").alias("s"),
     )
     cdf = F.round(
         1.0
@@ -4817,7 +4774,7 @@ def ks_exponential_gaps(spark, sf_dir):
         ),
         12,
     )
-    d = cum.crossJoin(F.broadcast(tot)).agg(
+    d = cum.groupBy("n", "s").agg(
         F.max(
             F.greatest(
                 F.abs(F.col("f") * 1.0 / F.col("n") - cdf),
@@ -4827,7 +4784,7 @@ def ks_exponential_gaps(spark, sf_dir):
             )
         ).alias("ks")
     )
-    return tot.crossJoin(F.broadcast(d)).select(
+    return d.select(
         F.col("n").alias("n_gaps"),
         F.round(F.col("s") / (F.col("n") * 3600.0e6), 6).alias(
             "mean_gap_h"

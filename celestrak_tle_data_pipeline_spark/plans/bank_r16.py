@@ -60,7 +60,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from . import register as _live_register
-from .common import bucket_prefix_totals, dec, t
+from .common import dec, exact_cumulative, t
 
 BANK_QUERIES: dict = {}
 BANK_ORACLES: dict = {}
@@ -2641,31 +2641,18 @@ def fligner_killeen_scale(spark, sf_dir):
     # r19: the per-group and pooled cumulatives rode |groups|-task and
     # single-task windows over DATA-GRAIN grids (the order-price cents
     # domain and its deviation domain both grow ~10x per SF decade
-    # until saturation); both now ride the value-bucket device, and
-    # the deviation-grid persist is dropped (its consumers read the
+    # until saturation); both now ride exact_cumulative, and the
+    # deviation-grid persist is dropped (its consumers read the
     # reused exchanges instead of a data-grain cache). Identical
     # exact integers.
     gg = pts.groupBy("g", "v").agg(
         F.count(F.lit(1)).cast("bigint").alias("c")
     )
-    gbk = gg.withColumn("pid", F.expr("v div 65536"))
-    got = bucket_prefix_totals(
-        gbk.groupBy("g", "pid").agg(
-            F.sum("c").cast("bigint").alias("pn")
-        ),
-        {"pn": "pn"},
-        symmetric=True,
-        keys=("g",),
-    )
-    wgk = (
-        Window.partitionBy("g", "pid")
-        .orderBy("v")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    gcum = gbk.join(F.broadcast(got), ["g", "pid"]).select(
+    gacc, _ = exact_cumulative(gg, ("v",), {"pn": F.sum("c")}, keys=("g",))
+    gcum = gacc.select(
         "g",
         "v",
-        (F.sum("c").over(wgk) + F.col("off_pn")).alias("cc"),
+        F.col("cum_pn").alias("cc"),
         F.col("tot_pn").alias("ng"),
     )
     med = (
@@ -2680,23 +2667,11 @@ def fligner_killeen_scale(spark, sf_dir):
         F.count(F.lit(1)).cast("bigint").alias("c")
     )
     wg = cells.groupBy("w").agg(F.sum("c").cast("bigint").alias("h"))
-    wbk = wg.withColumn("pid", F.expr("w div 65536"))
-    wot = bucket_prefix_totals(
-        wbk.groupBy("pid").agg(F.sum("h").cast("bigint").alias("ph")),
-        {"ph": "ph"},
-        symmetric=True,
-    )
-    wloc = (
-        Window.partitionBy("pid")
-        .orderBy("w")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    cum = wbk.join(F.broadcast(wot), "pid").select(
+    wacc, _ = exact_cumulative(wg, ("w",), {"ph": F.sum("h")})
+    cum = wacc.select(
         "w",
         "h",
-        (F.sum("h").over(wloc) + F.col("off_ph") - F.col("h"))
-        .cast("bigint")
-        .alias("below"),
+        (F.col("cum_ph") - F.col("h")).cast("bigint").alias("below"),
         F.col("tot_ph").cast("bigint").alias("n"),
     )
     scored = cum.select(
@@ -4759,27 +4734,14 @@ def qq_ventile_fit(spark, sf_dir):
     grid = pts.groupBy("g", "v").agg(
         F.count(F.lit(1)).cast("bigint").alias("c")
     )
-    # r19: the per-group windows pushed the data-grain cents grid
-    # through TWO tasks at any scale; per-(g, bucket) windows + the
-    # keyed symmetric bucket_prefix_totals pass (the lorenz device).
-    gbk = grid.withColumn("pid", F.expr("v div 65536"))
-    got = bucket_prefix_totals(
-        gbk.groupBy("g", "pid").agg(
-            F.sum("c").cast("bigint").alias("pn")
-        ),
-        {"pn": "pn"},
-        symmetric=True,
-        keys=("g",),
-    )
-    wgk = (
-        Window.partitionBy("g", "pid")
-        .orderBy("v")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    cum = gbk.join(F.broadcast(got), ["g", "pid"]).select(
+    # per-(g, bucket) windows (exact_cumulative keyed by g, the
+    # lorenz device), not per-group windows: |groups| would cap
+    # parallelism at two tasks
+    acc, _ = exact_cumulative(grid, ("v",), {"pn": F.sum("c")}, keys=("g",))
+    cum = acc.select(
         "g",
         "v",
-        (F.sum("c").over(wgk) + F.col("off_pn")).alias("cc"),
+        F.col("cum_pn").alias("cc"),
         F.col("tot_pn").alias("ng"),
     )
     ks = spark.range(1, 20).select(

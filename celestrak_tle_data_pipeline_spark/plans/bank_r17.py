@@ -28,7 +28,7 @@ stickiness/heaping, funnel plots, assortment churn, c-chart,
 CUSUM+ARL), population and diversity bounds (Chao-Mh, ACE, beta
 diversity, Hill numbers, Blau/Rao/Leik-adjacent panels), robust and
 rank machinery (van Elteren, GMD, medcouple boxplot, Kendall partial
-tau, concentration index on the ranged-rank device), sequence and
+tau, concentration index on ``exact_cumulative``), sequence and
 graph structure (Markov order LR, SAX motifs, sojourns, variogram,
 k-truss, spectral radius), and influence/effect panels (DFFITS,
 PAF, difference-sign, day-of-month, dow stability, Feltz-Miller,
@@ -58,7 +58,7 @@ from pyspark.sql import functions as F
 from . import register as _live_register
 from .bank_r15 import _acklam_col, _acklam_sql  # noqa: E402
 from .bank_r16 import _CELLP_SQL, _cellp  # noqa: E402
-from .common import bucket_prefix_totals, dec, prefix_offsets, t
+from .common import dec, exact_cumulative, t
 
 BANK_QUERIES: dict = {}
 BANK_ORACLES: dict = {}
@@ -2448,48 +2448,23 @@ def shorrocks_mobility_index(spark, sf_dir):
         .alias("half"),
         (dec("o_totalprice", 18, 2) * 100).cast("bigint").alias("cents"),
     )
-    # r19: the customer-grain spend persist is dropped (guide §5 —
-    # recompute from the reused exchange beats a fact-width cache)
-    # and the per-half windows, which pushed the whole customer-grain
-    # grid through TWO tasks at any scale, ride per-(half, bucket)
-    # windows with per-half offsets AND totals from one symmetric
-    # keyed bucket_prefix_totals pass (the lorenz_dominance device).
-    # Identical exact integers.
+    # per-(half, bucket) windows (exact_cumulative keyed by half, the
+    # lorenz_dominance device), not per-half windows: |halves| would
+    # cap parallelism at two tasks
     spend = lab.groupBy("u", "half").agg(
         F.sum("cents").cast("bigint").alias("m")
     )
     grid = spend.groupBy("half", F.col("m").alias("v")).agg(
         F.count(F.lit(1)).cast("bigint").alias("c")
     )
-    gbounds = grid.agg(
-        F.min("v").alias("vmin"),
-        (F.floor((F.max("v") - F.min("v")) / 1024) + 1)
-        .cast("bigint")
-        .alias("w"),
+    acc, _ = exact_cumulative(
+        grid, ("v",), {"n": F.sum("c")}, keys=("half",)
     )
-    gbk = grid.crossJoin(F.broadcast(gbounds)).select(
-        "half", "v", "c", F.expr("(v - vmin) div w").alias("pid")
-    )
-    ot = bucket_prefix_totals(
-        gbk.groupBy("half", "pid").agg(
-            F.sum("c").cast("bigint").alias("pn")
-        ),
-        {"pn": "pn"},
-        symmetric=True,
-        keys=("half",),
-    )
-    wb = (
-        Window.partitionBy("half", "pid")
-        .orderBy("v")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    cum = gbk.join(F.broadcast(ot), ["half", "pid"]).select(
+    cum = acc.select(
         "half",
         "v",
-        (F.coalesce(F.sum("c").over(wb), F.lit(0)) + F.col("off_pn"))
-        .cast("bigint")
-        .alias("below"),
-        F.col("tot_pn").cast("bigint").alias("n"),
+        (F.col("cum_n") - F.col("c")).cast("bigint").alias("below"),
+        F.col("tot_n").cast("bigint").alias("n"),
     )
     cum2 = cum.select(
         F.col("half").alias("ch"),
@@ -4632,18 +4607,17 @@ def spiegelhalter_z_calibration(spark, sf_dir):
 
     Exactness: decile bins come from the exact training-half grid;
     bin rates round at 10 dp; both folds carry 10-dp rounded terms
-    through DECIMAL(28,10). Plan: one half-split, one RANGED grid
+    through DECIMAL(28,10). Plan: one half-split, one bucketed grid
     cumulative, two joins, one fold.
 
     Scale (r14 rewrite): the training n_chars grid grows with volume
     until the length domain saturates, and the original global
     Window.orderBy cumulative over it re-probed at 9.73x per 64x
     (SCALING.md r13 close 5.01, r14 re-probe 9.73 — a repeat mover).
-    The exclusive prefix count now rides the ranged-cumulative device
-    (repartitionByRange on v + per-partition window + prefix_offsets
-    broadcast, the ks_exponential_gaps pattern), and the grid total n
-    is a scalar agg broadcast instead of a global window — no
-    single-partition exchange anywhere in the plan."""
+    The exclusive prefix count now rides ``exact_cumulative``
+    (in-bucket window + broadcast bucket offsets, the
+    ks_exponential_gaps pattern), which also carries the grid total
+    n — no single-partition exchange anywhere in the plan."""
     d = t(spark, sf_dir, "documents")
     cut = d.agg(
         ((F.min("doc_id") + F.max("doc_id")) / 2)
@@ -4657,36 +4631,17 @@ def spiegelhalter_z_calibration(spark, sf_dir):
         F.when(F.col("doc_id") <= F.col("cut"), 1)
         .otherwise(0)
         .alias("train"),
-    ).persist()
+    )
     grid = (
         docs.where(F.col("train") == 1)
         .groupBy(F.col("n_chars").alias("v"))
         .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
-        .repartitionByRange(8, F.col("v").asc())
-        .withColumn("pid", F.spark_partition_id())
-        .persist()
     )
-    counts = grid.groupBy("pid").agg(
-        F.sum("c").cast("bigint").alias("pn")
-    )
-    offsets = prefix_offsets(counts, {"offset": "pn"})
-    tot = grid.agg(F.sum("c").cast("bigint").alias("n"))
-    local_head = (
-        F.sum("c").over(
-            Window.partitionBy("pid")
-            .orderBy("v")
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-        - F.col("c")
-    )
-    cum = (
-        grid.join(F.broadcast(offsets), "pid")
-        .crossJoin(F.broadcast(tot))
-        .select(
-            "v",
-            (local_head + F.col("offset")).alias("head"),
-            "n",
-        )
+    acc, _ = exact_cumulative(grid, ("v",), {"n": F.sum("c")})
+    cum = acc.select(
+        "v",
+        (F.col("cum_n") - F.col("c")).alias("head"),
+        F.col("tot_n").cast("bigint").alias("n"),
     )
     binned = cum.select(
         "v",
@@ -4887,11 +4842,11 @@ PLAN_AUDIT_NOTES.update(
     {
         "spiegelhalter_z_calibration": (
             "INFO: no single-partition window since the r14 rewrite "
-            "— the training-half n_chars cumulative rides the "
-            "ranged-cumulative device (repartitionByRange + "
-            "per-partition window + prefix_offsets; 64x re-probe "
-            "0.59); note kept for the history, excluded from the "
-            "effective allowlist"
+            "— the training-half n_chars cumulative rides "
+            "exact_cumulative (in-bucket window + broadcast bucket "
+            "offsets; the r14 ranged device re-probed 0.59 at 64x); "
+            "note kept for the history, excluded from the effective "
+            "allowlist"
         ),
         "forecast_combination_imse": (
             "two lag windows over the zero-filled calendar-day grid "
@@ -6448,17 +6403,14 @@ def concentration_index_health(spark, sf_dir):
     spend grid. The customer-equity readout of the funnel/EB
     league-table family.
 
-    Scale: the spend-grid cumulative uses the RANGED-RANK device
-    (repartitionByRange + prefix_offsets — common.py) because
-    distinct customer spends grow with volume; the 64x probe
-    caught the naive global row_number at 15x over its band and
-    this rewrite is the r7-precedent fix. Exactness: per-customer
-    rates round at 10 dp; midrank weights are exact integers; the
-    weighted fold carries 8-dp rounded terms through DECIMAL.
-    Plan: one customer rollup, one spend-grid rollup, the ranged
-    cumulative, one fold."""
-    from .common import prefix_offsets
-
+    Scale: the spend-grid cumulative uses ``exact_cumulative``
+    (in-bucket window + broadcast bucket offsets — common.py)
+    because distinct customer spends grow with volume; the 64x probe
+    caught the naive global row_number at 15x over its band.
+    Exactness: per-customer rates round at 10 dp; midrank weights
+    are exact integers; the weighted fold carries 8-dp rounded terms
+    through DECIMAL. Plan: one customer rollup, one spend-grid
+    rollup, the bucketed cumulative, one fold."""
     o = t(spark, sf_dir, "orders")
     cust = o.groupBy(F.col("o_custkey").alias("u")).agg(
         F.sum((dec("o_totalprice", 18, 2) * 100).cast("bigint"))
@@ -6480,27 +6432,16 @@ def concentration_index_health(spark, sf_dir):
             .cast("double")
             .alias("sy"),
         )
-        .repartitionByRange(8, F.col("v").asc())
-        .withColumn("pid", F.spark_partition_id())
-        .persist()
     )
-    counts = cells.groupBy("pid").agg(F.sum("c").alias("pn"))
-    offsets = prefix_offsets(counts, {"offset": "pn"})
-    local_cum = F.sum("c").over(
-        Window.partitionBy("pid")
-        .orderBy("v")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    cum = cells.join(F.broadcast(offsets), "pid").select(
+    acc, _ = exact_cumulative(cells, ("v",), {"n": F.sum("c")})
+    cum = acc.select(
         "v",
         "c",
         "sy",
-        (local_cum + F.col("offset") - F.col("c"))
-        .cast("bigint")
-        .alias("below"),
+        (F.col("cum_n") - F.col("c")).cast("bigint").alias("below"),
+        F.col("tot_n").cast("bigint").alias("n"),
     )
-    n_ = cells.agg(F.sum("c").cast("bigint").alias("n"))
-    fold = cum.crossJoin(F.broadcast(n_)).agg(
+    fold = cum.agg(
         F.max("n").cast("bigint").alias("n"),
         F.sum(F.round("sy", 10).cast("decimal(28,10)"))
         .cast("double")

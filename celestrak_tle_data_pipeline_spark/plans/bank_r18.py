@@ -36,8 +36,8 @@ dominance) a 100 TB pipeline runs on its own readouts.
 Determinism disciplines inherited unchanged (bank_r11..r17
 docstrings): exact integer/DECIMAL folds, round-before-fold on every
 float aggregate, ``+ 0.0`` on possibly-negative-zero outputs,
-total-order top-k/argmax tiebreaks, bounded-domain windows or the
-ranged-rank device, the shared Abramowitz-Stegun erfc tree, and the
+total-order top-k/argmax tiebreaks, bounded-domain windows or
+``exact_cumulative``, the shared Abramowitz-Stegun erfc tree, and the
 Acklam inverse-normal device.
 
 Cohort naming (ADVICE r14): the binary day split used across these
@@ -55,7 +55,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from . import register as _live_register
-from .common import bucket_prefix_totals, dec, t
+from .common import dec, exact_cumulative, t
 
 BANK_QUERIES: dict = {}
 BANK_ORACLES: dict = {}
@@ -202,44 +202,19 @@ def lorenz_dominance_check(spark, sf_dir):
         F.count(F.lit(1)).cast("bigint").alias("c"),
         F.sum("m").cast("bigint").alias("tv"),
     )
-    # r19: the per-half windows put the whole customer-grain grid
-    # through TWO tasks (|halves| is the parallelism ceiling at any
-    # scale). Per-(half, bucket) windows + the keyed value-bucket
-    # device (bounds-derived width, offsets AND per-half totals from
-    # one symmetric bucket_prefix_totals pass) — identical exact
-    # integers.
-    bounds = grid.agg(
-        F.min("v").alias("vmin"),
-        (F.floor((F.max("v") - F.min("v")) / 1024) + 1)
-        .cast("bigint")
-        .alias("w"),
-    )
-    gb = grid.crossJoin(F.broadcast(bounds)).select(
-        "half", "v", "c", "tv", F.expr("(v - vmin) div w").alias("pid")
-    )
-    ot = bucket_prefix_totals(
-        gb.groupBy("half", "pid").agg(
-            F.sum("c").cast("bigint").alias("pn"),
-            F.sum("tv").cast("bigint").alias("ptv"),
-        ),
-        {"pn": "pn", "ptv": "ptv"},
-        symmetric=True,
+    # per-(half, bucket) windows (exact_cumulative keyed by half), not
+    # per-half windows: |halves| would cap parallelism at two tasks
+    acc, _ = exact_cumulative(
+        grid,
+        ("v",),
+        {"pn": F.sum("c"), "ptv": F.sum("tv")},
         keys=("half",),
     )
-    w = (
-        Window.partitionBy("half", "pid")
-        .orderBy("v")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    cum = gb.join(F.broadcast(ot), ["half", "pid"]).select(
+    cum = acc.select(
         "half",
         "v",
-        (F.sum("c").over(w) + F.col("off_pn"))
-        .cast("bigint")
-        .alias("cc"),
-        (F.sum("tv").over(w) + F.col("off_ptv"))
-        .cast("bigint")
-        .alias("cv"),
+        F.col("cum_pn").cast("bigint").alias("cc"),
+        F.col("cum_ptv").cast("bigint").alias("cv"),
         F.col("tot_pn").cast("bigint").alias("n"),
         F.col("tot_ptv").cast("bigint").alias("tot"),
     )
@@ -377,28 +352,19 @@ def dkw_band_lognormal_check(spark, sf_dir):
 
     Exactness: mu/sigma are 10-dp rounded log-moment folds; ECDF
     counts are exact on the cents grid; the sup is an order-free
-    MAX of 12-dp rounded terms. Plan: one fold, one RANGED grid
+    MAX of 12-dp rounded terms. Plan: one fold, one bucketed grid
     cumulative, one fold.
 
     Scale (r18 optimization): the order-value cents grid is
     near-unique per order and grows with volume (the kakwani mover
     class), so the global ``Window.orderBy(v)`` ECDF cumulative +
-    whole-frame n single-tasked the grid. The inclusive prefix now
-    rides the fixed-width value-bucket device (pid = v div W, W a
-    domain constant — the o_totalprice cents domain saturates like
-    the kakwani price grid), in-bucket window + ``prefix_offsets``
-    broadcast; n is a scalar-agg broadcast. head/f values are
-    bit-identical (exact BIGINT sums, order-independent)."""
+    whole-frame n single-tasked the grid. The inclusive prefix and n
+    now ride ``exact_cumulative`` (in-bucket window + broadcast
+    bucket offsets and total). head/f values are bit-identical (exact
+    BIGINT sums, order-independent)."""
     o = t(spark, sf_dir, "orders")
     cents = (dec("o_totalprice", 18, 2) * 100).cast("bigint")
-    # the filter is written as the exact predicate the pid equi-join
-    # infers (isnotnull(v div W)), so every branch — including the
-    # ones with no join above them — pushes the SAME scan predicate
-    # and the whole query shares one scan subtree (a plain
-    # isnotnull(v) is weaker and does NOT elide the inferred one)
-    pts = o.select(cents.alias("v")).where(
-        F.expr("(v div 65536) is not null")
-    )
+    pts = o.select(cents.alias("v")).where(F.col("v").isNotNull())
     grid = pts.groupBy("v").agg(
         F.count(F.lit(1)).cast("bigint").alias("c")
     )
@@ -438,26 +404,10 @@ def dkw_band_lognormal_check(spark, sf_dir):
             10,
         ).alias("sig"),
     )
-    # fixed bucket width: the o_totalprice cents domain saturates like
-    # the kakwani price grid, so W is a domain-derived constant (~850
-    # buckets at saturation) and no bounds pass is needed. r19:
-    # offsets AND n from one symmetric bucket_prefix_totals pass (see
-    # kakwani); the isnotnull(v) filter above canonicalizes every
-    # branch's scan.
-    gb = grid.withColumn("pid", F.expr("v div 65536"))
-    ot = bucket_prefix_totals(
-        gb.groupBy("pid").agg(F.sum("c").cast("bigint").alias("pn")),
-        {"pn": "pn"},
-        symmetric=True,
-    )
-    local_f = F.sum("c").over(
-        Window.partitionBy("pid")
-        .orderBy("v")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    cum = gb.join(F.broadcast(ot), "pid").select(
+    acc, _ = exact_cumulative(grid, ("v",), {"pn": F.sum("c")})
+    cum = acc.select(
         "v",
-        (local_f + F.col("off_pn")).cast("bigint").alias("f"),
+        F.col("cum_pn").cast("bigint").alias("f"),
         F.col("tot_pn").alias("n"),
     )
     z = (F.log(F.col("v") / 100000.0) - F.col("mu")) / F.col("sig")
@@ -1770,44 +1720,19 @@ def generalized_lorenz_dominance(spark, sf_dir):
         F.count(F.lit(1)).cast("bigint").alias("c"),
         F.sum("m").cast("bigint").alias("tv"),
     )
-    # r19: the per-half windows put the whole customer-grain grid
-    # through TWO tasks (|halves| is the parallelism ceiling at any
-    # scale). Per-(half, bucket) windows + the keyed value-bucket
-    # device (bounds-derived width, offsets AND per-half totals from
-    # one symmetric bucket_prefix_totals pass) — identical exact
-    # integers.
-    bounds = grid.agg(
-        F.min("v").alias("vmin"),
-        (F.floor((F.max("v") - F.min("v")) / 1024) + 1)
-        .cast("bigint")
-        .alias("w"),
-    )
-    gb = grid.crossJoin(F.broadcast(bounds)).select(
-        "half", "v", "c", "tv", F.expr("(v - vmin) div w").alias("pid")
-    )
-    ot = bucket_prefix_totals(
-        gb.groupBy("half", "pid").agg(
-            F.sum("c").cast("bigint").alias("pn"),
-            F.sum("tv").cast("bigint").alias("ptv"),
-        ),
-        {"pn": "pn", "ptv": "ptv"},
-        symmetric=True,
+    # per-(half, bucket) windows (exact_cumulative keyed by half), not
+    # per-half windows: |halves| would cap parallelism at two tasks
+    acc, _ = exact_cumulative(
+        grid,
+        ("v",),
+        {"pn": F.sum("c"), "ptv": F.sum("tv")},
         keys=("half",),
     )
-    w = (
-        Window.partitionBy("half", "pid")
-        .orderBy("v")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    cum = gb.join(F.broadcast(ot), ["half", "pid"]).select(
+    cum = acc.select(
         "half",
         "v",
-        (F.sum("c").over(w) + F.col("off_pn"))
-        .cast("bigint")
-        .alias("cc"),
-        (F.sum("tv").over(w) + F.col("off_ptv"))
-        .cast("bigint")
-        .alias("cv"),
+        F.col("cum_pn").cast("bigint").alias("cc"),
+        F.col("cum_ptv").cast("bigint").alias("cv"),
         F.col("tot_pn").cast("bigint").alias("n"),
         F.col("tot_ptv").cast("bigint").alias("tot"),
     )
@@ -1975,44 +1900,16 @@ def relative_distribution_mrp(spark, sf_dir):
         .cast("bigint")
         .alias("c2"),
     )
-    # r18 optimization: the merged spend grid is customer-grain (grows
-    # with the customer base), so the global Window.orderBy(v) ECDF
-    # cumulative + two whole-frame sums single-tasked it. Value-bucket
-    # device, bounds-derived width (see dkw_band_lognormal_check):
-    # identical exact integers, no single-partition exchange.
-    # r19: offsets AND the (n1, n2) totals from one
-    # bucket_prefix_totals pass over the per-bucket rollup (the r18
-    # formulation ran the customer-grain spend rollup once per scalar
-    # consumer — 4 final-aggregate re-executions at runtime). The
-    # bounds pass stays: w must exist before pid does, and its
-    # distinct-v subtree is the narrowest possible re-read.
-    bounds = grid.agg(
-        F.min("v").alias("vmin"),
-        (
-            F.floor((F.max("v") - F.min("v")) / 1024) + 1
-        ).cast("bigint").alias("w"),
+    # the merged spend grid is customer-grain (grows with the customer
+    # base), so the half-1 ECDF cumulative and both totals ride
+    # exact_cumulative: no single-partition exchange, and the
+    # customer-grain rollup runs once for every consumer
+    acc, _ = exact_cumulative(
+        grid, ("v",), {"pn": F.sum("c1"), "pn2": F.sum("c2")}
     )
-    gb = grid.crossJoin(F.broadcast(bounds)).select(
-        "v",
-        "c1",
+    cum = acc.select(
         "c2",
-        F.expr("(v - vmin) div w").alias("pid"),
-    )
-    ot = bucket_prefix_totals(
-        gb.groupBy("pid").agg(
-            F.sum("c1").cast("bigint").alias("pn"),
-            F.sum("c2").cast("bigint").alias("pn2"),
-        ),
-        {"pn": "pn", "pn2": "pn2"},
-    )
-    local_cr1 = F.sum("c1").over(
-        Window.partitionBy("pid")
-        .orderBy("v")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    cum = gb.join(F.broadcast(ot), "pid").select(
-        "c2",
-        (local_cr1 + F.col("off_pn")).cast("bigint").alias("cr1"),
+        F.col("cum_pn").cast("bigint").alias("cr1"),
         F.col("tot_pn").alias("n1"),
         F.col("tot_pn2").alias("n2"),
     )
@@ -2163,7 +2060,7 @@ def kakwani_discount_progressivity(spark, sf_dir):
     (2*sum w_g*(2*head+c+1) folds in DECIMAL(38,0)); discount
     amounts stay in exact cent-basis-point integers (cents * bp, no
     division anywhere); ranks never materialize at line grain.
-    Plan: one price-grid rollup, one RANGED grid cumulative, one
+    Plan: one price-grid rollup, one bucketed grid cumulative, one
     fold.
 
     Scale (r18 optimization): the price grid is near-unique per line
@@ -2171,37 +2068,17 @@ def kakwani_discount_progressivity(spark, sf_dir):
     linearly with volume until the cents domain saturates, so the
     original global ``Window.orderBy(v)`` exclusive-prefix cumulative
     (plus three whole-frame window sums) pushed the whole grid
-    through ONE task. The exclusive prefix count now rides a
-    FIXED-WIDTH VALUE-BUCKET cumulative: pid = v div W with W a
-    domain-derived constant (16384 cents ≈ a few hundred buckets over
-    the TPC-H price domain at saturation), per-bucket exclusive
-    window hash-partitioned on pid, earlier-bucket offsets via
-    ``prefix_offsets`` broadcast. Unlike repartitionByRange this
-    needs no boundary-sampling pass (which re-runs the rollup) and
-    no persist; unlike the global window nothing single-tasks — each
-    bucket carries ≤ W/price-step grid rows at any data volume. The
-    grid totals (n, sx, sd) are one scalar aggregate broadcast
-    instead of whole-frame windows. Identical exact integers: BIGINT
-    partial sums are order-independent, head = in-bucket exclusive
-    prefix + earlier-bucket offset reproduces the global exclusive
-    prefix bit-for-bit; measured value-identical to the window
-    formulation at sf0.1 and oracle-green at all three SFs.
-
-    r19: offsets AND totals now come from ONE
-    ``bucket_prefix_totals`` pass over the per-bucket rollup instead
-    of two independent grid subtrees (the r18 runtime plan executed
-    the lineitem rollup 4x because column pruning + the join-inferred
-    isnotnull(pid) de-canonicalized the branches; the explicit
-    isnotnull(pid) filter below — a no-op on non-null prices — makes
-    every branch push the same scan predicate, so AQE materializes
-    the grid exchange once). pid moves from FLOOR(v / W) to the
-    integer ``v div W`` (identical for v >= 0, exact by
-    construction). Runtime plan: 4 lineitem scans -> 2 (grid + the
-    bucket-id distinct), ReusedExchange on the grid rollup."""
+    through ONE task. The exclusive prefix count now rides
+    ``exact_cumulative``: per-bucket windows hash-partitioned on the
+    value bucket plus broadcast earlier-bucket offsets, so nothing
+    single-tasks, and the grid totals (n, sx, sd) ride the same
+    broadcast instead of whole-frame windows. Identical exact
+    integers: BIGINT partial sums are order-independent, head =
+    in-bucket exclusive prefix + earlier-bucket offset reproduces the
+    global exclusive prefix bit-for-bit."""
     li = t(spark, sf_dir, "lineitem")
     x = (dec("l_extendedprice", 18, 2) * 100).cast("bigint")
     bp = (dec("l_discount", 6, 2) * 100).cast("bigint")
-    bucket_w = 16384  # cents per bucket; domain-derived constant
     grid = (
         li.select(x.alias("x"), (x * bp).alias("d"))
         .groupBy(F.col("x").alias("v"))
@@ -2210,29 +2087,18 @@ def kakwani_discount_progressivity(spark, sf_dir):
             F.sum("x").cast("bigint").alias("tx"),
             F.sum("d").cast("bigint").alias("td"),
         )
-        .withColumn("pid", F.expr(f"v div {bucket_w}"))
-        .where(F.col("pid").isNotNull())
+        .where(F.col("v").isNotNull())
     )
-    counts = grid.groupBy("pid").agg(
-        F.sum("c").cast("bigint").alias("pn"),
-        F.sum("tx").cast("bigint").alias("ptx"),
-        F.sum("td").cast("bigint").alias("ptd"),
+    acc, _ = exact_cumulative(
+        grid,
+        ("v",),
+        {"pn": F.sum("c"), "ptx": F.sum("tx"), "ptd": F.sum("td")},
     )
-    ot = bucket_prefix_totals(
-        counts, {"pn": "pn", "ptx": "ptx", "ptd": "ptd"}
-    )
-    local_head = F.sum("c").over(
-        Window.partitionBy("pid")
-        .orderBy("v")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    cum = grid.join(F.broadcast(ot), "pid").select(
+    cum = acc.select(
         "c",
         "tx",
         "td",
-        (F.coalesce(local_head, F.lit(0)) + F.col("off_pn")).alias(
-            "head"
-        ),
+        (F.col("cum_pn") - F.col("c")).alias("head"),
         F.col("tot_pn").alias("n"),
         F.col("tot_ptx").alias("sx"),
         F.col("tot_ptd").alias("sd"),
@@ -2394,42 +2260,29 @@ def reynolds_smolensky_redistribution(spark, sf_dir):
     tie-aware midrank identity in DECIMAL(38,0); C_post|pre ranks
     post amounts by the PRE grid (ties in pre share a midrank, the
     concentration-index convention). Plan: two grid rollups, two
-    RANGED grid cumulatives, two folds, two broadcast joins.
+    bucketed grid cumulatives, two folds, two broadcast joins.
 
     Scale (r18 optimization, the kakwani rewrite's twin): both price
     grids are near-unique per line at bench SFs and grow linearly
     with volume until the cents-basis-point domain saturates, so the
     original global ``Window.orderBy(v)`` cumulatives (plus three
     whole-frame window sums) single-tasked the full grids. Both
-    exclusive prefix counts now ride the fixed-width value-bucket
-    cumulative (pid = v div W, in-bucket exclusive window +
-    ``prefix_offsets`` broadcast — see kakwani for the device notes;
-    W here scales by the 10^4 basis-point factor both grids carry),
-    totals are one scalar aggregate broadcast — no single-partition
-    exchange in the plan; identical exact integers
+    exclusive prefix counts and the totals now ride one
+    ``exact_cumulative`` pass per grid (see kakwani) — no
+    single-partition exchange in the plan; identical exact integers
     (order-independent BIGINT/DECIMAL sums, head = in-bucket
-    exclusive prefix + earlier-bucket offset).
-
-    r19: offsets AND totals from one ``bucket_prefix_totals`` pass
-    per grid (see kakwani); explicit isnotnull(pid) so every branch
-    pushes the same scan predicate and AQE reuses each grid rollup;
-    pid via exact integer ``div``. The line-grain ``persist`` of the
-    (pre, post) projection is dropped — at scale caching a 2-column
-    fact-width frame costs more than the second columnar scan it
-    saves (guide §5), and the two grids share nothing downstream of
-    the scan anyway (different shuffle keys)."""
+    exclusive prefix + earlier-bucket offset). The line-grain
+    ``persist`` of the (pre, post) projection is dropped — at scale
+    caching a 2-column fact-width frame costs more than the second
+    columnar scan it saves (guide §5), and the two grids share
+    nothing downstream of the scan anyway (different shuffle
+    keys)."""
     li = t(spark, sf_dir, "lineitem")
     cents = (dec("l_extendedprice", 18, 2) * 100).cast("bigint")
     bp = (dec("l_discount", 6, 2) * 100).cast("bigint")
-    bucket_w = 16384 * 10000  # cents-bp units per bucket
     pts = li.select(
         (cents * 10000).alias("pre"),
         (cents * (10000 - bp)).alias("post"),
-    )
-    local_head = F.sum("c").over(
-        Window.partitionBy("pid")
-        .orderBy("v")
-        .rowsBetween(Window.unboundedPreceding, -1)
     )
     pre_grid = (
         pts.groupBy(F.col("pre").alias("v"))
@@ -2438,24 +2291,18 @@ def reynolds_smolensky_redistribution(spark, sf_dir):
             F.sum("pre").cast("bigint").alias("tpre"),
             F.sum("post").cast("bigint").alias("tpost"),
         )
-        .withColumn("pid", F.expr(f"v div {bucket_w}"))
-        .where(F.col("pid").isNotNull())
+        .where(F.col("v").isNotNull())
     )
-    pre_ot = bucket_prefix_totals(
-        pre_grid.groupBy("pid").agg(
-            F.sum("c").cast("bigint").alias("pn"),
-            F.sum("tpre").cast("bigint").alias("ptpre"),
-            F.sum("tpost").cast("bigint").alias("ptpost"),
-        ),
-        {"pn": "pn", "ptpre": "ptpre", "ptpost": "ptpost"},
+    pre_acc, _ = exact_cumulative(
+        pre_grid,
+        ("v",),
+        {"pn": F.sum("c"), "ptpre": F.sum("tpre"), "ptpost": F.sum("tpost")},
     )
-    pre_cum = pre_grid.join(F.broadcast(pre_ot), "pid").select(
+    pre_cum = pre_acc.select(
         "c",
         "tpre",
         "tpost",
-        (F.coalesce(local_head, F.lit(0)) + F.col("off_pn")).alias(
-            "head"
-        ),
+        (F.col("cum_pn") - F.col("c")).alias("head"),
         F.col("tot_pn").alias("n"),
         F.col("tot_ptpre").alias("s_pre"),
         F.col("tot_ptpost").alias("s_post"),
@@ -2478,22 +2325,11 @@ def reynolds_smolensky_redistribution(spark, sf_dir):
             F.count(F.lit(1)).cast("bigint").alias("c"),
             F.sum("post").cast("bigint").alias("tpost"),
         )
-        .withColumn("pid", F.expr(f"v div {bucket_w}"))
-        .where(F.col("pid").isNotNull())
+        .where(F.col("v").isNotNull())
     )
-    post_ot = bucket_prefix_totals(
-        post_grid.groupBy("pid").agg(
-            F.sum("c").cast("bigint").alias("pn")
-        ),
-        {"pn": "pn"},
-        symmetric=True,
-    )
-    post_cum = post_grid.join(F.broadcast(post_ot), "pid").select(
-        "c",
-        "tpost",
-        (F.coalesce(local_head, F.lit(0)) + F.col("off_pn")).alias(
-            "head"
-        ),
+    post_acc, _ = exact_cumulative(post_grid, ("v",), {"pn": F.sum("c")})
+    post_cum = post_acc.select(
+        "c", "tpost", (F.col("cum_pn") - F.col("c")).alias("head")
     )
     post_fold = post_cum.agg(
         F.sum(F.col("tpost").cast("decimal(38,0)") * r2)
@@ -2597,48 +2433,32 @@ def qq_tail_estimator(spark, sf_dir):
     Exactness: each of the 100 upper order statistics is exact (the
     descending grid cumulative + a 100-row broadcast threshold
     join); both logs pin at 6 dp; the 100-point OLS folds rounded
-    terms through DECIMAL. Plan: one value rollup, one RANGED
+    terms through DECIMAL. Plan: one value rollup, one bucketed
     descending grid cumulative, one 100-row broadcast, one fold.
 
     Scale (r18 optimization): the order-value cents grid grows with
     volume (the kakwani mover class), so the global descending
     ``Window.orderBy(v DESC)`` cumulative + whole-frame n
-    single-tasked the grid. Now the DESCENDING twin of the
-    value-bucket device: pid = -(v div W) (ascending pid = descending
-    v, W a domain constant — saturating cents domain), in-bucket
-    window ordered v DESC, earlier-(higher-value)-bucket offsets via
-    ``prefix_offsets``; n is a scalar-agg broadcast. The persist on
-    the cumulative frame is dropped — it had a single consumer, so
-    it only added a materialization."""
+    single-tasked the grid. Now ``exact_cumulative`` over the
+    ascending order of -v (the descending value order): in-bucket
+    windows plus broadcast earlier-(higher-value)-bucket offsets and
+    n. The persist on the cumulative frame is dropped — it had a
+    single consumer, so it only added a materialization."""
     o = t(spark, sf_dir, "orders")
     grid = (
         o.select(
             (dec("o_totalprice", 18, 2) * 100).cast("bigint").alias("v")
         )
-        .where(F.expr("-(v div 65536) is not null"))
+        .where(F.col("v").isNotNull())
         .groupBy("v")
         .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
     )
-    # fixed bucket width (saturating o_totalprice cents domain, see
-    # dkw_band_lognormal_check); pid = -(v div W) makes ascending pid
-    # equal descending value order without a bounds pass. r19:
-    # offsets AND n from one symmetric bucket_prefix_totals pass (see
-    # kakwani); the isnotnull(v) filter canonicalizes every branch's
-    # scan.
-    gb = grid.withColumn("pid", F.expr("-(v div 65536)"))
-    ot = bucket_prefix_totals(
-        gb.groupBy("pid").agg(F.sum("c").cast("bigint").alias("pn")),
-        {"pn": "pn"},
-        symmetric=True,
+    acc, _ = exact_cumulative(
+        grid.withColumn("nv", -F.col("v")), ("nv",), {"pn": F.sum("c")}
     )
-    local_tail = F.sum("c").over(
-        Window.partitionBy("pid")
-        .orderBy(F.col("v").desc())
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    cum = gb.join(F.broadcast(ot), "pid").select(
+    cum = acc.select(
         "v",
-        (local_tail + F.col("off_pn")).alias("tail_cc"),
+        F.col("cum_pn").alias("tail_cc"),
         F.col("tot_pn").alias("n"),
     )
     js = spark.range(1, 101).select(
@@ -3199,9 +3019,9 @@ PLAN_AUDIT_NOTES.update(
         "kakwani_discount_progressivity": (
             "INFO: no single-partition window since the r18 "
             "optimization rewrite — the price-grid exclusive prefix "
-            "rides the fixed-width value-bucket device (pid = v div "
-            "W, per-bucket window + bucket_prefix_totals broadcast) "
-            "and the grid totals ride the same broadcast (r19); note "
+            "rides exact_cumulative (per-bucket window + broadcast "
+            "bucket offsets) and the grid totals ride the same "
+            "broadcast; note "
             "kept for the history, excluded from the effective "
             "allowlist"
         ),

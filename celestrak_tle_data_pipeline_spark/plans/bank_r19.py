@@ -41,7 +41,7 @@ docstrings): exact integer/DECIMAL folds, round-before-fold with the
 DECADE-ESCALATION rule for libm pins (ln/exp pin one decade coarser
 than the readout; r14's watts/VI lesson), ``+ 0.0`` on possibly-
 negative-zero outputs, total-order tiebreaks, bounded-domain windows
-or the ranged device, the shared Abramowitz-Stegun erfc tree, explicit
+or ``exact_cumulative``, the shared Abramowitz-Stegun erfc tree, explicit
 ``floor()`` before double->integer buckets.
 
 Cohort naming (ADVICE r14): the binary day split used across these
@@ -60,7 +60,7 @@ import math
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from .common import bucket_prefix_totals, dec, t
+from .common import dec, exact_cumulative, t
 
 BANK_QUERIES: dict = {}
 BANK_ORACLES: dict = {}
@@ -667,17 +667,17 @@ def cvm_lognormal_gof(spark, sf_dir):
     real SF ladder (14,999 -> 149,743 rows sf0.01 -> sf0.1, measured
     through the single-partition exchange), so the global
     Window.orderBy(v) head single-tasked a data-grain frame. It now
-    rides the fixed-width value-bucket device (pid = v div 65536,
-    in-bucket window + symmetric ``bucket_prefix_totals`` broadcast —
-    the dkw_band_lognormal_check twin); head values are bit-identical
-    exact integers. The single-consumer persist is dropped with the
-    rewrite (every branch now shares the one grid subtree)."""
+    rides ``exact_cumulative`` (in-bucket window + broadcast bucket
+    offsets — the dkw_band_lognormal_check twin); head values are
+    bit-identical exact integers. The single-consumer persist is
+    dropped with the rewrite (every branch now shares the one grid
+    subtree)."""
     o = t(spark, sf_dir, "orders")
     grid = (
         o.select(
             (dec("o_totalprice", 18, 2) * 100).cast("bigint").alias("v")
         )
-        .where(F.expr("(v div 65536) is not null"))
+        .where(F.col("v").isNotNull())
         .groupBy("v")
         .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
     )
@@ -705,19 +705,9 @@ def cvm_lognormal_gof(spark, sf_dir):
             8,
         ).alias("sig"),
     )
-    gb = grid.withColumn("pid", F.expr("v div 65536"))
-    ot = bucket_prefix_totals(
-        gb.groupBy("pid").agg(F.sum("c").cast("bigint").alias("pn")),
-        {"pn": "pn"},
-        symmetric=True,
-    )
-    local_head = F.sum("c").over(
-        Window.partitionBy("pid")
-        .orderBy("v")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
+    acc, _ = exact_cumulative(grid, ("v",), {"pn": F.sum("c")})
     cum = (
-        gb.join(F.broadcast(ot), "pid")
+        acc
         .crossJoin(F.broadcast(fitp))
         .select(
             "v",
@@ -725,7 +715,7 @@ def cvm_lognormal_gof(spark, sf_dir):
             "n",
             "mu",
             "sig",
-            (F.coalesce(local_head, F.lit(0)) + F.col("off_pn"))
+            (F.col("cum_pn") - F.col("c"))
             .cast("bigint")
             .alias("head"),
         )
@@ -768,10 +758,9 @@ PLAN_AUDIT_NOTES.update(
     {
         "cvm_lognormal_gof": (
             "INFO: no single-partition window since the r19 grain "
-            "triage — the data-grain cents-grid cumulative rides the "
-            "fixed-width value-bucket device (pid = v div 65536, "
-            "in-bucket window + symmetric bucket_prefix_totals "
-            "broadcast); note kept for the history, excluded from "
+            "triage — the data-grain cents-grid cumulative rides "
+            "exact_cumulative (in-bucket window + broadcast bucket "
+            "offsets); note kept for the history, excluded from "
             "the effective allowlist"
         ),
     }
@@ -1001,7 +990,7 @@ def robust_dispersion_panel(spark, sf_dir):
     r19 grain triage: the cents grid is data-grain (14,999 ->
     149,743 rows sf0.01 -> sf0.1 through each of SIX single-partition
     exchanges the two persists hid from the plan audit), so the
-    cumulative rides the fixed-width value-bucket device (the
+    cumulative rides the ``exact_cumulative`` value-bucket device (the
     cvm_lognormal_gof twin), all four order statistics fold into ONE
     conditional aggregate over it (was four filtered passes), tv
     collapses to the exact identity c * v, and both persists are
@@ -1012,24 +1001,14 @@ def robust_dispersion_panel(spark, sf_dir):
         o.select(
             (dec("o_totalprice", 18, 2) * 100).cast("bigint").alias("v")
         )
-        .where(F.expr("(v div 65536) is not null"))
+        .where(F.col("v").isNotNull())
         .groupBy("v")
         .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
     )
-    gb = grid.withColumn("pid", F.expr("v div 65536"))
-    ot = bucket_prefix_totals(
-        gb.groupBy("pid").agg(F.sum("c").cast("bigint").alias("pn")),
-        {"pn": "pn"},
-        symmetric=True,
-    )
-    local_incl = F.sum("c").over(
-        Window.partitionBy("pid")
-        .orderBy("v")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    cum = gb.join(F.broadcast(ot), "pid").select(
+    acc, _ = exact_cumulative(grid, ("v",), {"pn": F.sum("c")})
+    cum = acc.select(
         "v",
-        (local_incl + F.col("off_pn")).alias("cc"),
+        F.col("cum_pn").alias("cc"),
         F.col("tot_pn").alias("n"),
     )
 
@@ -2174,11 +2153,12 @@ def gini_jackknife_se(spark, sf_dir):
     the Dagum decomposition) was missing: a Gini without an SE
     cannot be compared across rounds.
 
-    Exactness: all pair sums exact DECIMAL(38,0) on the ranged-
-    window-free construction; leave-out Ginis pin at 10 dp before
-    the jackknife spread fold (12-dp squares). Grouped-jackknife
-    caveat (25 groups) documented. Plan: one merged-grid frame, one
-    pair rollup, bounded 25-row jackknife fold."""
+    Exactness: all pair sums exact DECIMAL(38,0) on the
+    ``exact_cumulative`` per-nation cumulatives; leave-out Ginis pin
+    at 10 dp before the jackknife spread fold (12-dp squares).
+    Grouped-jackknife caveat (25 groups) documented. Plan: one
+    merged-grid frame, one pair rollup, bounded 25-row jackknife
+    fold."""
     o = t(spark, sf_dir, "orders")
     c = t(spark, sf_dir, "customer")
     spend = (
@@ -2212,48 +2192,18 @@ def gini_jackknife_se(spark, sf_dir):
             F.coalesce(F.col("c"), F.lit(0)).alias("c0"),
             F.coalesce(F.col("tv"), F.lit(0)).alias("tv0"),
         )
-        .repartitionByRange(8, F.col("v").asc())
-        .withColumn("pid", F.spark_partition_id())
-        .persist()
     )
-    psums = full_g.groupBy("pid", "g").agg(
-        F.sum("c0").cast("bigint").alias("pc"),
-        F.sum("tv0").cast("bigint").alias("pv"),
+    acc, _ = exact_cumulative(
+        full_g,
+        ("v",),
+        {"ce": F.sum("c0"), "cve": F.sum("tv0")},
+        keys=("g",),
     )
-    prior = psums.select(
-        F.col("pid").alias("bpid"),
-        F.col("g").alias("bg"),
-        "pc",
-        "pv",
-    )
-    offsets = (
-        psums.select("pid", "g")
-        .join(
-            prior,
-            (F.col("bg") == F.col("g"))
-            & (F.col("bpid") < F.col("pid")),
-            "left",
-        )
-        .groupBy("pid", "g")
-        .agg(
-            F.coalesce(F.sum("pc"), F.lit(0)).alias("off_c"),
-            F.coalesce(F.sum("pv"), F.lit(0)).alias("off_v"),
-        )
-    )
-    lw = (
-        Window.partitionBy("pid", "g")
-        .orderBy("v")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    cume = full_g.join(F.broadcast(offsets), ["pid", "g"]).select(
+    cume = acc.select(
         "v",
         "g",
-        (F.coalesce(F.sum("c0").over(lw), F.lit(0)) + F.col("off_c"))
-        .cast("bigint")
-        .alias("ce"),
-        (F.coalesce(F.sum("tv0").over(lw), F.lit(0)) + F.col("off_v"))
-        .cast("bigint")
-        .alias("cve"),
+        (F.col("cum_ce") - F.col("c0")).cast("bigint").alias("ce"),
+        (F.col("cum_cve") - F.col("tv0")).cast("bigint").alias("cve"),
     )
     splus = (
         ggrid.alias("h")
@@ -2365,8 +2315,8 @@ def gini_jackknife_se(spark, sf_dir):
 PLAN_AUDIT_NOTES.update(
     {
         "gini_jackknife_se": (
-            "per-(pid, nation) local exclusive windows on the ranged "
-            "device (the dagum_gini class); jackknife runs on the "
+            "per-(nation, bucket) windows of exact_cumulative "
+            "(the dagum_gini class); jackknife runs on the "
             "bounded 25-row nation frame"
         ),
     }
@@ -7315,34 +7265,24 @@ def savage_scores_location(spark, sf_dir):
 
     r19 grain triage: data-grain cents grid (14,999 -> 149,743 rows
     sf0.01 -> sf0.1), so the rank cumulative AND the whole-frame n
-    ride the fixed-width value-bucket device (the cvm_lognormal_gof
+    ride the ``exact_cumulative`` value-bucket device (the cvm_lognormal_gof
     twin); exact integers, bit-identical."""
     o = t(spark, sf_dir, "orders")
     day = F.floor(F.unix_micros("o_orderdate") / 86_400_000_000)
     pts = o.select(
         F.when((day + 4) % 7 >= 5, 1).otherwise(0).alias("g"),
         (dec("o_totalprice", 18, 2) * 100).cast("bigint").alias("v"),
-    ).where(F.expr("(v div 65536) is not null"))
+    ).where(F.col("v").isNotNull())
     cells = pts.groupBy("v").agg(
         F.count(F.lit(1)).cast("bigint").alias("c"),
         F.sum("g").cast("bigint").alias("c1"),
     )
-    gb = cells.withColumn("pid", F.expr("v div 65536"))
-    ot = bucket_prefix_totals(
-        gb.groupBy("pid").agg(F.sum("c").cast("bigint").alias("pn")),
-        {"pn": "pn"},
-        symmetric=True,
-    )
-    local_incl = F.sum("c").over(
-        Window.partitionBy("pid")
-        .orderBy("v")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    cum = gb.join(F.broadcast(ot), "pid").select(
+    acc, _ = exact_cumulative(cells, ("v",), {"pn": F.sum("c")})
+    cum = acc.select(
         "v",
         "c",
         "c1",
-        (local_incl + F.col("off_pn") - F.col("c"))
+        (F.col("cum_pn") - F.col("c"))
         .cast("bigint")
         .alias("h"),
         F.col("tot_pn").cast("bigint").alias("n"),
@@ -7512,7 +7452,7 @@ def anderson_darling_lognormal(spark, sf_dir):
     r19 grain triage: the cents grid is data-grain on the real SF
     ladder (14,999 -> 149,743 rows sf0.01 -> sf0.1 through the
     single-partition exchange), so the head cumulative now rides the
-    fixed-width value-bucket device (the cvm_lognormal_gof twin);
+    ``exact_cumulative`` value-bucket device (the cvm_lognormal_gof twin);
     exact integers, bit-identical."""
     o = t(spark, sf_dir, "orders")
     grid = (
@@ -7521,7 +7461,7 @@ def anderson_darling_lognormal(spark, sf_dir):
             .cast("bigint")
             .alias("v")
         )
-        .where(F.expr("(v div 65536) is not null"))
+        .where(F.col("v").isNotNull())
         .groupBy("v")
         .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
     )
@@ -7547,19 +7487,9 @@ def anderson_darling_lognormal(spark, sf_dir):
             8,
         ).alias("sig"),
     )
-    gb = grid.withColumn("pid", F.expr("v div 65536"))
-    ot = bucket_prefix_totals(
-        gb.groupBy("pid").agg(F.sum("c").cast("bigint").alias("pn")),
-        {"pn": "pn"},
-        symmetric=True,
-    )
-    local_incl = F.sum("c").over(
-        Window.partitionBy("pid")
-        .orderBy("v")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
+    acc, _ = exact_cumulative(grid, ("v",), {"pn": F.sum("c")})
     cum = (
-        gb.join(F.broadcast(ot), "pid")
+        acc
         .crossJoin(F.broadcast(fitp))
         .select(
             "v",
@@ -7567,7 +7497,7 @@ def anderson_darling_lognormal(spark, sf_dir):
             "n",
             "mu",
             "sig",
-            (local_incl + F.col("off_pn") - F.col("c"))
+            (F.col("cum_pn") - F.col("c"))
             .cast("bigint")
             .alias("head"),
         )
@@ -7722,8 +7652,8 @@ def energy_normality_test(spark, sf_dir):
     grid rollup, one cumulative, one fold.
 
     r19 grain triage: data-grain cents grid (14,999 -> 149,743 rows
-    sf0.01 -> sf0.1), so the rank cumulative rides the fixed-width
-    value-bucket device (the cvm_lognormal_gof twin); exact
+    sf0.01 -> sf0.1), so the rank cumulative rides
+    ``exact_cumulative`` (the cvm_lognormal_gof twin); exact
     integers, bit-identical."""
     o = t(spark, sf_dir, "orders")
     grid = (
@@ -7732,7 +7662,7 @@ def energy_normality_test(spark, sf_dir):
             .cast("bigint")
             .alias("v")
         )
-        .where(F.expr("(v div 65536) is not null"))
+        .where(F.col("v").isNotNull())
         .groupBy("v")
         .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
     )
@@ -7758,25 +7688,15 @@ def energy_normality_test(spark, sf_dir):
             8,
         ).alias("sig"),
     )
-    gb = grid.withColumn("pid", F.expr("v div 65536"))
-    ot = bucket_prefix_totals(
-        gb.groupBy("pid").agg(F.sum("c").cast("bigint").alias("pn")),
-        {"pn": "pn"},
-        symmetric=True,
-    )
-    local_incl = F.sum("c").over(
-        Window.partitionBy("pid")
-        .orderBy("v")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
+    acc, _ = exact_cumulative(grid, ("v",), {"pn": F.sum("c")})
     cum = (
-        gb.join(F.broadcast(ot), "pid")
+        acc
         .crossJoin(F.broadcast(fitp))
         .select(
             "c",
             "n",
             F.round((lnv - F.col("mu")) / F.col("sig"), 8).alias("y"),
-            (local_incl + F.col("off_pn") - F.col("c"))
+            (F.col("cum_pn") - F.col("c"))
             .cast("bigint")
             .alias("head"),
         )

@@ -30,8 +30,8 @@ index-axioms tripwire.
 Determinism disciplines inherited unchanged (bank_r11..r19
 docstrings): exact integer/DECIMAL folds, round-before-fold with the
 DECADE-ESCALATION rule for libm pins, ``+ 0.0`` on possibly-negative-
-zero outputs, total-order tiebreaks, bounded-domain windows or the
-ranged device, the shared erfc/harmonic trees, explicit ``floor()``
+zero outputs, total-order tiebreaks, bounded-domain windows or
+``exact_cumulative``, the shared erfc/harmonic trees, explicit ``floor()``
 before double->integer buckets.
 
 Cohort naming (ADVICE r14): the binary day split used across these
@@ -49,7 +49,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from .bank_r19 import _PI2_6, _harmonic2_col, _harmonic_col
-from .common import bucket_prefix_totals, dec, t
+from .common import dec, exact_cumulative, t
 
 BANK_QUERIES: dict = {}
 BANK_ORACLES: dict = {}
@@ -319,41 +319,19 @@ def gnedenko_f_exponentiality(spark, sf_dir):
     # r19 grain triage: the gap-value micros grid is data-grain
     # (1,831 -> 18,584 rows sf0.01 -> sf0.1 — the domain is an
     # unbounded micros axis, not a saturating one), so both
-    # cumulatives and both whole-frame totals ride the value-bucket
-    # device with a bounds-derived width (the relative_distribution_
-    # mrp mode: <= 1025 buckets at any scale; measured max 1% of
-    # distinct gap values per bucket at sf0.1). Exact integers /
-    # DECIMAL(38,0), bit-identical.
-    bounds = grid.agg(
-        F.min("v").alias("vmin"),
-        (F.floor((F.max("v") - F.min("v")) / 1024) + 1)
-        .cast("bigint")
-        .alias("w"),
-    )
-    gb = grid.crossJoin(F.broadcast(bounds)).select(
-        "v", "c", F.expr("(v - vmin) div w").alias("pid")
-    )
+    # cumulatives and both whole-frame totals ride exact_cumulative
+    # (<= 1025 buckets at any scale; measured max 1% of distinct gap
+    # values per bucket at sf0.1). Exact integers / DECIMAL(38,0),
+    # bit-identical.
     cv = F.col("v").cast("decimal(38,0)") * F.col("c")
-    ot = bucket_prefix_totals(
-        gb.groupBy("pid").agg(
-            F.sum("c").cast("bigint").alias("pn"),
-            F.sum(cv).cast("decimal(38,0)").alias("pcv"),
-        ),
-        {"pn": "pn", "pcv": "pcv"},
-        symmetric=True,
+    acc, _ = exact_cumulative(
+        grid, ("v",), {"pn": F.sum("c"), "pcv": F.sum(cv)}
     )
-    wb = Window.partitionBy("pid").orderBy("v").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    cum = gb.join(F.broadcast(ot), "pid").select(
+    cum = acc.select(
         "v",
         "c",
-        (F.sum("c").over(wb) + F.col("off_pn") - F.col("c"))
-        .cast("bigint")
-        .alias("head"),
-        (F.sum(cv).over(wb) + F.col("off_pcv") - cv)
-        .cast("decimal(38,0)")
-        .alias("below"),
+        (F.col("cum_pn") - F.col("c")).cast("bigint").alias("head"),
+        (F.col("cum_pcv") - cv).cast("decimal(38,0)").alias("below"),
         F.col("tot_pn").cast("bigint").alias("m"),
         F.col("tot_pcv").cast("decimal(38,0)").alias("s"),
     )
@@ -3286,10 +3264,9 @@ def dagostino_d_normality(spark, sf_dir):
     r19 grain triage: the cents grid is data-grain on the real SF
     ladder (14,999 -> 149,743 rows sf0.01 -> sf0.1 through the
     single-partition exchange), so the rank cumulative AND the
-    whole-frame n ride the fixed-width value-bucket device (pid =
-    v div 65536, in-bucket window + symmetric bucket_prefix_totals
-    broadcast — the cvm_lognormal_gof twin in the live bank); exact
-    integers, bit-identical."""
+    whole-frame n ride ``exact_cumulative`` (in-bucket window +
+    broadcast bucket offsets — the cvm_lognormal_gof twin in the
+    live bank); exact integers, bit-identical."""
     o = t(spark, sf_dir, "orders")
     grid = (
         o.select(
@@ -3297,27 +3274,15 @@ def dagostino_d_normality(spark, sf_dir):
             .cast("bigint")
             .alias("v")
         )
-        .where(F.expr("(v div 65536) is not null"))
+        .where(F.col("v").isNotNull())
         .groupBy("v")
         .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
     )
-    gb = grid.withColumn("pid", F.expr("v div 65536"))
-    ot = bucket_prefix_totals(
-        gb.groupBy("pid").agg(F.sum("c").cast("bigint").alias("pn")),
-        {"pn": "pn"},
-        symmetric=True,
-    )
-    local_incl = F.sum("c").over(
-        Window.partitionBy("pid")
-        .orderBy("v")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    cum = gb.join(F.broadcast(ot), "pid").select(
+    acc, _ = exact_cumulative(grid, ("v",), {"pn": F.sum("c")})
+    cum = acc.select(
         "v",
         "c",
-        (local_incl + F.col("off_pn") - F.col("c"))
-        .cast("bigint")
-        .alias("head"),
+        (F.col("cum_pn") - F.col("c")).cast("bigint").alias("head"),
         F.col("tot_pn").cast("bigint").alias("n"),
     )
     coef = (

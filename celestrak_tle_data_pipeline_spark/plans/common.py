@@ -2,8 +2,10 @@
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegralType
+from pyspark.sql.window import WindowSpec
 
 from ..sources.tables import load_table
 
@@ -45,129 +47,112 @@ def davg(col, precision: int = 12, scale: int = 2) -> Column:
     ).cast("double")
 
 
-def bucket_prefix_totals(
-    psums: DataFrame,
-    sums: dict[str, str],
-    pid: str = "pid",
-    symmetric: bool = False,
+def exact_cumulative(
+    frame: DataFrame,
+    order: tuple[str, ...],
+    sums: dict[str, Column],
     keys: tuple[str, ...] = (),
-) -> DataFrame:
-    """Per-bucket exclusive-prefix offsets AND whole-frame totals from
-    ONE pass over the |buckets|-row per-bucket rollup (r19).
+    buckets: int = 1024,
+) -> tuple[DataFrame, WindowSpec]:
+    """Exact global running aggregates over ``order`` (per ``keys``
+    group) with no single-partition window: the two-level block scan
+    (Blelloch 1990) — a local scan inside each value bucket plus an
+    exclusive scan of the bucket totals as offsets.
 
-    The r18 value-bucket device computed the bucket offsets
-    (``prefix_offsets``) and the grid totals (a separate scalar
-    aggregate) as independent subtrees over the same data-grain grid;
-    column pruning de-canonicalized the branches, so at runtime each
-    one re-executed the grid rollup (no AQE stage reuse — verified in
-    the r18 runtime plans, see OPTIMIZATION_r19.md). This helper folds
-    both into one triangular cross-join aggregation over the tiny
-    per-bucket frame: for each ``out -> src`` in ``sums`` it emits
-    ``off_<out>`` = sum of src over strictly-earlier buckets (exact,
-    0 for the first bucket) and ``tot_<out>`` = sum of src over ALL
-    buckets, one row per pid. Callers attach the totals per row
-    through the same broadcast join that attaches the offsets, so no
-    scalar-aggregate subtree over the grid remains.
+    ``sums`` maps an output name to a decomposable aggregate Column
+    (``F.sum(x)``, ``F.count(F.lit(1))``). Returns ``(df, w)``: ``df``
+    is ``frame`` plus, per name ``o``, ``cum_o`` (the inclusive
+    running aggregate in ``order``, rows frame), ``off_o`` (the
+    aggregate over all strictly-earlier buckets of the group) and
+    ``tot_o`` (the group's total), plus the bucket id ``pid``; ``w``
+    is the in-bucket window ``partitionBy(*keys, "pid")
+    .orderBy(*order)`` on which ranking callers compute
+    ``F.rank().over(w) + off_o`` (``row_number`` likewise).
 
-    Like ``prefix_offsets`` this is window-free (audit-clean) and
-    exact for BIGINT/DECIMAL sums. The cross join is |buckets|^2 rows
-    — bounded by the device's domain-derived bucket count, never by
-    data volume.
-
-    ``symmetric=True`` computes the exclusive prefix as the INCLUSIVE
-    prefix minus the bucket's own value, which makes the streamed
-    (own) side consume exactly the same columns as the broadcast
-    (prior) side — the two sides then canonicalize to ONE subtree and
-    AQE materializes the per-bucket rollup once instead of collapsing
-    the own side into a separate base-table scan. Use it when every
-    entry of ``sums`` has its ``off_<out>`` consumed downstream
-    (otherwise pruning re-introduces the asymmetry); the default
-    keeps the own side at bucket-id grain, which is the cheaper shape
-    when ``sums`` carries totals-only columns.
-
-    ``keys`` restricts both the prefix and the totals to rows sharing
-    the named group columns (the dagum per-region pattern): offsets
-    accumulate strictly-earlier buckets OF THE SAME GROUP and
-    ``tot_<out>`` is the group's whole-frame sum, so per-group
-    cumulatives (e.g. per-half Lorenz ordinates) ride per-(group,
-    bucket) windows instead of one window partition per group value —
-    a |groups|-task parallelism ceiling at scale. The group equality
-    is an equi-join; the triangular part stays in the aggregate.
+    Buckets are value ranges of the first ``order`` column with
+    bounds derived from the data — width ``floor((max - min) / B) + 1``
+    for integral columns, ``(max - min) / B`` in doubles (1 when every
+    value is equal) otherwise — so equal values always share a bucket
+    and bucket order is value order. A NULL order value sorts first,
+    as in an unpartitioned ``Window.orderBy``: it lands in bucket -1.
+    The offsets and totals come from one triangular join over the
+    per-(keys, bucket) rollup, computed as the inclusive prefix minus
+    the bucket's own value so both join sides consume the same
+    columns and the rollup materializes once; the result is
+    broadcast-joined back. Exact for integral and DECIMAL aggregates;
+    the triangular join is |buckets|^2 rows per group, bounded by
+    ``buckets``, never by data volume. Order is ascending; ``keys``
+    columns must be non-null (the group joins are equi-joins).
     """
+    key = order[0]
+    # min/max over whole rows ordered by the key (NULL keys skipped):
+    # reading every column lets the bounds pass reuse the exchange of
+    # an aggregated frame instead of re-planning a distinct over the
+    # key, which would be a second base-table scan
+    row = F.when(
+        F.col(key).isNotNull(),
+        F.struct(key, *[c for c in frame.columns if c != key]),
+    )
+    lo, hi = F.min(row)[key], F.max(row)[key]
+    if isinstance(frame.schema[key].dataType, IntegralType):
+        width = (F.floor((hi - lo) / buckets) + 1).cast("bigint")
+        pid = F.expr(f"(`{key}` - __lo) div __w")
+    else:
+        lo, hi = lo.cast("double"), hi.cast("double")
+        span = (hi - lo) / buckets
+        width = F.when(span > 0, span).otherwise(F.lit(1.0))
+        pid = F.floor(
+            (F.col(key).cast("double") - F.col("__lo")) / F.col("__w")
+        )
+    bounds = frame.agg(lo.alias("__lo"), width.alias("__w"))
+    pool = (
+        frame.crossJoin(F.broadcast(bounds))
+        .withColumn("pid", F.coalesce(pid, F.lit(-1).cast("bigint")))
+        .drop("__lo", "__w")
+    )
+    psums = pool.groupBy(*keys, "pid").agg(
+        *[agg.alias(out) for out, agg in sums.items()]
+    )
     prior = psums.select(
         *[F.col(k).alias(f"__bk_{k}") for k in keys],
-        F.col(pid).alias("__bpid"),
-        *[F.col(src).alias(f"__b_{out}") for out, src in sums.items()],
+        F.col("pid").alias("__bpid"),
+        *[F.col(out).alias(f"__b_{out}") for out in sums],
     )
     aggs = []
-    for out, src in sums.items():
-        if symmetric:
-            aggs.append(
-                (
-                    F.sum(
-                        F.when(
-                            F.col("__bpid") <= F.col(pid),
-                            F.col(f"__b_{out}"),
-                        )
+    for out in sums:
+        aggs.append(
+            (
+                F.sum(
+                    F.when(
+                        F.col("__bpid") <= F.col("pid"),
+                        F.col(f"__b_{out}"),
                     )
-                    - F.max(F.col(src))
-                ).alias(f"off_{out}")
-            )
-        else:
-            aggs.append(
-                F.coalesce(
-                    F.sum(
-                        F.when(
-                            F.col("__bpid") < F.col(pid),
-                            F.col(f"__b_{out}"),
-                        )
-                    ),
-                    F.lit(0),
-                ).alias(f"off_{out}")
-            )
+                )
+                - F.max(F.col(out))
+            ).alias(f"off_{out}")
+        )
         aggs.append(F.sum(f"__b_{out}").alias(f"tot_{out}"))
-    own = (
-        psums if symmetric else psums.select(*keys, pid)
-    )
     if keys:
         cond = None
         for k in keys:
             c = F.col(f"__bk_{k}") == F.col(k)
             cond = c if cond is None else (cond & c)
-        joined = own.join(F.broadcast(prior), cond)
-        return joined.groupBy(*keys, pid).agg(*aggs)
-    return own.crossJoin(prior).groupBy(pid).agg(*aggs)
-
-
-def prefix_offsets(
-    psums: DataFrame, sums: dict[str, str], pid: str = "pid"
-) -> DataFrame:
-    """Per-partition prefix-sum offsets WITHOUT a window.
-
-    The range-partitioned global-rank/cumsum pattern needs, for each
-    partition id, the sum of every EARLIER partition's total. A
-    ``Window.orderBy(pid)`` computes it but plants an unpartitioned
-    window in the plan (benign — the frame is |partitions| rows — yet
-    indistinguishable from the real single-partition scale killer in a
-    plan audit). This triangular self-join over the |partitions|-row
-    totals frame produces the identical exact integers with no window
-    operator at all, keeping ``tools/audit_single_partition.py`` at
-    zero for every query built on it.
-
-    ``sums`` maps output column name -> source column in ``psums``;
-    partitions with no predecessor get 0.
-    """
-    prior = psums.select(
-        F.col(pid).alias("__bpid"),
-        *[F.col(src).alias(f"__b_{out}") for out, src in sums.items()],
+        ot = psums.join(F.broadcast(prior), cond)
+    else:
+        ot = psums.crossJoin(prior)
+    ot = ot.groupBy(*keys, "pid").agg(*aggs)
+    w = (
+        Window.partitionBy(*keys, "pid")
+        .orderBy(*order)
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    aggs = [
-        F.coalesce(F.sum(f"__b_{out}"), F.lit(0)).alias(out)
-        for out in sums
-    ]
     return (
-        psums.select(pid)
-        .join(prior, F.col("__bpid") < F.col(pid), "left")
-        .groupBy(pid)
-        .agg(*aggs)
+        pool.join(F.broadcast(ot), [*keys, "pid"]).select(
+            "*",
+            *[
+                (agg.over(w) + F.col(f"off_{out}")).alias(f"cum_{out}")
+                for out, agg in sums.items()
+            ],
+        ),
+        w,
     )

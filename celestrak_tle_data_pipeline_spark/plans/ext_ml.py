@@ -782,6 +782,8 @@ def sorted_neighborhood_ranged(spark, sf_dir):
     # carry branch and the base rows — pid assignment is deterministic
     # either way (RangePartitioner samples with fixed seeds), but a
     # single materialization makes the seam-freedom unconditional
+    # boundary-row replication, not a sum or rank: exact_cumulative
+    # does not apply, and tests pin this range exchange
     s = (
         cst.repartitionByRange(8, *order)
         .withColumn("pid", F.spark_partition_id())

@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from . import register
-from .common import dec, dsum, prefix_offsets, t
+from .common import dec, dsum, exact_cumulative, t
 
 
 # --------------------------------------------------------------------------
@@ -508,52 +508,21 @@ def systematic_weighted_sample(spark, sf_dir):
     RNG, no floats — so the sample is reproducible anywhere and the
     oracle matches exactly. Plan — the cumulative character axis is
     built WITHOUT a single-partition total-order window (the r6
-    verdict's X22 scale-killer): the scan range-partitions on doc_id
-    (a total order across partitions), the running sum computes per
-    partition, and each partition's starting offset is the broadcast
-    prefix-sum of per-partition character totals — global cum =
-    local cum + offset, exactly (the pid-offset pattern shared with
-    mann_whitney_u_values / sorted_neighborhood_ranged,
-    stats_tests.py:170-240). The grand total rides a broadcast
-    one-row aggregate in the same DAG. No row-grain data ever
-    serializes through one task; the offsets frame is
-    |partitions| rows. tests/test_plans.py pins the absence of a
-    single-partition window exchange.
+    verdict's X22 scale-killer) by ``exact_cumulative``: the running
+    sum computes inside doc_id buckets, and each bucket's starting
+    offset is the broadcast sum of the character totals of every
+    earlier bucket — global cum = local cum + offset, exactly (the
+    device shared with mann_whitney_u_values). The grand total rides
+    the same broadcast. No row-grain data ever serializes through one
+    task; the offsets frame is |buckets| rows. tests/test_plans.py
+    pins the absence of a single-partition window exchange.
     """
-    # r19: the range partition + spark_partition_id needed a stability
-    # persist of the whole corpus frame and paid a boundary-sampling
-    # pass; a deterministic doc_id-bucket pid removes both, and the
-    # grand total rides the SAME bucket_prefix_totals broadcast as the
-    # offsets (one pass, no separate scalar-aggregate subtree).
-    from .common import bucket_prefix_totals
-
     d = t(spark, sf_dir, "documents").select("doc_id", "source", "n_chars")
-    bounds = d.agg(
-        F.min("doc_id").alias("dmin"),
-        (F.floor((F.max("doc_id") - F.min("doc_id")) / 256) + 1)
-        .cast("bigint")
-        .alias("bw"),
+    acc, _ = exact_cumulative(
+        d, ("doc_id",), {"chars": F.sum("n_chars")}, buckets=256
     )
-    pool = d.crossJoin(F.broadcast(bounds)).select(
-        "doc_id",
-        "source",
-        "n_chars",
-        F.expr("(doc_id - dmin) div bw").alias("pid"),
-    )
-    ot = bucket_prefix_totals(
-        pool.groupBy("pid").agg(F.sum("n_chars").alias("pchars")),
-        {"pchars": "pchars"},
-        symmetric=True,
-    )
-    local_cum = F.sum("n_chars").over(
-        Window.partitionBy("pid")
-        .orderBy("doc_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    c = (
-        pool.join(F.broadcast(ot), "pid")
-        .withColumn("cum", local_cum + F.col("off_pchars"))
-        .withColumn("stride", F.expr("tot_pchars DIV 100"))
+    c = acc.withColumnRenamed("cum_chars", "cum").withColumn(
+        "stride", F.expr("tot_chars DIV 100")
     )
     picks = F.expr("cum DIV stride") - F.expr("(cum - n_chars) DIV stride")
     return (

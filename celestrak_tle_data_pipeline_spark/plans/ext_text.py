@@ -23,7 +23,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from . import register
-from .common import t
+from .common import exact_cumulative, t
 
 _STOPWORDS = ("the", "a", "of", "to", "and", "in")
 
@@ -1178,45 +1178,17 @@ def sequence_packing_chunks(spark, sf_dir):
     spans (boundary-crossing docs span >1). All integer arithmetic.
 
     Scale shape: the running offset rides per-(source, doc_id-bucket)
-    windows + the keyed symmetric bucket_prefix_totals broadcast
-    (r19) — a plain per-source window is a |sources|-task ceiling
-    over the whole corpus at 100 TB, the lorenz_dominance class;
-    never a single global cumsum either (Exchange SinglePartition)."""
-    from pyspark.sql import Window
-
-    from .common import bucket_prefix_totals
-
+    windows of ``exact_cumulative`` keyed by source — a plain
+    per-source window is a |sources|-task ceiling over the whole
+    corpus at 100 TB, the lorenz_dominance class; never a single
+    global cumsum either (Exchange SinglePartition)."""
     d = _docs(spark, sf_dir).select(
         "doc_id", "source", F.size(_tokens()).cast("bigint").alias("n_tokens")
     )
-    bounds = d.agg(
-        F.min("doc_id").alias("dmin"),
-        (F.floor((F.max("doc_id") - F.min("doc_id")) / 1024) + 1)
-        .cast("bigint")
-        .alias("bw"),
+    acc, _ = exact_cumulative(
+        d, ("doc_id",), {"pt": F.sum("n_tokens")}, keys=("source",)
     )
-    db = d.crossJoin(F.broadcast(bounds)).select(
-        "doc_id",
-        "source",
-        "n_tokens",
-        F.expr("(doc_id - dmin) div bw").alias("pid"),
-    )
-    ot = bucket_prefix_totals(
-        db.groupBy("source", "pid").agg(
-            F.sum("n_tokens").cast("bigint").alias("pt")
-        ),
-        {"pt": "pt"},
-        symmetric=True,
-        keys=("source",),
-    )
-    w = (
-        Window.partitionBy("source", "pid")
-        .orderBy("doc_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    c = db.join(F.broadcast(ot), ["source", "pid"]).withColumn(
-        "cum", F.sum("n_tokens").over(w) + F.col("off_pt")
-    )
+    c = acc.withColumnRenamed("cum_pt", "cum")
     start = F.col("cum") - F.col("n_tokens")
     first = F.expr("(cum - n_tokens) div 512")
     last = F.expr("(cum - 1) div 512")

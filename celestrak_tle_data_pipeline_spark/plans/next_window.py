@@ -24,7 +24,7 @@ dropped during review rather than shipped as padding.
 Every plan here is window-free (no unbounded ``Window.orderBy``) with
 ONE named exception: the time-series shapes (ACF, EWMA, Mann-Kendall)
 use bounded lag/triangular joins on the day-grain calendar domain;
-ranking reuses the range-partition + ``prefix_offsets`` global-rank
+ranking reuses the ``exact_cumulative`` value-bucket global-rank
 machinery; medians use the cumulative-count value-grid device. The
 exception is ``log_rank_sessions``' risk-set suffix sums, which ride an
 unpartitioned window over the session-duration GRID (domain-bounded —
@@ -45,7 +45,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from . import register as _live_register
-from .common import dec, prefix_offsets, t
+from .common import dec, exact_cumulative, t
 
 NEXT_QUERIES: dict = {}
 NEXT_ORACLES: dict = {}
@@ -125,37 +125,28 @@ def kruskal_wallis_values(spark, sf_dir):
     order-free — and the tie term is pure integers. Only the final H
     normalization is float.
 
-    Plan — the ``mann_whitney_u_values`` ranged-rank machinery over
-    ALL types: range-partition on value (tie groups co-located),
-    per-partition ranks + broadcast prefix-sum offsets, one group
+    Plan — the ``mann_whitney_u_values`` bucket-rank machinery over
+    ALL types: ranks inside value buckets (tie groups co-located) +
+    broadcast bucket offsets (``exact_cumulative``), one group
     rollup, one value-grid tie rollup; no single-partition exchange."""
     e = t(spark, sf_dir, "events")
-    pool = (
-        e.select(F.col("event_type").alias("g"), "value")
-        .repartitionByRange(8, F.col("value").asc())
-        .withColumn("pid", F.spark_partition_id())
-        .persist()
-    )
-    counts = pool.groupBy("pid").agg(F.count(F.lit(1)).alias("pn"))
-    offsets = prefix_offsets(counts, {"offset": "pn"})
-    local_rank = F.rank().over(Window.partitionBy("pid").orderBy("value"))
+    gv = e.select(F.col("event_type").alias("g"), "value")
+    pool, w = exact_cumulative(gv, ("value",), {"n": F.count(F.lit(1))})
     rank2 = (
-        (local_rank.cast("bigint") + F.col("offset")) * 2
+        (F.rank().over(w).cast("bigint") + F.col("off_n")) * 2
         + F.count(F.lit(1))
         .over(Window.partitionBy("pid", "value"))
         .cast("bigint")
         - 1
     )
-    ranked = pool.join(F.broadcast(offsets), "pid").select(
-        "g", rank2.alias("rank2")
-    )
+    ranked = pool.select("g", rank2.alias("rank2"))
     grp = ranked.groupBy("g").agg(
         F.count(F.lit(1)).cast("bigint").alias("ng"),
         # rank sums grow ~N^2: decimal partials, exact past int64
         F.sum(F.col("rank2").cast("decimal(38,0)")).alias("r2"),
     )
     ties = (
-        pool.groupBy("value")
+        gv.groupBy("value")
         .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
         .agg(
             F.sum(
@@ -689,7 +680,7 @@ def acf_ljung_box(spark, sf_dir):
         F.col("n"),
     ).persist()
     # cumulative Q without a window: triangular join over the 7-row
-    # lag frame (the prefix_offsets device, inlined on a tiny domain)
+    # lag frame (a tiny domain)
     xl, yl = lags.alias("xl"), lags.alias("yl")
     return (
         xl.join(
@@ -3075,12 +3066,12 @@ def wilcoxon_signed_rank(spark, sf_dir):
     Exactness: per-user differences are one signed integer-cents
     aggregate (a single pass — the sign flips inside the SUM);
     average ranks are 2x-scaled integers via the
-    ``kruskal_wallis_values`` range-partition + broadcast
-    prefix-offset machinery, so W2+ = 2·W+ folds exactly in
+    ``kruskal_wallis_values`` bucket-rank machinery
+    (``exact_cumulative``), so W2+ = 2·W+ folds exactly in
     DECIMAL(38,0) (rank sums grow ~N²); only the closing z divides.
-    Plan: event scan → user rollup → range-partitioned rank on |d|
-    with no single-partition exchange; tie rollup on the |d| value
-    grid."""
+    Plan: event scan → user rollup → in-bucket rank on |d| plus
+    broadcast bucket offsets, no single-partition exchange; tie
+    rollup on the |d| value grid."""
     e = t(spark, sf_dir, "events")
     day = F.floor(F.unix_micros("ts") / 86_400_000_000).cast("bigint")
     cents = (dec("value", 18, 2) * 100).cast("bigint")
@@ -3093,28 +3084,19 @@ def wilcoxon_signed_rank(spark, sf_dir):
             .cast("bigint")
             .alias("diff")
         )
-        .persist()
     )
-    nz = (
-        per_user.where(F.col("diff") != 0)
-        .select("diff", F.abs(F.col("diff")).alias("ad"))
-        .repartitionByRange(8, F.col("ad").asc())
-        .withColumn("pid", F.spark_partition_id())
-        .persist()
+    nz = per_user.where(F.col("diff") != 0).select(
+        "diff", F.abs(F.col("diff")).alias("ad")
     )
-    counts = nz.groupBy("pid").agg(F.count(F.lit(1)).alias("pn"))
-    offsets = prefix_offsets(counts, {"offset": "pn"})
-    local_rank = F.rank().over(Window.partitionBy("pid").orderBy("ad"))
+    acc, w = exact_cumulative(nz, ("ad",), {"n": F.count(F.lit(1))})
     rank2 = (
-        (local_rank.cast("bigint") + F.col("offset")) * 2
+        (F.rank().over(w).cast("bigint") + F.col("off_n")) * 2
         + F.count(F.lit(1))
         .over(Window.partitionBy("pid", "ad"))
         .cast("bigint")
         - 1
     )
-    ranked = nz.join(F.broadcast(offsets), "pid").select(
-        "diff", rank2.alias("rank2")
-    )
+    ranked = acc.select("diff", rank2.alias("rank2"))
     ties = (
         nz.groupBy("ad")
         .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
@@ -3264,49 +3246,32 @@ def jonckheere_terpstra_trend(spark, sf_dir):
     c_a) folds exactly in DECIMAL(38,0) (grows ~n²; the moment
     folds Σn(n−1)(2n+5) etc. grow ~n³ and widen the same way —
     the sf0.1 overflow class). The Spark side computes the grid
-    cumulatives with the range-partition + ``prefix_offsets``
-    5-column machinery — ranks never leave their partition, no
-    single-partition exchange; the DuckDB oracle uses one ordered
+    cumulatives with ``exact_cumulative`` over 4 columns — in-bucket
+    running sums plus broadcast bucket offsets, no single-partition
+    exchange; the DuckDB oracle uses one ordered
     window over the same grid. Only the closing mean/var/z are
     float."""
     o = t(spark, sf_dir, "orders")
     pool = o.select(
         F.substring("o_orderpriority", 1, 1).cast("bigint").alias("g"),
         (dec("o_totalprice", 18, 2) * 100).cast("bigint").alias("v"),
-    ).persist()
+    )
     cs = [
         F.sum(F.when(F.col("g") == i, 1).otherwise(0))
         .cast("bigint")
         .alias(f"c{i}")
         for i in (1, 2, 3, 4, 5)
     ]
-    grid = (
-        pool.groupBy("v")
-        .agg(*cs)
-        .repartitionByRange(8, F.col("v").asc())
-        .withColumn("pid", F.spark_partition_id())
-        .persist()
+    acc, _ = exact_cumulative(
+        pool.groupBy("v").agg(*cs),
+        ("v",),
+        {f"l{i}": F.sum(f"c{i}") for i in (1, 2, 3, 4)},
     )
-    ptot = grid.groupBy("pid").agg(
-        *[F.sum(f"c{i}").alias(f"p{i}") for i in (1, 2, 3, 4)]
-    )
-    offsets = prefix_offsets(
-        ptot, {f"o{i}": f"p{i}" for i in (1, 2, 3, 4)}
-    )
-    w = (
-        Window.partitionBy("pid")
-        .orderBy("v")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    cum = grid.join(F.broadcast(offsets), "pid").select(
+    cum = acc.select(
         "v",
         *[F.col(f"c{i}") for i in (1, 2, 3, 4, 5)],
         *[
-            (
-                F.sum(f"c{i}").over(w).cast("bigint")
-                + F.col(f"o{i}")
-                - F.col(f"c{i}")
-            ).alias(f"l{i}")
+            (F.col(f"cum_l{i}") - F.col(f"c{i}")).alias(f"l{i}")
             for i in (1, 2, 3, 4)
         ],
     )
@@ -3436,11 +3401,12 @@ def average_precision_ranking(spark, sf_dir):
 
     The tie-break on event_id makes every rank a deterministic
     integer at any partitioning; ranks and cumulative positives come
-    from the range-partition + ``prefix_offsets`` machinery (two
-    offset sums: row count and positive count), so no
-    single-partition exchange; each hit's precision rounds to 1e-12
-    DECIMAL before the order-free fold. Only the three final ratios
-    are float."""
+    from ``exact_cumulative`` (two running sums, row count and
+    positive count, over the ascending order (-cents, event_id)), so
+    no single-partition exchange; each hit's precision rounds to
+    1e-12 DECIMAL before the order-free fold, and every total is one
+    aggregate over the ranked rows. Only the three final ratios are
+    float."""
     e = t(spark, sf_dir, "events")
     pool = e.select(
         "event_id",
@@ -3449,66 +3415,37 @@ def average_precision_ranking(spark, sf_dir):
         .otherwise(0)
         .alias("y"),
     )
-    rp = (
-        pool.repartitionByRange(
-            8, F.col("s").desc(), F.col("event_id").asc()
-        )
-        .withColumn("pid", F.spark_partition_id())
-        .persist()
+    acc, _ = exact_cumulative(
+        pool.withColumn("ns", -F.col("s")),
+        ("ns", "event_id"),
+        {"r": F.count(F.lit(1)), "pc": F.sum("y")},
     )
-    ptot = rp.groupBy("pid").agg(
-        F.count(F.lit(1)).alias("pn"), F.sum("y").alias("pp")
-    )
-    offsets = prefix_offsets(ptot, {"on": "pn", "op": "pp"})
-    w = Window.partitionBy("pid").orderBy(
-        F.col("s").desc(), F.col("event_id").asc()
-    )
-    ranked = rp.join(F.broadcast(offsets), "pid").select(
-        "y",
-        (F.row_number().over(w).cast("bigint") + F.col("on")).alias("r"),
-        (
-            F.sum("y")
-            .over(w.rowsBetween(Window.unboundedPreceding, 0))
-            .cast("bigint")
-            + F.col("op")
-        ).alias("pc"),
-    ).persist()
-    tot = rp.agg(
+    r = F.col("cum_r")
+    fold = acc.agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
         F.sum("y").cast("bigint").alias("np"),
-    )
-    ap = ranked.where(F.col("y") == 1).agg(
         F.sum(
-            F.round(F.col("pc").cast("double") / F.col("r"), 12).cast(
-                "decimal(38,12)"
+            F.when(
+                F.col("y") == 1,
+                F.round(F.col("cum_pc").cast("double") / r, 12).cast(
+                    "decimal(38,12)"
+                ),
             )
-        ).alias("aps")
+        ).alias("aps"),
+        F.sum(F.when(r <= 100, F.col("y"))).cast("bigint").alias("p100"),
     )
-    atk = ranked.where(F.col("r") <= 100).agg(
-        F.sum("y").cast("bigint").alias("p100")
-    )
-    return (
-        tot.crossJoin(F.broadcast(ap))
-        .crossJoin(F.broadcast(atk))
-        .select(
-            F.col("n").alias("n_events"),
-            F.col("np").alias("n_pos"),
-            (
-                F.round(
-                    F.col("aps").cast("double") / F.col("np"), 9
-                )
-                + 0.0
-            ).alias("average_precision"),
-            (
-                F.round(F.col("p100").cast("double") / 100.0, 6) + 0.0
-            ).alias("precision_at_100"),
-            (
-                F.round(
-                    F.col("p100").cast("double") / F.col("np"), 6
-                )
-                + 0.0
-            ).alias("recall_at_100"),
-        )
+    return fold.select(
+        F.col("n").alias("n_events"),
+        F.col("np").alias("n_pos"),
+        (
+            F.round(F.col("aps").cast("double") / F.col("np"), 9) + 0.0
+        ).alias("average_precision"),
+        (
+            F.round(F.col("p100").cast("double") / 100.0, 6) + 0.0
+        ).alias("precision_at_100"),
+        (
+            F.round(F.col("p100").cast("double") / F.col("np"), 6) + 0.0
+        ).alias("recall_at_100"),
     )
 
 

@@ -4575,8 +4575,8 @@ def sprt_purchase_rate_monitor(spark, sf_dir):
     Exactness: daily (n, k) are exact integers; each LLR step is one
     IEEE expression rounded at 1e-9; the cumulative sum is a
     TRIANGULAR join over the calendar-day frame (d' <= d) folding the
-    rounded decimals — window-free by construction (the
-    prefix_offsets discipline), bounded by the calendar domain.
+    rounded decimals — window-free by construction, bounded by the
+    calendar domain.
     Plan: one rollup, one bounded triangular join, one projection.
     """
     e = t(spark, sf_dir, "events")

@@ -604,6 +604,8 @@ def skyline_2d(
     grp = pts.groupBy(F.col(x).alias("price")).agg(
         F.max(y).alias("mx_date")
     )
+    # a running max, not a sum or rank: exact_cumulative does not
+    # apply, and tests pin this range exchange
     gp = (
         grp.repartitionByRange(n_parts, F.col("price").desc())
         .withColumn("pid", F.spark_partition_id())

@@ -16,7 +16,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from . import register
-from .common import dec, prefix_offsets, t
+from .common import dec, exact_cumulative, t
 
 
 # --------------------------------------------------------------------------
@@ -182,40 +182,31 @@ def mann_whitney_u_values(spark, sf_dir):
     statistics are EXACT integers at any partitioning — only the final
     centered statistic divides.
 
-    Plan — global ranking WITHOUT a single-partition sort (the ranged
-    pattern shared with sorted_neighborhood_ranged): the pool
-    range-partitions on value (equal values land in ONE partition, so
-    tie groups never split), ranks compute per partition, and each
-    partition's rank offset is the broadcast prefix-sum of partition
-    counts; global_rank = local_rank + offset exactly. The final rank
-    sums are one summary aggregation."""
+    Plan — global ranking WITHOUT a single-partition sort: the pool
+    ranks inside value buckets (``exact_cumulative``; equal values
+    share a bucket, so tie groups never split) and each bucket's rank
+    offset is the broadcast count of every earlier bucket;
+    global_rank = local_rank + offset exactly. The final rank sums
+    are one summary aggregation."""
     e = t(spark, sf_dir, "events").where(
         F.col("event_type").isin("click", "purchase")
     )
-    pool = (
+    pool, w = exact_cumulative(
         e.select(
             "value",
             (F.col("event_type") == "click").cast("int").alias("g1"),
-        )
-        .repartitionByRange(8, F.col("value").asc())
-        .withColumn("pid", F.spark_partition_id())
-        .persist()
-    )
-    counts = pool.groupBy("pid").agg(F.count(F.lit(1)).alias("pn"))
-    offsets = prefix_offsets(counts, {"offset": "pn"})
-    local_rank = F.rank().over(
-        Window.partitionBy("pid").orderBy("value")
+        ),
+        ("value",),
+        {"n": F.count(F.lit(1))},
     )
     rank2 = (
-        (local_rank.cast("bigint") + F.col("offset")) * 2
+        (F.rank().over(w).cast("bigint") + F.col("off_n")) * 2
         + F.count(F.lit(1))
         .over(Window.partitionBy("pid", "value"))
         .cast("bigint")
         - 1
     )
-    ranked = pool.join(F.broadcast(offsets), "pid").select(
-        "g1", rank2.alias("rank2")
-    )
+    ranked = pool.select("g1", rank2.alias("rank2"))
     sums = ranked.agg(
         F.sum(F.when(F.col("g1") == 1, 1).otherwise(0))
         .cast("bigint")
@@ -292,10 +283,11 @@ def ks_two_sample_values(spark, sf_dir):
     discipline of the MWU ranks, applied to CDFs).
 
     Plan — same single-partition-free shape as mann_whitney_u_values:
-    the (value, group) counts range-partition on value, per-partition
-    cumulative sums get broadcast per-partition prefix-sum offsets per
-    GROUP, and the max gap is one summary aggregation. Value-grain
-    rows (not events) flow through the windows."""
+    the per-value group counts accumulate inside value buckets plus
+    broadcast per-bucket offsets (``exact_cumulative``), which also
+    carries the group totals, and the max gap is one summary
+    aggregation. Value-grain rows (not events) flow through the
+    windows."""
     e = t(spark, sf_dir, "events").where(
         F.col("event_type").isin("click", "purchase")
     )
@@ -309,33 +301,21 @@ def ks_two_sample_values(spark, sf_dir):
             F.sum("g1").alias("c1"),
             F.sum(1 - F.col("g1")).alias("c2"),
         )
-        .repartitionByRange(8, F.col("value").asc())
-        .withColumn("pid", F.spark_partition_id())
-        .persist()
     )
-    part_tots = by_val.groupBy("pid").agg(
-        F.sum("c1").alias("p1"), F.sum("c2").alias("p2")
+    acc, _ = exact_cumulative(
+        by_val, ("value",), {"f1": F.sum("c1"), "f2": F.sum("c2")}
     )
-    offsets = prefix_offsets(part_tots, {"off1": "p1", "off2": "p2"})
-    w_local = (
-        Window.partitionBy("pid")
-        .orderBy("value")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    cum = by_val.join(F.broadcast(offsets), "pid").select(
-        (F.sum("c1").over(w_local) + F.col("off1")).alias("cum1"),
-        (F.sum("c2").over(w_local) + F.col("off2")).alias("cum2"),
-    )
-    tots = by_val.agg(
-        F.sum("c1").cast("bigint").alias("n1"),
-        F.sum("c2").cast("bigint").alias("n2"),
+    cum = acc.select(
+        F.col("cum_f1").alias("cum1"),
+        F.col("cum_f2").alias("cum2"),
+        F.col("tot_f1").cast("bigint").alias("n1"),
+        F.col("tot_f2").cast("bigint").alias("n2"),
     )
     gap = F.abs(
         F.col("cum1") * F.col("n2") - F.col("cum2") * F.col("n1")
     )
     return (
-        cum.crossJoin(F.broadcast(tots))
-        .groupBy("n1", "n2")
+        cum.groupBy("n1", "n2")
         .agg(
             F.max(gap).cast("bigint").alias("d_scaled"),
             F.round(
@@ -729,42 +709,31 @@ def median_ci_order_stats(spark, sf_dir):
     companion to the robust point estimators (MAD, winsorized,
     Theil-Sen): a number plus how sure.
 
-    Rank selection runs on the range-partitioned global-rank machinery
-    (third use, after MWU and KS): repartitionByRange on value,
-    per-partition row_numbers, broadcast prefix-sum offsets — the
-    three target ranks are exact and NO single-partition sort touches
-    the order-grain frame. Output is one row: n, the three ranks, and
-    the three order-statistic values (exact doubles, no
-    interpolation)."""
+    Rank selection runs on ``exact_cumulative`` (third use, after MWU
+    and KS): the running count over the (price, orderkey) total order
+    is the global row number, built from in-bucket counts plus
+    broadcast bucket offsets — the three target ranks are exact and
+    NO single-partition sort touches the order-grain frame. Output
+    is one row: n, the three ranks, and the three order-statistic
+    values (exact doubles, no interpolation)."""
     o = t(spark, sf_dir, "orders").select("o_totalprice", "o_orderkey")
-    n_t = o.agg(F.count(F.lit(1)).alias("n"))
-    ranks = n_t.select(
-        "n",
-        F.floor(
-            F.col("n") / 2.0 - F.lit(1.96) * F.sqrt("n") / 2.0
-        ).cast("bigint").alias("r_lo"),
-        F.ceil(
-            1 + F.col("n") / 2.0 + F.lit(1.96) * F.sqrt("n") / 2.0
-        ).cast("bigint").alias("r_hi"),
-        F.floor((F.col("n") + 1) / 2).cast("bigint").alias("r_med"),
+    acc, _ = exact_cumulative(
+        o, ("o_totalprice", "o_orderkey"), {"n": F.count(F.lit(1))}
     )
-    pool = (
-        o.repartitionByRange(
-            8, F.col("o_totalprice").asc(), F.col("o_orderkey").asc()
-        )
-        .withColumn("pid", F.spark_partition_id())
-        .persist()
-    )
-    counts = pool.groupBy("pid").agg(F.count(F.lit(1)).alias("pn"))
-    offsets = prefix_offsets(counts, {"offset": "pn"})
-    local = F.row_number().over(
-        Window.partitionBy("pid").orderBy("o_totalprice", "o_orderkey")
-    )
-    ranked = pool.join(F.broadcast(offsets), "pid").select(
+    n = F.col("tot_n").cast("bigint")
+    ranked = acc.select(
         "o_totalprice",
-        (local.cast("bigint") + F.col("offset")).alias("r"),
+        F.col("cum_n").alias("r"),
+        n.alias("n"),
+        F.floor(n / 2.0 - F.lit(1.96) * F.sqrt(n) / 2.0)
+        .cast("bigint")
+        .alias("r_lo"),
+        F.ceil(1 + n / 2.0 + F.lit(1.96) * F.sqrt(n) / 2.0)
+        .cast("bigint")
+        .alias("r_hi"),
+        F.floor((n + 1) / 2).cast("bigint").alias("r_med"),
     )
-    hit = ranked.crossJoin(F.broadcast(ranks)).where(
+    hit = ranked.where(
         (F.col("r") == F.col("r_lo"))
         | (F.col("r") == F.col("r_med"))
         | (F.col("r") == F.col("r_hi"))
@@ -2019,9 +1988,9 @@ def spearman_rank_corr(spark, sf_dir):
     variable).
 
     Plan: user-grain rollup (one shuffle), then each variable ranks
-    with the ranged pattern — range-partition on the value, rank per
-    partition, add the broadcast prefix-count offset (no
-    single-partition sort; ``prefix_offsets``); the five power sums
+    inside value buckets and adds the broadcast count of every
+    earlier bucket (``exact_cumulative``; no single-partition sort);
+    the five power sums
     of the two rank vectors reduce in one aggregation and only the
     final ρ divides in floating point (−0 normalized)."""
     e = t(spark, sf_dir, "events")
@@ -2031,39 +2000,16 @@ def spearman_rank_corr(spark, sf_dir):
     )
 
     def rank2_of(df, col, out):
-        # r19: deterministic value-bucket pid (bounds-derived width)
-        # replaces the range partition + spark_partition_id, dropping
-        # the user-grain stability persist and the boundary-sampling
-        # pass; offsets from one symmetric bucket_prefix_totals pass.
-        # Equal values share a bucket by construction, so tie-group
-        # midranks are bit-identical.
-        from .common import bucket_prefix_totals
-
-        bounds = df.agg(
-            F.min(col).alias("vmin"),
-            (F.floor((F.max(col) - F.min(col)) / 1024) + 1)
-            .cast("bigint")
-            .alias("vw"),
-        )
-        pool = df.crossJoin(F.broadcast(bounds)).withColumn(
-            "pid", F.expr(f"({col} - vmin) div vw")
-        )
-        ot = bucket_prefix_totals(
-            pool.groupBy("pid").agg(F.count(F.lit(1)).alias("pn")),
-            {"pn": "pn"},
-            symmetric=True,
-        )
-        local_rank = F.rank().over(Window.partitionBy("pid").orderBy(col))
+        # equal values share a bucket, so tie-group midranks are exact
+        acc, w = exact_cumulative(df, (col,), {"n": F.count(F.lit(1))})
         r2 = (
-            (local_rank.cast("bigint") + F.col("off_pn")) * 2
+            (F.rank().over(w).cast("bigint") + F.col("off_n")) * 2
             + F.count(F.lit(1))
             .over(Window.partitionBy("pid", col))
             .cast("bigint")
             - 1
         )
-        return pool.join(F.broadcast(ot), "pid").select(
-            "user_id", r2.alias(out)
-        )
+        return acc.select("user_id", r2.alias(out))
 
     rx = rank2_of(per_user.select("user_id", "x"), "x", "rx2")
     ry = rank2_of(per_user.select("user_id", "y"), "y", "ry2")

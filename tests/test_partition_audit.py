@@ -37,7 +37,7 @@ def test_registry_single_partition_flags_match_allowlist(spark):
     new = sorted(flagged - set(allowed()))
     assert not new, (
         "new window/sort over Exchange SinglePartition — either rewrite "
-        "with the range-partition + prefix_offsets pattern or add an "
+        "with plans/common.py::exact_cumulative or add an "
         f"annotated allowlist entry: {new}"
     )
     # stale gate: the FULL effective allowlist — INFO-tagged

@@ -11,7 +11,7 @@ from __future__ import annotations
 
 import datetime as dt
 
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from celestrak_tle_data_pipeline_spark.operators.assembly import (
@@ -457,8 +457,162 @@ def test_ppm_resize_dims_property(spark, in_w, in_h, out_w, out_h):
 
 
 # --------------------------------------------------------------------------
-# round-7: range-partitioned prefix offsets == plain cumulative sum
+# exact_cumulative == a pure-Python running sum and rank
 # --------------------------------------------------------------------------
+def _run_exact_cumulative(spark, rows, buckets, keyed, fractional):
+    """exact_cumulative over rows (g, value, x), id = position, in the
+    total order (value, id). Per id: the output row, the row number
+    over the exposed window, and the tie rank over value alone (equal
+    values share a bucket, so a bucket-local rank plus the offset is
+    the global rank)."""
+    from pyspark.sql import Window, functions as F
+
+    from celestrak_tle_data_pipeline_spark.plans.common import (
+        exact_cumulative,
+    )
+
+    vtype = "double" if fractional else "long"
+    df = spark.createDataFrame(
+        [
+            (i, g, v if v is None or not fractional else v / 4.0, x)
+            for i, (g, v, x) in enumerate(rows)
+        ],
+        f"id long, g long, value {vtype}, x long",
+    )
+    keys = ("g",) if keyed else ()
+    acc, w = exact_cumulative(
+        df,
+        ("value", "id"),
+        {"s": F.sum("x"), "n": F.count(F.lit(1))},
+        keys,
+        buckets,
+    )
+    tie_w = Window.partitionBy(*keys, "pid").orderBy("value")
+    return {
+        r["id"]: r
+        for r in acc.select(
+            "*",
+            (F.row_number().over(w) + F.col("off_n")).alias("rn"),
+            (F.rank().over(tie_w) + F.col("off_n")).alias("rk"),
+        ).collect()
+    }
+
+
+@settings(max_examples=2, deadline=None)
+@given(
+    rows=st.lists(
+        st.tuples(
+            st.integers(0, 2),
+            st.one_of(st.none(), st.integers(-20, 20)),
+            st.integers(-1000, 1000),
+        ),
+        min_size=1,
+        max_size=60,
+    ),
+    buckets=st.sampled_from((1, 3, 8, 1024)),
+    keyed=st.booleans(),
+    fractional=st.booleans(),
+)
+# all-equal column (zero width), integral and fractional
+@example(rows=[(0, 5, 1)] * 7, buckets=1024, keyed=False, fractional=False)
+@example(rows=[(1, 5, 2)] * 7, buckets=8, keyed=True, fractional=True)
+# a single row
+@example(rows=[(1, -3, -7)], buckets=3, keyed=False, fractional=True)
+# ties and negative values in every group
+@example(
+    rows=[
+        (g, v, 10 * v - g) for g in range(3) for v in (-2, -2, 0, 1, 1, 9)
+    ],
+    buckets=3,
+    keyed=True,
+    fractional=False,
+)
+def test_exact_cumulative_matches_reference(
+    spark, rows, buckets, keyed, fractional
+):
+    """The bucketed running sums, ranks, offsets and totals equal a
+    pure-Python global computation exactly, at every bucket count —
+    the invariant every exact-cumulative query (MWU, KS, median-CI,
+    the Lorenz family, PPS sampling) stands on."""
+    got = _run_exact_cumulative(spark, rows, buckets, keyed, fractional)
+    grp = [g if keyed else 0 for g, _, _ in rows]
+    # NULL sorts first, as in an unpartitioned Window.orderBy
+    sk = [(v is not None, v or 0) for _, v, _ in rows]
+    x = [r[2] for r in rows]
+    ids = range(len(rows))
+    for i in ids:
+        mates = [j for j in ids if grp[j] == grp[i]]
+        upto = [j for j in mates if (sk[j], j) <= (sk[i], i)]
+        r = got[i]
+        assert r["cum_s"] == sum(x[j] for j in upto)
+        assert r["cum_n"] == r["rn"] == len(upto)
+        assert r["tot_s"] == sum(x[j] for j in mates)
+        assert r["tot_n"] == len(mates)
+        assert r["rk"] == 1 + sum(1 for j in mates if sk[j] < sk[i])
+        # buckets: -1 holds the NULLs; values fill [0, buckets] in value
+        # order and equal values share one
+        assert (r["pid"] == -1) == (rows[i][1] is None)
+        assert -1 <= r["pid"] <= buckets
+        for j in mates:
+            if sk[j] < sk[i]:
+                assert got[j]["pid"] <= r["pid"]
+            elif sk[j] == sk[i]:
+                assert got[j]["pid"] == r["pid"]
+        assert r["off_s"] == sum(
+            x[j] for j in mates if got[j]["pid"] < r["pid"]
+        )
+
+
+def test_exact_cumulative_null_order_matches_window(spark):
+    """A NULL order value is neither dropped nor an error: it sorts
+    first, exactly as an unpartitioned Window.orderBy places it."""
+    from pyspark.sql import Window, functions as F
+
+    from celestrak_tle_data_pipeline_spark.plans.common import (
+        exact_cumulative,
+    )
+
+    df = spark.createDataFrame(
+        [(0, None, 4), (1, 3, 5), (2, None, 6), (3, -1, 7), (4, 3, 8)],
+        "id long, value long, x long",
+    )
+    acc, w = exact_cumulative(
+        df, ("value",), {"s": F.sum("x"), "n": F.count(F.lit(1))}
+    )
+    got = {
+        r["id"]: (r["rk"], r["tot_s"])
+        for r in acc.select(
+            "id", "tot_s", (F.rank().over(w) + F.col("off_n")).alias("rk")
+        ).collect()
+    }
+    want = {
+        r["id"]: (r["rk"], 30)
+        for r in df.select(
+            "id", F.rank().over(Window.orderBy("value")).alias("rk")
+        ).collect()
+    }
+    assert got == want
+    srun = {
+        r["id"]: r["cum_s"]
+        for r in exact_cumulative(df, ("value", "id"), {"s": F.sum("x")})[0]
+        .collect()
+    }
+    wrun = {
+        r["id"]: r["c"]
+        for r in df.select(
+            "id",
+            F.sum("x")
+            .over(
+                Window.orderBy("value", "id").rowsBetween(
+                    Window.unboundedPreceding, Window.currentRow
+                )
+            )
+            .alias("c"),
+        ).collect()
+    }
+    assert srun == wrun == {0: 4, 2: 10, 3: 17, 1: 22, 4: 30}
+
+
 @settings(max_examples=1, deadline=None)
 @given(
     st.lists(
@@ -469,13 +623,15 @@ def test_ppm_resize_dims_property(spark, in_w, in_h, out_w, out_h):
     )
 )
 def test_prefix_offsets_reconstruct_global_cumsum(spark, kvs):
-    """The triangular-join prefix offsets plus per-partition running
-    sums must reproduce the global cumulative sum EXACTLY for every
-    partition count — the invariant all the ranged global-rank/cumsum
-    rewrites (X22, MWU, KS, median-CI) stand on."""
-    from pyspark.sql import Window, functions as F
+    """The bucket prefix offsets plus per-bucket running sums must
+    reproduce the global cumulative sum EXACTLY for every bucket
+    count — the invariant all the global-rank/cumsum rewrites (X22,
+    MWU, KS, median-CI) stand on."""
+    from pyspark.sql import functions as F
 
-    from celestrak_tle_data_pipeline_spark.plans.common import prefix_offsets
+    from celestrak_tle_data_pipeline_spark.plans.common import (
+        exact_cumulative,
+    )
 
     want = {}
     run = 0
@@ -484,27 +640,10 @@ def test_prefix_offsets_reconstruct_global_cumsum(spark, kvs):
         want[k] = run
 
     df = spark.createDataFrame(kvs, "k long, v long")
-    for n_parts in (1, 3, 8):
-        pool = (
-            df.repartitionByRange(n_parts, F.col("k").asc())
-            .withColumn("pid", F.spark_partition_id())
-            .persist()
-        )
-        psums = pool.groupBy("pid").agg(F.sum("v").alias("pv"))
-        offsets = prefix_offsets(psums, {"off": "pv"})
-        local = F.sum("v").over(
-            Window.partitionBy("pid")
-            .orderBy("k")
-            .rowsBetween(Window.unboundedPreceding, 0)
-        )
-        got = {
-            r.k: r.cum
-            for r in pool.join(F.broadcast(offsets), "pid")
-            .select("k", (local + F.col("off")).alias("cum"))
-            .collect()
-        }
-        pool.unpersist()
-        assert got == want, f"n_parts={n_parts}"
+    for n_buckets in (1, 3, 8):
+        acc, _ = exact_cumulative(df, ("k",), {"v": F.sum("v")}, (), n_buckets)
+        got = {r.k: r.cum_v for r in acc.select("k", "cum_v").collect()}
+        assert got == want, f"n_buckets={n_buckets}"
 
 
 # --------------------------------------------------------------------------

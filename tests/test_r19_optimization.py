@@ -5,12 +5,14 @@ The r18 value-bucket device computed its bucket offsets
 as independent subtrees over the same data-grain grid; column pruning
 and the join-inferred ``isnotnull(pid)`` de-canonicalized the branches
 so AQE re-executed the grid rollup once per consumer (verified in the
-r18 runtime plans). r19 folds offsets AND totals into ONE
-``bucket_prefix_totals`` pass and aligns every branch's scan predicate,
-so the base subtree materializes once. These pins cover:
+r18 runtime plans). r19 folded offsets AND totals into ONE pass, now
+``exact_cumulative`` (its arithmetic is property-tested in
+``test_properties.py``), so the base subtree materializes once. These
+pins cover:
 
-1. ``bucket_prefix_totals`` arithmetic (exclusive prefix + totals,
-   both join shapes) on a hand-checked frame;
+1. the device's bucket offsets and totals (exclusive prefix, with
+   and without keys) on hand-checked frames, and its cumulatives
+   against the global ordered window they replace;
 2. the executed (post-AQE) plans of the five rewritten queries hit
    their scan budgets — a regression that re-splits the base subtree
    re-adds full-table passes at 100 TB;
@@ -21,11 +23,10 @@ so the base subtree materializes once. These pins cover:
 
 from __future__ import annotations
 
-from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from celestrak_tle_data_pipeline_spark.plans.common import (
-    bucket_prefix_totals,
+    exact_cumulative,
 )
 
 from conftest import SF_DIR
@@ -42,26 +43,83 @@ def _executed_plan(df) -> str:
     return txt.split("== Initial Plan ==")[0]
 
 
-def test_bucket_prefix_totals_exact(spark):
-    psums = spark.createDataFrame(
-        [Row(pid=3, pn=7, px=30), Row(pid=1, pn=2, px=10),
-         Row(pid=5, pn=4, px=20)]
+def _executed_scans(plan) -> int:
+    """Parquet scans in a final adaptive plan, by a walk of the
+    physical tree: through query stages into the plans they ran, not
+    into reused exchanges (a reuse is not a second scan)."""
+    kind = plan.getClass().getSimpleName()
+    if kind == "AdaptiveSparkPlanExec":
+        return _executed_scans(plan.executedPlan())
+    if kind.endswith("QueryStageExec"):
+        return _executed_scans(plan.plan())
+    if plan.nodeName().startswith("Scan parquet"):
+        return 1
+    kids = plan.children()
+    subs = plan.subqueries()
+    return sum(
+        _executed_scans(kids.apply(i)) for i in range(kids.size())
+    ) + sum(_executed_scans(subs.apply(i)) for i in range(subs.size()))
+
+
+def _bucket_offsets(df, keys, buckets):
+    """{(*keys, pid): {off_/tot_ name: value}} of exact_cumulative
+    over value column ``v`` with aggregates n (row count) and x."""
+    acc, _ = exact_cumulative(
+        df,
+        ("v",),
+        {"n": F.count(F.lit(1)), "x": F.sum("x")},
+        keys,
+        buckets,
     )
-    for symmetric in (False, True):
-        # the symmetric shape only guarantees identical results when
-        # every off_<out> is consumed; pn qualifies in both shapes
-        sums = {"pn": "pn"} if symmetric else {"pn": "pn", "px": "px"}
-        out = {
-            r["pid"]: r
-            for r in bucket_prefix_totals(
-                psums, sums, symmetric=symmetric
-            ).collect()
-        }
-        assert [out[p]["off_pn"] for p in (1, 3, 5)] == [0, 2, 9]
-        assert [out[p]["tot_pn"] for p in (1, 3, 5)] == [13, 13, 13]
-        if not symmetric:
-            assert [out[p]["off_px"] for p in (1, 3, 5)] == [0, 10, 40]
-            assert [out[p]["tot_px"] for p in (1, 3, 5)] == [60] * 3
+    cols = ["off_n", "tot_n", "off_x", "tot_x"]
+    out = {}
+    for r in acc.select(*keys, "pid", *cols).distinct().collect():
+        at = tuple(r[k] for k in (*keys, "pid"))
+        assert at not in out, f"bucket {at} has two offset rows"
+        out[at] = {c: r[c] for c in cols}
+    return out
+
+
+def test_bucket_prefix_totals_exact(spark):
+    """Exclusive bucket offsets and totals for two aggregates on a
+    hand-checked frame: v in [0, 8] with 3 buckets gives width
+    floor(8/3)+1 = 3, so buckets 0/1/2 hold v 0-2 / 3-5 / 6-8."""
+    rows = (
+        [(0, 4), (2, 6)]
+        + [(3, 1), (3, 2), (3, 3), (4, 4), (4, 5), (5, 6), (5, 9)]
+        + [(6, 2), (7, 3), (8, 7), (8, 8)]
+    )
+    out = _bucket_offsets(
+        spark.createDataFrame(rows, "v long, x long"), (), 3
+    )
+    assert [out[(p,)]["off_n"] for p in (0, 1, 2)] == [0, 2, 9]
+    assert [out[(p,)]["tot_n"] for p in (0, 1, 2)] == [13, 13, 13]
+    assert [out[(p,)]["off_x"] for p in (0, 1, 2)] == [0, 10, 40]
+    assert [out[(p,)]["tot_x"] for p in (0, 1, 2)] == [60] * 3
+
+
+def test_bucket_prefix_totals_keyed(spark):
+    """keys=... restricts offsets and totals to the group (the lorenz
+    per-half shape): offsets accumulate earlier buckets of the SAME
+    group only, totals are per-group. v in [0, 7] with 4 buckets gives
+    width 2, so bucket = v div 2."""
+    rows = (
+        [(1, 0, 1)] * 3
+        + [(1, 5, 1)] * 5
+        + [(2, 2, 1)] * 7
+        + [(2, 7, 1)] * 11
+    )
+    out = _bucket_offsets(
+        spark.createDataFrame(rows, "half long, v long, x long"),
+        ("half",),
+        4,
+    )
+    assert {k: (o["off_n"], o["tot_n"]) for k, o in out.items()} == {
+        (1, 0): (0, 8),
+        (1, 2): (3, 8),
+        (2, 1): (0, 18),
+        (2, 3): (7, 18),
+    }
 
 
 def test_device_queries_hit_scan_budget(spark):
@@ -87,12 +145,13 @@ def test_device_queries_hit_scan_budget(spark):
         reynolds_smolensky_redistribution: 4,
     }
     for fn, budget in budgets.items():
-        plan = _executed_plan(fn(spark, SF_DIR_01))
-        got = plan.count("Scan parquet")
+        df = fn(spark, SF_DIR_01)
+        plan = _executed_plan(df)
+        got = _executed_scans(df._jdf.queryExecution().executedPlan())
         assert got <= budget, (
             f"{fn.__name__}: {got} executed scans > budget {budget} — "
-            f"the shared grid subtree split again (check column sets "
-            f"and the explicit isnotnull filters)"
+            f"the shared grid subtree split again (check the column "
+            f"sets and scan predicates of the branches)"
         )
         assert "InMemoryRelation" not in plan
         assert "InMemoryTableScan" not in plan
@@ -109,28 +168,14 @@ def test_device_offsets_match_global_window(spark):
         .groupBy("v")
         .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
     )
-    gb = grid.withColumn("pid", F.expr("v div 100"))
-    ot = bucket_prefix_totals(
-        gb.groupBy("pid").agg(F.sum("c").cast("bigint").alias("pn")),
-        {"pn": "pn"},
-        symmetric=True,
-    )
-    local = F.sum("c").over(
-        Window.partitionBy("pid")
-        .orderBy("v")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
+    acc, _ = exact_cumulative(grid, ("v",), {"pn": F.sum("c")}, buckets=8)
     got = {
         r["v"]: (r["head"], r["n"])
-        for r in gb.join(F.broadcast(ot), "pid")
-        .select(
+        for r in acc.select(
             "v",
-            (F.coalesce(local, F.lit(0)) + F.col("off_pn")).alias(
-                "head"
-            ),
+            (F.col("cum_pn") - F.col("c")).alias("head"),
             F.col("tot_pn").alias("n"),
-        )
-        .collect()
+        ).collect()
     }
     want_rows = (
         grid.select(
@@ -149,29 +194,3 @@ def test_device_offsets_match_global_window(spark):
     n = sum(r["c"] for r in grid.collect())
     want = {r["v"]: (r["head"], n) for r in want_rows}
     assert got == want
-
-
-def test_bucket_prefix_totals_keyed(spark):
-    """keys=... restricts prefix and totals to the group (the lorenz
-    per-half shape): offsets accumulate earlier buckets of the SAME
-    group only, totals are per-group."""
-    psums = spark.createDataFrame(
-        [
-            Row(half=1, pid=0, pn=3),
-            Row(half=1, pid=2, pn=5),
-            Row(half=2, pid=1, pn=7),
-            Row(half=2, pid=3, pn=11),
-        ]
-    )
-    out = {
-        (r["half"], r["pid"]): (r["off_pn"], r["tot_pn"])
-        for r in bucket_prefix_totals(
-            psums, {"pn": "pn"}, symmetric=True, keys=("half",)
-        ).collect()
-    }
-    assert out == {
-        (1, 0): (0, 8),
-        (1, 2): (3, 8),
-        (2, 1): (0, 18),
-        (2, 3): (7, 18),
-    }

@@ -19,11 +19,12 @@ CI and fails on any flag not in the allowlist AND on any stale
 allowlist entry, so a new row-grain single-partition window breaks the
 build instead of waiting for a judge, and the list can't rot.
 
-Row-grain prefix sums never need the windowed form at all:
-``plans/common.py::prefix_offsets`` computes range-partition offsets
-with a triangular self-join (used by the global-rank machinery —
-mann_whitney / ks / median_ci / systematic PPS / pareto frontier), so
-those plans audit at zero.
+Row-grain prefix sums and ranks never need the windowed form at all:
+``plans/common.py::exact_cumulative`` runs them inside value buckets
+and adds each bucket's offset from a triangular join over the bucket
+totals (used by the global-rank machinery — mann_whitney / ks /
+median_ci / systematic PPS / the Lorenz family), so those plans audit
+at zero.
 
 Usage: python tools/audit_single_partition.py [name ...]
 Exit status 1 if any non-allowlisted flag is found (full sweeps only).
