@@ -7,37 +7,22 @@ check — reference ``script.py:123-127``).
 
 Order-sensitivity is the one hard part at scale (SURVEY.md §7): row
 order across partitions is not a DataFrame concept, so we never rely on
-it. Two implementations:
-
-- ``assemble_from_payloads`` (primary, zero-shuffle): each fetched
-  payload is ONE row (``wholetext`` read or an in-memory batch). Lines
-  are split and re-grouped with higher-order array functions —
-  ``split`` → ``transform(sequence(...))`` → ``explode`` — entirely
-  inside whole-stage codegen. No shuffle, no index, order is exact
-  because it never leaves the row. Scales to any number of payload
-  files; a single payload is bounded by fetch size (~1 MB for ~9k
-  objects), far under any sane row limit.
-
-- ``assemble_from_lines`` (fallback for a boundary-less line stream):
-  ``zipWithIndex`` (a stable global index — unlike
-  ``monotonically_increasing_id``, which is NOT contiguous across
-  partitions) then group on ``idx div 3``. Costs one extra job + a
-  shuffle; only needed when payload boundaries were lost upstream.
+it. Each landed payload is ONE row (``wholetext`` read, a ``binaryFile``
+stream row, or an in-memory batch), and ``assemble_from_payloads``
+splits and re-groups its lines with higher-order array functions —
+``split`` → ``transform(sequence(...))`` → ``explode`` — entirely inside
+whole-stage codegen. No shuffle, no index, order is exact because it
+never leaves the row. Scales to any number of payload files; a single
+payload is bounded by fetch size (~1 MB for ~9k objects), far under any
+sane row limit. The ``tle`` Python data source
+(``sources/pysource.py``) applies the same rule in Python and is pinned
+row-identical to this one.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-TRIPLE_SCHEMA = T.StructType(
-    [
-        T.StructField("sat_name_raw", T.StringType(), True),
-        T.StructField("line1", T.StringType(), True),
-        T.StructField("line2", T.StringType(), True),
-    ]
-)
 
 
 def _strip(col):
@@ -68,37 +53,6 @@ def assemble_from_payloads(payloads: DataFrame, payload_col: str = "payload") ->
         payloads.where(F.size(lines) >= 3)
         .select(*other, F.explode(triples).alias("t"))
         .select(*other, "t.*")
-    )
-
-
-def assemble_from_lines(lines_df: DataFrame, line_col: str = "value") -> DataFrame:
-    """Boundary-less ordered line stream → triples, via a stable index.
-
-    Uses ``rdd.zipWithIndex`` for a contiguous global index (one extra
-    Spark job to count partition sizes). The groupBy shuffles, but only
-    the raw text — acceptable for the fallback path; the primary path
-    above is shuffle-free.
-    """
-    spark = lines_df.sparkSession
-    indexed = lines_df.select(line_col).rdd.zipWithIndex().map(
-        lambda r: (r[0][0], r[1])
-    )
-    df = spark.createDataFrame(indexed, schema=f"{line_col} string, idx long")
-    grouped = (
-        df.withColumn("group_id", (F.col("idx") / 3).cast("long"))
-        .withColumn("slot", F.col("idx") % 3)
-        .groupBy("group_id")
-        .agg(
-            F.max(F.when(F.col("slot") == 0, _strip(F.col(line_col)))).alias(
-                "sat_name_raw"
-            ),
-            F.max(F.when(F.col("slot") == 1, _strip(F.col(line_col)))).alias("line1"),
-            F.max(F.when(F.col("slot") == 2, _strip(F.col(line_col)))).alias("line2"),
-        )
-    )
-    # incomplete trailing triple → line2 null → dropped (script.py:124)
-    return grouped.where(F.col("line2").isNotNull()).orderBy("group_id").drop(
-        "group_id"
     )
 
 

@@ -25,7 +25,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from . import register as _live_register
-from .common import dec, t
+from .common import DAILY_ORDER_CENTS_SQL, daily_order_cents, dec, t
 
 BANK_QUERIES: dict = {}
 BANK_ORACLES: dict = {}
@@ -48,38 +48,13 @@ def register(name: str, oracle: str | None = None):
     return deco
 
 
-# Shared day-grain revenue series (orders calendar, integer cents).
-_DAILY_SQL = """
-    daily AS (
-        SELECT CAST(epoch_us(o_orderdate) // 86400000000 AS BIGINT)
-                   AS day,
-               CAST(SUM(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100
-                             AS BIGINT)) AS BIGINT) AS y
-        FROM orders GROUP BY 1
-    )
-"""
-
-
-def _daily(spark, sf_dir):
-    o = t(spark, sf_dir, "orders")
-    return o.groupBy(
-        F.floor(F.unix_micros("o_orderdate") / 86_400_000_000)
-        .cast("bigint")
-        .alias("day")
-    ).agg(
-        F.sum((dec("o_totalprice", 18, 2) * 100).cast("bigint"))
-        .cast("bigint")
-        .alias("y")
-    )
-
-
 # --------------------------------------------------------------------------
 # Historical VaR / CVaR of daily revenue changes
 # --------------------------------------------------------------------------
 @register(
     "var_cvar_historical",
     oracle=f"""
-    WITH {_DAILY_SQL},
+    WITH {DAILY_ORDER_CENTS_SQL},
     chg AS (
         SELECT round((LAG(y) OVER (ORDER BY day) - y) / 100.0, 2)
                    AS loss
@@ -115,7 +90,7 @@ def var_cvar_historical(spark, sf_dir):
     compare is on rounded values, identical in both engines). Plan:
     one day rollup, one lag over the calendar frame, one percentile
     fold, one tail fold."""
-    daily = _daily(spark, sf_dir)
+    daily = daily_order_cents(spark, sf_dir)
     chg = daily.select(
         F.round(
             (F.lag("y").over(Window.orderBy("day")) - F.col("y"))
@@ -154,7 +129,7 @@ def var_cvar_historical(spark, sf_dir):
 @register(
     "kupiec_pof_backtest",
     oracle=f"""
-    WITH {_DAILY_SQL},
+    WITH {DAILY_ORDER_CENTS_SQL},
     chg AS (
         SELECT day,
                round((LAG(y) OVER (ORDER BY day) - y) / 100.0, 2)
@@ -198,7 +173,7 @@ def kupiec_pof_backtest(spark, sf_dir):
     the var_cvar twin's exact constructions; the LR is one closed-form
     expression of two integers. Plan: day rollup, lag, two percentile
     folds, one test-half fold."""
-    daily = _daily(spark, sf_dir)
+    daily = daily_order_cents(spark, sf_dir)
     chg = daily.select(
         "day",
         F.round(
@@ -253,7 +228,7 @@ def kupiec_pof_backtest(spark, sf_dir):
 @register(
     "gbm_drift_vol_fit",
     oracle=f"""
-    WITH {_DAILY_SQL},
+    WITH {DAILY_ORDER_CENTS_SQL},
     ret AS (
         SELECT round(ln(y * 1.0 / LAG(y) OVER (ORDER BY day)), 9) AS r
         FROM daily
@@ -289,7 +264,7 @@ def gbm_drift_vol_fit(spark, sf_dir):
     sums of those rounded returns; every output is one terminal
     expression. Plan: day rollup, one lag over the calendar frame,
     one fold."""
-    daily = _daily(spark, sf_dir)
+    daily = daily_order_cents(spark, sf_dir)
     ret = daily.select(
         F.round(
             F.log(
@@ -326,7 +301,7 @@ def gbm_drift_vol_fit(spark, sf_dir):
 @register(
     "dixon_q_extremes",
     oracle=f"""
-    WITH {_DAILY_SQL},
+    WITH {DAILY_ORDER_CENTS_SQL},
     s AS (
         SELECT CAST(COUNT(*) AS BIGINT) AS n,
                CAST(MIN(y) AS BIGINT) AS x1,
@@ -361,7 +336,7 @@ def dixon_q_extremes(spark, sf_dir):
     (the second-smallest is min over y > min — tie-safe by
     construction); each Q is one terminal division. Plan: one day
     rollup, three scalar folds."""
-    daily = _daily(spark, sf_dir).persist()
+    daily = daily_order_cents(spark, sf_dir).persist()
     s = daily.agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
         F.min("y").cast("bigint").alias("x1"),
@@ -502,7 +477,7 @@ def cochran_c_variance(spark, sf_dir):
 @register(
     "page_hinkley_drift",
     oracle=f"""
-    WITH {_DAILY_SQL},
+    WITH {DAILY_ORDER_CENTS_SQL},
     xbar AS (
         SELECT CAST(COUNT(*) AS BIGINT) AS n,
                CAST(SUM(y) AS BIGINT) AS s
@@ -541,7 +516,7 @@ def page_hinkley_drift(spark, sf_dir):
     tie-broken by MIN(day) identically in both engines. Plan: day
     rollup, two cumulative windows over the bounded day frame, one
     fold."""
-    daily = _daily(spark, sf_dir)
+    daily = daily_order_cents(spark, sf_dir)
     xbar = daily.agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
         F.sum("y").cast("bigint").alias("s"),
@@ -590,7 +565,7 @@ def page_hinkley_drift(spark, sf_dir):
 @register(
     "integrated_autocorr_time",
     oracle=f"""
-    WITH {_DAILY_SQL},
+    WITH {DAILY_ORDER_CENTS_SQL},
     m AS (
         SELECT CAST(COUNT(*) AS BIGINT) AS n,
                CAST(SUM(y) AS BIGINT) AS s
@@ -649,7 +624,7 @@ def integrated_autocorr_time(spark, sf_dir):
     lag products in DECIMAL (scaled by 1e6 cents^2 to keep the folds
     in range); each rho is one division of those folds. Plan: day
     rollup, one 5-lag window over the calendar frame, one fold."""
-    daily = _daily(spark, sf_dir)
+    daily = daily_order_cents(spark, sf_dir)
     m = daily.agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
         F.sum("y").cast("bigint").alias("s"),
@@ -1765,7 +1740,7 @@ def indirect_standardization_sir(spark, sf_dir):
 @register(
     "newsvendor_quantile",
     oracle=f"""
-    WITH {_DAILY_SQL},
+    WITH {DAILY_ORDER_CENTS_SQL},
     dem AS (
         SELECT day, round(y / 100.0, 2) AS d FROM daily
     ),
@@ -1810,7 +1785,7 @@ def newsvendor_quantile(spark, sf_dir):
     2; q* is the engines' interpolated percentile; partial
     expectations fold DECIMAL cents over each side of q*. Plan: day
     rollup, one percentile fold, one conditional fold."""
-    daily = _daily(spark, sf_dir)
+    daily = daily_order_cents(spark, sf_dir)
     dem = daily.select(
         F.round(F.col("y") / 100.0, 2).alias("d")
     ).persist()
@@ -1872,7 +1847,7 @@ def newsvendor_quantile(spark, sf_dir):
 @register(
     "tracking_signal_monitor",
     oracle=f"""
-    WITH {_DAILY_SQL},
+    WITH {DAILY_ORDER_CENTS_SQL},
     fc AS (
         SELECT day, y,
                LAG(y, 7) OVER (ORDER BY day) AS yhat
@@ -1920,7 +1895,7 @@ def tracking_signal_monitor(spark, sf_dir):
     TS is one rational per day rounded at 1e-6. Plan: day rollup, a
     lag-7 forecast window, two cumulative windows over the bounded
     day frame, one fold."""
-    daily = _daily(spark, sf_dir)
+    daily = daily_order_cents(spark, sf_dir)
     wo = Window.orderBy("day")
     fc = daily.select(
         "day", "y", F.lag("y", 7).over(wo).alias("yhat")
@@ -2603,7 +2578,7 @@ def spearman_footrule_sources(spark, sf_dir):
 @register(
     "sharpe_sortino_omega",
     oracle=f"""
-    WITH {_DAILY_SQL},
+    WITH {DAILY_ORDER_CENTS_SQL},
     ret AS (
         SELECT round(ln(y * 1.0 / LAG(y) OVER (ORDER BY day)), 9) AS r
         FROM daily
@@ -2647,7 +2622,7 @@ def sharpe_sortino_omega(spark, sf_dir):
     Returns are 1e-9-rounded; all five folds are exact DECIMAL; each
     ratio is a terminal expression. Plan: day rollup, one lag, one
     fold."""
-    daily = _daily(spark, sf_dir)
+    daily = daily_order_cents(spark, sf_dir)
     ret = daily.select(
         F.round(
             F.log(
@@ -2697,7 +2672,7 @@ def sharpe_sortino_omega(spark, sf_dir):
 @register(
     "ulcer_index_martin",
     oracle=f"""
-    WITH {_DAILY_SQL},
+    WITH {DAILY_ORDER_CENTS_SQL},
     dd AS (
         SELECT day, y,
                MAX(y) OVER (ORDER BY day ROWS UNBOUNDED PRECEDING)
@@ -2746,7 +2721,7 @@ def ulcer_index_martin(spark, sf_dir):
     an exact integer cumulative max over the calendar frame; percent
     drawdowns round at 1e-9 and their squares fold in DECIMAL. Plan:
     day rollup, one running-max window, one fold."""
-    daily = _daily(spark, sf_dir).persist()
+    daily = daily_order_cents(spark, sf_dir).persist()
     wo = Window.orderBy("day").rowsBetween(
         Window.unboundedPreceding, Window.currentRow
     )
@@ -3260,7 +3235,7 @@ def winsorized_correlation(spark, sf_dir):
 @register(
     "biweight_midvariance",
     oracle=f"""
-    WITH {_DAILY_SQL},
+    WITH {DAILY_ORDER_CENTS_SQL},
     med AS (
         SELECT round(quantile_cont(y / 100.0, 0.5), 4) AS med
         FROM daily
@@ -3310,7 +3285,7 @@ def biweight_midvariance(spark, sf_dir):
     before DECIMAL folds; outputs are terminal expressions. Plan: day
     rollup, two percentile folds (median then MAD of deviations), one
     weighted fold."""
-    daily = _daily(spark, sf_dir).persist()
+    daily = daily_order_cents(spark, sf_dir).persist()
     med = daily.agg(
         F.round(F.expr("percentile(y / 100.0, 0.5)"), 4).alias("med")
     )
@@ -3384,7 +3359,7 @@ def biweight_midvariance(spark, sf_dir):
 @register(
     "rousseeuw_sn_scale",
     oracle=f"""
-    WITH {_DAILY_SQL},
+    WITH {DAILY_ORDER_CENTS_SQL},
     pm AS (
         SELECT a.day,
                round(quantile_cont(abs(a.y - b.y) / 100.0, 0.5), 4)
@@ -3414,7 +3389,7 @@ def rousseeuw_sn_scale(spark, sf_dir):
     (the siegel_repeated_medians discipline — days don't grow with
     data volume). Plan: day rollup, one bounded self-join, two
     percentile folds."""
-    daily = _daily(spark, sf_dir).persist()
+    daily = daily_order_cents(spark, sf_dir).persist()
     b = daily.select(
         F.col("day").alias("day2"), F.col("y").alias("y2")
     )
@@ -3443,7 +3418,7 @@ def rousseeuw_sn_scale(spark, sf_dir):
 @register(
     "cusum_squares_variance",
     oracle=f"""
-    WITH {_DAILY_SQL},
+    WITH {DAILY_ORDER_CENTS_SQL},
     m AS (
         SELECT CAST(COUNT(*) AS BIGINT) AS n,
                CAST(SUM(y) AS BIGINT) AS s
@@ -3491,7 +3466,7 @@ def cusum_squares_variance(spark, sf_dir):
     identical-input divisions; the argmax day tie-breaks by MIN(day).
     Plan: day rollup, two windows over the calendar frame, one max
     fold."""
-    daily = _daily(spark, sf_dir)
+    daily = daily_order_cents(spark, sf_dir)
     m = daily.agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
         F.sum("y").cast("bigint").alias("s"),
@@ -3860,7 +3835,7 @@ def pickands_tail_estimator(spark, sf_dir):
 @register(
     "es_backtest_acerbi",
     oracle=f"""
-    WITH {_DAILY_SQL},
+    WITH {DAILY_ORDER_CENTS_SQL},
     chg AS (
         SELECT day,
                round((LAG(y) OVER (ORDER BY day) - y) / 100.0, 2)
@@ -3914,7 +3889,7 @@ def es_backtest_acerbi(spark, sf_dir):
     (NULL when the test half has no violations — same rule both
     engines). Plan: day rollup, lag, split percentile, two tail
     folds."""
-    daily = _daily(spark, sf_dir)
+    daily = daily_order_cents(spark, sf_dir)
     chg = daily.select(
         "day",
         F.round(
@@ -4576,7 +4551,7 @@ def doksum_shift_function(spark, sf_dir):
 @register(
     "mincer_zarnowitz_rationality",
     oracle=f"""
-    WITH {_DAILY_SQL},
+    WITH {DAILY_ORDER_CENTS_SQL},
     fc AS (
         SELECT round(y / 100.0, 2) AS y,
                round(LAG(y, 7) OVER (ORDER BY day) / 100.0, 2) AS x
@@ -4637,7 +4612,7 @@ def mincer_zarnowitz_rationality(spark, sf_dir):
     both classical t statistics are terminal expressions in
     identical association. Plan: day rollup, lag-7 window, one
     moment fold."""
-    daily = _daily(spark, sf_dir)
+    daily = daily_order_cents(spark, sf_dir)
     wo = Window.orderBy("day")
     fc = daily.select(
         F.round(F.col("y") / 100.0, 2).alias("y"),
@@ -4700,7 +4675,7 @@ def mincer_zarnowitz_rationality(spark, sf_dir):
 @register(
     "western_electric_rules",
     oracle=f"""
-    WITH {_DAILY_SQL},
+    WITH {DAILY_ORDER_CENTS_SQL},
     m AS (
         SELECT CAST(COUNT(*) AS BIGINT) AS n,
                CAST(SUM(y) AS BIGINT) AS s,
@@ -4768,7 +4743,7 @@ def western_electric_rules(spark, sf_dir):
     integer window sums over the calendar frame with full-window
     guards so warm-up rows cannot trigger. Plan: day rollup, one
     moment fold, three bounded rolling windows, one fold."""
-    daily = _daily(spark, sf_dir)
+    daily = daily_order_cents(spark, sf_dir)
     m = daily.agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
         F.sum("y").cast("bigint").alias("s"),
@@ -5558,15 +5533,14 @@ PLAN_AUDIT_NOTES: dict[str, str] = {
 
 # --------------------------------------------------------------------------
 # Promoted from the round-14 seed (VERDICT r12 item 1): fills the round-13
-# window's 50th slot. Uses this module's _DAILY_SQL/_daily (identical to the
-# r14 copy it was authored against).
+# window's 50th slot. Uses the shared common.py daily revenue frame.
 # --------------------------------------------------------------------------
 # Split-conformal prediction interval for the seasonal-naive forecast
 # --------------------------------------------------------------------------
 @register(
     "split_conformal_interval",
     oracle=f"""
-    WITH {_DAILY_SQL},
+    WITH {DAILY_ORDER_CENTS_SQL},
     fc AS (
         SELECT day, y,
                LAG(y, 7) OVER (ORDER BY day) AS yhat
@@ -5629,7 +5603,7 @@ def split_conformal_interval(spark, sf_dir):
     machinery. Scores are exact 2-rounded cent ratios; coverage is an
     exact integer ratio. Plan: day rollup, lag-7
     window, split percentile, one calibration fold, one test fold."""
-    daily = _daily(spark, sf_dir)
+    daily = daily_order_cents(spark, sf_dir)
     fc = daily.select(
         "day",
         "y",

@@ -33,7 +33,15 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from . import register as _live_register
-from .common import dec, t
+from .common import (
+    DAILY_ORDER_CENTS_SQL,
+    NATION_EFFECTS_SQL,
+    case_sql,
+    daily_order_cents,
+    dec,
+    nation_effects,
+    t,
+)
 
 BANK_QUERIES: dict = {}
 BANK_ORACLES: dict = {}
@@ -54,32 +62,6 @@ def register(name: str, oracle: str | None = None):
         return live(fn)
 
     return deco
-
-
-_DAILY_SQL = """
-    daily AS (
-        SELECT CAST(epoch_us(o_orderdate) // 86400000000 AS BIGINT)
-                   AS day,
-               CAST(SUM(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100
-                             AS BIGINT)) AS BIGINT) AS y
-        FROM orders GROUP BY 1
-    )
-"""
-
-
-def _daily(spark, sf_dir):
-    o = t(spark, sf_dir, "orders")
-    return o.groupBy(
-        F.floor(F.unix_micros("o_orderdate") / 86_400_000_000)
-        .cast("bigint")
-        .alias("day")
-    ).agg(
-        F.sum((dec("o_totalprice", 18, 2) * 100).cast("bigint"))
-        .cast("bigint")
-        .alias("y")
-    )
-
-
 
 
 # --------------------------------------------------------------------------
@@ -226,7 +208,7 @@ def poisson_bootstrap_se(spark, sf_dir):
 @register(
     "aic_model_weights",
     oracle=f"""
-    WITH {_DAILY_SQL},
+    WITH {DAILY_ORDER_CENTS_SQL},
     xd AS (
         SELECT day - (SELECT MIN(day) FROM daily) AS x,
                CASE WHEN (day + 4) % 7 >= 5 THEN 1 ELSE 0 END AS w,
@@ -296,7 +278,7 @@ def aic_model_weights(spark, sf_dir):
     solve — no iteration); AICs and weights are ln/exp terminal
     expressions with the min-AIC shift for overflow safety. Plan: day
     rollup, one moment fold, scalar algebra."""
-    daily = _daily(spark, sf_dir)
+    daily = daily_order_cents(spark, sf_dir)
     mn = daily.agg(F.min("day").alias("d0"))
     day = F.col("day")
     xd = daily.crossJoin(F.broadcast(mn)).select(
@@ -748,7 +730,7 @@ def empirical_bernstein_ci(spark, sf_dir):
 @register(
     "betting_evalue_mean_test",
     oracle=f"""
-    WITH {_DAILY_SQL},
+    WITH {DAILY_ORDER_CENTS_SQL},
     split AS (
         SELECT CAST(floor(quantile_cont(day, 0.5)) AS BIGINT) AS mid
         FROM daily
@@ -797,7 +779,7 @@ def betting_evalue_mean_test(spark, sf_dir):
     frame; the max/final wealth and the days-above-20 count are
     terminal expressions. Plan: day rollup, split fold, one
     cumulative window over the bounded day frame."""
-    daily = _daily(spark, sf_dir).persist()
+    daily = daily_order_cents(spark, sf_dir).persist()
     split = daily.agg(
         F.floor(F.expr("percentile(day, 0.5)"))
         .cast("bigint")
@@ -1620,7 +1602,7 @@ def group_sequential_looks(spark, sf_dir):
 @register(
     "winkler_interval_score",
     oracle=f"""
-    WITH {_DAILY_SQL},
+    WITH {DAILY_ORDER_CENTS_SQL},
     fc AS (
         SELECT day, y,
                LAG(y, 7) OVER (ORDER BY day) AS yhat
@@ -1683,7 +1665,7 @@ def winkler_interval_score(spark, sf_dir):
     expressions on exact cents rounded at 1e-6 and folded in DECIMAL.
     Plan: day rollup, lag-7 window, the conformal quantile device,
     one test-half fold."""
-    daily = _daily(spark, sf_dir)
+    daily = daily_order_cents(spark, sf_dir)
     fc = daily.select(
         "day",
         "y",
@@ -1769,7 +1751,7 @@ def winkler_interval_score(spark, sf_dir):
 @register(
     "pit_uniformity_check",
     oracle=f"""
-    WITH {_DAILY_SQL},
+    WITH {DAILY_ORDER_CENTS_SQL},
     rk AS (
         SELECT CAST(ROW_NUMBER() OVER (ORDER BY y, day) AS BIGINT)
                    AS r,
@@ -1809,7 +1791,7 @@ def pit_uniformity_check(spark, sf_dir):
     calendar frame; bin counts are exact integers; chi2 terms round at
     1e-9 and fold in DECIMAL over 10 rows. Plan: day rollup, one rank
     window over the bounded frame, one 10-bin rollup, one fold."""
-    daily = _daily(spark, sf_dir)
+    daily = daily_order_cents(spark, sf_dir)
     rk = daily.select(
         F.row_number().over(Window.orderBy("y", "day")).cast("bigint")
         .alias("r"),
@@ -1866,7 +1848,7 @@ def pit_uniformity_check(spark, sf_dir):
 @register(
     "sen_slope_confidence_band",
     oracle=f"""
-    WITH {_DAILY_SQL},
+    WITH {DAILY_ORDER_CENTS_SQL},
     slopes AS (
         SELECT round((b.y - a.y) / (100.0 * (b.x - a.x)), 6) AS sl
         FROM (SELECT day AS x, y FROM daily) a
@@ -1922,7 +1904,7 @@ def sen_slope_confidence_band(spark, sf_dir):
     normal-approximation constant as a literal. The O(d^2) pair frame
     is calendar-bounded. Plan: day rollup, bounded triangular join,
     one grid cumulative, three order-stat picks."""
-    daily = _daily(spark, sf_dir).persist()
+    daily = daily_order_cents(spark, sf_dir).persist()
     a = daily.select(F.col("day").alias("xa"), F.col("y").alias("ya"))
     b = daily.select(F.col("day").alias("xb"), F.col("y").alias("yb"))
     slopes = a.join(
@@ -2463,7 +2445,7 @@ def rk_multiclass_mcc(spark, sf_dir):
 @register(
     "diebold_mariano_forecast",
     oracle=f"""
-    WITH {_DAILY_SQL},
+    WITH {DAILY_ORDER_CENTS_SQL},
     fc AS (
         SELECT day, y,
                LAG(y, 1) OVER (ORDER BY day) AS n1,
@@ -2526,7 +2508,7 @@ def diebold_mariano_forecast(spark, sf_dir):
     exploded grid) — no windowed correlation, bounded by the calendar
     day frame. Plan: day rollup, two lag windows, k-grid self
     equi-join, two scalar folds."""
-    daily = _daily(spark, sf_dir)
+    daily = daily_order_cents(spark, sf_dir)
     w = Window.orderBy("day")
     fc = daily.select(
         "day",
@@ -2607,7 +2589,7 @@ def diebold_mariano_forecast(spark, sf_dir):
 @register(
     "pesaran_timmermann_direction",
     oracle=f"""
-    WITH {_DAILY_SQL},
+    WITH {DAILY_ORDER_CENTS_SQL},
     fc AS (
         SELECT day, y,
                LAG(y, 1) OVER (ORDER BY day) AS n1,
@@ -2667,7 +2649,7 @@ def pesaran_timmermann_direction(spark, sf_dir):
     round. The direction-skill gate a pipeline applies to trading- or
     demand-style signals where only the sign is actionable. Plan: day
     rollup, two lag windows, one scalar fold."""
-    daily = _daily(spark, sf_dir)
+    daily = daily_order_cents(spark, sf_dir)
     w = Window.orderBy("day")
     fc = daily.select(
         "day",
@@ -2718,7 +2700,7 @@ def pesaran_timmermann_direction(spark, sf_dir):
 @register(
     "crps_ensemble_daily",
     oracle=f"""
-    WITH {_DAILY_SQL},
+    WITH {DAILY_ORDER_CENTS_SQL},
     v AS (
         SELECT day, round(y / 100.0, 2) AS x FROM daily
     ),
@@ -2779,7 +2761,7 @@ def crps_ensemble_daily(spark, sf_dir):
     CALENDAR-BOUNDED day frame (grid x grid and test x grid joins are
     domain-bounded — the day count, not data volume). Plan: day
     rollup, split percentile, two bounded grid joins, scalar folds."""
-    daily = _daily(spark, sf_dir)
+    daily = daily_order_cents(spark, sf_dir)
     v = daily.select(
         "day", F.round(F.col("y") / 100.0, 2).alias("x0")
     )
@@ -2881,17 +2863,10 @@ _SIN7 = [
 ]
 
 
-def _case7(col: str, table: list) -> str:
-    whens = " ".join(
-        f"WHEN {col} = {k} THEN {v}" for k, v in enumerate(table)
-    )
-    return f"CASE {whens} END"
-
-
 @register(
     "harmonic_weekly_regression",
     oracle=f"""
-    WITH {_DAILY_SQL},
+    WITH {DAILY_ORDER_CENTS_SQL},
     dowm AS (
         SELECT CAST(day % 7 AS BIGINT) AS dow,
                round(CAST(SUM(y) AS DOUBLE) / COUNT(*) / 100.0, 6)
@@ -2900,8 +2875,8 @@ def _case7(col: str, table: list) -> str:
     ),
     basis AS (
         SELECT dow, md,
-               {_case7("dow", _COS7)} AS ck,
-               {_case7("dow", _SIN7)} AS sk
+               {case_sql("dow", _COS7)} AS ck,
+               {case_sql("dow", _SIN7)} AS sk
         FROM dowm
     ),
     fit AS (
@@ -2944,7 +2919,7 @@ def harmonic_weekly_regression(spark, sf_dir):
     seasonal feature a forecasting pipeline feeds downstream models.
     Work collapses to the 7-row dow domain after one day rollup.
     Plan: day rollup, 7-row basis attach, two scalar folds."""
-    daily = _daily(spark, sf_dir)
+    daily = daily_order_cents(spark, sf_dir)
     dowm = daily.groupBy(
         (F.col("day") % 7).cast("bigint").alias("dow")
     ).agg(
@@ -3062,7 +3037,7 @@ def _trend_xy(daily, spark):
 @register(
     "goldfeld_quandt_test",
     oracle=f"""
-    WITH {_DAILY_SQL},
+    WITH {DAILY_ORDER_CENTS_SQL},
     {_TREND_SQL},
     seg AS (
         SELECT CASE WHEN day <= c1 THEN 1
@@ -3110,7 +3085,7 @@ def goldfeld_quandt_test(spark, sf_dir):
     sums. The 1.4 flag threshold is the F critical region's
     round-number stand-in (both engines share the literal). Plan: day
     rollup, percentile split, one grouped fold, 2x2 scalar join."""
-    daily = _daily(spark, sf_dir)
+    daily = daily_order_cents(spark, sf_dir)
     xy = _trend_xy(daily, spark)
     seg = xy.where(
         (F.col("day") <= F.col("c1")) | (F.col("day") > F.col("c2"))
@@ -3177,7 +3152,7 @@ def goldfeld_quandt_test(spark, sf_dir):
 @register(
     "white_heteroskedasticity_test",
     oracle=f"""
-    WITH {_DAILY_SQL},
+    WITH {DAILY_ORDER_CENTS_SQL},
     {_TREND_SQL},
     mo AS (
         SELECT CAST(COUNT(*) AS BIGINT) AS n,
@@ -3259,7 +3234,7 @@ def white_heteroskedasticity_test(spark, sf_dir):
     2^53). Complements goldfeld_quandt (split-sample) with the
     regression-form test. Plan: day rollup, OLS scalar, one wide
     fold, terminal expression."""
-    daily = _daily(spark, sf_dir)
+    daily = daily_order_cents(spark, sf_dir)
     xy = _trend_xy(daily, spark)
     mo = xy.agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
@@ -3347,7 +3322,7 @@ def white_heteroskedasticity_test(spark, sf_dir):
 @register(
     "quandt_andrews_supf",
     oracle=f"""
-    WITH {_DAILY_SQL},
+    WITH {DAILY_ORDER_CENTS_SQL},
     t0 AS (
         SELECT MIN(day) AS d0, CAST(COUNT(*) AS BIGINT) AS n
         FROM daily
@@ -3450,7 +3425,7 @@ def quandt_andrews_supf(spark, sf_dir):
     argmax: F rounded to 1e-6 BEFORE ranking, day ascending tiebreak.
     Plan: day rollup, five cumulative windows over the calendar
     frame, scalar totals attach, total-order top-1."""
-    daily = _daily(spark, sf_dir)
+    daily = daily_order_cents(spark, sf_dir)
     t0 = daily.agg(
         F.min("day").alias("d0"),
         F.count(F.lit(1)).cast("bigint").alias("n"),
@@ -6080,13 +6055,6 @@ _SIN24 = [
 ]
 
 
-def _case24(col: str, table: list) -> str:
-    whens = " ".join(
-        f"WHEN {col} = {k} THEN {v}" for k, v in enumerate(table)
-    )
-    return f"CASE {whens} END"
-
-
 @register(
     "rayleigh_circular_hours",
     oracle=f"""
@@ -6098,9 +6066,9 @@ def _case24(col: str, table: list) -> str:
     ),
     s AS (
         SELECT CAST(SUM(c) AS BIGINT) AS n,
-               CAST(SUM(CAST(round(c * {_case24("hr", _COS24)}, 8)
+               CAST(SUM(CAST(round(c * {case_sql("hr", _COS24)}, 8)
                              AS DECIMAL(38,8))) AS DOUBLE) AS cs,
-               CAST(SUM(CAST(round(c * {_case24("hr", _SIN24)}, 8)
+               CAST(SUM(CAST(round(c * {case_sql("hr", _SIN24)}, 8)
                              AS DECIMAL(38,8))) AS DOUBLE) AS ss
         FROM h
     )
@@ -6915,119 +6883,15 @@ def dunn_validity_index(spark, sf_dir):
 
 # --------------------------------------------------------------------------
 # Promoted from the round-15 bank (VERDICT r13 item 1): fills the round-14
-# window's 50th slot. The per-nation effect frame below is an identical
-# copy of bank_r15's _EFFECTS_SQL/_effects (which stays there because
-# egger_funnel_asymmetry shares it) — the split_conformal precedent.
-# --------------------------------------------------------------------------
-# Per-nation effect frame shared by the meta-analysis pair
-# --------------------------------------------------------------------------
-# Each of the 25 nations is a "study": the effect is the urgent-minus-
-# routine mean order value in THOUSANDS of dollars (k$ keeps every
-# folded weight term O(0.1..100) at every SF, so fixed-dp
-# round-before-fold loses nothing), its variance the Welch two-sample
-# variance of that mean difference. Exact cents power sums per
-# (nation, arm); y and v are rounded at 8 dp BEFORE any reciprocal so
-# both engines weight identical doubles.
-_EFFECTS_SQL = """
-    arm AS (
-        SELECT c.c_nationkey AS nk,
-               CASE WHEN o.o_orderpriority IN ('1-URGENT', '2-HIGH')
-                    THEN 1 ELSE 0 END AS urgent,
-               CAST(COUNT(*) AS BIGINT) AS n,
-               CAST(SUM(CAST(CAST(o.o_totalprice AS DECIMAL(18,2)) * 100
-                             AS BIGINT)) AS BIGINT) AS s,
-               CAST(SUM(CAST(CAST(CAST(o.o_totalprice AS DECIMAL(18,2))
-                                  * 100 AS BIGINT)
-                             AS DECIMAL(38,0))
-                        * CAST(CAST(CAST(o.o_totalprice AS DECIMAL(18,2))
-                                    * 100 AS BIGINT)
-                               AS DECIMAL(38,0)))
-                    AS DECIMAL(38,0)) AS ss
-        FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
-        GROUP BY 1, 2
-    ),
-    eff AS (
-        SELECT u.nk,
-               round((CAST(u.s AS DOUBLE) / u.n
-                      - CAST(r.s AS DOUBLE) / r.n) / 100000.0, 8) AS y,
-               round(((CAST(u.ss AS DOUBLE)
-                       - CAST(u.s AS DOUBLE) * u.s / u.n)
-                      / (u.n - 1) / u.n
-                      + (CAST(r.ss AS DOUBLE)
-                         - CAST(r.s AS DOUBLE) * r.s / r.n)
-                        / (r.n - 1) / r.n) / 10000000000.0, 8) AS v
-        FROM arm u JOIN arm r ON u.nk = r.nk
-        WHERE u.urgent = 1 AND r.urgent = 0 AND u.n > 1 AND r.n > 1
-    )
-"""
-
-
-def _effects(spark, sf_dir):
-    o = t(spark, sf_dir, "orders")
-    c = t(spark, sf_dir, "customer")
-    cents = (dec("o_totalprice", 18, 2) * 100).cast("bigint")
-    arm = (
-        o.join(c, o.o_custkey == c.c_custkey)
-        .groupBy(
-            F.col("c_nationkey").alias("nk"),
-            F.when(
-                F.col("o_orderpriority").isin("1-URGENT", "2-HIGH"), 1
-            )
-            .otherwise(0)
-            .alias("urgent"),
-        )
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n"),
-            F.sum(cents).cast("bigint").alias("s"),
-            F.sum(
-                cents.cast("decimal(38,0)") * cents.cast("decimal(38,0)")
-            )
-            .cast("decimal(38,0)")
-            .alias("ss"),
-        )
-    )
-    u = arm.where((F.col("urgent") == 1) & (F.col("n") > 1)).select(
-        "nk",
-        F.col("n").alias("n1"),
-        F.col("s").alias("s1"),
-        F.col("ss").alias("ss1"),
-    )
-    r = arm.where((F.col("urgent") == 0) & (F.col("n") > 1)).select(
-        "nk",
-        F.col("n").alias("n2"),
-        F.col("s").alias("s2"),
-        F.col("ss").alias("ss2"),
-    )
-    n1, s1, ss1 = F.col("n1"), F.col("s1"), F.col("ss1")
-    n2, s2, ss2 = F.col("n2"), F.col("s2"), F.col("ss2")
-    return u.join(r, "nk").select(
-        "nk",
-        F.round(
-            (s1.cast("double") / n1 - s2.cast("double") / n2) / 100000.0,
-            8,
-        ).alias("y"),
-        F.round(
-            (
-                (ss1.cast("double") - s1.cast("double") * s1 / n1)
-                / (n1 - 1)
-                / n1
-                + (ss2.cast("double") - s2.cast("double") * s2 / n2)
-                / (n2 - 1)
-                / n2
-            )
-            / 10000000000.0,
-            8,
-        ).alias("v"),
-    )
-
-
+# window's 50th slot. Its per-nation effect frame is common.py's
+# NATION_EFFECTS_SQL/nation_effects, shared with egger_funnel_asymmetry.
 # --------------------------------------------------------------------------
 # DerSimonian-Laird random-effects meta-analysis
 # --------------------------------------------------------------------------
 @register(
     "dersimonian_laird_meta",
     oracle=f"""
-    WITH {_EFFECTS_SQL},
+    WITH {NATION_EFFECTS_SQL},
     s1 AS (
         SELECT CAST(COUNT(*) AS BIGINT) AS k,
                CAST(SUM(CAST(round(1.0 / v, 8) AS DECIMAL(38,8)))
@@ -7088,7 +6952,7 @@ def dersimonian_laird_meta(spark, sf_dir):
     passes run on 25 rows. 100 TB: the rollup is map-side combinable,
     the join shuffles on custkey with AQE; nothing downstream scales
     with volume."""
-    eff = _effects(spark, sf_dir)
+    eff = nation_effects(spark, sf_dir)
     r8 = lambda c: F.round(c, 8).cast("decimal(38,8)")  # noqa: E731
     s1 = eff.agg(
         F.count(F.lit(1)).cast("bigint").alias("k"),

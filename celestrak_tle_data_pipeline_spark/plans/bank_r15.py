@@ -7,17 +7,17 @@ sweep, the authoring-time 64x probe octave (SCALING_PROBES.json /
 SCALING.md), and plan-audit notes merged into
 ``tools/audit_single_partition.py`` at flip time.
 
-At the round-14 flip the oldest query here (``dersimonian_laird_meta``,
-the original seed) was promoted into bank_r14's 50th window slot (the
-split_conformal precedent, VERDICT r13 item 1); its ``_EFFECTS_SQL`` /
-``_effects`` study frame stays here because ``egger_funnel_asymmetry``
-shares it (bank_r14 carries an identical copy). The bank was restored
-to 49 the same round (``cluster_robust_ols_se``). At the round-15 flip
-this bank's own 50th window slot is ``bartlett_sphericity``, promoted
-from the round-16 bank (same protocol — no red name was left to
-re-green after the 50/50 r14 window); its shared daily-activity
-correlation frame is carried here as an identical copy because
-``kmo_adequacy`` still uses the bank_r16 original.
+At the round-14 flip the oldest query here
+(``dersimonian_laird_meta``, the original seed) was promoted into
+bank_r14's 50th window slot (the split_conformal precedent, VERDICT
+r13 item 1); its ``NATION_EFFECTS_SQL`` / ``nation_effects`` study
+frame, which ``egger_funnel_asymmetry`` shares, lives in
+``common.py``. The bank was restored to 49 the same round
+(``cluster_robust_ols_se``). At the round-15 flip this bank's own 50th
+window slot is ``bartlett_sphericity``, promoted from the round-16
+bank (same protocol — no red name was left to re-green after the 50/50
+r14 window); its daily-activity correlation frame, which
+``kmo_adequacy`` shares, lives in ``common.py``.
 
 Seed theme: the AUDIT BENCH — the statistics a 100 TB pipeline runs on
 its own per-segment readouts rather than on raw rows: meta-analytic
@@ -45,7 +45,15 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from . import register as _live_register
-from .common import dec, t
+from .common import (
+    DAILY_EVENT_CORR3_SQL,
+    NATION_EFFECTS_SQL,
+    case_sql,
+    daily_event_corr3,
+    dec,
+    nation_effects,
+    t,
+)
 
 BANK_QUERIES: dict = {}
 BANK_ORACLES: dict = {}
@@ -69,115 +77,12 @@ def register(name: str, oracle: str | None = None):
 
 
 # --------------------------------------------------------------------------
-# Per-nation effect frame shared by the meta-analysis pair
-# --------------------------------------------------------------------------
-# Each of the 25 nations is a "study": the effect is the urgent-minus-
-# routine mean order value in THOUSANDS of dollars (k$ keeps every
-# folded weight term O(0.1..100) at every SF, so fixed-dp
-# round-before-fold loses nothing), its variance the Welch two-sample
-# variance of that mean difference. Exact cents power sums per
-# (nation, arm); y and v are rounded at 8 dp BEFORE any reciprocal so
-# both engines weight identical doubles.
-_EFFECTS_SQL = """
-    arm AS (
-        SELECT c.c_nationkey AS nk,
-               CASE WHEN o.o_orderpriority IN ('1-URGENT', '2-HIGH')
-                    THEN 1 ELSE 0 END AS urgent,
-               CAST(COUNT(*) AS BIGINT) AS n,
-               CAST(SUM(CAST(CAST(o.o_totalprice AS DECIMAL(18,2)) * 100
-                             AS BIGINT)) AS BIGINT) AS s,
-               CAST(SUM(CAST(CAST(CAST(o.o_totalprice AS DECIMAL(18,2))
-                                  * 100 AS BIGINT)
-                             AS DECIMAL(38,0))
-                        * CAST(CAST(CAST(o.o_totalprice AS DECIMAL(18,2))
-                                    * 100 AS BIGINT)
-                               AS DECIMAL(38,0)))
-                    AS DECIMAL(38,0)) AS ss
-        FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
-        GROUP BY 1, 2
-    ),
-    eff AS (
-        SELECT u.nk,
-               round((CAST(u.s AS DOUBLE) / u.n
-                      - CAST(r.s AS DOUBLE) / r.n) / 100000.0, 8) AS y,
-               round(((CAST(u.ss AS DOUBLE)
-                       - CAST(u.s AS DOUBLE) * u.s / u.n)
-                      / (u.n - 1) / u.n
-                      + (CAST(r.ss AS DOUBLE)
-                         - CAST(r.s AS DOUBLE) * r.s / r.n)
-                        / (r.n - 1) / r.n) / 10000000000.0, 8) AS v
-        FROM arm u JOIN arm r ON u.nk = r.nk
-        WHERE u.urgent = 1 AND r.urgent = 0 AND u.n > 1 AND r.n > 1
-    )
-"""
-
-
-def _effects(spark, sf_dir):
-    o = t(spark, sf_dir, "orders")
-    c = t(spark, sf_dir, "customer")
-    cents = (dec("o_totalprice", 18, 2) * 100).cast("bigint")
-    arm = (
-        o.join(c, o.o_custkey == c.c_custkey)
-        .groupBy(
-            F.col("c_nationkey").alias("nk"),
-            F.when(
-                F.col("o_orderpriority").isin("1-URGENT", "2-HIGH"), 1
-            )
-            .otherwise(0)
-            .alias("urgent"),
-        )
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n"),
-            F.sum(cents).cast("bigint").alias("s"),
-            F.sum(
-                cents.cast("decimal(38,0)") * cents.cast("decimal(38,0)")
-            )
-            .cast("decimal(38,0)")
-            .alias("ss"),
-        )
-    )
-    u = arm.where((F.col("urgent") == 1) & (F.col("n") > 1)).select(
-        "nk",
-        F.col("n").alias("n1"),
-        F.col("s").alias("s1"),
-        F.col("ss").alias("ss1"),
-    )
-    r = arm.where((F.col("urgent") == 0) & (F.col("n") > 1)).select(
-        "nk",
-        F.col("n").alias("n2"),
-        F.col("s").alias("s2"),
-        F.col("ss").alias("ss2"),
-    )
-    n1, s1, ss1 = F.col("n1"), F.col("s1"), F.col("ss1")
-    n2, s2, ss2 = F.col("n2"), F.col("s2"), F.col("ss2")
-    return u.join(r, "nk").select(
-        "nk",
-        F.round(
-            (s1.cast("double") / n1 - s2.cast("double") / n2) / 100000.0,
-            8,
-        ).alias("y"),
-        F.round(
-            (
-                (ss1.cast("double") - s1.cast("double") * s1 / n1)
-                / (n1 - 1)
-                / n1
-                + (ss2.cast("double") - s2.cast("double") * s2 / n2)
-                / (n2 - 1)
-                / n2
-            )
-            / 10000000000.0,
-            8,
-        ).alias("v"),
-    )
-
-
-# --------------------------------------------------------------------------
 # Egger funnel-plot asymmetry + Begg-style rank correlation
 # --------------------------------------------------------------------------
 @register(
     "egger_funnel_asymmetry",
     oracle=f"""
-    WITH {_EFFECTS_SQL},
+    WITH {NATION_EFFECTS_SQL},
     pts AS (
         SELECT nk,
                round(y / sqrt(v), 8) AS z,
@@ -244,7 +149,7 @@ def egger_funnel_asymmetry(spark, sf_dir):
     Scale: identical to the DL query — one fact equi-join + hash
     rollup; the regression and the 25x25 pair join live on the
     25-row study domain."""
-    eff = _effects(spark, sf_dir)
+    eff = nation_effects(spark, sf_dir)
     pts = eff.select(
         "nk",
         F.round(F.col("y") / F.sqrt("v"), 8).alias("z"),
@@ -730,13 +635,6 @@ _SIN24 = [
 ]
 
 
-def _case24(col: str, table: list) -> str:
-    whens = " ".join(
-        f"WHEN {col} = {k} THEN {v}" for k, v in enumerate(table)
-    )
-    return f"CASE {whens} END"
-
-
 def _lut24(col, table):
     out = F.lit(None).cast("double")
     for k in range(24):
@@ -747,8 +645,8 @@ def _lut24(col, table):
 def _ls_power_sql(i1: str, i2: str):
     """SQL fragments for one Lomb-Scargle frequency: the five folded
     sums over angle indexes i1 (wt mod 2pi, in 24ths) and i2 (2wt)."""
-    c1, s1 = _case24(i1, _COS24), _case24(i1, _SIN24)
-    c2, s2 = _case24(i2, _COS24), _case24(i2, _SIN24)
+    c1, s1 = case_sql(i1, _COS24), case_sql(i1, _SIN24)
+    c2, s2 = case_sql(i2, _COS24), case_sql(i2, _SIN24)
     return {
         "yc": f"CAST(SUM(CAST(round(ydev * {c1}, 8) AS DECIMAL(38,8))) AS DOUBLE)",
         "ys": f"CAST(SUM(CAST(round(ydev * {s1}, 8) AS DECIMAL(38,8))) AS DOUBLE)",
@@ -4320,13 +4218,6 @@ _FACT16 = [
 ]
 
 
-def _case17(col: str, table: list) -> str:
-    whens = " ".join(
-        f"WHEN {col} = {k} THEN {v}" for k, v in enumerate(table)
-    )
-    return f"CASE {whens} END"
-
-
 @register(
     "erlang_c_staffing",
     oracle=f"""
@@ -4350,7 +4241,7 @@ def _case17(col: str, table: list) -> str:
                CASE WHEN lam.a < cg.c THEN
                    (CASE WHEN kk.g = 0 THEN CAST(1.0 AS DOUBLE)
                          ELSE exp(kk.g * ln(lam.a)) END
-                    / ({_case17("kk.g", _FACT16)}))
+                    / ({case_sql("kk.g", _FACT16)}))
                END AS term
         FROM cg, LATERAL UNNEST(range(0, 17)) AS kk(g), lam
         WHERE kk.g < cg.c
@@ -4363,7 +4254,7 @@ def _case17(col: str, table: list) -> str:
     ),
     ec AS (
         SELECT c, a, l, s,
-               (exp(c * ln(a)) / ({_case17("c", _FACT16)}))
+               (exp(c * ln(a)) / ({case_sql("c", _FACT16)}))
                * (c / NULLIF(c - a, 0)) AS tail
         FROM sums
     )
@@ -6725,10 +6616,10 @@ PLAN_AUDIT_NOTES.update(
     fold AS (
         SELECT CAST(SUM(c) AS BIGINT) AS n,
                CAST(SUM(CAST(c AS DECIMAL(28,10))
-                        * ({_case24('hr', _COS24)}))
+                        * ({case_sql('hr', _COS24)}))
                     AS DOUBLE) AS cs,
                CAST(SUM(CAST(c AS DECIMAL(28,10))
-                        * ({_case24('hr', _SIN24)}))
+                        * ({case_sql('hr', _SIN24)}))
                     AS DOUBLE) AS sn
         FROM g
     ),
@@ -9290,132 +9181,14 @@ PLAN_AUDIT_NOTES.update(
 # --------------------------------------------------------------------------
 # Promoted at the round-15 flip: Bartlett's test of sphericity
 # (moved from the round-16 bank as the 50th window slot — the
-# dersimonian_laird_meta precedent). The shared daily-activity
-# correlation frame below is an identical copy of bank_r16's
-# _DAY3_SQL/_corr3, kept there too because kmo_adequacy shares it.
+# dersimonian_laird_meta precedent). The daily-activity correlation
+# frame is common.py's DAILY_EVENT_CORR3_SQL/daily_event_corr3, shared
+# with kmo_adequacy.
 # --------------------------------------------------------------------------
-_DAY3_SQL = """
-    day3 AS (
-        SELECT CAST(epoch_us(ts) // 86400000000 AS BIGINT) AS d,
-               CAST(SUM(CASE WHEN event_type = 'purchase'
-                             THEN 1 ELSE 0 END) AS BIGINT) AS x,
-               CAST(SUM(CASE WHEN event_type = 'click'
-                             THEN 1 ELSE 0 END) AS BIGINT) AS y,
-               CAST(SUM(CASE WHEN event_type = 'error'
-                             THEN 1 ELSE 0 END) AS BIGINT) AS z
-        FROM events GROUP BY 1
-    ),
-    mom3 AS (
-        SELECT CAST(COUNT(*) AS BIGINT) AS n,
-               CAST(SUM(x) AS BIGINT) AS sx,
-               CAST(SUM(y) AS BIGINT) AS sy,
-               CAST(SUM(z) AS BIGINT) AS sz,
-               CAST(SUM(CAST(x AS DECIMAL(19,0)) * x)
-                    AS DECIMAL(38,0)) AS sxx,
-               CAST(SUM(CAST(y AS DECIMAL(19,0)) * y)
-                    AS DECIMAL(38,0)) AS syy,
-               CAST(SUM(CAST(z AS DECIMAL(19,0)) * z)
-                    AS DECIMAL(38,0)) AS szz,
-               CAST(SUM(CAST(x AS DECIMAL(19,0)) * y)
-                    AS DECIMAL(38,0)) AS sxy,
-               CAST(SUM(CAST(x AS DECIMAL(19,0)) * z)
-                    AS DECIMAL(38,0)) AS sxz,
-               CAST(SUM(CAST(y AS DECIMAL(19,0)) * z)
-                    AS DECIMAL(38,0)) AS syz
-        FROM day3
-    ),
-    corr3 AS (
-        SELECT n,
-               round((n * CAST(sxy AS DOUBLE)
-                      - CAST(sx AS DOUBLE) * sy)
-                     / sqrt((n * CAST(sxx AS DOUBLE)
-                             - CAST(sx AS DOUBLE) * sx)
-                            * (n * CAST(syy AS DOUBLE)
-                               - CAST(sy AS DOUBLE) * sy)), 10)
-                   AS r12,
-               round((n * CAST(sxz AS DOUBLE)
-                      - CAST(sx AS DOUBLE) * sz)
-                     / sqrt((n * CAST(sxx AS DOUBLE)
-                             - CAST(sx AS DOUBLE) * sx)
-                            * (n * CAST(szz AS DOUBLE)
-                               - CAST(sz AS DOUBLE) * sz)), 10)
-                   AS r13,
-               round((n * CAST(syz AS DOUBLE)
-                      - CAST(sy AS DOUBLE) * sz)
-                     / sqrt((n * CAST(syy AS DOUBLE)
-                             - CAST(sy AS DOUBLE) * sy)
-                            * (n * CAST(szz AS DOUBLE)
-                               - CAST(sz AS DOUBLE) * sz)), 10)
-                   AS r23
-        FROM mom3
-    )
-"""
-
-
-def _corr3(spark, sf_dir):
-    e = t(spark, sf_dir, "events")
-    day3 = e.groupBy(
-        F.floor(F.unix_micros("ts") / 86_400_000_000)
-        .cast("bigint")
-        .alias("d")
-    ).agg(
-        F.sum(F.when(F.col("event_type") == "purchase", 1).otherwise(0))
-        .cast("bigint")
-        .alias("x"),
-        F.sum(F.when(F.col("event_type") == "click", 1).otherwise(0))
-        .cast("bigint")
-        .alias("y"),
-        F.sum(F.when(F.col("event_type") == "error", 1).otherwise(0))
-        .cast("bigint")
-        .alias("z"),
-    )
-
-    def dsum(a, b, name):
-        return (
-            F.sum(F.col(a).cast("decimal(19,0)") * F.col(b))
-            .cast("decimal(38,0)")
-            .alias(name)
-        )
-
-    mom = day3.agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.sum("x").cast("bigint").alias("sx"),
-        F.sum("y").cast("bigint").alias("sy"),
-        F.sum("z").cast("bigint").alias("sz"),
-        dsum("x", "x", "sxx"),
-        dsum("y", "y", "syy"),
-        dsum("z", "z", "szz"),
-        dsum("x", "y", "sxy"),
-        dsum("x", "z", "sxz"),
-        dsum("y", "z", "syz"),
-    )
-    n = F.col("n")
-
-    def r(sab, sa, sb, saa, sbb):
-        return F.round(
-            (n * F.col(sab).cast("double")
-             - F.col(sa).cast("double") * F.col(sb))
-            / F.sqrt(
-                (n * F.col(saa).cast("double")
-                 - F.col(sa).cast("double") * F.col(sa))
-                * (n * F.col(sbb).cast("double")
-                   - F.col(sb).cast("double") * F.col(sb))
-            ),
-            10,
-        )
-
-    return mom.select(
-        n.alias("n"),
-        r("sxy", "sx", "sy", "sxx", "syy").alias("r12"),
-        r("sxz", "sx", "sz", "sxx", "szz").alias("r13"),
-        r("syz", "sy", "sz", "syy", "szz").alias("r23"),
-    )
-
-
 @register(
     "bartlett_sphericity",
     oracle=f"""
-    WITH {_DAY3_SQL}
+    WITH {DAILY_EVENT_CORR3_SQL}
     SELECT n AS n_days,
            round(r12, 6) + 0.0 AS r_purchase_click,
            round(r13, 6) + 0.0 AS r_purchase_error,
@@ -9445,7 +9218,7 @@ def bartlett_sphericity(spark, sf_dir):
     10 dp before the determinant tree, so both engines take ln of
     identical doubles. Plan: one day rollup, one fold — no joins,
     no windows."""
-    c = _corr3(spark, sf_dir)
+    c = daily_event_corr3(spark, sf_dir)
     r12, r13, r23 = F.col("r12"), F.col("r13"), F.col("r23")
     det = (
         1.0

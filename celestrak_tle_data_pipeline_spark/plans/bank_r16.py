@@ -15,8 +15,9 @@ same round (``williams_dependent_corr``, X795). At the round-16 flip
 this bank's own 50th window slot is ``fisher_stouffer_combined``
 (X591), promoted from the round-17 bank — its shared 35-cell
 contingency p-value frame (``_CELLP_SQL``/``_cellp``) is DEFINED in
-this module, so the promotion needs no frame copy (unlike the
-bartlett move, which carried ``_DAY3_SQL``/``_corr3`` into bank_r15).
+this module, so the promotion needs no frame copy (the bartlett
+move's ``DAILY_EVENT_CORR3_SQL``/``daily_event_corr3`` frame now lives
+in ``common.py``).
 
 Theme: STRUCTURE, DEPENDENCE, AND DECISION CERTIFICATION — the
 checks a feature pipeline runs before and after modeling. Tiers:
@@ -60,7 +61,14 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from . import register as _live_register
-from .common import dec, exact_cumulative, t
+from .common import (
+    DAILY_EVENT_CORR3_SQL,
+    case_sql,
+    daily_event_corr3,
+    dec,
+    exact_cumulative,
+    t,
+)
 
 BANK_QUERIES: dict = {}
 BANK_ORACLES: dict = {}
@@ -84,134 +92,10 @@ def register(name: str, oracle: str | None = None):
     return deco
 
 
-# --------------------------------------------------------------------------
-# Shared frame: the three daily activity series and their correlations
-# --------------------------------------------------------------------------
-# Correlations of (purchases, clicks, errors) per day from exact
-# BIGINT count folds; each r is rounded at 10 dp so every downstream
-# matrix functional consumes identical doubles in both engines.
-_DAY3_SQL = """
-    day3 AS (
-        SELECT CAST(epoch_us(ts) // 86400000000 AS BIGINT) AS d,
-               CAST(SUM(CASE WHEN event_type = 'purchase'
-                             THEN 1 ELSE 0 END) AS BIGINT) AS x,
-               CAST(SUM(CASE WHEN event_type = 'click'
-                             THEN 1 ELSE 0 END) AS BIGINT) AS y,
-               CAST(SUM(CASE WHEN event_type = 'error'
-                             THEN 1 ELSE 0 END) AS BIGINT) AS z
-        FROM events GROUP BY 1
-    ),
-    mom3 AS (
-        SELECT CAST(COUNT(*) AS BIGINT) AS n,
-               CAST(SUM(x) AS BIGINT) AS sx,
-               CAST(SUM(y) AS BIGINT) AS sy,
-               CAST(SUM(z) AS BIGINT) AS sz,
-               CAST(SUM(CAST(x AS DECIMAL(19,0)) * x)
-                    AS DECIMAL(38,0)) AS sxx,
-               CAST(SUM(CAST(y AS DECIMAL(19,0)) * y)
-                    AS DECIMAL(38,0)) AS syy,
-               CAST(SUM(CAST(z AS DECIMAL(19,0)) * z)
-                    AS DECIMAL(38,0)) AS szz,
-               CAST(SUM(CAST(x AS DECIMAL(19,0)) * y)
-                    AS DECIMAL(38,0)) AS sxy,
-               CAST(SUM(CAST(x AS DECIMAL(19,0)) * z)
-                    AS DECIMAL(38,0)) AS sxz,
-               CAST(SUM(CAST(y AS DECIMAL(19,0)) * z)
-                    AS DECIMAL(38,0)) AS syz
-        FROM day3
-    ),
-    corr3 AS (
-        SELECT n,
-               round((n * CAST(sxy AS DOUBLE)
-                      - CAST(sx AS DOUBLE) * sy)
-                     / sqrt((n * CAST(sxx AS DOUBLE)
-                             - CAST(sx AS DOUBLE) * sx)
-                            * (n * CAST(syy AS DOUBLE)
-                               - CAST(sy AS DOUBLE) * sy)), 10)
-                   AS r12,
-               round((n * CAST(sxz AS DOUBLE)
-                      - CAST(sx AS DOUBLE) * sz)
-                     / sqrt((n * CAST(sxx AS DOUBLE)
-                             - CAST(sx AS DOUBLE) * sx)
-                            * (n * CAST(szz AS DOUBLE)
-                               - CAST(sz AS DOUBLE) * sz)), 10)
-                   AS r13,
-               round((n * CAST(syz AS DOUBLE)
-                      - CAST(sy AS DOUBLE) * sz)
-                     / sqrt((n * CAST(syy AS DOUBLE)
-                             - CAST(sy AS DOUBLE) * sy)
-                            * (n * CAST(szz AS DOUBLE)
-                               - CAST(sz AS DOUBLE) * sz)), 10)
-                   AS r23
-        FROM mom3
-    )
-"""
-
-
-def _corr3(spark, sf_dir):
-    e = t(spark, sf_dir, "events")
-    day3 = e.groupBy(
-        F.floor(F.unix_micros("ts") / 86_400_000_000)
-        .cast("bigint")
-        .alias("d")
-    ).agg(
-        F.sum(F.when(F.col("event_type") == "purchase", 1).otherwise(0))
-        .cast("bigint")
-        .alias("x"),
-        F.sum(F.when(F.col("event_type") == "click", 1).otherwise(0))
-        .cast("bigint")
-        .alias("y"),
-        F.sum(F.when(F.col("event_type") == "error", 1).otherwise(0))
-        .cast("bigint")
-        .alias("z"),
-    )
-
-    def dsum(a, b, name):
-        return (
-            F.sum(F.col(a).cast("decimal(19,0)") * F.col(b))
-            .cast("decimal(38,0)")
-            .alias(name)
-        )
-
-    mom = day3.agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.sum("x").cast("bigint").alias("sx"),
-        F.sum("y").cast("bigint").alias("sy"),
-        F.sum("z").cast("bigint").alias("sz"),
-        dsum("x", "x", "sxx"),
-        dsum("y", "y", "syy"),
-        dsum("z", "z", "szz"),
-        dsum("x", "y", "sxy"),
-        dsum("x", "z", "sxz"),
-        dsum("y", "z", "syz"),
-    )
-    n = F.col("n")
-
-    def r(sab, sa, sb, saa, sbb):
-        return F.round(
-            (n * F.col(sab).cast("double")
-             - F.col(sa).cast("double") * F.col(sb))
-            / F.sqrt(
-                (n * F.col(saa).cast("double")
-                 - F.col(sa).cast("double") * F.col(sa))
-                * (n * F.col(sbb).cast("double")
-                   - F.col(sb).cast("double") * F.col(sb))
-            ),
-            10,
-        )
-
-    return mom.select(
-        n.alias("n"),
-        r("sxy", "sx", "sy", "sxx", "syy").alias("r12"),
-        r("sxz", "sx", "sz", "sxx", "szz").alias("r13"),
-        r("syz", "sy", "sz", "syy", "szz").alias("r23"),
-    )
-
-
 # bartlett_sphericity was authored here (the bank seed) and PROMOTED to
 # bank_r15's 50th window slot at the round-15 flip (the
-# dersimonian_laird_meta precedent); bank_r15 carries an identical copy
-# of the _DAY3_SQL/_corr3 frame above, which stays here for kmo_adequacy.
+# dersimonian_laird_meta precedent); it shares common.py's
+# DAILY_EVENT_CORR3_SQL/daily_event_corr3 frame with kmo_adequacy.
 # The bank was restored to 49 the same round with
 # williams_dependent_corr below (the cluster_robust_ols_se precedent).
 
@@ -222,7 +106,7 @@ def _corr3(spark, sf_dir):
 @register(
     "williams_dependent_corr",
     oracle=f"""
-    WITH {_DAY3_SQL}
+    WITH {DAILY_EVENT_CORR3_SQL}
     SELECT n AS n_days,
            round(r12, 6) + 0.0 AS r_purchase_click,
            round(r13, 6) + 0.0 AS r_purchase_error,
@@ -265,7 +149,7 @@ def williams_dependent_corr(spark, sf_dir):
     the identical terminal double tree; outputs rounded at 6 dp
     with the +0.0 negative-zero guard. Plan: one day rollup, one
     fold, scalar tree — no joins, no windows."""
-    c = _corr3(spark, sf_dir)
+    c = daily_event_corr3(spark, sf_dir)
     r12, r13, r23 = F.col("r12"), F.col("r13"), F.col("r23")
     n = F.col("n")
     det = (
@@ -316,7 +200,7 @@ PLAN_AUDIT_NOTES.update(
 @register(
     "kmo_adequacy",
     oracle=f"""
-    WITH {_DAY3_SQL},
+    WITH {DAILY_EVENT_CORR3_SQL},
     part AS (
         SELECT n, r12, r13, r23,
                round((r12 - r13 * r23)
@@ -362,7 +246,7 @@ def kmo_adequacy(spark, sf_dir):
     (rounded 10 dp), partials rounded at 10 dp before the KMO
     ratios; everything downstream is a terminal double tree. Plan:
     one day rollup, one fold."""
-    c = _corr3(spark, sf_dir)
+    c = daily_event_corr3(spark, sf_dir)
     r12, r13, r23 = F.col("r12"), F.col("r13"), F.col("r23")
     p12 = F.round(
         (r12 - r13 * r23)
@@ -2175,7 +2059,6 @@ from .bank_r15 import (  # noqa: E402
     _SIN24,
     _acklam_col,
     _acklam_sql,
-    _case24,
     _lut24,
 )
 
@@ -5515,8 +5398,8 @@ PLAN_AUDIT_NOTES.update(
         FROM events WHERE event_type = 'purchase'
     ),
     terms AS (
-        SELECT v, ({_case24('hr', _COS24)}) AS cc,
-               ({_case24('hr', _SIN24)}) AS ss
+        SELECT v, ({case_sql('hr', _COS24)}) AS cc,
+               ({case_sql('hr', _SIN24)}) AS ss
         FROM pts
     ),
     mom AS (

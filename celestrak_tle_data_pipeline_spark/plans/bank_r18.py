@@ -15,8 +15,8 @@ self-contained, so the move carried no shared frame, and the bank was
 restored to 49 the same round (``hodges_lehmann_walsh_ci``, X797). At
 the round-18 flip this bank's own 50th window slot is
 ``updown_runs_test`` (X690), promoted from the round-19 bank — it
-re-binds to THIS module's byte-identical ``_DAILY_SQL``/``_daily``
-frame copy, so the promotion carries no shared frame either.
+uses ``common.py``'s ``DAILY_ORDER_CENTS_SQL``/``daily_order_cents``
+frame, so the promotion carries no shared frame either.
 
 Theme (COMPLETE at 49 in round 14): TAIL GEOMETRY, DOMINANCE AND
 DISTRIBUTION-FREE CERTIFICATES — the full inequality/poverty/
@@ -55,7 +55,15 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from . import register as _live_register
-from .common import dec, exact_cumulative, t
+from .common import (
+    DAILY_ORDER_CENTS_SQL,
+    daily_order_cents,
+    dec,
+    exact_cumulative,
+    phi_col,
+    phi_sql,
+    t,
+)
 
 BANK_QUERIES: dict = {}
 BANK_ORACLES: dict = {}
@@ -480,33 +488,8 @@ PLAN_AUDIT_NOTES.update(
 
 
 # --------------------------------------------------------------------------
-# Shared frames: daily revenue series (the bank_r13/r14 _DAILY_SQL copy),
-# per-customer spend (cents) and the order-value grid
+# Shared frames: per-customer spend (cents) and the order-value grid
 # --------------------------------------------------------------------------
-_DAILY_SQL = """
-    daily AS (
-        SELECT CAST(epoch_us(o_orderdate) // 86400000000 AS BIGINT)
-                   AS day,
-               CAST(SUM(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100
-                             AS BIGINT)) AS BIGINT) AS y
-        FROM orders GROUP BY 1
-    )
-"""
-
-
-def _daily(spark, sf_dir):
-    o = t(spark, sf_dir, "orders")
-    return o.groupBy(
-        F.floor(F.unix_micros("o_orderdate") / 86_400_000_000)
-        .cast("bigint")
-        .alias("day")
-    ).agg(
-        F.sum((dec("o_totalprice", 18, 2) * 100).cast("bigint"))
-        .cast("bigint")
-        .alias("y")
-    )
-
-
 _SPEND_SQL = """
     spend AS (
         SELECT o_custkey AS u,
@@ -2547,7 +2530,7 @@ def qq_tail_estimator(spark, sf_dir):
 @register(
     "extremal_index_runs",
     oracle=f"""
-    WITH {_DAILY_SQL},
+    WITH {DAILY_ORDER_CENTS_SQL},
     dgrid AS (
         SELECT y AS v, CAST(COUNT(*) AS BIGINT) AS c
         FROM daily GROUP BY y
@@ -2603,7 +2586,7 @@ def extremal_index_runs(spark, sf_dir):
     on the calendar-bounded exceedance frame. Plan: one day rollup,
     one domain-bounded grid cumulative, one calendar-frame lag, one
     fold."""
-    daily = _daily(spark, sf_dir)
+    daily = daily_order_cents(spark, sf_dir)
     dgrid = daily.groupBy(F.col("y").alias("v")).agg(
         F.count(F.lit(1)).cast("bigint").alias("c")
     )
@@ -3063,7 +3046,7 @@ PLAN_AUDIT_NOTES.update(
 @register(
     "rachev_ratio_tails",
     oracle=f"""
-    WITH {_DAILY_SQL},
+    WITH {DAILY_ORDER_CENTS_SQL},
     chg AS (
         SELECT y - LAG(y) OVER (ORDER BY day) AS g
         FROM daily QUALIFY g IS NOT NULL
@@ -3142,7 +3125,7 @@ def rachev_ratio_tails(spark, sf_dir):
     threshold)/k, which handles ties at the threshold exactly (no
     interpolated percentile). Plan: one day rollup, one calendar
     lag, one change-grid double cumulative, two scalar folds."""
-    daily = _daily(spark, sf_dir)
+    daily = daily_order_cents(spark, sf_dir)
     chg = daily.select(
         (F.col("y") - F.lag("y").over(Window.orderBy("day"))).alias(
             "g"
@@ -3265,7 +3248,7 @@ def rachev_ratio_tails(spark, sf_dir):
 @register(
     "calmar_sterling_panel",
     oracle=f"""
-    WITH {_DAILY_SQL},
+    WITH {DAILY_ORDER_CENTS_SQL},
     dd AS (
         SELECT day, y,
                MAX(y) OVER (ORDER BY day ROWS UNBOUNDED PRECEDING)
@@ -3313,7 +3296,7 @@ def calmar_sterling_panel(spark, sf_dir):
     max over the calendar-bounded day frame; all folds exact
     BIGINTs; ratios divide in doubles at the end. Plan: one day
     rollup, two calendar-frame windows, one fold."""
-    daily = _daily(spark, sf_dir)
+    daily = daily_order_cents(spark, sf_dir)
     w = Window.orderBy("day").rowsBetween(
         Window.unboundedPreceding, Window.currentRow
     )
@@ -3380,7 +3363,7 @@ def calmar_sterling_panel(spark, sf_dir):
 @register(
     "kelly_fraction_daily",
     oracle=f"""
-    WITH {_DAILY_SQL},
+    WITH {DAILY_ORDER_CENTS_SQL},
     chg AS (
         SELECT y - LAG(y) OVER (ORDER BY day) AS g
         FROM daily QUALIFY g IS NOT NULL
@@ -3430,7 +3413,7 @@ def kelly_fraction_daily(spark, sf_dir):
     sums BIGINT, squared sum DECIMAL(38,0)); the four readouts
     divide in doubles at 8 dp. Plan: one day rollup, one calendar
     lag, one fold."""
-    daily = _daily(spark, sf_dir)
+    daily = daily_order_cents(spark, sf_dir)
     chg = daily.select(
         (F.col("y") - F.lag("y").over(Window.orderBy("day"))).alias(
             "g"
@@ -3483,7 +3466,7 @@ def kelly_fraction_daily(spark, sf_dir):
 @register(
     "spectral_risk_exponential",
     oracle=f"""
-    WITH {_DAILY_SQL},
+    WITH {DAILY_ORDER_CENTS_SQL},
     chg AS (
         SELECT LAG(y) OVER (ORDER BY day) - y AS loss
         FROM daily QUALIFY loss IS NOT NULL
@@ -3544,7 +3527,7 @@ def spectral_risk_exponential(spark, sf_dir):
     pin); terms fold through DECIMAL(28,8). Plan: one day rollup,
     one calendar lag, one domain-bounded grid cumulative, one
     fold."""
-    daily = _daily(spark, sf_dir)
+    daily = daily_order_cents(spark, sf_dir)
     chg = daily.select(
         (F.lag("y").over(Window.orderBy("day")) - F.col("y")).alias(
             "loss"
@@ -4147,7 +4130,7 @@ def ttt_barlow_proschan(spark, sf_dir):
 @register(
     "foster_stuart_records",
     oracle=f"""
-    WITH {_DAILY_SQL},
+    WITH {DAILY_ORDER_CENTS_SQL},
     rec AS (
         SELECT day, y,
                ROW_NUMBER() OVER (ORDER BY day) AS i,
@@ -4195,7 +4178,7 @@ def foster_stuart_records(spark, sf_dir):
     harmonic sum folds 10-dp-rounded reciprocals of the exact day
     index through DECIMAL. Plan: one day rollup, three
     calendar-frame windows, one fold."""
-    daily = _daily(spark, sf_dir)
+    daily = daily_order_cents(spark, sf_dir)
     ew = Window.orderBy("day").rowsBetween(
         Window.unboundedPreceding, -1
     )
@@ -5009,7 +4992,7 @@ PLAN_AUDIT_NOTES.update(
 @register(
     "smape_wape_panel",
     oracle=f"""
-    WITH {_DAILY_SQL},
+    WITH {DAILY_ORDER_CENTS_SQL},
     fc AS (
         SELECT day, y, LAG(y, 7) OVER (ORDER BY day) AS yhat
         FROM daily QUALIFY yhat IS NOT NULL
@@ -5047,7 +5030,7 @@ def smape_wape_panel(spark, sf_dir):
     Exactness: absolute/signed error sums are exact integer cents;
     the two per-day ratio metrics round at 8 dp before DECIMAL
     folding. Plan: one day rollup, one calendar lag, one fold."""
-    daily = _daily(spark, sf_dir)
+    daily = daily_order_cents(spark, sf_dir)
     fc = daily.select(
         "y",
         F.lag("y", 7).over(Window.orderBy("day")).alias("yhat"),
@@ -5094,7 +5077,7 @@ def smape_wape_panel(spark, sf_dir):
 @register(
     "leverage_effect_corr",
     oracle=f"""
-    WITH {_DAILY_SQL},
+    WITH {DAILY_ORDER_CENTS_SQL},
     chg AS (
         SELECT day, y - LAG(y) OVER (ORDER BY day) AS g
         FROM daily QUALIFY g IS NOT NULL
@@ -5145,7 +5128,7 @@ def leverage_effect_corr(spark, sf_dir):
     all five Pearson power sums fold in DECIMAL(38,0); one division
     and sqrt at the end. Plan: one day rollup, two calendar lags,
     one fold."""
-    daily = _daily(spark, sf_dir)
+    daily = daily_order_cents(spark, sf_dir)
     chg = daily.select(
         "day",
         (F.col("y") - F.lag("y").over(Window.orderBy("day"))).alias(
@@ -5349,7 +5332,7 @@ def fano_factor_timescales(spark, sf_dir):
 @register(
     "aggvar_hurst",
     oracle=f"""
-    WITH {_DAILY_SQL},
+    WITH {DAILY_ORDER_CENTS_SQL},
     ms AS (SELECT CAST(u.m AS BIGINT) AS m
            FROM LATERAL UNNEST([1, 2, 4, 8]) AS u(m)),
     blocks AS (
@@ -5417,7 +5400,7 @@ def aggvar_hurst(spark, sf_dir):
     and the k$^2 normalization divide in doubles; the 4-point OLS
     pins each ln at 6 dp. Plan: one day rollup, one 4-scale
     broadcast cross, three folds."""
-    daily = _daily(spark, sf_dir)
+    daily = daily_order_cents(spark, sf_dir)
     ms = spark.createDataFrame([(1,), (2,), (4,), (8,)], "m long")
     blocks = (
         daily.crossJoin(F.broadcast(ms))
@@ -5484,7 +5467,7 @@ def aggvar_hurst(spark, sf_dir):
 @register(
     "first_passage_time_panel",
     oracle=f"""
-    WITH {_DAILY_SQL},
+    WITH {DAILY_ORDER_CENTS_SQL},
     cum AS (
         SELECT ROW_NUMBER() OVER (ORDER BY day) AS i,
                SUM(y) OVER (ORDER BY day ROWS UNBOUNDED PRECEDING)
@@ -5534,7 +5517,7 @@ def first_passage_time_panel(spark, sf_dir):
     day indices; only the 9-point mean divides. Plan: one day
     rollup, one calendar cumulative, one 9-row broadcast, one
     fold."""
-    daily = _daily(spark, sf_dir)
+    daily = daily_order_cents(spark, sf_dir)
     w = Window.orderBy("day").rowsBetween(
         Window.unboundedPreceding, Window.currentRow
     )
@@ -6888,7 +6871,7 @@ _pois_case_sql = (
 @register(
     "block_bootstrap_se",
     oracle=f"""
-    WITH {_DAILY_SQL},
+    WITH {DAILY_ORDER_CENTS_SQL},
     idx AS (
         SELECT y, (ROW_NUMBER() OVER (ORDER BY day) - 1) // 7
                    AS blk
@@ -6968,7 +6951,7 @@ def block_bootstrap_se(spark, sf_dir):
     Plan: one day rollup, one row_number over the calendar frame,
     a 32-replicate broadcast cross over the bounded block frame,
     three folds."""
-    daily = _daily(spark, sf_dir)
+    daily = daily_order_cents(spark, sf_dir)
     idx = daily.select(
         "y",
         F.floor(
@@ -7080,37 +7063,6 @@ def block_bootstrap_se(spark, sf_dir):
     )
 
 
-def _phi_col(z):
-    """Standard normal CDF as a Column via the shared Abramowitz-
-    Stegun 7.1.26 erfc tree (the bank_r15 `_p_two_sided_col` device,
-    split by sign): Phi(z) = 1 - p2(z)/2 for z >= 0, p2(z)/2 below."""
-    x = F.abs(z) / 1.4142135623730951
-    tp = 1.0 / (1.0 + 0.3275911 * x)
-    p2 = (
-        (
-            ((1.061405429 * tp - 1.453152027) * tp + 1.421413741) * tp
-            - 0.284496736
-        )
-        * tp
-        + 0.254829592
-    ) * tp * F.exp(-x * x)
-    return F.when(z >= 0, 1.0 - p2 / 2.0).otherwise(p2 / 2.0)
-
-
-_PHI_SQL_TMPL = (
-    "(CASE WHEN (__z) >= 0 THEN 1.0 - (__P) / 2.0"
-    " ELSE (__P) / 2.0 END)"
-)
-
-
-def _phi_sql(z_expr: str) -> str:
-    from .stats_tests import _p_two_sided_sql
-
-    return _PHI_SQL_TMPL.replace(
-        "__P", _p_two_sided_sql(z_expr)
-    ).replace("__z", z_expr)
-
-
 # --------------------------------------------------------------------------
 # Berry-Esseen CLT certificate for daily mean order values
 # --------------------------------------------------------------------------
@@ -7152,7 +7104,7 @@ def _phi_sql(z_expr: str) -> str:
     ),
     gaps AS (
         SELECT CAST(MAX(abs(ks.k / 20.0
-                   - {_phi_sql("((qk.q - mom.sm / mom.nd) "
+                   - {phi_sql("((qk.q - mom.sm / mom.nd) "
                                "/ sqrt(mom.smm / mom.nd "
                                "- mom.sm * mom.sm / mom.nd "
                                "/ mom.nd))")}
@@ -7260,7 +7212,7 @@ def berry_esseen_certificate(spark, sf_dir):
         qk.crossJoin(F.broadcast(mom))
         .agg(
             F.max(
-                F.abs(F.col("k") / 20.0 - _phi_col(zq))
+                F.abs(F.col("k") / 20.0 - phi_col(zq))
             ).alias("maxgap")
         )
     )
@@ -7625,13 +7577,13 @@ PLAN_AUDIT_NOTES.update(
 # Promoted at the round-18 flip: runs-up-and-down randomness test on
 # daily revenue (moved from the round-19 bank as the 50th window slot —
 # the mean_excess_slope / fisher_stouffer_combined precedent). The
-# query re-binds to THIS module's byte-identical _DAILY_SQL/_daily
-# frame copy, so the move carries no shared frame.
+# query uses common.py's DAILY_ORDER_CENTS_SQL/daily_order_cents frame,
+# so the move carries no shared frame.
 # --------------------------------------------------------------------------
 @register(
     "updown_runs_test",
     oracle=f"""
-    WITH {_DAILY_SQL},
+    WITH {DAILY_ORDER_CENTS_SQL},
     sgn AS (
         SELECT day,
                CASE WHEN y > LAG(y) OVER (ORDER BY day) THEN 1
@@ -7675,7 +7627,7 @@ def updown_runs_test(spark, sf_dir):
     comparisons over the calendar-day frame; the moments are
     literal rationals of the exact effective n. Plan: one day
     rollup, two calendar-frame lags, one fold."""
-    daily = _daily(spark, sf_dir)
+    daily = daily_order_cents(spark, sf_dir)
     lagw = Window.orderBy("day")
     sgn = daily.select(
         "day",

@@ -11,9 +11,9 @@ is authored, no exceptions since round 14).
 
 At the round-18 flip the seed query here (``updown_runs_test``, X690)
 was promoted into bank_r18's 50th window slot (the mean_excess_slope /
-fisher_stouffer_combined precedent); it re-bound to bank_r18's
-byte-identical ``_DAILY_SQL``/``_daily`` frame copy, so the move
-carried no shared frame. The bank is restored to 49 in the same round
+fisher_stouffer_combined precedent); its daily revenue frame is
+``common.py``'s ``DAILY_ORDER_CENTS_SQL``/``daily_order_cents``, so the
+move carried no shared frame. The bank is restored to 49 in the same round
 under the full authoring gate.
 
 Theme: SECOND OPINIONS — alternative-form tests for questions the
@@ -60,7 +60,15 @@ import math
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from .common import dec, exact_cumulative, t
+from .common import (
+    DAILY_ORDER_CENTS_SQL,
+    daily_order_cents,
+    dec,
+    exact_cumulative,
+    phi_col,
+    phi_sql,
+    t,
+)
 
 BANK_QUERIES: dict = {}
 BANK_ORACLES: dict = {}
@@ -80,38 +88,13 @@ def register(name: str, oracle: str | None = None):
     return deco
 
 
-# Shared day-grain revenue series (the bank_r13/r14/r18 copy).
-_DAILY_SQL = """
-    daily AS (
-        SELECT CAST(epoch_us(o_orderdate) // 86400000000 AS BIGINT)
-                   AS day,
-               CAST(SUM(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100
-                             AS BIGINT)) AS BIGINT) AS y
-        FROM orders GROUP BY 1
-    )
-"""
-
-
-def _daily(spark, sf_dir):
-    o = t(spark, sf_dir, "orders")
-    return o.groupBy(
-        F.floor(F.unix_micros("o_orderdate") / 86_400_000_000)
-        .cast("bigint")
-        .alias("day")
-    ).agg(
-        F.sum((dec("o_totalprice", 18, 2) * 100).cast("bigint"))
-        .cast("bigint")
-        .alias("y")
-    )
-
-
 # --------------------------------------------------------------------------
 # Spearman rank autocorrelation of daily revenue at lags 1 and 7
 # --------------------------------------------------------------------------
 @register(
     "rank_autocorrelation_lag7",
     oracle=f"""
-    WITH {_DAILY_SQL},
+    WITH {DAILY_ORDER_CENTS_SQL},
     ranked AS (
         SELECT day,
                CAST(RANK() OVER (ORDER BY y)
@@ -184,7 +167,7 @@ def rank_autocorrelation_lag7(spark, sf_dir):
     Pearson folds over the rank pairs are exact DECIMAL(38,0);
     division at the end. Plan: one day rollup, one rank window +
     two lags over the calendar frame, two folds."""
-    daily = _daily(spark, sf_dir)
+    daily = daily_order_cents(spark, sf_dir)
     ranked = daily.select(
         "day",
         (
@@ -544,31 +527,6 @@ PLAN_AUDIT_NOTES.update(
 )
 
 
-def _phi_col_r19(z):
-    """Standard normal CDF Column via the shared Abramowitz-Stegun
-    7.1.26 erfc tree (bank_r15/_r18 device, split by sign)."""
-    x = F.abs(z) / 1.4142135623730951
-    tp = 1.0 / (1.0 + 0.3275911 * x)
-    p2 = (
-        (
-            ((1.061405429 * tp - 1.453152027) * tp + 1.421413741) * tp
-            - 0.284496736
-        )
-        * tp
-        + 0.254829592
-    ) * tp * F.exp(-x * x)
-    return F.when(z >= 0, 1.0 - p2 / 2.0).otherwise(p2 / 2.0)
-
-
-def _phi_sql_r19(z_expr: str) -> str:
-    from .stats_tests import _p_two_sided_sql
-
-    return (
-        "(CASE WHEN (__z) >= 0 THEN 1.0 - (__P) / 2.0"
-        " ELSE (__P) / 2.0 END)"
-    ).replace("__P", _p_two_sided_sql(z_expr)).replace("__z", z_expr)
-
-
 # --------------------------------------------------------------------------
 # Cramer-von Mises goodness of fit against the moment-fitted lognormal
 # --------------------------------------------------------------------------
@@ -610,13 +568,13 @@ def _phi_sql_r19(z_expr: str) -> str:
     terms AS (
         SELECT MAX(n) AS n,
                CAST(SUM(CAST(round(
-                   c * round({_phi_sql_r19(
+                   c * round({phi_sql(
                        "((round(ln(CAST(v AS DOUBLE) / 100000.0), 8)"
                        " - mu) / sig)")}, 10)
-                     * round({_phi_sql_r19(
+                     * round({phi_sql(
                        "((round(ln(CAST(v AS DOUBLE) / 100000.0), 8)"
                        " - mu) / sig)")}, 10)
-                   - round({_phi_sql_r19(
+                   - round({phi_sql(
                        "((round(ln(CAST(v AS DOUBLE) / 100000.0), 8)"
                        " - mu) / sig)")}, 10)
                      * c * (2.0 * head + c) / n
@@ -720,7 +678,7 @@ def cvm_lognormal_gof(spark, sf_dir):
             .alias("head"),
         )
     )
-    ff = F.round(_phi_col_r19((lnv - F.col("mu")) / F.col("sig")), 10)
+    ff = F.round(phi_col((lnv - F.col("mu")) / F.col("sig")), 10)
     h38 = F.col("head").cast("decimal(38,0)")
     c38 = F.col("c").cast("decimal(38,0)")
     s2hi = (
@@ -773,7 +731,7 @@ PLAN_AUDIT_NOTES.update(
 @register(
     "brown_mood_median_line",
     oracle=f"""
-    WITH {_DAILY_SQL},
+    WITH {DAILY_ORDER_CENTS_SQL},
     lab AS (
         SELECT day, y,
                CASE WHEN day <= (SELECT (MIN(day) + MAX(day)) // 2
@@ -836,7 +794,7 @@ def brown_mood_median_line(spark, sf_dir):
     share); the line and residual signs evaluate in doubles from
     exact integers. Plan: one day rollup, two half folds, one
     broadcast residual count."""
-    daily = _daily(spark, sf_dir)
+    daily = daily_order_cents(spark, sf_dir)
     cut = daily.agg(
         F.floor((F.min("day") + F.max("day")) / 2)
         .cast("bigint")
@@ -1413,7 +1371,7 @@ def mmd_poly2_two_sample(spark, sf_dir):
 @register(
     "bimodality_coefficient",
     oracle=f"""
-    WITH {_DAILY_SQL},
+    WITH {DAILY_ORDER_CENTS_SQL},
     mom AS (
         SELECT CAST(COUNT(*) AS BIGINT) AS n,
                CAST(SUM(y) AS BIGINT) AS s,
@@ -1499,7 +1457,7 @@ def bimodality_coefficient(spark, sf_dir):
     DECIMAL(36,2); all central moments assemble in k$ units;
     g1/g2 pin at 8 dp before BC. Plan: one day
     rollup, one fold — no window."""
-    daily = _daily(spark, sf_dir)
+    daily = daily_order_cents(spark, sf_dir)
     y38 = F.col("y").cast("decimal(38,0)")
     mom = daily.agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
@@ -1834,7 +1792,7 @@ def benford_first_two_digits(spark, sf_dir):
 @register(
     "gev_lmoment_blockmax",
     oracle=f"""
-    WITH {_DAILY_SQL},
+    WITH {DAILY_ORDER_CENTS_SQL},
     bm AS (
         SELECT CAST(day // 30 AS BIGINT) AS blk,
                CAST(MAX(y) AS BIGINT) AS m,
@@ -1895,7 +1853,7 @@ def gev_lmoment_blockmax(spark, sf_dir):
     ordering); ln2/ln3 and the Hosking coefficients are shared
     literals. Plan: one day rollup, one bounded block rollup, one
     rank window over the ~85-row block frame, one fold."""
-    daily = _daily(spark, sf_dir)
+    daily = daily_order_cents(spark, sf_dir)
     bm = (
         daily.groupBy(F.floor(F.col("day") / 30).alias("blk"))
         .agg(
@@ -1959,7 +1917,7 @@ def gev_lmoment_blockmax(spark, sf_dir):
 @register(
     "theil_u1_forecast",
     oracle=f"""
-    WITH {_DAILY_SQL},
+    WITH {DAILY_ORDER_CENTS_SQL},
     fc AS (
         SELECT y, LAG(y, 7) OVER (ORDER BY day) AS yhat
         FROM daily QUALIFY yhat IS NOT NULL
@@ -1997,7 +1955,7 @@ def theil_u1_forecast(spark, sf_dir):
     Exactness: squared-error and squared-level sums are exact
     DECIMAL(38,0) integer folds; three square roots at the end.
     Plan: one day rollup, one calendar lag, one fold."""
-    daily = _daily(spark, sf_dir)
+    daily = daily_order_cents(spark, sf_dir)
     fc = daily.select(
         "y",
         F.lag("y", 7).over(Window.orderBy("day")).alias("yhat"),
@@ -2500,14 +2458,14 @@ _AH_STAT_SQL = """
     SELECT n1 AS n_fri_sat, n0 AS n_sun_thu,
            w_stat + 0.0 AS ah_w_stat,
            delta_nc + 0.0 AS ah_noncentrality,
-           round(round({_phi_sql_r19(
+           round(round({phi_sql(
                "(round(abs(w_stat) - delta_nc, 8))")}, 10)
-                 - round({_phi_sql_r19(
+                 - round({phi_sql(
                "(round(-abs(w_stat) - delta_nc, 8))")}, 10), 8)
                + 0.0 AS ah_p_value,
-           CAST(CASE WHEN round({_phi_sql_r19(
+           CAST(CASE WHEN round({phi_sql(
                "(round(abs(w_stat) - delta_nc, 8))")}, 10)
-                      - round({_phi_sql_r19(
+                      - round({phi_sql(
                "(round(-abs(w_stat) - delta_nc, 8))")}, 10)
                      <= 0.05 THEN 1 ELSE 0 END AS INT)
                AS ah_equivalent_at_5pct,
@@ -2590,13 +2548,13 @@ def anderson_hauck_equivalence(spark, sf_dir):
         F.round(margin / se, 8).alias("delta_nc"),
     )
     p_hi = F.round(
-        _phi_col_r19(
+        phi_col(
             F.round(F.abs(F.col("w_stat")) - F.col("delta_nc"), 8)
         ),
         10,
     )
     p_lo = F.round(
-        _phi_col_r19(
+        phi_col(
             F.round(-F.abs(F.col("w_stat")) - F.col("delta_nc"), 8)
         ),
         10,
@@ -3605,7 +3563,7 @@ PLAN_AUDIT_NOTES.update(
 @register(
     "approximate_entropy_daily",
     oracle=f"""
-    WITH {_DAILY_SQL},
+    WITH {DAILY_ORDER_CENTS_SQL},
     tol AS (
         SELECT CAST(floor(0.2 * sqrt(
                    CAST(COUNT(*) * SUM(CAST(y AS DECIMAL(38,0)) * y)
@@ -3680,7 +3638,7 @@ def approximate_entropy_daily(spark, sf_dir):
     the domain-bounded SampEn device (~2.4k-row calendar frame;
     pair count is a calendar constant, not data-volume-scaled).
     Plan: day rollup -> two bounded self-joins -> two folds."""
-    daily = _daily(spark, sf_dir).persist()
+    daily = daily_order_cents(spark, sf_dir).persist()
     tol = daily.agg(
         F.floor(
             0.2
@@ -3794,7 +3752,7 @@ PLAN_AUDIT_NOTES.update(
 @register(
     "hjorth_parameters_daily",
     oracle=f"""
-    WITH {_DAILY_SQL},
+    WITH {DAILY_ORDER_CENTS_SQL},
     trip AS (
         SELECT a.y AS y0, b.y AS y1, c.y AS y2
         FROM daily a
@@ -3865,7 +3823,7 @@ def hjorth_parameters_daily(spark, sf_dir):
     the FD are identical IEEE trees (population-variance
     convention). Plan: day rollup -> two calendar equi-joins -> one
     fold; no window anywhere."""
-    daily = _daily(spark, sf_dir)
+    daily = daily_order_cents(spark, sf_dir)
     b1 = daily.select(
         (F.col("day") + 1).alias("day"), F.col("y").alias("y1")
     )
@@ -3949,7 +3907,7 @@ PLAN_AUDIT_NOTES.update(
 @register(
     "theta_method_mase",
     oracle=f"""
-    WITH {_DAILY_SQL},
+    WITH {DAILY_ORDER_CENTS_SQL},
     idxd AS (
         SELECT ROW_NUMBER() OVER (ORDER BY day) AS i,
                CAST(y AS DOUBLE) / 100000.0 AS yk
@@ -4044,7 +4002,7 @@ def theta_method_mase(spark, sf_dir):
     integer-index folds; all absolute-error folds are rounded-term
     DECIMAL sums. Plan: day rollup -> one bounded window -> four
     scalar folds + broadcast-scalar holdout scoring."""
-    daily = _daily(spark, sf_dir)
+    daily = daily_order_cents(spark, sf_dir)
     wday = Window.orderBy("day")
     idxd = daily.select(
         F.row_number().over(wday).cast("bigint").alias("i"),
@@ -7158,7 +7116,7 @@ def _harmonic_col(k):
 # close: its one consumer, moran_log_spacings, is bank_r20's OLDEST
 # query — the round-19 flip's promotion candidate — and bank_r20
 # already imports this bank's _harmonic_col, so hosting the device
-# here keeps the promotion cycle-free (the _DAILY_SQL precedent).
+# here keeps the promotion cycle-free.
 _PI2_6 = 1.6449340668482264
 _H2_20 = [0.0, 1.0, 1.25, 1.3611111111111112, 1.4236111111111112, 1.4636111111111112, 1.4913888888888889, 1.511797052154195, 1.527422052154195, 1.5397677311665408, 1.5497677311665408, 1.558032193976458, 1.5649766384209025, 1.5708937981842162, 1.5759958390005426, 1.580440283444987, 1.584346533444987, 1.587806741057444, 1.5908931608105303, 1.5936632439130234, 1.5961632439130233]
 
@@ -7398,7 +7356,7 @@ PLAN_AUDIT_NOTES.update(
     ),
     scored AS (
         SELECT v, c, n, head,
-               GREATEST(LEAST(round({_phi_sql_r19(
+               GREATEST(LEAST(round({phi_sql(
                    "((round(ln(CAST(v AS DOUBLE) / 100000.0), 8)"
                    " - mu) / sig)")}, 10), 1.0 - 1e-10), 1e-10)
                    AS ff
@@ -7505,7 +7463,7 @@ def anderson_darling_lognormal(spark, sf_dir):
     ff = F.greatest(
         F.least(
             F.round(
-                _phi_col_r19((lnv - F.col("mu")) / F.col("sig")), 10
+                phi_col((lnv - F.col("mu")) / F.col("sig")), 10
             ),
             F.lit(1.0 - 1e-10),
         ),
@@ -7608,7 +7566,7 @@ PLAN_AUDIT_NOTES.update(
         SELECT MAX(n) AS n,
                CAST(SUM(CAST(round(c * (2.0 * exp(-y * y / 2.0)
                    / 2.5066282746310002
-                   + y * (2.0 * round({_phi_sql_r19("(y)")}, 10)
+                   + y * (2.0 * round({phi_sql("(y)")}, 10)
                           - 1.0)), 8) AS DECIMAL(38,8))) AS DOUBLE)
                    AS sez,
                CAST(SUM(CAST(round(y * c
@@ -7703,7 +7661,7 @@ def energy_normality_test(spark, sf_dir):
     )
     y = F.col("y")
     ez = 2.0 * F.exp(-y * y / 2.0) / 2.5066282746310002 + y * (
-        2.0 * F.round(_phi_col_r19(y), 10) - 1.0
+        2.0 * F.round(phi_col(y), 10) - 1.0
     )
     fold = cum.agg(
         F.max("n").alias("n"),
@@ -7761,7 +7719,7 @@ PLAN_AUDIT_NOTES.update(
 @register(
     "prais_winsten_ar1",
     oracle=f"""
-    WITH {_DAILY_SQL},
+    WITH {DAILY_ORDER_CENTS_SQL},
     m1 AS (
         SELECT CAST(COUNT(*) AS BIGINT) AS n,
                CAST(MIN(day) AS BIGINT) AS d0,
@@ -7880,7 +7838,7 @@ def prais_winsten_ar1(spark, sf_dir):
     cents). Plan: day rollup -> OLS fold -> one calendar lag ->
     transform -> two folds; the only window is the bounded
     calendar-frame lag (the cochrane_orcutt class)."""
-    daily = _daily(spark, sf_dir)
+    daily = daily_order_cents(spark, sf_dir)
     m1 = daily.agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
         F.sum("day").cast("bigint").alias("sx"),

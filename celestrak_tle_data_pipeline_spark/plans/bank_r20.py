@@ -3961,7 +3961,7 @@ def bca_bootstrap_mean_ci(spark, sf_dir):
     bounded rank pick."""
     from .bank_r14 import _pois_case as _pc
     from .bank_r15 import _acklam_col
-    from .bank_r19 import _phi_col_r19 as _phi
+    from .common import phi_col as _phi
 
     o = t(spark, sf_dir, "orders")
     v = o.select(
@@ -5523,9 +5523,9 @@ def begg_mazumdar_bias(spark, sf_dir):
     pairwise count; tau and z are terminal IEEE trees. Plan: the
     effects frame -> scalar fold -> 300-pair bounded self-join ->
     one fold; no window."""
-    from .bank_r14 import _effects
+    from .common import nation_effects
 
-    eff = _effects(spark, sf_dir).persist()
+    eff = nation_effects(spark, sf_dir).persist()
     s1 = eff.agg(
         F.count(F.lit(1)).cast("bigint").alias("k"),
         F.sum(F.round(1.0 / F.col("v"), 8).cast("decimal(38,8)"))
@@ -5689,9 +5689,9 @@ def meta_loo_sensitivity(spark, sf_dir):
     that entered the totals (exact cancellation by construction);
     extremes and argmins are exact. Plan: effects frame -> scalar
     fold -> 25-row broadcast pass -> two folds; no window."""
-    from .bank_r14 import _effects
+    from .common import nation_effects
 
-    eff = _effects(spark, sf_dir).persist()
+    eff = nation_effects(spark, sf_dir).persist()
     s1 = eff.agg(
         F.count(F.lit(1)).cast("bigint").alias("k"),
         F.sum(F.round(1.0 / F.col("v"), 8).cast("decimal(38,8)"))
@@ -7119,14 +7119,14 @@ def acat_cauchy_combination(spark, sf_dir):
     effects frame -> 25-row p pass -> one fold; no window."""
     import math
 
-    from .bank_r14 import _effects
-    from .bank_r19 import _phi_col_r19
+    from .common import nation_effects
+    from .common import phi_col
 
-    eff = _effects(spark, sf_dir)
+    eff = nation_effects(spark, sf_dir)
     z = F.abs(F.col("y")) / F.sqrt(F.col("v"))
     p = F.greatest(
         F.least(
-            F.round(2.0 * (1.0 - F.round(_phi_col_r19(z), 10)), 10),
+            F.round(2.0 * (1.0 - F.round(phi_col(z), 10)), 10),
             F.lit(1.0 - 1e-12),
         ),
         F.lit(1e-12),
@@ -7369,13 +7369,13 @@ PLAN_AUDIT_NOTES.update(
 # --------------------------------------------------------------------------
 # Chow-Denning maximum variance-ratio test over q = 2, 4, 8, 16
 # --------------------------------------------------------------------------
-from .bank_r19 import _DAILY_SQL, _daily  # noqa: E402
+from .common import DAILY_ORDER_CENTS_SQL, daily_order_cents  # noqa: E402
 
 
 @register(
     "chow_denning_max_vr",
     oracle=f"""
-    WITH {_DAILY_SQL},
+    WITH {DAILY_ORDER_CENTS_SQL},
     x AS (
         SELECT day AS d, CAST(round(ln(y), 9) AS DECIMAL(18,9)) AS x
         FROM daily
@@ -7453,7 +7453,7 @@ def chow_denning_max_vr(spark, sf_dir):
     folds; VR/z close in IEEE trees; the SMM critical 2.491 is a
     shared literal. Plan: day rollup -> 1+4 bounded calendar lag
     joins -> per-q folds -> one summary fold; no window."""
-    daily = _daily(spark, sf_dir)
+    daily = daily_order_cents(spark, sf_dir)
     x = daily.select(
         F.col("day").alias("d"),
         F.round(F.log(F.col("y").cast("double")), 9)
@@ -7556,7 +7556,7 @@ PLAN_AUDIT_NOTES.update(
 @register(
     "phillips_perron_unit_root",
     oracle=f"""
-    WITH {_DAILY_SQL},
+    WITH {DAILY_ORDER_CENTS_SQL},
     pairs AS (
         SELECT a.day AS d,
                CAST(a.y AS DOUBLE) / 100000.0 AS w,
@@ -7667,7 +7667,7 @@ def phillips_perron_unit_root(spark, sf_dir):
     closes in one IEEE tree. Plan: day rollup -> successor join ->
     OLS fold -> broadcast residual pass -> 4 lag joins -> scalar;
     no window."""
-    daily = _daily(spark, sf_dir)
+    daily = daily_order_cents(spark, sf_dir)
     b1 = daily.select(
         (F.col("day") - 1).alias("day"), F.col("y").alias("ynext")
     )
@@ -7794,7 +7794,7 @@ PLAN_AUDIT_NOTES.update(
 @register(
     "forecast_encompassing_hln",
     oracle=f"""
-    WITH {_DAILY_SQL},
+    WITH {DAILY_ORDER_CENTS_SQL},
     err AS (
         SELECT a.day,
                CAST(a.y - b.y AS DOUBLE) / 100000.0 AS e1,
@@ -7851,7 +7851,7 @@ def forecast_encompassing_hln(spark, sf_dir):
     DECIMAL sums; lambdas and t's close in IEEE trees
     (through-the-origin OLS t with n-1 df, documented). Plan: day
     rollup -> two calendar lag joins -> one fold; no window."""
-    daily = _daily(spark, sf_dir)
+    daily = daily_order_cents(spark, sf_dir)
     b1 = daily.select(
         (F.col("day") + 1).alias("day"), F.col("y").alias("y1")
     )

@@ -10,7 +10,11 @@ processing is what buys replay, audit, and exactly-once streaming
 ingestion (the checkpoint tracks landed files).
 
 Writes are atomic (tmp + rename) so a concurrently-triggered
-streaming query never observes a half-written payload.
+streaming query never observes a half-written payload: the temp file
+is dot-named, and every landing reader (the ``binaryFile`` stream,
+``spark.read.text`` and the ``tle`` data source) skips dot-named files,
+so neither an in-flight write nor the debris of a crash before the
+rename is ever ingested.
 """
 
 from __future__ import annotations
@@ -53,7 +57,7 @@ def land_payload(
     os.makedirs(landing_dir, exist_ok=True)
     now = now or dt.datetime.now(dt.timezone.utc)
     name = f"{prefix}-{now.strftime('%Y%m%dT%H%M%S%f')}.txt"
-    fd, tmp = tempfile.mkstemp(dir=landing_dir, suffix=".tmp")
+    fd, tmp = tempfile.mkstemp(dir=landing_dir, prefix=".", suffix=".tmp")
     try:
         with os.fdopen(fd, "w") as f:
             f.write(payload)

@@ -1,15 +1,15 @@
 """Custom Python data source (Spark 4 ``pyspark.sql.datasource`` API):
-``spark.read.format("tle")`` over a landing directory, one input
-partition per payload file.
+``format("tle")`` over a landing directory, one input partition per
+payload file, for batch reads and streams alike.
 
 The reference reads its TLE payload with driver-side Python
 (script.py:119-127); Spark has no native TLE format. The engine's
 primary path lands payloads and assembles DISTRIBUTED with pure
 Catalyst expressions (operators/assembly.py — zero Python in the hot
-loop). This module certifies the third option the Spark 4 API opens:
-a first-class pluggable FORMAT whose reader runs in Python workers with
-file-grain parallelism — the shape to wrap any bespoke format (proto
-logs, instrument dumps) as a real catalog-addressable source.
+loop). This module is the pluggable-format alternative the Spark 4 API
+opens: a catalog-addressable source whose reader runs in Python
+workers with file-grain parallelism — the shape to wrap any bespoke
+format (proto logs, instrument dumps) as a real Spark source.
 
 Assembly semantics are IDENTICAL to the Catalyst path by contract
 (payload .strip() → per-line .strip() → stride-3 over line positions →
@@ -17,23 +17,26 @@ trailing partial dropped — script.py:119-127);
 ``tests/test_pysource.py`` pins row-level equality between the two
 paths so they cannot drift apart.
 
-Scale: partitions() lists files (driver metadata only); each worker
-reads whole files independently — same parallelism model as
-``binaryFile``, no shuffle. Register once per session:
-``spark.dataSource.register(TLEDataSource)``.
+Scale: the driver only LISTS file names; every file becomes one
+``InputPartition`` whose bytes are opened, read and parsed on
+executors — the same parallelism model as ``binaryFile``, no shuffle.
+The stream reader plans its micro-batches the same way (a batch of
+10,000 landed files fans out as 10,000 partitions; the driver's cost
+stays O(listing)). Register once per session with
+``register_tle_source(spark)``.
 """
 
 from __future__ import annotations
 
 import glob
 import os
+import time
 
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
     DataSourceStreamReader,
     InputPartition,
-    SimpleDataSourceStreamReader,
 )
 
 
@@ -51,64 +54,40 @@ def split_triples(payload: str) -> list[tuple[str, str, str]]:
     ]
 
 
+def _listing(root: str, settle_s: float) -> list[str]:
+    """Sorted basenames of the landed files under ``root``. Dot-named
+    files (in-flight landing temps) never match ``*``. With
+    ``settle_s > 0`` a file whose mtime is inside the settle window
+    may still be growing, so it is left out until a later listing
+    observes it quiescent."""
+    cutoff = time.time() - settle_s
+    return sorted(
+        os.path.basename(p)
+        for p in glob.glob(os.path.join(root, "*"))
+        if os.path.isfile(p)
+        and (settle_s <= 0 or os.path.getmtime(p) <= cutoff)
+    )
+
+
+def _file_rows(path: str):
+    """One landed file → ``(sat_name_raw, line1, line2, src_file)``
+    rows, ``src_file`` being the basename."""
+    with open(path, encoding="utf-8") as fh:
+        payload = fh.read()
+    fname = os.path.basename(path)
+    for name, l1, l2 in split_triples(payload):
+        yield (name, l1, l2, fname)
+
+
 class _FilePartition(InputPartition):
     def __init__(self, path: str):
         self.path = path
 
 
-class TLEFileReader(DataSourceReader):
-    def __init__(self, options):
-        self._root = options.get("path")
-        if not self._root:
-            raise ValueError("tle source requires a 'path' option")
-
-    def partitions(self):
-        return [
-            _FilePartition(p)
-            for p in sorted(glob.glob(os.path.join(self._root, "*")))
-            if os.path.isfile(p)
-        ]
-
-    def read(self, partition):
-        with open(partition.path, encoding="utf-8") as fh:
-            payload = fh.read()
-        fname = os.path.basename(partition.path)
-        for name, l1, l2 in split_triples(payload):
-            yield (name, l1, l2, fname)
-
-
-class TLESimpleStreamReader(SimpleDataSourceStreamReader):
-    """Streaming half of the pluggable format: tail a landing
-    directory as an unbounded source, offset = the sorted file-name
-    set already consumed.
-
-    Offset semantics make the source EXACTLY-ONCE under the
-    micro-batch contract: ``read(start)`` consumes only files absent
-    from ``start`` and returns the full listing as the end offset;
-    ``readBetweenOffsets(start, end)`` re-reads precisely the files in
-    ``end − start`` — a deterministic replay, so a batch re-planned
-    after a crash yields identical rows. Parse semantics are
-    ``split_triples`` — the SAME rule as the batch reader, so stream
-    and batch reads of one landing dir are row-identical
-    (pinned by test).
-
-    Scale note, stated: the simple-reader API lists and reads on the
-    driver between plan points (prefetch), which fits
-    landing-dir-sized feeds (the reference's cron fetch is one file
-    per cycle, script.py:100-117); a firehose-scale source would use
-    the partition-planned ``DataSourceStreamReader`` with the same
-    offset algebra.
-
-    Landing contract: producers must land files by ATOMIC RENAME
-    (write to a dot/temp name, rename into place) — list-then-read is
-    not atomic, so a file still being written when listed would be
-    consumed truncated and its name committed to the offset forever
-    (bytes appended after the listing silently lost). For producers
-    that append in place instead, set the ``settleSeconds`` option
-    (> 0): files whose mtime is within the settle window are left OUT
-    of the listing — and therefore out of the committed end offset —
-    until a later batch observes them quiescent, trading one settle
-    window of latency for loss-free ingestion."""
+class _LandingReader:
+    """Shared by the batch and stream readers: the landing directory,
+    the ``settleSeconds`` listing gate (streams only) and the
+    executor-side file read."""
 
     def __init__(self, options):
         self._root = options.get("path")
@@ -116,114 +95,62 @@ class TLESimpleStreamReader(SimpleDataSourceStreamReader):
             raise ValueError("tle source requires a 'path' option")
         self._settle_s = float(options.get("settleSeconds", 0) or 0)
 
-    def initialOffset(self) -> dict:
-        return {"files": []}
-
-    def _listing(self) -> list[str]:
-        import time
-
-        cutoff = time.time() - self._settle_s
-        return sorted(
-            os.path.basename(p)
-            for p in glob.glob(os.path.join(self._root, "*"))
-            if os.path.isfile(p)
-            # settle gate: an mtime inside the window means the file may
-            # still be growing — keep it out of this batch AND out of
-            # the end offset so a later batch picks it up whole
-            and (self._settle_s <= 0 or os.path.getmtime(p) <= cutoff)
-        )
-
-    def _rows_of(self, fname: str):
-        with open(
-            os.path.join(self._root, fname), encoding="utf-8"
-        ) as fh:
-            payload = fh.read()
-        for name, l1, l2 in split_triples(payload):
-            yield (name, l1, l2, fname)
-
-    def read(self, start: dict):
-        seen = set(start["files"])
-        names = self._listing()
-        rows: list[tuple] = []
-        for n in names:
-            if n not in seen:
-                rows.extend(self._rows_of(n))
-        return iter(rows), {"files": names}
-
-    def readBetweenOffsets(self, start: dict, end: dict):
-        seen = set(start["files"])
-        for n in end["files"]:
-            if n not in seen:
-                yield from self._rows_of(n)
-
-
-class TLEPartitionedStreamReader(DataSourceStreamReader):
-    """The FIREHOSE half the simple reader's scale note promises: the
-    partition-planned ``DataSourceStreamReader`` with the SAME offset
-    algebra (offset = sorted consumed-file set, batch = end − start),
-    but where the driver only ever LISTS — every file in a batch
-    becomes one ``InputPartition`` and its bytes are opened, read, and
-    parsed on EXECUTORS, file-grain parallel, exactly like the batch
-    ``TLEFileReader``.
-
-    Contrast with ``TLESimpleStreamReader`` (driver-side prefetch,
-    right for one-file-per-cron feeds): here a micro-batch of 10,000
-    landed files fans out as 10,000 partitions across the cluster and
-    the driver's cost stays O(listing). Offset determinism is
-    identical — ``partitions(start, end)`` derives purely from the two
-    offsets, so a crash-replayed batch plans the same partitions and
-    yields the same rows (exactly-once under the micro-batch
-    contract). The ``settleSeconds`` landing contract is shared via
-    the same listing gate."""
-
-    def __init__(self, options):
-        self._root = options.get("path")
-        if not self._root:
-            raise ValueError("tle source requires a 'path' option")
-        self._settle_s = float(options.get("settleSeconds", 0) or 0)
-
-    def initialOffset(self) -> dict:
-        return {"files": []}
-
-    def _listing(self) -> list[str]:
-        import time
-
-        cutoff = time.time() - self._settle_s
-        return sorted(
-            os.path.basename(p)
-            for p in glob.glob(os.path.join(self._root, "*"))
-            if os.path.isfile(p)
-            and (self._settle_s <= 0 or os.path.getmtime(p) <= cutoff)
-        )
-
-    def latestOffset(self) -> dict:
-        return {"files": self._listing()}
-
-    def partitions(self, start: dict, end: dict):
-        seen = set(start["files"])
-        return [
-            _FilePartition(os.path.join(self._root, n))
-            for n in end["files"]
-            if n not in seen
-        ]
+    def _partitions(self, names) -> list[_FilePartition]:
+        return [_FilePartition(os.path.join(self._root, n)) for n in names]
 
     def read(self, partition):
         # executor-side: open + parse ONE landed file (the driver never
-        # touches payload bytes on this path)
-        with open(partition.path, encoding="utf-8") as fh:
-            payload = fh.read()
-        fname = os.path.basename(partition.path)
-        for name, l1, l2 in split_triples(payload):
-            yield (name, l1, l2, fname)
+        # touches payload bytes)
+        return _file_rows(partition.path)
+
+
+class TLEFileReader(_LandingReader, DataSourceReader):
+    def partitions(self):
+        return self._partitions(_listing(self._root, 0))
+
+
+class TLEPartitionedStreamReader(_LandingReader, DataSourceStreamReader):
+    """Streaming half of the format: tail a landing directory as an
+    unbounded source, offset = the sorted file-name set already
+    consumed, batch = end − start, one ``InputPartition`` per new file.
+
+    Offset semantics make the source EXACTLY-ONCE under the
+    micro-batch contract: ``partitions(start, end)`` derives purely
+    from the two offsets, so a batch re-planned after a crash reads
+    the same files and yields identical rows. Parse semantics are
+    ``split_triples`` — the SAME rule as the batch reader, so stream
+    and batch reads of one landing dir are row-identical (pinned by
+    test).
+
+    Landing contract: producers must land files by ATOMIC RENAME
+    (write to a dot-named temp, rename into place) — list-then-read is
+    not atomic, so a file still being written when listed would be
+    consumed truncated and its name committed to the offset forever.
+    For producers that append in place instead, set the
+    ``settleSeconds`` option (> 0): files whose mtime is within the
+    settle window stay out of the listing — and therefore out of the
+    committed end offset — until a later batch observes them
+    quiescent, trading one settle window of latency for loss-free
+    ingestion."""
+
+    def initialOffset(self) -> dict:
+        return {"files": []}
+
+    def latestOffset(self) -> dict:
+        return {"files": _listing(self._root, self._settle_s)}
+
+    def partitions(self, start: dict, end: dict):
+        seen = set(start["files"])
+        return self._partitions(n for n in end["files"] if n not in seen)
 
     def commit(self, end: dict) -> None:
         pass  # offsets live in the checkpoint; nothing source-side
 
 
 class TLEDataSource(DataSource):
-    """``spark.read.format("tle").option("path", dir)`` → triples;
+    """``spark.read.format("tle").load(dir)`` → triples;
     ``spark.readStream.format("tle")`` tails the same directory with
-    identical parse semantics (driver-prefetch simple reader)."""
+    identical parse semantics."""
 
     @classmethod
     def name(cls) -> str:
@@ -238,31 +165,10 @@ class TLEDataSource(DataSource):
     def reader(self, schema):
         return TLEFileReader(self.options)
 
-    def simpleStreamReader(self, schema):
-        return TLESimpleStreamReader(self.options)
-
-
-class TLEFirehoseDataSource(DataSource):
-    """``spark.readStream.format("tle_firehose")`` — the same TLE
-    landing-dir stream through the partition-planned reader
-    (executor-side reads, file-grain parallelism). A separate format
-    name because Spark prefers ``streamReader`` over
-    ``simpleStreamReader`` when both exist on one source; keeping two
-    names keeps both paths independently certifiable. Batch reads are
-    identical to ``tle`` (same ``TLEFileReader``)."""
-
-    @classmethod
-    def name(cls) -> str:
-        return "tle_firehose"
-
-    def schema(self) -> str:
-        return (
-            "sat_name_raw string, line1 string, line2 string, "
-            "src_file string"
-        )
-
-    def reader(self, schema):
-        return TLEFileReader(self.options)
-
     def streamReader(self, schema):
         return TLEPartitionedStreamReader(self.options)
+
+
+def register_tle_source(spark) -> None:
+    """Idempotent registration of the 'tle' format on this session."""
+    spark.dataSource.register(TLEDataSource)

@@ -21,6 +21,10 @@ Scale notes: state is keyed on (norad_id, epoch_utc) and bounded by the
 watermark horizon — ~3 days of keys, not history; the landing source
 lists only new files per trigger; the ``foreachBatch`` sink reuses the
 batch warehouse path (partition-pruned 3-day probe, size-gated join).
+
+Every landing-dir stream in ``streaming/`` (TLE, weather, the joins and
+the windowed aggregates) reads its payloads through the one
+``landing_payload_stream`` below.
 """
 
 from __future__ import annotations
@@ -28,6 +32,7 @@ from __future__ import annotations
 import datetime as dt
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from ..functions.tle import parse_tle_triples, valid_record
 from ..operators.assembly import assemble_from_payloads
@@ -40,27 +45,20 @@ from ..sinks.warehouse import (
 DEDUP_HORIZON = "3 days"  # the reference's lookback constant (script.py:159)
 
 
-def incremental_tle_stream(
+def landing_payload_stream(
     spark: SparkSession,
     landing_dir: str,
-    fetched_at: dt.datetime | None = None,
-    bstar_mode: str = "compat",
     max_files_per_trigger: int | None = None,
 ) -> DataFrame:
-    """Streaming DataFrame of parsed, in-stream-deduplicated telemetry.
+    """Streaming ``payload STRING``: one row per landed file.
 
-    The landing reader is the ``binaryFile`` streaming source — one row
-    per landed payload file (the streaming text source ignores
-    ``wholetext`` and would shred payloads into boundary-less lines,
-    breaking order-exact assembly). Whole-payload rows keep the stride-3
-    assembly shuffle-free (operators/assembly.py) — identical plan to
-    the batch path, just incremental.
-    """
-    from pyspark.sql import functions as F
-
-    fetched_at = fetched_at or dt.datetime.now(dt.timezone.utc).replace(
-        tzinfo=None
-    )
+    The landing reader is the ``binaryFile`` streaming source — the
+    streaming text source ignores ``wholetext`` and would shred
+    payloads into boundary-less lines, breaking order-exact assembly.
+    Whole-payload rows keep the stride-3 assembly shuffle-free
+    (operators/assembly.py) — identical plan to the batch path, just
+    incremental. Dot-named files (in-flight landing temps) are hidden
+    from the file source."""
     reader = spark.readStream.format("binaryFile").schema(
         "path STRING, modificationTime TIMESTAMP, "
         "length LONG, content BINARY"
@@ -71,8 +69,25 @@ def incremental_tle_stream(
         # AvailableNow the backlog drains as MULTIPLE batches instead
         # of one giant one, each passing through the same dedup state
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    payloads = reader.load(landing_dir).select(
+    return reader.load(landing_dir).select(
         F.decode(F.col("content"), "UTF-8").alias("payload")
+    )
+
+
+def incremental_tle_stream(
+    spark: SparkSession,
+    landing_dir: str,
+    fetched_at: dt.datetime | None = None,
+    bstar_mode: str = "compat",
+    max_files_per_trigger: int | None = None,
+) -> DataFrame:
+    """Streaming DataFrame of parsed, in-stream-deduplicated telemetry
+    over ``landing_payload_stream``."""
+    fetched_at = fetched_at or dt.datetime.now(dt.timezone.utc).replace(
+        tzinfo=None
+    )
+    payloads = landing_payload_stream(
+        spark, landing_dir, max_files_per_trigger
     )
     triples = assemble_from_payloads(payloads)
     parsed = parse_tle_triples(
@@ -138,8 +153,6 @@ def run_incremental_weather(
     date dedup + anti-join against stored dates — ``foreachBatch``
     reuses the exact batch sink. AvailableNow + checkpoint give the
     cron-shaped exactly-once file tracking."""
-    from pyspark.sql import functions as F
-
     from ..functions.weather import parse_flux_payload
     from ..sinks.warehouse import append_new_weather
 
@@ -149,15 +162,7 @@ def run_incremental_weather(
         if not batch_df.isEmpty():
             append_new_weather(wh, batch_df)
 
-    payloads = (
-        spark.readStream.format("binaryFile")
-        .schema(
-            "path STRING, modificationTime TIMESTAMP, "
-            "length LONG, content BINARY"
-        )
-        .load(landing_dir)
-        .select(F.decode(F.col("content"), "UTF-8").alias("payload"))
-    )
+    payloads = landing_payload_stream(spark, landing_dir)
     weather = parse_flux_payload(payloads)
     q = (
         weather.writeStream.foreachBatch(sink)

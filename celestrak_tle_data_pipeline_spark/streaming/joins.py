@@ -26,19 +26,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.weather import parse_flux_payload
-from .incremental import DEDUP_HORIZON, incremental_tle_stream
-
-
-def _binary_payload_stream(spark: SparkSession, landing_dir: str) -> DataFrame:
-    return (
-        spark.readStream.format("binaryFile")
-        .schema(
-            "path STRING, modificationTime TIMESTAMP, "
-            "length LONG, content BINARY"
-        )
-        .load(landing_dir)
-        .select(F.decode(F.col("content"), "UTF-8").alias("payload"))
-    )
+from .incremental import (
+    DEDUP_HORIZON,
+    incremental_tle_stream,
+    landing_payload_stream,
+)
 
 
 def enriched_telemetry_stream(
@@ -85,7 +77,7 @@ def enriched_telemetry_stream(
     )
 
     weather = (
-        parse_flux_payload(_binary_payload_stream(spark, weather_landing_dir))
+        parse_flux_payload(landing_payload_stream(spark, weather_landing_dir))
         .withColumn("weather_ts", F.col("date_utc").cast("timestamp"))
         .withWatermark("weather_ts", DEDUP_HORIZON)
         .select(

@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.weather import parse_flux_payload
-from .incremental import DEDUP_HORIZON
+from .incremental import DEDUP_HORIZON, landing_payload_stream
 
 
 def daily_flux_aggregate_stream(
@@ -32,15 +32,7 @@ def daily_flux_aggregate_stream(
     """Streaming (day DATE, n BIGINT, mean_flux DOUBLE): tumbling
     1-day event-time windows over the landed flux payloads, finalized
     by a 3-day watermark (the reference's lookback constant)."""
-    payloads = (
-        spark.readStream.format("binaryFile")
-        .schema(
-            "path STRING, modificationTime TIMESTAMP, "
-            "length LONG, content BINARY"
-        )
-        .load(landing_dir)
-        .select(F.decode(F.col("content"), "UTF-8").alias("payload"))
-    )
+    payloads = landing_payload_stream(spark, landing_dir)
     flux = parse_flux_payload(payloads).withColumn(
         "ts", F.col("date_utc").cast("timestamp")
     )

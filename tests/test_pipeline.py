@@ -199,6 +199,28 @@ def test_fetch_and_land_chain(spark, tmp_path):
     assert stats["parsed"] == 2 and stats["new_satellites"] == 2
 
 
+def test_land_payload_renames_from_dot_named_temp(tmp_path, monkeypatch):
+    """The in-flight temp is dot-named, so no landing reader lists it
+    before the rename makes the payload whole."""
+    import os
+
+    from celestrak_tle_data_pipeline_spark.sources import fetch
+
+    renamed = []
+    real_rename = os.rename
+
+    def spy(src, dst):
+        renamed.append((src, dst))
+        real_rename(src, dst)
+
+    monkeypatch.setattr(fetch.os, "rename", spy)
+    final = fetch.land_payload("x", str(tmp_path), prefix="tle")
+    [(tmp, dst)] = renamed
+    assert os.path.basename(tmp).startswith(".")
+    assert os.path.dirname(tmp) == str(tmp_path)
+    assert dst == final and not os.path.basename(final).startswith(".")
+
+
 def test_connected_components_long_chain(spark):
     """A 7-node path (diameter 6) plus a disjoint pair: label
     propagation must walk multiple hops, not just one join."""
@@ -410,7 +432,7 @@ def test_tle_datasource_matches_expression_assembly(spark, tmp_path):
     from celestrak_tle_data_pipeline_spark.operators.assembly import (
         assemble_from_payloads,
     )
-    from celestrak_tle_data_pipeline_spark.sources.tle_datasource import (
+    from celestrak_tle_data_pipeline_spark.sources.pysource import (
         register_tle_source,
     )
 

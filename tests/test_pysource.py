@@ -23,10 +23,10 @@ def _payload(norad: int) -> str:
 
 def _register(spark):
     from celestrak_tle_data_pipeline_spark.sources.pysource import (
-        TLEDataSource,
+        register_tle_source,
     )
 
-    spark.dataSource.register(TLEDataSource)
+    register_tle_source(spark)
 
 
 def test_tle_format_matches_catalyst_assembly(spark, tmp_path):
@@ -137,8 +137,13 @@ def test_stream_reader_settle_window_defers_fresh_files(tmp_path):
     import time
 
     from celestrak_tle_data_pipeline_spark.sources.pysource import (
-        TLESimpleStreamReader,
+        TLEPartitionedStreamReader,
     )
+
+    def batch(rdr, start):
+        end = rdr.latestOffset()
+        rows = [r for p in rdr.partitions(start, end) for r in rdr.read(p)]
+        return rows, end
 
     land = tmp_path / "land"
     land.mkdir()
@@ -147,38 +152,37 @@ def test_stream_reader_settle_window_defers_fresh_files(tmp_path):
     past = time.time() - 3600
     os.utime(land / "old.tle", (past, past))  # long settled
 
-    rdr = TLESimpleStreamReader(
+    rdr = TLEPartitionedStreamReader(
         {"path": str(land), "settleSeconds": "30"}
     )
-    rows, end = rdr.read(rdr.initialOffset())
+    rows, end = batch(rdr, rdr.initialOffset())
     assert [r[3] for r in rows] == ["old.tle"]
     assert end == {"files": ["old.tle"]}  # fresh file NOT committed
 
     # once the file settles, the next batch picks it up whole
     os.utime(land / "fresh.tle", (past, past))
-    rows2, end2 = rdr.read(end)
+    rows2, end2 = batch(rdr, end)
     assert [r[3] for r in rows2] == ["fresh.tle"]
     assert end2 == {"files": ["fresh.tle", "old.tle"]}
 
     # settle off (default): everything visible immediately
-    rdr0 = TLESimpleStreamReader({"path": str(land)})
-    rows0, _ = rdr0.read(rdr0.initialOffset())
+    rdr0 = TLEPartitionedStreamReader({"path": str(land)})
+    rows0, _ = batch(rdr0, rdr0.initialOffset())
     assert sorted(r[3] for r in rows0) == ["fresh.tle", "old.tle"]
 
 
 def test_firehose_stream_partition_planned_parity(spark, tmp_path):
-    """The partition-planned firehose reader: same offset algebra as
-    the simple reader, but every landed file is read on EXECUTORS as
-    its own InputPartition. Pins: exactly-once across drains of one
-    checkpoint, restart no-op, stream union == batch read, and
-    file-grain partition planning (partitions(start, end) = one per
-    new file, derived purely from the offsets)."""
+    """The ``tle`` stream's partition-planned reader: every landed
+    file is read on EXECUTORS as its own InputPartition. Pins:
+    exactly-once across drains of one checkpoint, restart no-op,
+    stream union == batch read, and file-grain partition planning
+    (partitions(start, end) = one per new file, derived purely from
+    the offsets)."""
     from celestrak_tle_data_pipeline_spark.sources.pysource import (
-        TLEFirehoseDataSource,
         TLEPartitionedStreamReader,
     )
 
-    spark.dataSource.register(TLEFirehoseDataSource)
+    _register(spark)
     land = tmp_path / "fland"
     land.mkdir()
     ckpt = str(tmp_path / "fck")
@@ -187,7 +191,7 @@ def test_firehose_stream_partition_planned_parity(spark, tmp_path):
 
     def drain():
         src = (
-            spark.readStream.format("tle_firehose")
+            spark.readStream.format("tle")
             .option("path", str(land))
             .load()
         )
@@ -216,7 +220,7 @@ def test_firehose_stream_partition_planned_parity(spark, tmp_path):
     assert len(got) == 4
 
     batch = (
-        spark.read.format("tle_firehose")
+        spark.read.format("tle")
         .option("path", str(land))
         .load()
     )

@@ -1,0 +1,183 @@
+"""One way to do each thing: a static guard over the package.
+
+The landing front end has one ``tle`` data source, one stream reader
+and one ``binaryFile`` landing-stream reader; the plan banks share one
+copy of each private helper. This test reads syntax trees (no Spark,
+so comments and docstrings never count) and fails when:
+
+- two ``DataSource`` subclasses return the same ``name()``;
+- ``format("binaryFile")`` is called more than once under
+  ``streaming/`` (every landing stream goes through
+  ``streaming/incremental.py::landing_payload_stream``);
+- a deleted name comes back, as a module, definition, reference,
+  import or format-name string;
+- two top-level ``_``-prefixed functions in ``plans/*.py``, or one of
+  them and a ``plans/common.py`` function, have identical bodies,
+  docstrings ignored (shared helpers live in ``plans/common.py``).
+"""
+
+from __future__ import annotations
+
+import ast
+from collections import defaultdict
+from pathlib import Path
+
+PKG = Path(__file__).resolve().parents[1] / (
+    "celestrak_tle_data_pipeline_spark"
+)
+DELETED = {
+    "tle_datasource",
+    "iter_triples",
+    "TLESimpleStreamReader",
+    "TLEFirehoseDataSource",
+    "tle_firehose",
+    "assemble_from_lines",
+    "_phi_col_r19",
+    "_phi_sql_r19",
+}
+
+
+def _trees(paths):
+    return [(p, ast.parse(p.read_text())) for p in paths]
+
+
+def _source_name_clashes(paths) -> list[str]:
+    owners = defaultdict(list)
+    for path, tree in _trees(paths):
+        for cls in ast.walk(tree):
+            if not isinstance(cls, ast.ClassDef):
+                continue
+            bases = {
+                getattr(b, "attr", None) or getattr(b, "id", None)
+                for b in cls.bases
+            }
+            if "DataSource" not in bases:
+                continue
+            for fn in cls.body:
+                if isinstance(fn, ast.FunctionDef) and fn.name == "name":
+                    for ret in ast.walk(fn):
+                        if isinstance(ret, ast.Return) and isinstance(
+                            ret.value, ast.Constant
+                        ):
+                            owners[ret.value.value].append(
+                                f"{path.name}::{cls.name}"
+                            )
+    return [
+        f"{n!r}: {', '.join(o)}" for n, o in owners.items() if len(o) > 1
+    ]
+
+
+def _binary_file_reads(paths) -> list[str]:
+    out = []
+    for path, tree in _trees(paths):
+        for node in ast.walk(tree):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "format"
+                and node.args
+                and isinstance(node.args[0], ast.Constant)
+                and node.args[0].value == "binaryFile"
+            ):
+                out.append(f"{path.name}:{node.lineno}")
+    return out
+
+
+def _deleted_names(paths) -> list[str]:
+    out = [f"{p.name} exists" for p in paths if p.stem in DELETED]
+    for path, tree in _trees(paths):
+        for node in ast.walk(tree):
+            names = []
+            if isinstance(node, ast.Name):
+                names.append(node.id)
+            elif isinstance(node, ast.Attribute):
+                names.append(node.attr)
+            elif isinstance(node, (ast.FunctionDef, ast.ClassDef)):
+                names.append(node.name)
+            elif isinstance(node, (ast.Import, ast.ImportFrom)):
+                names += [a.name for a in node.names]
+                names += (getattr(node, "module", None) or "").split(".")
+            elif isinstance(node, ast.Constant):
+                names.append(node.value)
+            for n in names:
+                if n in DELETED:
+                    out.append(f"{path.name}:{node.lineno} {n}")
+    return out
+
+
+def _duplicate_helpers(paths) -> list[str]:
+    bodies = defaultdict(list)
+    for path, tree in _trees(paths):
+        for fn in tree.body:
+            if not isinstance(fn, ast.FunctionDef) or not (
+                fn.name.startswith("_") or path.name == "common.py"
+            ):
+                continue
+            body = fn.body
+            if ast.get_docstring(fn) is not None:
+                body = body[1:]
+            key = "".join(ast.dump(stmt) for stmt in body)
+            bodies[key].append(f"{path.name}::{fn.name}")
+    return [" = ".join(v) for v in bodies.values() if len(v) > 1]
+
+
+def test_one_tle_landing_front_end():
+    pkg = sorted(PKG.rglob("*.py"))
+    assert not _source_name_clashes(pkg), _source_name_clashes(pkg)
+    reads = _binary_file_reads(sorted((PKG / "streaming").glob("*.py")))
+    assert len(reads) <= 1, (
+        "landing streams go through landing_payload_stream: "
+        + "; ".join(reads)
+    )
+    assert not _deleted_names(pkg), _deleted_names(pkg)
+
+
+def test_plans_have_one_copy_of_each_helper():
+    dups = _duplicate_helpers(sorted((PKG / "plans").glob("*.py")))
+    assert not dups, "shared helpers live in plans/common.py: " + "; ".join(
+        dups
+    )
+
+
+def test_guard_sees_code_and_ignores_text(tmp_path):
+    a = tmp_path / "a.py"
+    a.write_text(
+        '"""iter_triples and format("binaryFile") in prose."""\n'
+        "# TLEFirehoseDataSource in a comment\n"
+        "class A(DataSource):\n"
+        "    def name(self):\n"
+        "        return 'tle'\n"
+        "def _h(x):\n"
+        '    """one docstring"""\n'
+        "    return x + 1\n"
+        "def r(spark):\n"
+        "    return spark.readStream.format('binaryFile')\n"
+    )
+    b = tmp_path / "b.py"
+    b.write_text(
+        "from .pysource import iter_triples\n"
+        "class B(ds.DataSource):\n"
+        "    @classmethod\n"
+        "    def name(cls):\n"
+        "        return 'tle'\n"
+        "def _g(y):\n"
+        '    """another docstring"""\n'
+        "    return x + 1\n"
+        "def s(spark):\n"
+        "    return spark.read.format('tle_firehose')\n"
+    )
+    assert _source_name_clashes([a]) == []
+    assert _source_name_clashes([a, b]) == ["'tle': a.py::A, b.py::B"]
+    assert _binary_file_reads([a, b]) == ["a.py:10"]
+    assert _deleted_names([a]) == []
+    assert _deleted_names([a, b]) == [
+        "b.py:1 iter_triples",
+        "b.py:10 tle_firehose",
+    ]
+    gone = tmp_path / "tle_datasource.py"
+    gone.write_text("")
+    assert _deleted_names([gone]) == ["tle_datasource.py exists"]
+    assert _duplicate_helpers([a, b]) == ["a.py::_h = b.py::_g"]
+    common = tmp_path / "common.py"
+    common.write_text("def h(z):\n    return x + 1\n")
+    assert _duplicate_helpers([a, common]) == ["a.py::_h = common.py::h"]

@@ -558,6 +558,27 @@ def test_scheduled_cycle_is_idempotent(spark, tmp_path):
     assert wh.read("dim_satellites").count() == 2
 
 
+def test_scheduled_cycle_ignores_dot_named_landing_debris(spark, tmp_path):
+    """A dot-named ``.tmp`` left in ``landing/tle`` (a write still in
+    flight, or a crash before the rename) is never ingested: the
+    warehouse holds exactly the whole landed payloads."""
+    from celestrak_tle_data_pipeline_spark.orchestration import (
+        run_scheduled_cycle,
+    )
+
+    root = tmp_path / "droot"
+    tle_land = root / "landing" / "tle"
+    tle_land.mkdir(parents=True)
+    (tle_land / "t1.txt").write_text(_payload(61001, NOW))
+    (tle_land / ".tmpdef456.tmp").write_text(_payload(61002, NOW))
+    run_scheduled_cycle(spark, str(root))
+
+    wh = ParquetWarehouse(spark, str(root / "warehouse"))
+    for table in ("fact_telemetry", "dim_satellites"):
+        rows = wh.read(table).select("norad_id").collect()
+        assert [r.norad_id for r in rows] == [61001], table
+
+
 def test_stream_static_join_labels_telemetry(spark, tmp_path):
     """Stream-static join: telemetry enriched against a static dim per
     micro-batch — matched rows labeled, unmatched survive with NULLs,

@@ -14,7 +14,6 @@ from celestrak_tle_data_pipeline_spark.functions.tle import (
     valid_record,
 )
 from celestrak_tle_data_pipeline_spark.operators.assembly import (
-    assemble_from_lines,
     assemble_from_payloads,
 )
 
@@ -102,13 +101,3 @@ def test_trailing_incomplete_triple_dropped(spark):
     partial = GOLDEN + "TRAILING-NAME\n1 11111U 24001A   26123.00000000  .00000000  00000+0  00000+0 0  9999\n"
     payloads = spark.createDataFrame([(partial,)], "payload string")
     assert assemble_from_payloads(payloads).count() == 3
-
-
-def test_assemble_from_lines_matches(spark):
-    lines = spark.createDataFrame(
-        [(ln,) for ln in GOLDEN.strip().splitlines()], "value string"
-    )
-    a = assemble_from_lines(lines).collect()
-    payloads = spark.createDataFrame([(GOLDEN,)], "payload string")
-    b = assemble_from_payloads(payloads).collect()
-    assert sorted(map(tuple, a)) == sorted(map(tuple, b))
