@@ -34,7 +34,7 @@ from pyspark.sql import functions as F
 
 from . import register as _live_register
 from .bank_r11 import _POOL_SQL
-from .common import dec, exact_cumulative, t
+from .common import DECILE_LEVELS, dec, exact_cumulative, t
 
 BANK_QUERIES: dict = {}
 BANK_ORACLES: dict = {}
@@ -2816,9 +2816,6 @@ def shapley_channel_attribution(spark, sf_dir):
 # --------------------------------------------------------------------------
 # Qini uplift curve at score deciles (deterministic pseudo-experiment)
 # --------------------------------------------------------------------------
-_QINI_QS = [i / 10.0 for i in range(1, 10)]
-
-
 @register(
     "qini_uplift_deciles",
     oracle="""
@@ -2858,11 +2855,11 @@ _QINI_QS = [i / 10.0 for i in range(1, 10)]
     """.format(
         qcols=", ".join(
             f"quantile_cont(score, {q}) AS b{i}"
-            for i, q in enumerate(_QINI_QS)
+            for i, q in enumerate(DECILE_LEVELS)
         ),
         gtsum=" + ".join(
             f"CASE WHEN score > b{i} THEN 1 ELSE 0 END"
-            for i in range(len(_QINI_QS))
+            for i in range(len(DECILE_LEVELS))
         ),
     ),
 )
@@ -2896,14 +2893,14 @@ def qini_uplift_deciles(spark, sf_dir):
     b = u.agg(
         *[
             F.expr(f"percentile(score, {q})").alias(f"b{i}")
-            for i, q in enumerate(_QINI_QS)
+            for i, q in enumerate(DECILE_LEVELS)
         ]
     )
     decile = 11 - (
         1
         + sum(
             F.when(F.col("score") > F.col(f"b{i}"), 1).otherwise(0)
-            for i in range(len(_QINI_QS))
+            for i in range(len(DECILE_LEVELS))
         )
     )
     assigned = u.crossJoin(F.broadcast(b)).select(

@@ -25,7 +25,13 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from . import register as _live_register
-from .common import DAILY_ORDER_CENTS_SQL, daily_order_cents, dec, t
+from .common import (
+    DAILY_ORDER_CENTS_SQL,
+    DECILE_LEVELS,
+    daily_order_cents,
+    dec,
+    t,
+)
 
 BANK_QUERIES: dict = {}
 BANK_ORACLES: dict = {}
@@ -4468,9 +4474,6 @@ def hawkes_branching_moment(spark, sf_dir):
 # --------------------------------------------------------------------------
 # Doksum shift function at deciles (click -> purchase)
 # --------------------------------------------------------------------------
-_SHIFT_PS = [i / 10.0 for i in range(1, 10)]
-
-
 @register(
     "doksum_shift_function",
     oracle="""
@@ -4519,7 +4522,7 @@ def doksum_shift_function(spark, sf_dir):
             F.round(F.expr(f"percentile(value, {q})"), 4).alias(
                 f"c{i}"
             )
-            for i, q in enumerate(_SHIFT_PS, 1)
+            for i, q in enumerate(DECILE_LEVELS, 1)
         ]
     )
     qp = p.agg(
@@ -4527,7 +4530,7 @@ def doksum_shift_function(spark, sf_dir):
             F.round(F.expr(f"percentile(value, {q})"), 4).alias(
                 f"p{i}"
             )
-            for i, q in enumerate(_SHIFT_PS, 1)
+            for i, q in enumerate(DECILE_LEVELS, 1)
         ]
     )
     both = qc.crossJoin(F.broadcast(qp))

@@ -34,8 +34,11 @@ from pyspark.sql import functions as F
 
 from . import register as _live_register
 from .common import (
+    COS24,
     DAILY_ORDER_CENTS_SQL,
     NATION_EFFECTS_SQL,
+    POIS_CDF,
+    SIN24,
     case_sql,
     daily_order_cents,
     dec,
@@ -69,17 +72,12 @@ def register(name: str, oracle: str | None = None):
 # --------------------------------------------------------------------------
 # Deterministic Poisson(1) weights: u = hash(key, k)/2^32 in [0,1) maps
 # through the Poisson(1) inverse CDF via literal cumulative thresholds
-# (P(X<=k) for k = 0..6; the 1e-5 tail mass above 6 truncates — both
-# engines share the identical literal table, so no RNG and no libm).
-_POIS_CDF = [
-    0.3678794412, 0.7357588824, 0.9196986030,
-    0.9810118431, 0.9963401532, 0.9994058152, 0.9999167589,
-]
-
-
+# (``common.POIS_CDF``, P(X<=k) for k = 0..6; the 1e-5 tail mass above 6
+# truncates — both engines share the identical literal table, so no RNG
+# and no libm).
 def _pois_case(u: str) -> str:
     whens = " ".join(
-        f"WHEN {u} < {c} THEN {k}" for k, c in enumerate(_POIS_CDF)
+        f"WHEN {u} < {c} THEN {k}" for k, c in enumerate(POIS_CDF)
     )
     return f"CASE {whens} ELSE 7 END"
 
@@ -6037,24 +6035,9 @@ def allan_variance_rates(spark, sf_dir):
 
 # --------------------------------------------------------------------------
 # Rayleigh test of hour-of-day uniformity for purchases (literal 24-angle
-# trig table — the _COS7/_SIN7 device at circadian resolution)
+# trig table ``common.COS24``/``SIN24`` — the _COS7/_SIN7 device at
+# circadian resolution)
 # --------------------------------------------------------------------------
-_COS24 = [
-    1.0, 0.9659258263, 0.8660254038, 0.7071067812, 0.5,
-    0.2588190451, 0.0, -0.2588190451, -0.5, -0.7071067812,
-    -0.8660254038, -0.9659258263, -1.0, -0.9659258263,
-    -0.8660254038, -0.7071067812, -0.5, -0.2588190451, 0.0,
-    0.2588190451, 0.5, 0.7071067812, 0.8660254038, 0.9659258263,
-]
-_SIN24 = [
-    0.0, 0.2588190451, 0.5, 0.7071067812, 0.8660254038,
-    0.9659258263, 1.0, 0.9659258263, 0.8660254038, 0.7071067812,
-    0.5, 0.2588190451, 0.0, -0.2588190451, -0.5, -0.7071067812,
-    -0.8660254038, -0.9659258263, -1.0, -0.9659258263,
-    -0.8660254038, -0.7071067812, -0.5, -0.2588190451,
-]
-
-
 @register(
     "rayleigh_circular_hours",
     oracle=f"""
@@ -6066,9 +6049,9 @@ _SIN24 = [
     ),
     s AS (
         SELECT CAST(SUM(c) AS BIGINT) AS n,
-               CAST(SUM(CAST(round(c * {case_sql("hr", _COS24)}, 8)
+               CAST(SUM(CAST(round(c * {case_sql("hr", COS24)}, 8)
                              AS DECIMAL(38,8))) AS DOUBLE) AS cs,
-               CAST(SUM(CAST(round(c * {case_sql("hr", _SIN24)}, 8)
+               CAST(SUM(CAST(round(c * {case_sql("hr", SIN24)}, 8)
                              AS DECIMAL(38,8))) AS DOUBLE) AS ss
         FROM h
     )
@@ -6104,8 +6087,8 @@ def rayleigh_circular_hours(spark, sf_dir):
     ck = F.lit(None).cast("double")
     sk = F.lit(None).cast("double")
     for k in range(23, -1, -1):
-        ck = F.when(F.col("hr") == k, F.lit(_COS24[k])).otherwise(ck)
-        sk = F.when(F.col("hr") == k, F.lit(_SIN24[k])).otherwise(sk)
+        ck = F.when(F.col("hr") == k, F.lit(COS24[k])).otherwise(ck)
+        sk = F.when(F.col("hr") == k, F.lit(SIN24[k])).otherwise(sk)
     s = h.agg(
         F.sum("c").cast("bigint").alias("n"),
         F.sum(F.round(F.col("c") * ck, 8).cast("decimal(38,8)"))

@@ -46,8 +46,10 @@ from pyspark.sql import functions as F
 
 from . import register as _live_register
 from .common import (
+    COS24,
     DAILY_EVENT_CORR3_SQL,
     NATION_EFFECTS_SQL,
+    SIN24,
     case_sql,
     daily_event_corr3,
     dec,
@@ -618,23 +620,6 @@ PLAN_AUDIT_NOTES: dict[str, str] = {
 # --------------------------------------------------------------------------
 # Lomb-Scargle periodogram on the irregularly-sampled error-rate series
 # --------------------------------------------------------------------------
-_COS24 = [
-    1.0, 0.9659258263, 0.8660254038, 0.7071067812, 0.5,
-    0.2588190451, 0.0, -0.2588190451, -0.5, -0.7071067812,
-    -0.8660254038, -0.9659258263, -1.0, -0.9659258263,
-    -0.8660254038, -0.7071067812, -0.5, -0.2588190451, 0.0,
-    0.2588190451, 0.5, 0.7071067812, 0.8660254038, 0.9659258263,
-]
-_SIN24 = [
-    0.0, 0.2588190451, 0.5, 0.7071067812, 0.8660254038,
-    0.9659258263, 1.0, 0.9659258263,
-    0.8660254038, 0.7071067812, 0.5, 0.2588190451, 0.0,
-    -0.2588190451, -0.5, -0.7071067812, -0.8660254038,
-    -0.9659258263, -1.0, -0.9659258263, -0.8660254038,
-    -0.7071067812, -0.5, -0.2588190451,
-]
-
-
 def _lut24(col, table):
     out = F.lit(None).cast("double")
     for k in range(24):
@@ -645,8 +630,8 @@ def _lut24(col, table):
 def _ls_power_sql(i1: str, i2: str):
     """SQL fragments for one Lomb-Scargle frequency: the five folded
     sums over angle indexes i1 (wt mod 2pi, in 24ths) and i2 (2wt)."""
-    c1, s1 = case_sql(i1, _COS24), case_sql(i1, _SIN24)
-    c2, s2 = case_sql(i2, _COS24), case_sql(i2, _SIN24)
+    c1, s1 = case_sql(i1, COS24), case_sql(i1, SIN24)
+    c2, s2 = case_sql(i2, COS24), case_sql(i2, SIN24)
     return {
         "yc": f"CAST(SUM(CAST(round(ydev * {c1}, 8) AS DECIMAL(38,8))) AS DOUBLE)",
         "ys": f"CAST(SUM(CAST(round(ydev * {s1}, 8) AS DECIMAL(38,8))) AS DOUBLE)",
@@ -793,8 +778,8 @@ def lomb_scargle_uneven(spark, sf_dir):
         return F.sum(r8(expr)).cast("double")
 
     def sums_for(i1, i2, tag):
-        c1, s1 = _lut24(F.col(i1), _COS24), _lut24(F.col(i1), _SIN24)
-        c2, s2 = _lut24(F.col(i2), _COS24), _lut24(F.col(i2), _SIN24)
+        c1, s1 = _lut24(F.col(i1), COS24), _lut24(F.col(i1), SIN24)
+        c2, s2 = _lut24(F.col(i2), COS24), _lut24(F.col(i2), SIN24)
         return [
             fold(F.col("ydev") * c1).alias(f"yc{tag}"),
             fold(F.col("ydev") * s1).alias(f"ys{tag}"),
@@ -6616,10 +6601,10 @@ PLAN_AUDIT_NOTES.update(
     fold AS (
         SELECT CAST(SUM(c) AS BIGINT) AS n,
                CAST(SUM(CAST(c AS DECIMAL(28,10))
-                        * ({case_sql('hr', _COS24)}))
+                        * ({case_sql('hr', COS24)}))
                     AS DOUBLE) AS cs,
                CAST(SUM(CAST(c AS DECIMAL(28,10))
-                        * ({case_sql('hr', _SIN24)}))
+                        * ({case_sql('hr', SIN24)}))
                     AS DOUBLE) AS sn
         FROM g
     ),
@@ -6679,12 +6664,12 @@ def von_mises_concentration(spark, sf_dir):
     fold = g.agg(
         F.sum("c").cast("bigint").alias("n"),
         F.sum(
-            F.col("c").cast("decimal(28,10)") * _lut24(F.col("hr"), _COS24)
+            F.col("c").cast("decimal(28,10)") * _lut24(F.col("hr"), COS24)
         )
         .cast("double")
         .alias("cs"),
         F.sum(
-            F.col("c").cast("decimal(28,10)") * _lut24(F.col("hr"), _SIN24)
+            F.col("c").cast("decimal(28,10)") * _lut24(F.col("hr"), SIN24)
         )
         .cast("double")
         .alias("sn"),

@@ -62,7 +62,9 @@ from pyspark.sql import functions as F
 
 from . import register as _live_register
 from .common import (
+    COS24,
     DAILY_EVENT_CORR3_SQL,
+    SIN24,
     case_sql,
     daily_event_corr3,
     dec,
@@ -2055,8 +2057,6 @@ def association_rules_panel(spark, sf_dir):
 # Van der Waerden k-sample normal-scores test across priorities
 # --------------------------------------------------------------------------
 from .bank_r15 import (  # noqa: E402
-    _COS24,
-    _SIN24,
     _acklam_col,
     _acklam_sql,
     _lut24,
@@ -5398,8 +5398,8 @@ PLAN_AUDIT_NOTES.update(
         FROM events WHERE event_type = 'purchase'
     ),
     terms AS (
-        SELECT v, ({case_sql('hr', _COS24)}) AS cc,
-               ({case_sql('hr', _SIN24)}) AS ss
+        SELECT v, ({case_sql('hr', COS24)}) AS cc,
+               ({case_sql('hr', SIN24)}) AS ss
         FROM pts
     ),
     mom AS (
@@ -5479,8 +5479,8 @@ def circular_linear_correlation(spark, sf_dir):
     )
     terms = pts.select(
         "v",
-        _lut24(F.col("hr"), _COS24).alias("cc"),
-        _lut24(F.col("hr"), _SIN24).alias("ss"),
+        _lut24(F.col("hr"), COS24).alias("cc"),
+        _lut24(F.col("hr"), SIN24).alias("ss"),
     )
 
     def tfold(expr, scale, name, prec="28,10"):

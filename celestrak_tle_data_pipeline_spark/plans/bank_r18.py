@@ -57,6 +57,7 @@ from pyspark.sql import functions as F
 from . import register as _live_register
 from .common import (
     DAILY_ORDER_CENTS_SQL,
+    POIS_CDF,
     daily_order_cents,
     dec,
     exact_cumulative,
@@ -6846,15 +6847,10 @@ def gpd_shape_stability(spark, sf_dir):
 
 
 
-# Poisson(1) inverse-CDF literal table (the poisson_bootstrap_se device:
-# both engines share these literals, so no RNG and no libm).
-_POIS_CDF_R18 = [
-    0.3678794412, 0.7357588824, 0.9196986030,
-    0.9810118431, 0.9963401532, 0.9994058152, 0.9999167589,
-]
-
+# Poisson(1) inverse CDF over ``common.POIS_CDF`` (the poisson_bootstrap_se
+# device: both engines share these literals, so no RNG and no libm).
 _pois_whens = " ".join(
-    f"WHEN __u < {c} THEN {k}" for k, c in enumerate(_POIS_CDF_R18)
+    f"WHEN __u < {c} THEN {k}" for k, c in enumerate(POIS_CDF)
 )
 _pois_case_sql = (
     "CASE " + _pois_whens + " ELSE 7 END"
@@ -6974,8 +6970,8 @@ def block_bootstrap_se(spark, sf_dir):
         (F.col("blk") * 2654435761 + F.col("rep") * 40503)
         % 4294967296
     ) / 4294967296.0
-    w = F.when(u < _POIS_CDF_R18[0], 0)
-    for kk, cdf in enumerate(_POIS_CDF_R18[1:], start=1):
+    w = F.when(u < POIS_CDF[0], 0)
+    for kk, cdf in enumerate(POIS_CDF[1:], start=1):
         w = w.when(u < cdf, kk)
     w = w.otherwise(7)
     reps = bsum.crossJoin(F.broadcast(reps_k)).select(

@@ -414,6 +414,32 @@ def daily_event_corr3(spark, sf_dir):
     )
 
 
+# Literal lookup tables shared by the banks: cos/sin of the 24 hour-of-day
+# angles 2*pi*k/24 (for ``case_sql`` and the banks' Column lookups), the
+# Poisson(1) inverse CDF P(X <= k), k = 0..6 (the poisson_bootstrap_se
+# device: both engines share these literals, so no RNG and no libm), and
+# the nine decile levels 0.1..0.9.
+COS24 = [
+    1.0, 0.9659258263, 0.8660254038, 0.7071067812, 0.5,
+    0.2588190451, 0.0, -0.2588190451, -0.5, -0.7071067812,
+    -0.8660254038, -0.9659258263, -1.0, -0.9659258263,
+    -0.8660254038, -0.7071067812, -0.5, -0.2588190451, 0.0,
+    0.2588190451, 0.5, 0.7071067812, 0.8660254038, 0.9659258263,
+]
+SIN24 = [
+    0.0, 0.2588190451, 0.5, 0.7071067812, 0.8660254038,
+    0.9659258263, 1.0, 0.9659258263, 0.8660254038, 0.7071067812,
+    0.5, 0.2588190451, 0.0, -0.2588190451, -0.5, -0.7071067812,
+    -0.8660254038, -0.9659258263, -1.0, -0.9659258263,
+    -0.8660254038, -0.7071067812, -0.5, -0.2588190451,
+]
+POIS_CDF = [
+    0.3678794412, 0.7357588824, 0.9196986030,
+    0.9810118431, 0.9963401532, 0.9994058152, 0.9999167589,
+]
+DECILE_LEVELS = [i / 10.0 for i in range(1, 10)]
+
+
 def case_sql(col: str, table: list) -> str:
     """SQL ``CASE`` mapping ``col`` = k to ``table[k]`` (a literal
     lookup table, e.g. a trig or factorial series)."""

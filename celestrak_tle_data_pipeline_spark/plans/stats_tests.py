@@ -16,7 +16,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from . import register
-from .common import dec, exact_cumulative, t
+from .common import DECILE_LEVELS, dec, exact_cumulative, t
 
 
 # --------------------------------------------------------------------------
@@ -1607,9 +1607,6 @@ def cem_matched_att(spark, sf_dir):
 # --------------------------------------------------------------------------
 # gains chart: cumulative capture and lift by score decile
 # --------------------------------------------------------------------------
-_GAINS_QS = [i / 10.0 for i in range(1, 10)]
-
-
 @register(
     "gains_chart_deciles",
     oracle="""
@@ -1642,11 +1639,11 @@ _GAINS_QS = [i / 10.0 for i in range(1, 10)]
     """.format(
         qcols=", ".join(
             f"quantile_cont(n_chars, {q}) AS b{i}"
-            for i, q in enumerate(_GAINS_QS)
+            for i, q in enumerate(DECILE_LEVELS)
         ),
         gtsum=" + ".join(
             f"CASE WHEN n_chars > b{i} THEN 1 ELSE 0 END"
-            for i in range(len(_GAINS_QS))
+            for i in range(len(DECILE_LEVELS))
         ),
     ),
 )
@@ -1669,14 +1666,14 @@ def gains_chart_deciles(spark, sf_dir):
     b = d.agg(
         *[
             F.expr(f"percentile(n_chars, {q})").alias(f"b{i}")
-            for i, q in enumerate(_GAINS_QS)
+            for i, q in enumerate(DECILE_LEVELS)
         ]
     )
     decile = 11 - (
         1
         + sum(
             (F.col("n_chars") > F.col(f"b{i}")).cast("int")
-            for i in range(len(_GAINS_QS))
+            for i in range(len(DECILE_LEVELS))
         )
     )
     assigned = d.crossJoin(F.broadcast(b)).select(

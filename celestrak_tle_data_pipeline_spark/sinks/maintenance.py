@@ -191,8 +191,9 @@ def compact_partitions(
     # defers deletion; a committer change could delete the partition
     # mid-read, and the digest verify would detect but not restore).
     # The staged copy is complete ON DISK before any live directory
-    # moves, so a crash at any point leaves every partition readable
-    # (stale stage debris is vacuum_maintenance_debris's job).
+    # moves. A crash between a partition's two renames leaves it only
+    # under ``.compact_old_<col>=<value>``; vacuum_maintenance_debris
+    # renames it back, then removes the stale stage.
     stage = base + ".__compact_stage"
     shutil.rmtree(stage, ignore_errors=True)
     (
@@ -212,7 +213,9 @@ def compact_partitions(
         if not d.startswith(f"{partition_col}="):
             continue
         pdir = os.path.join(base, d)
-        old = os.path.join(base, ".compact_old_" + d.split("=", 1)[1])
+        # the old copy keeps ``col=value``, so vacuum_maintenance_debris
+        # can rename it back if a crash falls between the two renames
+        old = os.path.join(base, ".compact_old_" + d)
         shutil.rmtree(old, ignore_errors=True)
         os.rename(pdir, old)
         os.rename(os.path.join(stage, d), pdir)
@@ -362,30 +365,58 @@ def recluster_zorder(
 
 
 def vacuum_maintenance_debris(wh: ParquetWarehouse) -> list[str]:
-    """Remove leftovers of CRASHED maintenance jobs — the plain-parquet
-    analog of Delta VACUUM's narrow, safe core. Every maintenance
-    rewrite in this engine stages into a sibling directory first
-    (``.compact_tmp_<value>`` inside the table dir,
-    ``<table>.__compact_stage`` / ``<table>.__recluster_tmp`` /
-    ``.__recluster_old`` beside it), so a
-    crash can strand a stale copy that costs storage and — for the
-    dot-free recluster dirs — could be mistaken for a table by path
-    listings. Live readers never reference these names (dot-prefixed
-    dirs are never listed by the scan; the swap renames are atomic), so
-    deleting them is always safe. Returns the removed paths.
+    """Repair and remove the leftovers of CRASHED maintenance jobs —
+    the plain-parquet analog of Delta VACUUM's narrow, safe core. Every
+    maintenance rewrite in this engine stages into a sibling directory
+    and then swaps it in with two renames: live → old, staged → live.
 
-    Scale shape: one directory listing per table — maintenance debris
-    is table-count-sized, never data-sized."""
+    - An old copy whose live directory is missing is the only copy
+      left (the crash fell between the two renames), so it is renamed
+      back: ``<table>.__recluster_old`` → ``<table>``, and
+      ``<table>/.compact_old_<col>=<value>`` → ``<table>/<col>=<value>``.
+    - Only then is the rest removed: old copies whose live directory
+      exists, and staged copies (``<table>.__recluster_tmp``,
+      ``<table>.__compact_stage``, ``<table>/.compact_tmp_<value>``).
+      Live readers never reference these names (dot-prefixed dirs are
+      never listed by the scan; the dot-free recluster dirs could be
+      mistaken for a table by path listings). An old copy named by the
+      partition value alone, without its column, is left in place: the
+      live directory it came from cannot be derived from that name.
+
+    Returns the removed paths. Scale shape: one directory listing per
+    table — maintenance debris is table-count-sized, never data-sized."""
     import os
     import shutil
 
-    removed: list[str] = []
     root = wh.root
-    for entry in sorted(os.listdir(root)):
-        full = os.path.join(root, entry)
-        if not os.path.isdir(full):
-            continue
-        if entry.endswith((
+
+    def subdirs(path):
+        return [
+            os.path.join(path, e)
+            for e in sorted(os.listdir(path))
+            if os.path.isdir(os.path.join(path, e))
+        ]
+
+    for full in subdirs(root):
+        if full.endswith(".__recluster_old"):
+            live = full[: -len(".__recluster_old")]
+            if not os.path.exists(live):
+                os.rename(full, live)
+    prefix = ".compact_old_"
+    old_parts = {
+        sub: os.path.join(table, os.path.basename(sub)[len(prefix):])
+        for table in subdirs(root)
+        for sub in subdirs(table)
+        if os.path.basename(sub).startswith(prefix)
+        and "=" in os.path.basename(sub)
+    }
+    for old, live in old_parts.items():
+        if not os.path.exists(live):
+            os.rename(old, live)
+
+    removed: list[str] = []
+    for full in subdirs(root):
+        if full.endswith((
             ".__recluster_tmp",
             ".__recluster_old",
             ".__compact_stage",
@@ -393,9 +424,10 @@ def vacuum_maintenance_debris(wh: ParquetWarehouse) -> list[str]:
             shutil.rmtree(full)
             removed.append(full)
             continue
-        for sub in sorted(os.listdir(full)):
-            if sub.startswith(".compact_tmp_"):
-                p = os.path.join(full, sub)
-                shutil.rmtree(p)
-                removed.append(p)
+        for sub in subdirs(full):
+            if sub in old_parts or os.path.basename(sub).startswith(
+                ".compact_tmp_"
+            ):
+                shutil.rmtree(sub)
+                removed.append(sub)
     return removed

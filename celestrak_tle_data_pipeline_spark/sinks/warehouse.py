@@ -223,8 +223,10 @@ class ParquetWarehouse:
         self-overwrite guard and the committer defers deletion — a
         Spark upgrade or a non-local committer could delete the
         partition mid-read. The rename swap keeps the old data on disk
-        until the replacement is complete, so a crash at any point
-        leaves a readable partition (idempotent, re-runnable).
+        until the replacement is complete (idempotent, re-runnable). A
+        crash between the two renames leaves the partition only under
+        ``.compact_old_<col>=<value>``, whose name keeps the column so
+        ``maintenance.vacuum_maintenance_debris`` can rename it back.
         Partition file sizes come from driver-side directory metadata
         (bounded: one stat call per file, no data read). Returns
         {partition_value: files_written}.
@@ -266,7 +268,7 @@ class ParquetWarehouse:
             if cluster_by:
                 rewritten = rewritten.sortWithinPartitions(*cluster_by)
             tmp = os.path.join(base, f".compact_tmp_{value}")
-            old = os.path.join(base, f".compact_old_{value}")
+            old = os.path.join(base, f".compact_old_{d}")
             shutil.rmtree(tmp, ignore_errors=True)  # stale crash debris
             shutil.rmtree(old, ignore_errors=True)
             rewritten.write.mode("overwrite").parquet(tmp)

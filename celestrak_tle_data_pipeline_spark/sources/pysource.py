@@ -55,16 +55,20 @@ def split_triples(payload: str) -> list[tuple[str, str, str]]:
 
 
 def _listing(root: str, settle_s: float) -> list[str]:
-    """Sorted basenames of the landed files under ``root``. Dot-named
-    files (in-flight landing temps) never match ``*``. With
-    ``settle_s > 0`` a file whose mtime is inside the settle window
-    may still be growing, so it is left out until a later listing
-    observes it quiescent."""
+    """Sorted basenames of the landed files under ``root``, hiding what
+    Spark's file sources hide (``binaryFile``, so ``read_payloads`` and
+    the landing streams): names starting with ``.`` (in-flight landing
+    temps, which never match ``*``) or ``_``, and names ending in
+    ``._COPYING_``. With ``settle_s > 0`` a file whose mtime is inside
+    the settle window may still be growing, so it is left out until a
+    later listing observes it quiescent."""
     cutoff = time.time() - settle_s
     return sorted(
         os.path.basename(p)
         for p in glob.glob(os.path.join(root, "*"))
-        if os.path.isfile(p)
+        if not os.path.basename(p).startswith("_")
+        and not p.endswith("._COPYING_")
+        and os.path.isfile(p)
         and (settle_s <= 0 or os.path.getmtime(p) <= cutoff)
     )
 

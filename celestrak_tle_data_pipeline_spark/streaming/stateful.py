@@ -43,22 +43,27 @@ STATE_SCHEMA = T.StructType(
 )
 
 
-def _track(
-    key: tuple,
+def fold_epochs(
+    norad_id: int,
     pdfs: Iterator[pd.DataFrame],
-    state: GroupState,
-) -> Iterator[pd.DataFrame]:
-    (norad_id,) = key
-    if state.exists:
-        last_epoch, last_mm, n_seen = state.get
-    else:
-        last_epoch, last_mm, n_seen = -1, None, 0
+    state: tuple | None,
+) -> tuple[pd.DataFrame, tuple]:
+    """Fold one key's micro-batch rows into its (last_epoch_us,
+    last_mm, n_seen) state: one delta row per epoch newer than the
+    state, in epoch order. Returns the rows and the new state.
 
+    The whole iterator is buffered before the sort: a key's batch rows
+    arrive as several Arrow chunks (``maxRecordsPerBatch`` slices, or
+    interleaved map-task outputs) with no order across chunks, so
+    sorting each chunk alone would skip any epoch that a later chunk
+    holds below the last one folded."""
+    last_epoch, last_mm, n_seen = state if state is not None else (-1, None, 0)
     out: dict[str, list] = {c: [] for c in (
         "norad_id", "epoch_us", "mean_motion", "mm_delta", "n_seen"
     )}
-    for pdf in pdfs:
-        pdf = pdf.sort_values("epoch_us")
+    chunks = [pdf for pdf in pdfs if len(pdf)]
+    if chunks:
+        pdf = pd.concat(chunks, ignore_index=True).sort_values("epoch_us")
         for epoch_us, mm in zip(pdf["epoch_us"], pdf["mean_motion"]):
             epoch_us = int(epoch_us)
             mm = float(mm)
@@ -73,9 +78,20 @@ def _track(
             )
             out["n_seen"].append(n_seen)
             last_epoch, last_mm = epoch_us, mm
+    return pd.DataFrame(out), (last_epoch, last_mm, n_seen)
 
-    state.update((last_epoch, last_mm, n_seen))
-    yield pd.DataFrame(out)
+
+def _track(
+    key: tuple,
+    pdfs: Iterator[pd.DataFrame],
+    state: GroupState,
+) -> Iterator[pd.DataFrame]:
+    (norad_id,) = key
+    rows, folded = fold_epochs(
+        norad_id, pdfs, state.get if state.exists else None
+    )
+    state.update(folded)
+    yield rows
 
 
 def decay_tracker(parsed: DataFrame) -> DataFrame:

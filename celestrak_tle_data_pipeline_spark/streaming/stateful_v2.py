@@ -30,7 +30,7 @@ from pyspark.sql.streaming.stateful_processor import (
     StatefulProcessorHandle,
 )
 
-from .stateful import OUTPUT_SCHEMA, STATE_SCHEMA
+from .stateful import OUTPUT_SCHEMA, STATE_SCHEMA, fold_epochs
 
 
 class DecayTrackerProcessor(StatefulProcessor):
@@ -39,44 +39,9 @@ class DecayTrackerProcessor(StatefulProcessor):
 
     def handleInputRows(self, key, rows, timerValues):
         (norad_id,) = key
-        prior = self._track.get()
-        if prior is not None:
-            last_epoch, last_mm, n_seen = prior
-        else:
-            last_epoch, last_mm, n_seen = -1, None, 0
-
-        out: dict[str, list] = {c: [] for c in (
-            "norad_id", "epoch_us", "mean_motion", "mm_delta", "n_seen"
-        )}
-        # Buffer the whole iterator before sorting: a key's batch rows
-        # arrive as MULTIPLE Arrow chunks (maxRecordsPerBatch slices, or
-        # interleaved map-task outputs) with no cross-chunk ordering
-        # guarantee — sorting each chunk independently would fold rows
-        # out of event-time order whenever a key spans chunks.
-        chunks = [pdf for pdf in rows if len(pdf)]
-        if chunks:
-            pdf = (
-                pd.concat(chunks, ignore_index=True)
-                if len(chunks) > 1
-                else chunks[0]
-            ).sort_values("epoch_us")
-            for epoch_us, mm in zip(pdf["epoch_us"], pdf["mean_motion"]):
-                epoch_us = int(epoch_us)
-                mm = float(mm)
-                if epoch_us <= last_epoch:
-                    continue  # stale/duplicate epoch: forward-only
-                n_seen += 1
-                out["norad_id"].append(norad_id)
-                out["epoch_us"].append(epoch_us)
-                out["mean_motion"].append(mm)
-                out["mm_delta"].append(
-                    mm - last_mm if last_mm is not None else None
-                )
-                out["n_seen"].append(n_seen)
-                last_epoch, last_mm = epoch_us, mm
-
-        self._track.update((last_epoch, last_mm, n_seen))
-        yield pd.DataFrame(out)
+        out, folded = fold_epochs(norad_id, rows, self._track.get())
+        self._track.update(folded)
+        yield out
 
     def close(self) -> None:
         pass

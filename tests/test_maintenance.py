@@ -232,6 +232,94 @@ def test_vacuum_removes_only_maintenance_debris(spark, tmp_path):
     assert vacuum_maintenance_debris(wh) == []  # idempotent
 
 
+def _crash_on_second_rename(monkeypatch):
+    """Make the second ``os.rename`` raise: a maintenance swap dies
+    after moving the live directory aside, before moving its
+    replacement in."""
+    real, calls = os.rename, []
+
+    def rename(src, dst):
+        calls.append(src)
+        if len(calls) == 2:
+            raise OSError("simulated crash between the swap renames")
+        real(src, dst)
+
+    monkeypatch.setattr(os, "rename", rename)
+
+
+def test_vacuum_restores_a_table_after_a_crashed_recluster_swap(
+    spark, tmp_path, monkeypatch
+):
+    """A crash between recluster's two renames leaves the table only
+    under ``<table>.__recluster_old``; vacuum renames it back before it
+    removes the staged copy, so no row is lost."""
+    import pytest as _pytest
+
+    from celestrak_tle_data_pipeline_spark.sinks.maintenance import (
+        recluster_zorder,
+        table_digest,
+        vacuum_maintenance_debris,
+    )
+
+    wh = ParquetWarehouse(spark, str(tmp_path / "whr"))
+    tpath = wh.path("zt")
+    spark.range(64).select(
+        "id", (F.col("id") % 7).alias("cx"), (F.col("id") % 5).alias("cy")
+    ).write.parquet(tpath)
+    d0 = table_digest(spark.read.parquet(tpath))
+
+    _crash_on_second_rename(monkeypatch)
+    with _pytest.raises(OSError):
+        recluster_zorder(wh, "zt", ("cx", "cy"), n_files=2)
+    monkeypatch.undo()
+    assert not os.path.exists(tpath)
+
+    vacuum_maintenance_debris(wh)
+    assert os.listdir(wh.root) == ["zt"]
+    assert table_digest(spark.read.parquet(tpath)) == d0
+
+
+def test_vacuum_restores_a_partition_after_a_crashed_compaction_swap(
+    spark, tmp_path, monkeypatch
+):
+    """Both compactions swap a partition with two renames. A crash
+    between them leaves the partition only under
+    ``.compact_old_<col>=<value>``; vacuum renames it back before it
+    removes the staged copies, so the table digest is unchanged."""
+    import pytest as _pytest
+
+    from celestrak_tle_data_pipeline_spark.sinks.maintenance import (
+        table_digest,
+        vacuum_maintenance_debris,
+    )
+
+    for i, compact in enumerate((
+        lambda wh: compact_partitions(
+            wh, "frag", "d", max_files_per_partition=4
+        ),
+        lambda wh: wh.compact("frag", "d"),
+    )):
+        wh = ParquetWarehouse(spark, str(tmp_path / f"whc{i}"))
+        tpath = wh.path("frag")
+        _write_fragmented(spark, tpath, "2024-01-01", 6, 5)
+        _write_fragmented(spark, tpath, "2024-01-02", 6, 5, start=1000)
+        d0 = table_digest(spark.read.parquet(tpath))
+
+        _crash_on_second_rename(monkeypatch)
+        with _pytest.raises(OSError):
+            compact(wh)
+        monkeypatch.undo()
+        assert not os.path.exists(os.path.join(tpath, "d=2024-01-01"))
+
+        vacuum_maintenance_debris(wh)
+        assert sorted(
+            e for e in os.listdir(tpath)
+            if os.path.isdir(os.path.join(tpath, e))
+        ) == ["d=2024-01-01", "d=2024-01-02"]
+        assert os.listdir(wh.root) == ["frag"]
+        assert table_digest(spark.read.parquet(tpath)) == d0
+
+
 def test_recluster_refuses_hive_partitioned_tables(spark, tmp_path):
     """recluster_zorder on a hive-partitioned table would silently
     flatten the directory-encoded partition column into a data column

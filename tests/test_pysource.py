@@ -246,3 +246,48 @@ def test_firehose_stream_partition_planned_parity(spark, tmp_path):
     rows1 = sorted(row for p in parts for row in r.read(p))
     rows2 = sorted(row for p in again for row in r.read(p))
     assert rows1 == rows2 and len(rows1) == 3
+
+
+def test_tle_source_hides_what_spark_file_sources_hide(spark, tmp_path):
+    """A landing dir holding ``a.txt``, ``_partial.txt`` and
+    ``.tmpx.tmp``, each one valid triple: the ``tle`` source's batch and
+    stream reads see only ``a.txt``, as ``read_payloads`` (Spark's
+    ``binaryFile``, which hides ``_`` and ``.`` names) does."""
+    from celestrak_tle_data_pipeline_spark.operators.assembly import (
+        assemble_from_payloads,
+        read_payloads,
+    )
+
+    land = tmp_path / "hland"
+    land.mkdir()
+    for i, fname in enumerate(("a.txt", "_partial.txt", ".tmpx.tmp"), 1):
+        (land / fname).write_text(
+            _payload(46000 + i).replace(f"SAT-{46000 + i}", f"SAT-{i}")
+        )
+    _register(spark)
+
+    def names(df) -> list[str]:
+        return sorted(r.sat_name_raw for r in df.collect())
+
+    via_catalyst = names(
+        assemble_from_payloads(read_payloads(spark, str(land)))
+    )
+    via_batch = names(
+        spark.read.format("tle").option("path", str(land)).load()
+    )
+    streamed: list = []
+    q = (
+        spark.readStream.format("tle")
+        .option("path", str(land))
+        .load()
+        .writeStream.foreachBatch(
+            lambda df, _id: streamed.extend(df.collect())
+        )
+        .option("checkpointLocation", str(tmp_path / "hck"))
+        .start()
+    )
+    q.processAllAvailable()
+    q.stop()
+    assert via_catalyst == ["SAT-1"]
+    assert via_batch == via_catalyst
+    assert sorted(r.sat_name_raw for r in streamed) == via_catalyst

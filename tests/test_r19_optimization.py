@@ -30,6 +30,7 @@ from celestrak_tle_data_pipeline_spark.plans.common import (
 )
 
 from conftest import SF_DIR
+from tools.query_profile import iter_nodes
 
 SF_DIR_01 = "/root/testdata/sf0.01"
 
@@ -44,21 +45,13 @@ def _executed_plan(df) -> str:
 
 
 def _executed_scans(plan) -> int:
-    """Parquet scans in a final adaptive plan, by a walk of the
-    physical tree: through query stages into the plans they ran, not
-    into reused exchanges (a reuse is not a second scan)."""
-    kind = plan.getClass().getSimpleName()
-    if kind == "AdaptiveSparkPlanExec":
-        return _executed_scans(plan.executedPlan())
-    if kind.endswith("QueryStageExec"):
-        return _executed_scans(plan.plan())
-    if plan.nodeName().startswith("Scan parquet"):
-        return 1
-    kids = plan.children()
-    subs = plan.subqueries()
+    """Parquet scans in a final adaptive plan: every node of the walk
+    through query stages into the plans they ran (a reused exchange
+    is not entered, so a reuse is not a second scan)."""
     return sum(
-        _executed_scans(kids.apply(i)) for i in range(kids.size())
-    ) + sum(_executed_scans(subs.apply(i)) for i in range(subs.size()))
+        node.nodeName().startswith("Scan parquet")
+        for node in iter_nodes(plan)
+    )
 
 
 def _bucket_offsets(df, keys, buckets):

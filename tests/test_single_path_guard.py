@@ -2,8 +2,9 @@
 
 The landing front end has one ``tle`` data source, one stream reader
 and one ``binaryFile`` landing-stream reader; the plan banks share one
-copy of each private helper. This test reads syntax trees (no Spark,
-so comments and docstrings never count) and fails when:
+copy of each private helper and lookup table; ``tools/query_profile.py``
+is the one plan-inspection tool. This test reads syntax trees (no
+Spark, so comments and docstrings never count) and fails when:
 
 - two ``DataSource`` subclasses return the same ``name()``;
 - ``format("binaryFile")`` is called more than once under
@@ -13,18 +14,25 @@ so comments and docstrings never count) and fails when:
   import or format-name string;
 - two top-level ``_``-prefixed functions in ``plans/*.py``, or one of
   them and a ``plans/common.py`` function, have identical bodies,
-  docstrings ignored (shared helpers live in ``plans/common.py``).
+  docstrings ignored (shared helpers live in ``plans/common.py``);
+- two top-level assignments in ``plans/*.py``, ``common.py`` included,
+  have identical values (empty literals aside: the banks' registries
+  start as ``{}``);
+- one of the five plan and timing tools that ``query_profile.py``
+  replaced comes back under ``tools/``, or a ``tools/`` module takes a
+  standard-library name (scripts run from ``tools/`` would import it
+  in place of the library's).
 """
 
 from __future__ import annotations
 
 import ast
+import sys
 from collections import defaultdict
 from pathlib import Path
 
-PKG = Path(__file__).resolve().parents[1] / (
-    "celestrak_tle_data_pipeline_spark"
-)
+ROOT = Path(__file__).resolve().parents[1]
+PKG = ROOT / "celestrak_tle_data_pipeline_spark"
 DELETED = {
     "tle_datasource",
     "iter_triples",
@@ -34,6 +42,13 @@ DELETED = {
     "assemble_from_lines",
     "_phi_col_r19",
     "_phi_sql_r19",
+}
+DELETED_TOOLS = {
+    "isolate_bench",
+    "isolate_ledger",
+    "runtime_plan",
+    "audit_plans",
+    "dump_plans",
 }
 
 
@@ -121,6 +136,36 @@ def _duplicate_helpers(paths) -> list[str]:
     return [" = ".join(v) for v in bodies.values() if len(v) > 1]
 
 
+def _duplicate_assignments(paths) -> list[str]:
+    values = defaultdict(list)
+    for path, tree in _trees(paths):
+        for node in tree.body:
+            if isinstance(node, ast.Assign):
+                targets = node.targets
+            elif isinstance(node, ast.AnnAssign) and node.value is not None:
+                targets = [node.target]
+            else:
+                continue
+            value = node.value
+            if isinstance(value, (ast.Dict, ast.List, ast.Tuple)) and not (
+                value.keys if isinstance(value, ast.Dict) else value.elts
+            ):
+                continue
+            names = ",".join(ast.unparse(t) for t in targets)
+            values[ast.dump(value)].append(f"{path.name}::{names}")
+    return [" = ".join(v) for v in values.values() if len(v) > 1]
+
+
+def _tool_clashes(paths) -> list[str]:
+    return [
+        f"{p.name}: "
+        + ("replaced by query_profile.py" if p.stem in DELETED_TOOLS
+           else "shadows the standard library")
+        for p in paths
+        if p.stem in DELETED_TOOLS or p.stem in sys.stdlib_module_names
+    ]
+
+
 def test_one_tle_landing_front_end():
     pkg = sorted(PKG.rglob("*.py"))
     assert not _source_name_clashes(pkg), _source_name_clashes(pkg)
@@ -137,6 +182,18 @@ def test_plans_have_one_copy_of_each_helper():
     assert not dups, "shared helpers live in plans/common.py: " + "; ".join(
         dups
     )
+
+
+def test_plans_have_one_copy_of_each_lookup_table():
+    dups = _duplicate_assignments(sorted((PKG / "plans").glob("*.py")))
+    assert not dups, "shared tables live in plans/common.py: " + "; ".join(
+        dups
+    )
+
+
+def test_one_plan_inspection_tool():
+    clashes = _tool_clashes(sorted((ROOT / "tools").glob("*.py")))
+    assert not clashes, clashes
 
 
 def test_guard_sees_code_and_ignores_text(tmp_path):
@@ -181,3 +238,22 @@ def test_guard_sees_code_and_ignores_text(tmp_path):
     common = tmp_path / "common.py"
     common.write_text("def h(z):\n    return x + 1\n")
     assert _duplicate_helpers([a, common]) == ["a.py::_h = common.py::h"]
+    tables = tmp_path / "tables.py"
+    tables.write_text(
+        '"""[1, 2] in prose."""\n'
+        "REG: dict = {}\n"
+        "_T = [1.0, 0.5]\n"
+        "_D = [i / 10 for i in range(9)]\n"
+    )
+    common.write_text(
+        "REG = {}\nT = [1.0, 0.5]\nD = [i / 10 for i in range(8)]\n"
+    )
+    assert _duplicate_assignments([tables]) == []
+    assert _duplicate_assignments([tables, common]) == [
+        "tables.py::_T = common.py::T"
+    ]
+    tools = [tmp_path / f"{n}.py" for n in ("check", "profile", "dump_plans")]
+    assert _tool_clashes(tools) == [
+        "profile.py: shadows the standard library",
+        "dump_plans.py: replaced by query_profile.py",
+    ]

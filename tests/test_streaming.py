@@ -173,6 +173,55 @@ def test_stateful_decay_tracker(spark, tmp_path):
     assert len(out_rows) == 2
 
 
+def test_decay_tracker_folds_a_key_spanning_arrow_chunks(spark, tmp_path):
+    """One satellite's four epochs land newest-first in one micro-batch.
+    With ``maxRecordsPerBatch=2`` the key reaches Python as two Arrow
+    chunks, [day 4, day 3] then [day 2, day 1]; the tracker sorts the
+    whole batch, not each chunk, so it emits the same four rows as at
+    the default batch size (per-chunk sorting emitted days 3-4 only)."""
+    from celestrak_tle_data_pipeline_spark.streaming.stateful import (
+        decay_tracker,
+    )
+
+    schema = "norad_id long, epoch_utc timestamp, mean_motion double"
+    src = str(tmp_path / "epochs")
+    day0 = dt.datetime(2026, 8, 1, 12)
+    spark.createDataFrame(
+        [
+            (62001, day0 + dt.timedelta(days=d), 15.06 - d / 1000)
+            for d in (4, 3, 2, 1)
+        ],
+        schema,
+    ).coalesce(1).write.parquet(src)
+
+    def track(ckpt: str) -> list[tuple]:
+        got: list = []
+        q = (
+            decay_tracker(spark.readStream.schema(schema).parquet(src))
+            .writeStream.foreachBatch(
+                lambda df, _id: got.extend(df.collect())
+            )
+            .option("checkpointLocation", str(tmp_path / ckpt))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+        return sorted((r.n_seen, r.epoch_us, r.mm_delta) for r in got)
+
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prior = spark.conf.get(key)
+    try:
+        default = track("ck_default")
+        spark.conf.set(key, "2")
+        chunked = track("ck_chunked")
+    finally:
+        spark.conf.set(key, prior)
+    assert [n for n, _, _ in default] == [1, 2, 3, 4]
+    assert default[0][2] is None
+    assert all(abs(d - (-0.001)) < 1e-9 for _, _, d in default[1:])
+    assert chunked == default
+
+
 def test_stream_stream_enrichment_join(spark, tmp_path):
     """Stream-stream inner join with watermarks: a telemetry row whose
     weather row arrives in a LATER micro-batch joins against the state

@@ -28,40 +28,7 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
 sys.path.insert(0, os.path.join(ROOT, "tools"))
 
-
-def _iter_plan(node):
-    """Yield every operator in an executed plan, descending into AQE
-    query stages and reused stages."""
-    yield node
-    name = node.getClass().getSimpleName()
-    if name == "AdaptiveSparkPlanExec":
-        yield from _iter_plan(node.executedPlan())
-        return
-    if name in (
-        "ShuffleQueryStageExec",
-        "BroadcastQueryStageExec",
-        "TableCacheQueryStageExec",
-        "ResultQueryStageExec",
-    ):
-        yield from _iter_plan(node.plan())
-        return
-    if name == "InMemoryTableScanExec":
-        # descend into the cached fragment — persisted frames hide
-        # their (already executed) plan here
-        yield from _iter_plan(node.relation().cachedPlan())
-        return
-    if name == "ReusedExchangeExec":
-        # counted where it was materialized
-        return
-    try:
-        sq = node.subqueries()
-        for i in range(sq.size()):
-            yield from _iter_plan(sq.apply(i))
-    except Exception:  # noqa: BLE001 — not all nodes expose it
-        pass
-    ch = node.children()
-    for i in range(ch.size()):
-        yield from _iter_plan(ch.apply(i))
+from tools.query_profile import iter_nodes  # noqa: E402
 
 
 def _single_partition_window_rows(df) -> list[int]:
@@ -81,7 +48,7 @@ def _single_partition_window_rows(df) -> list[int]:
     df.collect()
     plan = df._jdf.queryExecution().executedPlan()
     rows = []
-    for op in _iter_plan(plan):
+    for op in iter_nodes(plan):
         if op.getClass().getSimpleName() != "ShuffleExchangeExec":
             continue
         if "SinglePartition" not in op.outputPartitioning().toString():

@@ -11,8 +11,9 @@ duplicates onto the same hot keys.
 A query whose warm time grows ~Nx (ratio/N <= ~1) scales linearly —
 its shuffles move proportional data; anything superlinear would expose
 a quadratic candidate-pair blowup or a driver-side bottleneck. This is
-the 100 TB extrapolation evidence for BENCH: the plans already audit
-clean (tools/audit_plans.py); this shows measured behavior agreeing.
+the 100 TB extrapolation evidence for BENCH: the executed plans'
+pushed filters, read schemas and exchanges are in
+tools/query_profile.py's records; this shows measured behavior agreeing.
 
 Usage: python tools/scale_probe.py [N]      (default N=8)
 Writes the enlarged copy under /root/repo/.scratch/sfx{N}/ (ignored by
