@@ -6,8 +6,9 @@ per-group algorithms: computations where row i depends on row i-1's
 RESULT, which no window function or SQL aggregate expresses (a window
 can lag inputs, not outputs). EWMA is the canonical case.
 
-Scale notes: one shuffle on the group key, then a single Arrow batch
-per group in Python; state is O(1) per group during the scan. Skewed
+Scale notes: one shuffle on the group key, then each group's Arrow
+chunks are buffered into one frame in Python (the fold is ordered, and
+chunks arrive unordered); the fold itself keeps O(1) state. Skewed
 entities are the hazard (one giant group = one Python task) — at 100 TB
 pair this with AQE skew handling or pre-split hot keys by time range.
 """
@@ -51,25 +52,29 @@ def ewma_by_group(
     tiebreak = "event_id" if "event_id" in df.columns else order
 
     def kernel(pdfs: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in pdfs:
-            pdf = pdf.sort_values([order, tiebreak])
-            ewma = None
-            anomalies = 0
-            for v in pdf[value]:
-                v = float(v)
-                if ewma is None:
-                    ewma = v
-                else:
-                    if abs(v - ewma) > threshold * abs(ewma):
-                        anomalies += 1
-                    ewma = (1.0 - alpha) * ewma + alpha * v
-            yield pd.DataFrame(
-                {
-                    "user_id": [int(pdf[key].iloc[0])],
-                    "n_events": [len(pdf)],
-                    "final_ewma": [ewma],
-                    "n_anomalies": [anomalies],
-                }
-            )
+        # one group arrives as several Arrow chunks once it outgrows
+        # ``maxRecordsPerBatch``: buffer them all before the sort, or
+        # the EWMA restarts on every chunk
+        pdf = pd.concat(list(pdfs), ignore_index=True).sort_values(
+            [order, tiebreak]
+        )
+        ewma = None
+        anomalies = 0
+        for v in pdf[value]:
+            v = float(v)
+            if ewma is None:
+                ewma = v
+            else:
+                if abs(v - ewma) > threshold * abs(ewma):
+                    anomalies += 1
+                ewma = (1.0 - alpha) * ewma + alpha * v
+        yield pd.DataFrame(
+            {
+                "user_id": [int(pdf[key].iloc[0])],
+                "n_events": [len(pdf)],
+                "final_ewma": [ewma],
+                "n_anomalies": [anomalies],
+            }
+        )
 
     return df.groupBy(key).applyInPandas(kernel, EWMA_SCHEMA)

@@ -2778,17 +2778,11 @@ def dagum_gini_decomposition(spark, sf_dir):
     G_h = s_plus(h,h)/(n_h*S_h) and G = sum_all s_plus/(n*S) drop
     out of the same frame. All sums exact DECIMAL(38,0).
 
-    Scale: the per-region exclusive cumulative rides the
-    VALUE-BUCKET device (r19: pid = (v - vmin) div w from one exact
-    bounds scalar, <= 257 buckets at any volume; per-(pid, region)
-    local windows + per-region triangular prefix offsets) because
-    the spend grid grows with customers. The r18 form used
-    repartitionByRange + spark_partition_id, which needed BOTH
-    persists for pid stability and paid a boundary-sampling pass
-    that re-ran the rollup; the deterministic pid removes the
-    persists (a customer-grain cache at 100 TB is the guide-§5
-    scale killer) and the sampling pass. The 25-row pair frame
-    stays persisted — bounded grain."""
+    Scale: the per-region exclusive cumulative rides
+    ``exact_cumulative`` keyed by region (value buckets, per-bucket
+    local windows, per-region bucket offsets) because the spend grid
+    grows with customers; no customer-grain persist. The 25-row pair
+    frame stays persisted — bounded grain."""
     o = t(spark, sf_dir, "orders")
     c = t(spark, sf_dir, "customer")
     n = t(spark, sf_dir, "nation")
@@ -2811,71 +2805,26 @@ def dagum_gini_decomposition(spark, sf_dir):
     )
     vgrid = rgrid.select("v").distinct()
     regs = rgrid.select("r").distinct()
-    bounds = rgrid.agg(
-        F.min("v").alias("vmin"),
-        (F.floor((F.max("v") - F.min("v")) / 256) + 1)
-        .cast("bigint")
-        .alias("w"),
-    )
     full_g = (
         vgrid.crossJoin(F.broadcast(regs))
         .join(rgrid, ["v", "r"], "left")
-        .crossJoin(F.broadcast(bounds))
         .select(
             "v",
             "r",
             F.coalesce(F.col("c"), F.lit(0)).alias("c0"),
             F.coalesce(F.col("tv"), F.lit(0)).alias("tv0"),
-            F.expr("(v - vmin) div w").alias("pid"),
         )
     )
-    psums = full_g.groupBy("pid", "r").agg(
-        F.sum("c0").cast("bigint").alias("pc"),
-        F.sum("tv0").cast("bigint").alias("pv"),
+    # each (r, v) grid row is unique, so the exclusive cumulative is
+    # the inclusive one minus the row itself
+    cum, _ = exact_cumulative(
+        full_g, ("v",), {"c": F.sum("c0"), "v": F.sum("tv0")}, keys=("r",)
     )
-    prior = psums.select(
-        F.col("pid").alias("bpid"),
-        F.col("r").alias("br"),
-        "pc",
-        "pv",
-    )
-    offsets = (
-        psums.select("pid", "r")
-        .join(
-            prior,
-            (F.col("br") == F.col("r"))
-            & (F.col("bpid") < F.col("pid")),
-            "left",
-        )
-        .groupBy("pid", "r")
-        .agg(
-            F.coalesce(F.sum("pc"), F.lit(0)).alias("off_c"),
-            F.coalesce(F.sum("pv"), F.lit(0)).alias("off_v"),
-        )
-    )
-    lw = (
-        Window.partitionBy("pid", "r")
-        .orderBy("v")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    cume = (
-        full_g.join(F.broadcast(offsets), ["pid", "r"])
-        .select(
-            "v",
-            "r",
-            (
-                F.coalesce(F.sum("c0").over(lw), F.lit(0))
-                + F.col("off_c")
-            )
-            .cast("bigint")
-            .alias("ce"),
-            (
-                F.coalesce(F.sum("tv0").over(lw), F.lit(0))
-                + F.col("off_v")
-            )
-            .cast("bigint")
-            .alias("cve"),
-        )
+    cume = cum.select(
+        "v",
+        "r",
+        (F.col("cum_c") - F.col("c0")).cast("bigint").alias("ce"),
+        (F.col("cum_v") - F.col("tv0")).cast("bigint").alias("cve"),
     )
     splus = (
         rgrid.alias("h")
@@ -3031,8 +2980,8 @@ PLAN_AUDIT_NOTES.update(
         ),
         "dagum_gini_decomposition": (
             "INFO: no single-partition window under the structural "
-            "detector — per-(pid, region) local exclusive windows on "
-            "the ranged device, no global sort, and the bounded 5x5 "
+            "detector — per-(region, pid) local windows inside "
+            "exact_cumulative, no global sort, and the bounded 5x5 "
             "pair-frame re-scans resolve to broadcast exchanges; note "
             "kept for the history (authored under the pre-r16 textual "
             "heuristic), excluded from the effective allowlist"

@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..sinks.maintenance import _morton16
 from . import register
 from .common import dec, dsum, exact_cumulative, t
 
@@ -535,15 +536,6 @@ def systematic_weighted_sample(spark, sf_dir):
 # --------------------------------------------------------------------------
 # Z-order (Morton) multi-dimensional clustering + data-skipping gate
 # --------------------------------------------------------------------------
-def _morton_sql(x: str, y: str) -> str:
-    """16-bit Morton code: interleave the low 8 bits of x and y."""
-    terms = []
-    for i in range(8):
-        terms.append(f"((({x} >> {i}) & 1) << {2 * i})")
-        terms.append(f"((({y} >> {i}) & 1) << {2 * i + 1})")
-    return " + ".join(terms)
-
-
 _ORACLE_ZORDER = f"""
 WITH pts AS (
     SELECT o_orderkey,
@@ -554,7 +546,7 @@ WITH pts AS (
     FROM orders
 ),
 coded AS (
-    SELECT o_orderkey, x, y, CAST({_morton_sql('x', 'y')} AS BIGINT) AS morton
+    SELECT o_orderkey, x, y, CAST({_morton16('x', 'y')} AS BIGINT) AS morton
     FROM pts
 )
 SELECT CAST(morton >> 8 AS BIGINT) AS tile,
@@ -602,7 +594,7 @@ def zorder_morton_layout(spark, sf_dir):
     ).cast("bigint")
     pts = o.select(
         "o_orderkey", x.alias("x"), y.alias("y")
-    ).withColumn("morton", F.expr(_morton_sql("x", "y")).cast("bigint"))
+    ).withColumn("morton", F.expr(_morton16("x", "y")).cast("bigint"))
     return (
         pts.groupBy(F.shiftright("morton", 8).cast("bigint").alias("tile"))
         .agg(
@@ -632,7 +624,7 @@ WITH pts AS (
     FROM orders
 ),
 tiles AS (
-    SELECT CAST({_morton_sql('x', 'y')} AS BIGINT) >> 8 AS tile,
+    SELECT CAST({_morton16('x', 'y')} AS BIGINT) >> 8 AS tile,
            COUNT(*) AS n_rows,
            MAX(x) - MIN(x) AS span_x, MAX(y) - MIN(y) AS span_y
     FROM pts GROUP BY 1
@@ -670,7 +662,7 @@ def zorder_skipping_gate(spark, sf_dir):
         F.lit(256),
     ).cast("bigint")
     pts = o.select(x.alias("x"), y.alias("y")).withColumn(
-        "morton", F.expr(_morton_sql("x", "y")).cast("bigint")
+        "morton", F.expr(_morton16("x", "y")).cast("bigint")
     )
     tiles = pts.groupBy(F.shiftright("morton", 8).alias("tile")).agg(
         F.count(F.lit(1)).alias("n_rows"),

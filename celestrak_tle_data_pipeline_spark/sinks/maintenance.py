@@ -18,10 +18,11 @@ Two operations, both partition-selective:
   million. One row per file leaves the executors (metadata-sized).
 - :func:`compact_partitions` — rewrite ONLY the partitions whose file
   count exceeds a threshold, each to ``ceil(bytes/target)`` files via
-  per-partition ``repartition``, staged into a sibling directory and
-  rename-swapped per partition once fully committed. Untouched
-  partitions keep their exact files (pinned by test on file paths);
-  compacted ones keep their exact ROWS (pinned on full row sets).
+  per-partition ``repartition``, optionally sorted within files on a
+  cluster key, staged into a sibling directory and rename-swapped per
+  partition once fully committed. Untouched partitions keep their
+  exact files (pinned by test on file paths); compacted ones keep
+  their exact ROWS (pinned on full row sets).
 
 Non-transactional caveat, stated: plain parquet has no snapshot
 isolation — a reader racing the overwrite of one partition can see it
@@ -29,18 +30,8 @@ mid-rewrite. That is the Delta/Iceberg boundary; the scheduling story
 here is the reference's own (a cron window owns the table during
 maintenance, reference data-pipeline.yml).
 
-Relation to ``ParquetWarehouse.compact`` (warehouse.py:198), which
-predates this module and stays: that is the per-partition,
-crash-safest form — driver-side directory metadata (fine at partition
-grain on one filesystem), one rename-swapped rewrite per partition, a
-readable partition at every instant. This module is the
-cluster-inventory form: the file census is computed BY THE SCAN
-(``_metadata``, no driver listing — works when "list the table" is
-itself a distributed problem), all flagged partitions rewrite in ONE
-shuffle, and the rewrite is digest-verified. Different failure/scale
-trade-offs, deliberately both kept; ``recluster_zorder`` below
-supersedes neither — it is the multi-dimensional layout op
-(``compact``'s ``cluster_by`` sorts within files on one axis).
+:func:`compact_partitions` is the engine's one compaction;
+:func:`recluster_zorder` is the multi-dimensional layout op beside it.
 """
 
 from __future__ import annotations
@@ -131,7 +122,7 @@ def compact_partitions(
     *,
     max_files_per_partition: int = 4,
     target_file_bytes: int = 128 * 1024 * 1024,
-    verify: bool = True,
+    cluster_by: tuple[str, ...] = (),
 ) -> dict:
     """Rewrite every partition holding more than
     ``max_files_per_partition`` files down to ``ceil(bytes/target)``
@@ -139,11 +130,14 @@ def compact_partitions(
 
     The rewrite reads ONLY the flagged partitions (partition-pruned
     scan), repartitions by the partition column so each output
-    partition writes its own files, stages the result into a sibling
-    ``<table>.__compact_stage`` directory, and rename-swaps each
-    partition in once the staged copy is fully committed (the
-    crash-safe discipline of ``ParquetWarehouse.compact`` and
-    ``recluster_zorder``). Returns
+    partition writes its own files, sorts within them on
+    ``cluster_by`` (so parquet row-group min/max stats cluster and
+    point/range probes on the key skip row groups), stages the result
+    into a sibling ``<table>.__compact_stage`` directory, and
+    rename-swaps each partition in once the staged copy is fully
+    committed (the crash-safe discipline of ``recluster_zorder``). The
+    rewritten partitions must give back the digest taken before the
+    rewrite, or it raises. Returns
     ``{"compacted_partitions", "files_before", "files_after"}``."""
     profile = partition_file_profile(wh, table, partition_col)
     flagged = [
@@ -173,23 +167,21 @@ def compact_partitions(
         .where(F.col(partition_col).isin(values))
     )
     # digest BEFORE the rewrite (one extra scan of the flagged
-    # partitions — bounded by what is being rewritten anyway); with
-    # ``verify`` the same digest must come back from the compacted
-    # files, or we raise. Detection, not prevention: parquet has no
-    # transaction to roll back, so a mismatch means "restore from the
-    # upstream" — but it means you KNOW, instead of serving a
-    # maintenance-corrupted table.
-    before = table_digest(src) if verify else None
+    # partitions — bounded by what is being rewritten anyway); the
+    # same digest must come back from the compacted files, or we raise.
+    # Detection, not prevention: parquet has no transaction to roll
+    # back, so a mismatch means "restore from the upstream" — but it
+    # means you KNOW, instead of serving a maintenance-corrupted table.
+    before = table_digest(src)
     import os
     import shutil
 
     base = wh.path(table)
     # Stage the rewrite into a SIBLING directory, then rename-swap each
-    # partition — never read-and-overwrite the same path in one job
-    # (the committer-dependent pattern ParquetWarehouse.compact's
-    # docstring forbids: it survives only while the local committer
-    # defers deletion; a committer change could delete the partition
-    # mid-read, and the digest verify would detect but not restore).
+    # partition — never read-and-overwrite the same path in one job (it
+    # survives only while the local committer defers deletion; a
+    # committer change could delete the partition mid-read, and the
+    # digest check would detect but not restore).
     # The staged copy is complete ON DISK before any live directory
     # moves. A crash between a partition's two renames leaves it only
     # under ``.compact_old_<col>=<value>``; vacuum_maintenance_debris
@@ -200,8 +192,10 @@ def compact_partitions(
         # one shuffle keyed by the partition column: every row of a
         # flagged partition lands in the task writing that partition,
         # and maxRecordsPerFile re-splits any partition that outgrows
-        # one target file
+        # one target file; every file written, split ones included, is
+        # sorted on the cluster key
         src.repartition(len(values), F.col(partition_col))
+        .sortWithinPartitions(partition_col, *cluster_by)
         .write.mode("overwrite")
         .option("maxRecordsPerFile", rows_per_file)
         .partitionBy(partition_col)
@@ -223,17 +217,16 @@ def compact_partitions(
     shutil.rmtree(stage)
     wh.spark.catalog.refreshByPath(base)
 
-    if verify:
-        after_digest = table_digest(
-            wh.spark.read.parquet(wh.path(table)).where(
-                F.col(partition_col).isin(values)
-            )
+    after_digest = table_digest(
+        wh.spark.read.parquet(wh.path(table)).where(
+            F.col(partition_col).isin(values)
         )
-        if after_digest != before:
-            raise RuntimeError(
-                f"compaction digest mismatch on {table}: "
-                f"{before} -> {after_digest}"
-            )
+    )
+    if after_digest != before:
+        raise RuntimeError(
+            f"compaction digest mismatch on {table}: "
+            f"{before} -> {after_digest}"
+        )
 
     after = {
         r[0]: int(r.file_count)
@@ -250,9 +243,8 @@ def compact_partitions(
 
 def _morton16(x: str, y: str) -> str:
     """16-bit Morton interleave of the low 8 bits of two columns — the
-    same expression `plans/ext_pipeline.py::_morton_sql` certifies
-    against the DuckDB oracle (X85); duplicated here because plans
-    already imports sinks (no cycle allowed)."""
+    one copy; the Z-order queries in `plans/ext_pipeline.py` use it
+    too, and certify it against the DuckDB oracle (X85)."""
     terms = []
     for i in range(8):
         terms.append(f"((({x} >> {i}) & 1) << {2 * i})")
@@ -293,7 +285,6 @@ def recluster_zorder(
     dim_cols: tuple[str, str],
     *,
     n_files: int = 16,
-    verify: bool = True,
 ) -> dict:
     """OPTIMIZE ZORDER equivalent on plain parquet: rewrite the table
     range-partitioned by the 16-bit Morton code of two (modular-folded)
@@ -307,8 +298,8 @@ def recluster_zorder(
     swap directories. The swap is the plain-parquet transactional
     boundary — a reader racing it can fail to list; the cron window
     owns the table during maintenance (same caveat as
-    :func:`compact_partitions`, stated). With ``verify``, the X128
-    digest over all columns must match across the rewrite.
+    :func:`compact_partitions`, stated). The X128 digest over all
+    columns must match across the rewrite, or it raises.
 
     Returns {"n_files", "digest"} for the maintenance log."""
     import os
@@ -331,7 +322,7 @@ def recluster_zorder(
 
     cx, cy = dim_cols
     src = wh.spark.read.parquet(wh.path(table))
-    before = table_digest(src) if verify else None
+    before = table_digest(src)
 
     x = F.pmod(F.col(cx).cast("bigint"), F.lit(256))
     y = F.pmod(F.col(cy).cast("bigint"), F.lit(256))
@@ -353,13 +344,11 @@ def recluster_zorder(
     # drop any cached file listing for the swapped directory
     wh.spark.catalog.refreshByPath(wh.path(table))
 
-    if verify:
-        after = table_digest(wh.spark.read.parquet(wh.path(table)))
-        if after != before:
-            raise RuntimeError(
-                f"recluster digest mismatch on {table}: "
-                f"{before} -> {after}"
-            )
+    after = table_digest(wh.spark.read.parquet(wh.path(table)))
+    if after != before:
+        raise RuntimeError(
+            f"recluster digest mismatch on {table}: {before} -> {after}"
+        )
     n, _ = file_pruning_ratio(wh, table, cx, -(2**62), 2**62)
     return {"n_files": n, "digest": before}
 

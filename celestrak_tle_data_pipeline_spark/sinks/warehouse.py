@@ -195,89 +195,6 @@ class ParquetWarehouse:
         w.parquet(self.path(table))
         return obs.get["n"]
 
-    def compact(
-        self,
-        table: str,
-        partition_col: str,
-        target_file_bytes: int = 128 << 20,
-        cluster_by: tuple[str, ...] = (),
-    ) -> dict[str, int]:
-        """Small-file compaction: rewrite each partition of ``table``
-        into ``ceil(partition_bytes / target_file_bytes)`` files,
-        optionally sorted within files by ``cluster_by`` so parquet
-        row-group min/max stats cluster (Z-order-lite: point/range
-        probes on the cluster key skip row groups after compaction).
-
-        The warehouse's check-then-write appends produce one-file-per-
-        micro-batch (3x/day cron, reference data-pipeline.yml:8) — at
-        100 TB that is thousands of KB-sized files per partition within
-        months, and scan throughput dies on open() overhead, so
-        compaction is a first-class maintenance op, not housekeeping.
-
-        Mechanics: each partition is rewritten into a hidden temp
-        sibling directory (``.compact_tmp_<value>`` — dot-prefixed, so
-        concurrent readers never list it), then swapped in with two
-        directory renames once the write has fully committed. Never
-        read-and-overwrite the same path in one job: that only works
-        today because the DataFrameWriter path happens to skip Spark's
-        self-overwrite guard and the committer defers deletion — a
-        Spark upgrade or a non-local committer could delete the
-        partition mid-read. The rename swap keeps the old data on disk
-        until the replacement is complete (idempotent, re-runnable). A
-        crash between the two renames leaves the partition only under
-        ``.compact_old_<col>=<value>``, whose name keeps the column so
-        ``maintenance.vacuum_maintenance_debris`` can rename it back.
-        Partition file sizes come from driver-side directory metadata
-        (bounded: one stat call per file, no data read). Returns
-        {partition_value: files_written}.
-        """
-        import math
-        import shutil
-
-        out: dict[str, int] = {}
-        base = self.path(table)
-        parts = [
-            d
-            for d in sorted(os.listdir(base))
-            if d.startswith(f"{partition_col}=")
-            and os.path.isdir(os.path.join(base, d))
-        ]
-        for d in parts:
-            pdir = os.path.join(base, d)
-            files = [
-                f for f in os.listdir(pdir) if f.endswith(".parquet")
-            ]
-            size = sum(
-                os.path.getsize(os.path.join(pdir, f)) for f in files
-            )
-            n_files = max(1, math.ceil(size / target_file_bytes))
-            if len(files) <= n_files:
-                continue  # already compact
-            value = d.split("=", 1)[1]
-            # typed literal comparison (cast the LITERAL, never the
-            # column): a cast on the partition column would defeat
-            # partition pruning and rescan the whole table per loop.
-            # The partition column is dropped before writing — hive
-            # layout encodes it in the directory name, not the files.
-            full = self.spark.read.parquet(base)
-            ptype = full.schema[partition_col].dataType
-            part = full.where(
-                F.col(partition_col) == F.lit(value).cast(ptype)
-            ).drop(partition_col)
-            rewritten = part.coalesce(n_files)
-            if cluster_by:
-                rewritten = rewritten.sortWithinPartitions(*cluster_by)
-            tmp = os.path.join(base, f".compact_tmp_{value}")
-            old = os.path.join(base, f".compact_old_{d}")
-            shutil.rmtree(tmp, ignore_errors=True)  # stale crash debris
-            shutil.rmtree(old, ignore_errors=True)
-            rewritten.write.mode("overwrite").parquet(tmp)
-            os.rename(pdir, old)
-            os.rename(tmp, pdir)
-            shutil.rmtree(old)
-            out[value] = n_files
-        return out
-
     def expire_partitions(
         self, table: str, partition_col: str, keep_from: str
     ) -> list[str]:

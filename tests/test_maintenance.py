@@ -5,7 +5,9 @@ Pins: the profile counts files/rows/bytes per partition from the
 ``_metadata`` scan column; compaction rewrites ONLY over-threshold
 partitions (untouched partitions keep their exact physical files),
 preserves row sets exactly, and splits an oversized partition into
-multiple target-sized files via the records cap.
+multiple target-sized files via the records cap; every rewrite checks
+its digest and raises on a mismatch; vacuum restores what a crash
+between a swap's two renames left behind.
 """
 
 from __future__ import annotations
@@ -163,7 +165,7 @@ def test_recluster_zorder_improves_file_skipping(spark, tmp_path):
     every file; after the Morton rewrite, per-file footer stats prune
     most files on BOTH dimensions — measured with the same _metadata
     min/max a real scan prunes on. Rows digest-identical across the
-    rewrite (verify=True raises otherwise)."""
+    rewrite (a digest mismatch raises)."""
     from celestrak_tle_data_pipeline_spark.sinks.maintenance import (
         file_pruning_ratio,
         recluster_zorder,
@@ -282,10 +284,10 @@ def test_vacuum_restores_a_table_after_a_crashed_recluster_swap(
 def test_vacuum_restores_a_partition_after_a_crashed_compaction_swap(
     spark, tmp_path, monkeypatch
 ):
-    """Both compactions swap a partition with two renames. A crash
-    between them leaves the partition only under
-    ``.compact_old_<col>=<value>``; vacuum renames it back before it
-    removes the staged copies, so the table digest is unchanged."""
+    """Compaction swaps a partition with two renames. A crash between
+    them leaves the partition only under ``.compact_old_<col>=<value>``;
+    vacuum renames it back before it removes the staged copy, so the
+    table digest is unchanged."""
     import pytest as _pytest
 
     from celestrak_tle_data_pipeline_spark.sinks.maintenance import (
@@ -293,31 +295,70 @@ def test_vacuum_restores_a_partition_after_a_crashed_compaction_swap(
         vacuum_maintenance_debris,
     )
 
-    for i, compact in enumerate((
-        lambda wh: compact_partitions(
-            wh, "frag", "d", max_files_per_partition=4
+    wh = ParquetWarehouse(spark, str(tmp_path / "whc"))
+    tpath = wh.path("frag")
+    _write_fragmented(spark, tpath, "2024-01-01", 6, 5)
+    _write_fragmented(spark, tpath, "2024-01-02", 6, 5, start=1000)
+    d0 = table_digest(spark.read.parquet(tpath))
+
+    _crash_on_second_rename(monkeypatch)
+    with _pytest.raises(OSError):
+        compact_partitions(wh, "frag", "d", max_files_per_partition=4)
+    monkeypatch.undo()
+    assert not os.path.exists(os.path.join(tpath, "d=2024-01-01"))
+
+    vacuum_maintenance_debris(wh)
+    assert sorted(
+        e for e in os.listdir(tpath)
+        if os.path.isdir(os.path.join(tpath, e))
+    ) == ["d=2024-01-01", "d=2024-01-02"]
+    assert os.listdir(wh.root) == ["frag"]
+    assert table_digest(spark.read.parquet(tpath)) == d0
+
+
+def test_maintenance_rewrites_raise_on_a_digest_mismatch(
+    spark, tmp_path, monkeypatch
+):
+    """Both rewrites always check the digest: neither has an option to
+    skip it, and an after-digest that differs from the one taken before
+    the rewrite raises."""
+    import inspect
+
+    import pytest as _pytest
+
+    from celestrak_tle_data_pipeline_spark.sinks import maintenance
+
+    real = maintenance.table_digest
+    calls = []
+
+    def tampered(df):
+        n, x, s = real(df)
+        calls.append(n)
+        # every digest after the first (the pre-rewrite one) is off by
+        # one bit, as if the rewrite had changed a row
+        return (n, x ^ 1, s) if len(calls) > 1 else (n, x, s)
+
+    monkeypatch.setattr(maintenance, "table_digest", tampered)
+    wh = ParquetWarehouse(spark, str(tmp_path / "whd"))
+    _write_fragmented(spark, wh.path("frag"), "2024-01-01", 6, 5)
+    spark.range(64).select(
+        "id", (F.col("id") % 7).alias("cx"), (F.col("id") % 5).alias("cy")
+    ).write.parquet(wh.path("zt"))
+
+    for rewrite in (
+        lambda: maintenance.compact_partitions(
+            wh, "frag", "d", cluster_by=("id",)
         ),
-        lambda wh: wh.compact("frag", "d"),
-    )):
-        wh = ParquetWarehouse(spark, str(tmp_path / f"whc{i}"))
-        tpath = wh.path("frag")
-        _write_fragmented(spark, tpath, "2024-01-01", 6, 5)
-        _write_fragmented(spark, tpath, "2024-01-02", 6, 5, start=1000)
-        d0 = table_digest(spark.read.parquet(tpath))
-
-        _crash_on_second_rename(monkeypatch)
-        with _pytest.raises(OSError):
-            compact(wh)
-        monkeypatch.undo()
-        assert not os.path.exists(os.path.join(tpath, "d=2024-01-01"))
-
-        vacuum_maintenance_debris(wh)
-        assert sorted(
-            e for e in os.listdir(tpath)
-            if os.path.isdir(os.path.join(tpath, e))
-        ) == ["d=2024-01-01", "d=2024-01-02"]
-        assert os.listdir(wh.root) == ["frag"]
-        assert table_digest(spark.read.parquet(tpath)) == d0
+        lambda: maintenance.recluster_zorder(
+            wh, "zt", ("cx", "cy"), n_files=2
+        ),
+    ):
+        calls.clear()
+        with _pytest.raises(RuntimeError, match="digest mismatch"):
+            rewrite()
+        assert len(calls) == 2
+    for fn in (maintenance.compact_partitions, maintenance.recluster_zorder):
+        assert "verify" not in inspect.signature(fn).parameters
 
 
 def test_recluster_refuses_hive_partitioned_tables(spark, tmp_path):

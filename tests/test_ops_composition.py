@@ -147,7 +147,7 @@ def test_ingest_to_maintenance_loop(spark, tmp_path):
         "fact_telemetry",
         "epoch_date",
         max_files_per_partition=1,
-    )  # verify=True: digest equality enforced inside
+    )  # digest equality enforced inside
     assert stats["compacted_partitions"] == 1
     assert stats["files_after"] == 1
 

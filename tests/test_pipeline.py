@@ -237,15 +237,54 @@ def test_connected_components_long_chain(spark):
     assert comp[100] == 100 and comp[101] == 100
 
 
+def test_ewma_by_group_folds_a_group_spanning_arrow_chunks(spark):
+    """One user's five events, stored out of order. With
+    ``maxRecordsPerBatch=2`` the group reaches Python as three Arrow
+    chunks; the kernel folds them as one group, so it gives the same
+    single row as at the default batch size (restarting the EWMA per
+    chunk gave three rows)."""
+    from celestrak_tle_data_pipeline_spark.operators.grouped import (
+        ewma_by_group,
+    )
+
+    t0 = dt.datetime(2026, 8, 1)
+    values = [2.0, 2.5, 1.5, 2.25, 2.0]
+    events = spark.createDataFrame(
+        [
+            (7, i, t0 + dt.timedelta(minutes=i), v)
+            for i, v in reversed(list(enumerate(values)))
+        ],
+        "user_id long, event_id long, ts timestamp, value double",
+    ).coalesce(1)
+
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prior = spark.conf.get(key)
+    try:
+        default = [tuple(r) for r in ewma_by_group(events).collect()]
+        spark.conf.set(key, "2")
+        chunked = [tuple(r) for r in ewma_by_group(events).collect()]
+    finally:
+        spark.conf.set(key, prior)
+    ewma = values[0]
+    for v in values[1:]:
+        ewma = 0.875 * ewma + 0.125 * v
+    assert default == [(7, 5, ewma, 0)]
+    assert chunked == default
+
+
 def test_compaction_rewrites_small_files(spark, tmp_path):
-    """compact(): many one-file-per-batch appends collapse to one file
-    per partition, rows byte-identical, and cluster_by sorting shows in
-    the parquet row-group stats (min==first, max==last ordering)."""
+    """compact_partitions(): many one-file-per-batch appends collapse to
+    one file per partition, rows byte-identical, and cluster_by sorting
+    shows in the parquet row-group stats (min==first, max==last
+    ordering)."""
     import os
 
     import pyarrow.parquet as pq
     from pyspark.sql import functions as F
 
+    from celestrak_tle_data_pipeline_spark.sinks.maintenance import (
+        compact_partitions,
+    )
     from celestrak_tle_data_pipeline_spark.sinks.warehouse import (
         ParquetWarehouse,
     )
@@ -271,8 +310,8 @@ def test_compaction_rewrites_small_files(spark, tmp_path):
         (r.k, r.day) for r in spark.read.parquet(base).collect()
     )
 
-    done = wh.compact("t", "day", cluster_by=("k",))
-    assert set(done) == {"d1", "d2"} and all(n == 1 for n in done.values())
+    done = compact_partitions(wh, "t", "day", cluster_by=("k",))
+    assert done["compacted_partitions"] == 2 and done["files_after"] == 2
     for d in ("d1", "d2"):
         pfiles = [
             f for f in os.listdir(f"{base}/day={d}") if f.endswith(".parquet")
@@ -285,7 +324,7 @@ def test_compaction_rewrites_small_files(spark, tmp_path):
     assert after == before
 
     # idempotent: a second pass is a no-op (already compact)
-    assert wh.compact("t", "day") == {}
+    assert compact_partitions(wh, "t", "day")["compacted_partitions"] == 0
 
 
 def test_expire_partitions_drops_old_days(spark, tmp_path):
@@ -357,6 +396,9 @@ def test_full_lifecycle_ingest_compact_expire_export(spark, wh, tmp_path):
     Proves the lifecycle ops compose on the real warehouse layout."""
     import os
 
+    from celestrak_tle_data_pipeline_spark.sinks.maintenance import (
+        compact_partitions,
+    )
     from celestrak_tle_data_pipeline_spark.sinks.warehouse import (
         export_sorted_shards,
     )
@@ -390,8 +432,18 @@ def test_full_lifecycle_ingest_compact_expire_export(spark, wh, tmp_path):
     ])
     assert n_before == 2  # one file per micro-batch append
 
-    done = wh.compact("fact_telemetry", "epoch_date", cluster_by=("norad_id",))
-    assert str(days[0].date()) in done
+    done = compact_partitions(
+        wh,
+        "fact_telemetry",
+        "epoch_date",
+        max_files_per_partition=1,
+        cluster_by=("norad_id",),
+    )
+    assert done["compacted_partitions"] == 1  # the 2-file oldest day only
+    assert len([
+        f for f in os.listdir(os.path.join(base, oldest))
+        if f.endswith(".parquet")
+    ]) == 1
     assert wh.read("fact_telemetry").count() == 4  # lossless
 
     dropped = wh.expire_partitions(

@@ -1,10 +1,12 @@
 """One way to do each thing: a static guard over the package.
 
 The landing front end has one ``tle`` data source, one stream reader
-and one ``binaryFile`` landing-stream reader; the plan banks share one
-copy of each private helper and lookup table; ``tools/query_profile.py``
-is the one plan-inspection tool. This test reads syntax trees (no
-Spark, so comments and docstrings never count) and fails when:
+and one ``binaryFile`` landing-stream reader; the plan banks and the
+sinks share one copy of each private helper, and the banks one copy of
+each lookup table; ``sinks/maintenance.py::compact_partitions`` is the
+one partition compaction; ``tools/query_profile.py`` is the one
+plan-inspection tool. This test reads syntax trees (no Spark, so
+comments and docstrings never count) and fails when:
 
 - two ``DataSource`` subclasses return the same ``name()``;
 - ``format("binaryFile")`` is called more than once under
@@ -12,12 +14,15 @@ Spark, so comments and docstrings never count) and fails when:
   ``streaming/incremental.py::landing_payload_stream``);
 - a deleted name comes back, as a module, definition, reference,
   import or format-name string;
-- two top-level ``_``-prefixed functions in ``plans/*.py``, or one of
-  them and a ``plans/common.py`` function, have identical bodies,
-  docstrings ignored (shared helpers live in ``plans/common.py``);
+- two top-level ``_``-prefixed functions in ``plans/*.py`` and
+  ``sinks/*.py``, or one of them and a ``plans/common.py`` function,
+  have identical bodies, docstrings ignored (shared plan helpers live
+  in ``plans/common.py``; plans import a sink's helper, never copy it);
 - two top-level assignments in ``plans/*.py``, ``common.py`` included,
   have identical values (empty literals aside: the banks' registries
   start as ``{}``);
+- ``ParquetWarehouse`` defines ``compact`` again (partition compaction
+  is ``maintenance.compact_partitions``);
 - one of the five plan and timing tools that ``query_profile.py``
   replaced comes back under ``tools/``, or a ``tools/`` module takes a
   standard-library name (scripts run from ``tools/`` would import it
@@ -156,6 +161,17 @@ def _duplicate_assignments(paths) -> list[str]:
     return [" = ".join(v) for v in values.values() if len(v) > 1]
 
 
+def _warehouse_compactions(paths) -> list[str]:
+    return [
+        f"{path.name}:{fn.lineno} ParquetWarehouse.compact"
+        for path, tree in _trees(paths)
+        for cls in ast.walk(tree)
+        if isinstance(cls, ast.ClassDef) and cls.name == "ParquetWarehouse"
+        for fn in cls.body
+        if isinstance(fn, ast.FunctionDef) and fn.name == "compact"
+    ]
+
+
 def _tool_clashes(paths) -> list[str]:
     return [
         f"{p.name}: "
@@ -178,9 +194,20 @@ def test_one_tle_landing_front_end():
 
 
 def test_plans_have_one_copy_of_each_helper():
-    dups = _duplicate_helpers(sorted((PKG / "plans").glob("*.py")))
-    assert not dups, "shared helpers live in plans/common.py: " + "; ".join(
-        dups
+    dups = _duplicate_helpers(
+        sorted((PKG / "plans").glob("*.py"))
+        + sorted((PKG / "sinks").glob("*.py"))
+    )
+    assert not dups, (
+        "shared helpers live in plans/common.py, or are imported from "
+        "the sink that defines them: " + "; ".join(dups)
+    )
+
+
+def test_one_partition_compaction():
+    found = _warehouse_compactions(sorted((PKG / "sinks").glob("*.py")))
+    assert not found, "compaction is maintenance.compact_partitions: " + (
+        "; ".join(found)
     )
 
 
@@ -251,6 +278,26 @@ def test_guard_sees_code_and_ignores_text(tmp_path):
     assert _duplicate_assignments([tables]) == []
     assert _duplicate_assignments([tables, common]) == [
         "tables.py::_T = common.py::T"
+    ]
+    sinks = tmp_path / "sinks.py"
+    sinks.write_text(
+        '"""ParquetWarehouse.compact in prose."""\n'
+        "class ParquetWarehouse:\n"
+        "    def expire_partitions(self):\n"
+        "        def compact():\n"
+        "            pass\n"
+        "class Other:\n"
+        "    def compact(self):\n"
+        "        pass\n"
+    )
+    assert _warehouse_compactions([sinks]) == []
+    sinks.write_text(
+        "class ParquetWarehouse(object):\n"
+        "    def compact(self, table):\n"
+        "        pass\n"
+    )
+    assert _warehouse_compactions([sinks]) == [
+        "sinks.py:2 ParquetWarehouse.compact"
     ]
     tools = [tmp_path / f"{n}.py" for n in ("check", "profile", "dump_plans")]
     assert _tool_clashes(tools) == [
