@@ -10,13 +10,20 @@ order across partitions is not a DataFrame concept, so we never rely on
 it. Each landed payload is ONE row (``wholetext`` read, a ``binaryFile``
 stream row, or an in-memory batch), and ``assemble_from_payloads``
 splits and re-groups its lines with higher-order array functions —
-``split`` → ``transform(sequence(...))`` → ``explode`` — entirely inside
-whole-stage codegen. No shuffle, no index, order is exact because it
-never leaves the row. Scales to any number of payload files; a single
-payload is bounded by fetch size (~1 MB for ~9k objects), far under any
-sane row limit. The ``tle`` Python data source
-(``sources/pysource.py``) applies the same rule in Python and is pinned
-row-identical to this one.
+``split`` → ``transform(sequence(...))`` → ``explode``. No shuffle, no
+index, order is exact because it never leaves the row. Scales to any
+number of payload files; a single payload is bounded by fetch size
+(~1 MB for ~9k objects), far under any sane row limit. The ``tle``
+Python data source (``sources/pysource.py``) applies the same rule in
+Python and is pinned row-identical to this one.
+
+The split is bound once per payload, as a column, before the
+``transform``. ``transform`` is not code-generated: Spark interprets
+its lambda once per element, and subexpression elimination does not
+reach inside a lambda. A lambda that closed over the split expression
+would re-strip and re-split the whole payload for every line it reads,
+so a payload of n lines would cost O(n²); over the bound column each
+triple costs three array lookups.
 """
 
 from __future__ import annotations
@@ -24,11 +31,19 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+# The code points Python's ``str.isspace()`` accepts, which is what the
+# reference's ``str.strip()`` removes. Java's ``\s`` is ASCII-only and
+# ``(?U)\s`` misses U+001C–001F, so the class is spelled out.
+_WS = (
+    "[\\x{9}-\\x{D}\\x{1C}-\\x{20}\\x{85}\\x{A0}\\x{1680}\\x{2000}-\\x{200A}"
+    "\\x{2028}\\x{2029}\\x{202F}\\x{205F}\\x{3000}]"
+)
+
 
 def _strip(col):
     """Python ``.strip()`` equivalent — F.trim only removes spaces, not
     newlines/tabs/CR, so a regex strip is needed for fidelity."""
-    return F.regexp_replace(col, r"^\s+|\s+$", "")
+    return F.regexp_replace(col, f"^{_WS}+|{_WS}+$", "")
 
 
 def assemble_from_payloads(payloads: DataFrame, payload_col: str = "payload") -> DataFrame:
@@ -38,7 +53,13 @@ def assemble_from_payloads(payloads: DataFrame, payload_col: str = "payload") ->
     per-line ``.strip()`` (script.py:119, 125-127). Trailing incomplete
     triples drop out via the sequence bound (script.py:124).
     """
-    lines = F.split(_strip(F.col(payload_col)), "\n")
+    other = [c for c in payloads.columns if c != payload_col]
+    # the split lines are bound under the payload's own name, so the
+    # lambda below reads a column, not the split (module docstring)
+    split = payloads.select(
+        *other, F.split(_strip(F.col(payload_col)), "\n").alias(payload_col)
+    )
+    lines = F.col(payload_col)
     n_triples = F.floor(F.size(lines) / 3).cast("int")
     triples = F.transform(
         F.sequence(F.lit(0), n_triples - 1),
@@ -48,9 +69,8 @@ def assemble_from_payloads(payloads: DataFrame, payload_col: str = "payload") ->
             _strip(F.element_at(lines, i * 3 + 3)).alias("line2"),
         ),
     )
-    other = [c for c in payloads.columns if c != payload_col]
     return (
-        payloads.where(F.size(lines) >= 3)
+        split.where(F.size(lines) >= 3)
         .select(*other, F.explode(triples).alias("t"))
         .select(*other, "t.*")
     )

@@ -291,3 +291,33 @@ def test_tle_source_hides_what_spark_file_sources_hide(spark, tmp_path):
     assert via_catalyst == ["SAT-1"]
     assert via_batch == via_catalyst
     assert sorted(r.sat_name_raw for r in streamed) == via_catalyst
+
+
+def test_assembly_strips_what_python_strip_strips(spark):
+    """The reference strips the payload and each line with
+    ``str.strip()`` (script.py:119, 125-127), which removes every
+    ``str.isspace()`` code point, not only ASCII whitespace. The
+    Catalyst assembly and its Python twin ``split_triples`` agree on a
+    payload carrying each such character at both payload ends, at both
+    ends of every line, and inside a line (where it is kept)."""
+    from celestrak_tle_data_pipeline_spark.operators.assembly import (
+        assemble_from_payloads,
+    )
+    from celestrak_tle_data_pipeline_spark.sources.pysource import (
+        split_triples,
+    )
+
+    spaces = [chr(c) for c in range(0x3001) if chr(c).isspace()]
+    assert len(spaces) == 29
+    payloads = [
+        (i, f"{c}{c}SAT-{i}{c}\n{c}L1{c}x{c}\nL2{c}{c}\n{c}B-{i}\nB1{c}\n{c}B2{c}{c}")
+        for i, c in enumerate(spaces)
+    ]
+    df = spark.createDataFrame(payloads, "id int, payload string")
+    got: dict[int, list] = {i: [] for i, _ in payloads}
+    for r in assemble_from_payloads(df).collect():
+        got[r.id].append((r.sat_name_raw, r.line1, r.line2))
+    for i, payload in payloads:
+        assert sorted(got[i]) == sorted(split_triples(payload)), (
+            f"U+{ord(spaces[i]):04X}"
+        )

@@ -628,6 +628,41 @@ def test_scheduled_cycle_ignores_dot_named_landing_debris(spark, tmp_path):
         assert [r.norad_id for r in rows] == [61001], table
 
 
+def test_scheduled_cycle_reference_size_payload_with_truncated_triple(
+    spark, tmp_path
+):
+    """One payload of 9,000 records, the reference's Starlink batch size
+    (BASELINE.md), ending in a truncated triple (a name line and a
+    cut-off line 1): one cycle appends exactly the 9,000 whole records
+    to both tables and nothing of the fragment; the same bytes landed
+    again under a new name append nothing."""
+    from celestrak_tle_data_pipeline_spark.orchestration import (
+        run_scheduled_cycle,
+    )
+
+    norads = range(20000, 29000)
+    payload = "".join(_payload(n, NOW) for n in norads) + (
+        "TRUNCATED-SAT\n1 29999U 20001A   26"
+    )
+    root = tmp_path / "rroot"
+    tle_land = root / "landing" / "tle"
+    tle_land.mkdir(parents=True)
+    (tle_land / "big1.txt").write_text(payload)
+    run_scheduled_cycle(spark, str(root))
+
+    wh = ParquetWarehouse(spark, str(root / "warehouse"))
+    dim = wh.read("dim_satellites").select("norad_id", "sat_name").collect()
+    fact = wh.read("fact_telemetry").select("norad_id").collect()
+    assert len(dim) == len(fact) == 9000
+    assert {r.norad_id for r in dim} == {r.norad_id for r in fact} == set(norads)
+    assert "TRUNCATED-SAT" not in {r.sat_name for r in dim}
+
+    (tle_land / "big2.txt").write_text(payload)
+    run_scheduled_cycle(spark, str(root))
+    assert wh.read("dim_satellites").count() == 9000
+    assert wh.read("fact_telemetry").count() == 9000
+
+
 def test_stream_static_join_labels_telemetry(spark, tmp_path):
     """Stream-static join: telemetry enriched against a static dim per
     micro-batch — matched rows labeled, unmatched survive with NULLs,

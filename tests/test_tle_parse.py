@@ -16,6 +16,7 @@ from celestrak_tle_data_pipeline_spark.functions.tle import (
 from celestrak_tle_data_pipeline_spark.operators.assembly import (
     assemble_from_payloads,
 )
+from tools.query_profile import _scala, iter_nodes
 
 GOLDEN = """STARLINK-1008
 1 44714U 19074B   26044.50000000  .00001234  00000+0  13717-3 0  9995
@@ -101,3 +102,61 @@ def test_trailing_incomplete_triple_dropped(spark):
     partial = GOLDEN + "TRAILING-NAME\n1 11111U 24001A   26123.00000000  .00000000  00000+0  00000+0 0  9999\n"
     payloads = spark.createDataFrame([(partial,)], "payload string")
     assert assemble_from_payloads(payloads).count() == 3
+
+
+def _kind(node) -> str:
+    return node.getClass().getSimpleName()
+
+
+def _depends_on_lambda(expr) -> bool:
+    return _kind(expr) == "NamedLambdaVariable" or any(
+        _depends_on_lambda(c) for c in _scala(expr.children())
+    )
+
+
+def _closed_over(expr) -> list:
+    """The maximal subtrees of a lambda body that no lambda variable
+    reaches: what the body re-evaluates for every element."""
+    if not _depends_on_lambda(expr):
+        return [expr]
+    return [s for c in _scala(expr.children()) for s in _closed_over(c)]
+
+
+def _lambda_bodies(plan) -> list:
+    bodies, nodes = [], [plan]
+    while nodes:
+        node = nodes.pop()
+        nodes.extend(_scala(node.children()))
+        exprs = list(_scala(node.expressions()))
+        while exprs:
+            e = exprs.pop()
+            if _kind(e) == "LambdaFunction":
+                bodies.append(e.function())
+            exprs.extend(_scala(e.children()))
+    return bodies
+
+
+def test_assembly_lambda_reads_only_bound_columns_and_never_shuffles(spark):
+    """Assembly stays linear and shuffle-free. ``transform`` interprets
+    its lambda once per element, so anything the body closes over other
+    than a column or a literal (the whole-payload ``split``, say) is
+    recomputed per triple: O(n²) in a payload's lines. The check reads
+    the optimized plan, not a timing."""
+    payloads = spark.createDataFrame([(GOLDEN, 7)], "payload string, k int")
+    df = parse_tle_triples(assemble_from_payloads(payloads))
+
+    bodies = _lambda_bodies(df._jdf.queryExecution().optimizedPlan())
+    assert bodies, "assembly no longer runs a lambda; update this guard"
+    captured = [s for b in bodies for s in _closed_over(b)]
+    recomputed = [
+        f"{_kind(s)}: {s.sql()}"
+        for s in captured
+        if _kind(s) not in ("Literal", "AttributeReference")
+    ]
+    assert not recomputed, recomputed
+
+    assert len(df.collect()) == 3
+    kinds = [
+        _kind(n) for n in iter_nodes(df._jdf.queryExecution().executedPlan())
+    ]
+    assert not [k for k in kinds if "Exchange" in k], kinds
