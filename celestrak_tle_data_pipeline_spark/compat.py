@@ -31,8 +31,10 @@ Everything degrades gracefully: with no vendored runtime present,
 
 from __future__ import annotations
 
+import contextlib
 import os
 import sys
+import threading
 import types
 
 GCLOUD_THIRD_PARTY = "/usr/lib/google-cloud-sdk/lib/third_party"
@@ -112,3 +114,37 @@ def worker_pythonpath() -> str:
     if existing:
         parts.append(existing)
     return os.pathsep.join(parts)
+
+
+_ENV_LOCK = threading.Lock()
+_env_users = 0
+_env_prior: str | None = None
+
+
+@contextlib.contextmanager
+def shim_on_workers(sc):
+    """Put ``worker_pythonpath()`` on ``sc.environment['PYTHONPATH']``
+    for the block: Python UDFs wrapped inside it launch their workers
+    with the shim, also on a session started without it.
+
+    A process has one SparkContext, whose ``environment`` every session
+    and thread shares, so the count of open blocks is per process: the
+    first block in saves the value it found and the last one out
+    restores it, whatever the interleaving.
+    """
+    global _env_users, _env_prior
+    with _ENV_LOCK:
+        if _env_users == 0:
+            _env_prior = sc.environment.get("PYTHONPATH")
+            sc.environment["PYTHONPATH"] = worker_pythonpath()
+        _env_users += 1
+    try:
+        yield
+    finally:
+        with _ENV_LOCK:
+            _env_users -= 1
+            if _env_users == 0:
+                if _env_prior is None:
+                    sc.environment.pop("PYTHONPATH", None)
+                else:
+                    sc.environment["PYTHONPATH"] = _env_prior

@@ -61,18 +61,18 @@ def assemble_from_payloads(payloads: DataFrame, payload_col: str = "payload") ->
     )
     lines = F.col(payload_col)
     n_triples = F.floor(F.size(lines) / 3).cast("int")
+    # NULL for a payload under one triple, so explode emits no row; a
+    # where() here would be pushed below the split and split it again
     triples = F.transform(
-        F.sequence(F.lit(0), n_triples - 1),
+        F.when(n_triples > 0, F.sequence(F.lit(0), n_triples - 1)),
         lambda i: F.struct(
             _strip(F.element_at(lines, i * 3 + 1)).alias("sat_name_raw"),
             _strip(F.element_at(lines, i * 3 + 2)).alias("line1"),
             _strip(F.element_at(lines, i * 3 + 3)).alias("line2"),
         ),
     )
-    return (
-        split.where(F.size(lines) >= 3)
-        .select(*other, F.explode(triples).alias("t"))
-        .select(*other, "t.*")
+    return split.select(*other, F.explode(triples).alias("t")).select(
+        *other, "t.*"
     )
 
 

@@ -19,7 +19,7 @@ duplicate-``tots`` oracles round 11 fixed) deferred to
 Every query lands here only after passing the driver-gate compare
 (``tools/check.py`` canon/hash) at sf0.001 AND sf0.01 via
 ``tests/test_bank_r11.py``, plus the sf0.1 sweep through
-``tools/bank_check.py --module bank_r11`` (the round-8 lesson: integer
+``tools/check.py --module bank_r11`` (the round-8 lesson: integer
 overflow in power sums only shows at sf0.1+).
 
 Topic sweep (genuinely new ground vs the 377 live names):

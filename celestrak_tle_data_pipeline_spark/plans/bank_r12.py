@@ -17,7 +17,7 @@ round 9 flipped ``next_window`` and round 11 flipped ``bank_r11``.
 Every query lands here only after passing the driver-gate compare
 (``tools/check.py`` canon/hash) at sf0.001 AND sf0.01 via
 ``tests/test_bank_r12.py``, plus the sf0.1 sweep through
-``tools/bank_check.py --module bank_r12``.
+``tools/check.py --module bank_r12``.
 
 Determinism and scale disciplines are inherited unchanged from
 ``bank_r11`` (see that module's docstring): exact integer/DECIMAL

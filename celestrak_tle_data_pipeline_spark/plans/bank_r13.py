@@ -2,7 +2,7 @@
 round 12 under the same no-new-debt discipline every flipped bank
 (next_window, bank_r11, bank_r12) went through: a stage-only decorator
 pre-flip, the two-SF driver-gate mirror in ``tests/test_bank_r13.py``,
-the sf0.1 sweep via ``tools/bank_check.py --module bank_r13``, the
+the sf0.1 sweep via ``tools/check.py --module bank_r13``, the
 single-partition plan audit, and the Spark-schema-vs-DuckDB dtype-family
 sweep (``tests/test_oracle_dtypes.py`` picks this module up by name) —
 the r11 ``kendalls_w`` lesson says dtype families are part of the gate.

@@ -2,7 +2,7 @@
 rounds 12-13 under the same no-new-debt discipline every flipped bank
 (next_window, bank_r11..r13) went through: a stage-only decorator
 pre-flip, the two-SF gate mirror in ``tests/test_bank_r14.py``, sf0.1
-sweeps via ``tools/bank_check.py --module bank_r14``, the dtype-family
+sweeps via ``tools/check.py --module bank_r14``, the dtype-family
 sweep, the authoring-time 64x probe octave (SCALING.md), and
 plan-audit notes merged into ``tools/audit_single_partition.py`` at
 flip time.

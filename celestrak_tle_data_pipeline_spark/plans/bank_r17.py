@@ -2,7 +2,7 @@
 rounds 13-16 under the same no-new-debt discipline every flipped bank
 (next_window, bank_r11..r16) went through: a stage-only decorator
 pre-flip, the two-SF gate mirror in ``tests/test_bank_r17.py``, sf0.1
-sweeps via ``tools/bank_check.py --module bank_r17``, the dtype-family
+sweeps via ``tools/check.py --module bank_r17``, the dtype-family
 sweep, the authoring-time 64x probe octave (SCALING_PROBES.json /
 SCALING.md), and plan-audit notes merged into the effective audit
 allowlist automatically at flip time

@@ -2,7 +2,7 @@
 registry — the generation behind ``bank_r18`` (round 18's flip), under
 the identical no-new-debt discipline: stage-only decorator, two-SF gate
 mirror in ``tests/test_bank_r19.py``, sf0.1 sweeps via
-``tools/bank_check.py --module bank_r19``, the dtype-family sweep
+``tools/check.py --module bank_r19``, the dtype-family sweep
 (``tests/test_oracle_dtypes.py`` auto-discovers bank_r13..r20),
 plan-audit notes pre-adjudicated at authoring time, and the HARD
 authoring-time 64x probe gate (``SCALING_PROBES.json`` +

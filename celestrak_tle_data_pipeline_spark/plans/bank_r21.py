@@ -5,7 +5,7 @@ generation's bank (the split_conformal/dersimonian precedent), so the
 round-20 flip needs a bank_r21 to draw from. Same no-new-debt
 discipline as every generation: stage-only decorator, two-SF gate
 mirror in ``tests/test_bank_r21.py``, sf0.1 sweeps via
-``tools/bank_check.py --module bank_r21``, the dtype-family sweep
+``tools/check.py --module bank_r21``, the dtype-family sweep
 (auto-discovers bank_r13..r21), plan-audit notes pre-adjudicated at
 authoring time, and the HARD authoring-time 64x probe gate
 (``SCALING_PROBES.json`` + ``tests/test_flip_readiness.py``).

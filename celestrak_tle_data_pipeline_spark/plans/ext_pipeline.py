@@ -15,6 +15,8 @@ split uses a transparent multiplicative (Knuth/Fibonacci) hash in
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -341,8 +343,9 @@ def data_quality_audit(spark, sf_dir):
     non-positive-amount, future-date, and referential-integrity
     (orphan o_custkey vs the customer dim) violation counts, one row
     per rule — the pre-load contract gate a pipeline runs before
-    publishing a batch (the engine's QualityGateError generalized from
-    row-count to rule-based).
+    publishing a batch (the engine's batch min-row gate,
+    ``pipeline.ingest_tle_payloads``, generalized from row-count to
+    rule-based).
 
     Plan: truly ONE scan of orders — the referential rule rides the
     same pass as the scalar rules via a broadcast LEFT join against
@@ -1734,6 +1737,33 @@ def mixture_interleave_schedule(spark, sf_dir):
     )
 
 
+@contextmanager
+def _rocksdb_stream_session(spark):
+    """A new session of ``spark``'s context for one build-time stream,
+    with the RocksDB state-store provider set on it alone and the
+    protobuf shim on the workers' PYTHONPATH for the block.
+
+    The caller's session conf is never touched, so concurrent builds
+    (the registry sweeps build in threads) cannot leave the provider
+    set on it; ``compat.shim_on_workers`` restores the shared worker
+    env however the builds interleave."""
+    from .. import compat
+
+    if not compat.ensure_protobuf():
+        raise RuntimeError(
+            "transformWithStateInPandas needs a protobuf runtime "
+            "(none installed and no vendored gcloud runtime found)"
+        )
+    session = spark.newSession()
+    session.conf.set(
+        "spark.sql.streaming.stateStore.providerClass",
+        "org.apache.spark.sql.execution.streaming.state."
+        "RocksDBStateStoreProvider",
+    )
+    with compat.shim_on_workers(spark.sparkContext):
+        yield session
+
+
 # --------------------------------------------------------------------------
 # streaming sessionization under the VALUE gate (timers vs SQL oracle)
 # --------------------------------------------------------------------------
@@ -1796,7 +1826,9 @@ def streaming_sessions_finalized(spark, sf_dir):
     pyspark), and (b) the protobuf runtime the TWS handshake needs is
     applied at build time: ``compat.ensure_protobuf()`` on the driver
     plus ``sc.environment['PYTHONPATH']`` for the workers (propagates
-    to worker launch env without touching session creation).
+    to worker launch env without touching session creation). The
+    stream runs on ``_rocksdb_stream_session``, so the caller's session
+    is left as it was found.
 
     Scale shape is the operator's own: one user-keyed shuffle into the
     stateful operator, 4 int64s state + one timer per live user; the
@@ -1806,20 +1838,6 @@ def streaming_sessions_finalized(spark, sf_dir):
     import os
     import shutil
     import tempfile
-
-    from .. import compat
-
-    if not compat.ensure_protobuf():
-        raise RuntimeError(
-            "transformWithStateInPandas needs a protobuf runtime "
-            "(none installed and no vendored gcloud runtime found)"
-        )
-    # session-global worker-env mutation: restored in the finally below,
-    # symmetrically with the state-store provider conf — a registry
-    # query must leave the session exactly as it found it
-    env = spark.sparkContext.environment
-    prior_pp = env.get("PYTHONPATH")
-    env["PYTHONPATH"] = compat.worker_pythonpath()
 
     from ..streaming.stateful_v2 import (
         SESSION_OUTPUT_SCHEMA,
@@ -1839,17 +1857,9 @@ def streaming_sessions_finalized(spark, sf_dir):
         os.path.join(landing, "slice_0")
     )
 
-    prior = spark.conf.get(
-        "spark.sql.streaming.stateStore.providerClass", None
-    )
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
     out_rows: list = []
-    try:
-        stream = spark.readStream.schema(
+    with _rocksdb_stream_session(spark) as session:
+        stream = session.readStream.schema(
             "user_id long, ts timestamp, value double"
         ).parquet(os.path.join(landing, "slice_*"))
         q = (
@@ -1862,17 +1872,6 @@ def streaming_sessions_finalized(spark, sf_dir):
             .start()
         )
         q.awaitTermination()
-    finally:
-        if prior is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", prior
-            )
-        if prior_pp is None:
-            env.pop("PYTHONPATH", None)
-        else:
-            env["PYTHONPATH"] = prior_pp
     return spark.createDataFrame(out_rows, SESSION_OUTPUT_SCHEMA)
 
 
@@ -1918,17 +1917,6 @@ def streaming_trailing_median(spark, sf_dir):
     import shutil
     import tempfile
 
-    from .. import compat
-
-    if not compat.ensure_protobuf():
-        raise RuntimeError(
-            "transformWithStateInPandas needs a protobuf runtime"
-        )
-    # restored in the finally below (no session mutation may survive)
-    env = spark.sparkContext.environment
-    prior_pp = env.get("PYTHONPATH")
-    env["PYTHONPATH"] = compat.worker_pythonpath()
-
     from ..streaming.stateful_v2 import (
         MEDIAN_OUTPUT_SCHEMA,
         trailing_median_v2,
@@ -1947,17 +1935,9 @@ def streaming_trailing_median(spark, sf_dir):
         os.path.join(landing, "slice_0")
     )
 
-    prior = spark.conf.get(
-        "spark.sql.streaming.stateStore.providerClass", None
-    )
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
     out_rows: list = []
-    try:
-        stream = spark.readStream.schema(
+    with _rocksdb_stream_session(spark) as session:
+        stream = session.readStream.schema(
             "user_id long, ts timestamp, event_id long, value double"
         ).parquet(os.path.join(landing, "slice_*"))
         q = (
@@ -1970,17 +1950,6 @@ def streaming_trailing_median(spark, sf_dir):
             .start()
         )
         q.awaitTermination()
-    finally:
-        if prior is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", prior
-            )
-        if prior_pp is None:
-            env.pop("PYTHONPATH", None)
-        else:
-            env["PYTHONPATH"] = prior_pp
     return spark.createDataFrame(out_rows, MEDIAN_OUTPUT_SCHEMA)
 
 

@@ -25,12 +25,6 @@ from pyspark.sql import functions as F
 from ..operators.dedup import anti_join_new, distinct_on_key
 
 
-class QualityGateError(RuntimeError):
-    """Batch failed the min-row quality gate (README.md:40 — declared
-    in the reference README, absent from its code; implemented here as
-    declared capability, SURVEY.md §0)."""
-
-
 class ParquetWarehouse:
     """Tiny table manager over a directory of parquet tables.
 
@@ -145,9 +139,8 @@ class ParquetWarehouse:
         table: str,
         df: DataFrame,
         partition_by: tuple[str, ...] = (),
-        min_rows: int = 0,
     ) -> int:
-        """Append with empty-batch guard + min-row quality gate.
+        """Append with an empty-batch guard.
 
         Returns rows written. The batch DAG executes ONCE: the row
         count piggybacks on the write via ``Observation`` (an
@@ -155,35 +148,9 @@ class ParquetWarehouse:
         ``count()`` that would re-run the upstream anti-join/parse at
         100 TB. The empty guard is a limit-1 probe (cheap short-circuit,
         the reference's ``if not df.empty``, script.py:91/146/169).
-
-        A positive ``min_rows`` gate must veto the write *before* it
-        happens (README.md:40 semantics), which forces pre-counting —
-        that path pins the batch with ``persist()`` so the DAG still
-        runs once (count materializes the cache, the write reads it).
+        The batch min-row gate is ``pipeline.ingest_tle_payloads``'.
         """
-        from pyspark import StorageLevel
         from pyspark.sql import Observation
-
-        if min_rows > 0:
-            df = df.persist(StorageLevel.MEMORY_AND_DISK)
-            try:
-                n = df.count()
-                # An empty batch is "nothing fetched" — a no-op, as in the
-                # reference's `if not df.empty` guard — not a quality
-                # failure; the gate vetoes only non-empty-but-thin batches.
-                if n == 0:
-                    return 0
-                if n < min_rows:
-                    raise QualityGateError(
-                        f"batch for {table} has {n} rows < min_rows={min_rows}"
-                    )
-                w = df.write.mode("append")
-                if partition_by:
-                    w = w.partitionBy(*partition_by)
-                w.parquet(self.path(table))
-                return n
-            finally:
-                df.unpersist()
 
         if df.isEmpty():
             return 0

@@ -19,36 +19,12 @@ round-16 flip.
 
 from __future__ import annotations
 
-import os
-import sys
-from pathlib import Path
-
-import duckdb
 import pytest
 
-sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "tools"))
-
-from check import TABLES, canon  # noqa: E402
-
-from celestrak_tle_data_pipeline_spark.plans import bank_r16  # noqa: E402
+from celestrak_tle_data_pipeline_spark.plans import bank_r16
+from tools.check import compare
 
 SFS = ("/root/testdata/sf0.001", "/root/testdata/sf0.01")
-
-
-def _oracle_rows(sf_dir, sql):
-    con = duckdb.connect()
-    for tname in TABLES:
-        path = os.path.join(sf_dir, f"{tname}.parquet")
-        if os.path.exists(path):
-            con.execute(
-                f"CREATE VIEW {tname} AS "
-                f"SELECT * FROM read_parquet('{path}')"
-            )
-    res = con.execute(sql)
-    cols = [d[0] for d in res.description]
-    rows = res.fetchall()
-    con.close()
-    return cols, rows
 
 
 def test_bank_is_fully_oracle_paired():
@@ -103,12 +79,7 @@ def test_bank_outputs_are_scalar(spark):
 @pytest.mark.parametrize("name", sorted(bank_r16.BANK_QUERIES))
 @pytest.mark.parametrize("sf_dir", SFS)
 def test_bank_query_matches_oracle(spark, name, sf_dir):
-    df = bank_r16.BANK_QUERIES[name](spark, sf_dir)
-    cols = df.columns
-    rows = [tuple(r) for r in df.collect()]
-    ocols, orows = _oracle_rows(sf_dir, bank_r16.BANK_ORACLES[name])
-    assert sorted(cols) == sorted(ocols), f"{name}: column mismatch"
-    assert len(rows) == len(orows), f"{name}: row count mismatch"
-    assert canon(rows, cols) == canon(orows, ocols), (
-        f"{name}: value mismatch at {sf_dir}"
+    problem = compare(
+        spark, bank_r16.BANK_QUERIES[name], bank_r16.BANK_ORACLES[name], sf_dir
     )
+    assert problem is None, f"{name} at {sf_dir}: {problem}"

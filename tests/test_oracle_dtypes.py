@@ -17,29 +17,9 @@ makes BOTH this sweep and ``tests/test_bank_r11.py`` fail.
 
 from __future__ import annotations
 
-import os
-import sys
-from pathlib import Path
-
-import duckdb
-
-sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "tools"))
-
-from audit_oracle_types import cross_check_families  # noqa: E402
-from check import TABLES  # noqa: E402
-
-from conftest import SF_DIR  # noqa: E402
-
-
-def _connect(sf_dir: str) -> duckdb.DuckDBPyConnection:
-    con = duckdb.connect()
-    for tname in TABLES:
-        path = os.path.join(sf_dir, f"{tname}.parquet")
-        if os.path.exists(path):
-            con.execute(
-                f"CREATE VIEW {tname} AS SELECT * FROM read_parquet('{path}')"
-            )
-    return con
+from conftest import SF_DIR
+from tools.audit_oracle_types import cross_check_families
+from tools.check import connect
 
 
 def _sweep(spark, queries, oracles) -> list[str]:
@@ -55,8 +35,7 @@ def _sweep(spark, queries, oracles) -> list[str]:
     names = list(oracles)
 
     def check(name: str) -> list[str]:
-        con = _connect(SF_DIR)
-        try:
+        with connect(SF_DIR) as con:
             rel = con.sql(oracles[name])
             schema = queries[name](spark, SF_DIR).schema
             return [
@@ -65,8 +44,6 @@ def _sweep(spark, queries, oracles) -> list[str]:
                     schema, rel.columns, rel.types
                 )
             ]
-        finally:
-            con.close()
 
     clashes: list[str] = []
     with ThreadPoolExecutor(max_workers=8) as pool:

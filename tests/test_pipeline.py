@@ -16,10 +16,7 @@ from celestrak_tle_data_pipeline_spark.pipeline import (
     ingest_tle_payloads,
     ingest_weather_payload,
 )
-from celestrak_tle_data_pipeline_spark.sinks.warehouse import (
-    ParquetWarehouse,
-    QualityGateError,
-)
+from celestrak_tle_data_pipeline_spark.sinks.warehouse import ParquetWarehouse
 
 NOW = dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
 

@@ -5,8 +5,9 @@ and one ``binaryFile`` landing-stream reader; the plan banks and the
 sinks share one copy of each private helper, and the banks one copy of
 each lookup table; ``sinks/maintenance.py::compact_partitions`` is the
 one partition compaction; ``tools/query_profile.py`` is the one
-plan-inspection tool. This test reads syntax trees (no Spark, so
-comments and docstrings never count) and fails when:
+plan-inspection tool; ``tools/check.py`` is the one oracle compare.
+This test reads syntax trees (no Spark, so comments and docstrings
+never count) and fails when:
 
 - two ``DataSource`` subclasses return the same ``name()``;
 - ``format("binaryFile")`` is called more than once under
@@ -24,9 +25,15 @@ comments and docstrings never count) and fails when:
 - ``ParquetWarehouse`` defines ``compact`` again (partition compaction
   is ``maintenance.compact_partitions``);
 - one of the five plan and timing tools that ``query_profile.py``
-  replaced comes back under ``tools/``, or a ``tools/`` module takes a
+  replaced, or one of the two bank compares that ``check.py`` replaced,
+  comes back under ``tools/``, or a ``tools/`` module takes a
   standard-library name (scripts run from ``tools/`` would import it
-  in place of the library's).
+  in place of the library's);
+- a file under ``tools/`` or ``tests/`` other than ``tools/check.py``
+  imports ``duckdb`` (oracles open through ``check.connect``);
+- a literal holding exactly the ten driver-table names appears outside
+  ``schemas.py`` (``schemas.DRIVER_TABLES`` is the list; ``bench.py``
+  and ``perfbench/`` keep their own code and are not scanned).
 """
 
 from __future__ import annotations
@@ -35,6 +42,8 @@ import ast
 import sys
 from collections import defaultdict
 from pathlib import Path
+
+from celestrak_tle_data_pipeline_spark.schemas import DRIVER_TABLES
 
 ROOT = Path(__file__).resolve().parents[1]
 PKG = ROOT / "celestrak_tle_data_pipeline_spark"
@@ -49,11 +58,13 @@ DELETED = {
     "_phi_sql_r19",
 }
 DELETED_TOOLS = {
-    "isolate_bench",
-    "isolate_ledger",
-    "runtime_plan",
-    "audit_plans",
-    "dump_plans",
+    "isolate_bench": "query_profile.py",
+    "isolate_ledger": "query_profile.py",
+    "runtime_plan": "query_profile.py",
+    "audit_plans": "query_profile.py",
+    "dump_plans": "query_profile.py",
+    "bank_check": "check.py",
+    "bank_dev": "check.py",
 }
 
 
@@ -175,11 +186,45 @@ def _warehouse_compactions(paths) -> list[str]:
 def _tool_clashes(paths) -> list[str]:
     return [
         f"{p.name}: "
-        + ("replaced by query_profile.py" if p.stem in DELETED_TOOLS
+        + (f"replaced by {DELETED_TOOLS[p.stem]}" if p.stem in DELETED_TOOLS
            else "shadows the standard library")
         for p in paths
         if p.stem in DELETED_TOOLS or p.stem in sys.stdlib_module_names
     ]
+
+
+def _duckdb_imports(paths) -> list[str]:
+    return [
+        f"{path.name}:{node.lineno}"
+        for path, tree in _trees(paths)
+        for node in ast.walk(tree)
+        if (
+            isinstance(node, ast.Import)
+            and any(a.name.split(".")[0] == "duckdb" for a in node.names)
+        )
+        or (
+            isinstance(node, ast.ImportFrom)
+            and (node.module or "").split(".")[0] == "duckdb"
+        )
+    ]
+
+
+def _driver_table_copies(paths) -> list[str]:
+    out = []
+    for path, tree in _trees(paths):
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Constant) and isinstance(node.value, str):
+                words = node.value.split()
+            elif isinstance(node, (ast.Tuple, ast.List, ast.Set)) and all(
+                isinstance(e, ast.Constant) and isinstance(e.value, str)
+                for e in node.elts
+            ):
+                words = [e.value for e in node.elts]
+            else:
+                continue
+            if set(words) == set(DRIVER_TABLES):
+                out.append((path.name, node.lineno))
+    return [f"{name}:{line}" for name, line in sorted(out)]
 
 
 def test_one_tle_landing_front_end():
@@ -221,6 +266,27 @@ def test_plans_have_one_copy_of_each_lookup_table():
 def test_one_plan_inspection_tool():
     clashes = _tool_clashes(sorted((ROOT / "tools").glob("*.py")))
     assert not clashes, clashes
+
+
+def test_one_oracle_compare():
+    scripts = sorted((ROOT / "tools").rglob("*.py")) + sorted(
+        (ROOT / "tests").rglob("*.py")
+    )
+    imports = _duckdb_imports(
+        [p for p in scripts if p != ROOT / "tools" / "check.py"]
+    )
+    assert not imports, "oracles open through tools/check.py: " + (
+        "; ".join(imports)
+    )
+    skipped = {ROOT / "bench.py", PKG / "schemas.py"}
+    copies = _driver_table_copies(
+        p
+        for p in sorted(ROOT.rglob("*.py"))
+        if p not in skipped and "perfbench" not in p.parts
+    )
+    assert not copies, "the table list is schemas.DRIVER_TABLES: " + (
+        "; ".join(copies)
+    )
 
 
 def test_guard_sees_code_and_ignores_text(tmp_path):
@@ -299,8 +365,32 @@ def test_guard_sees_code_and_ignores_text(tmp_path):
     assert _warehouse_compactions([sinks]) == [
         "sinks.py:2 ParquetWarehouse.compact"
     ]
-    tools = [tmp_path / f"{n}.py" for n in ("check", "profile", "dump_plans")]
+    tools = [
+        tmp_path / f"{n}.py"
+        for n in ("check", "profile", "dump_plans", "bank_dev")
+    ]
     assert _tool_clashes(tools) == [
         "profile.py: shadows the standard library",
         "dump_plans.py: replaced by query_profile.py",
+        "bank_dev.py: replaced by check.py",
     ]
+    oracle = tmp_path / "oracle.py"
+    oracle.write_text(
+        '"""import duckdb; region nation customer supplier part orders\n'
+        'lineitem events documents embeddings"""\n'
+        "# import duckdb\n"
+        "import duckdb_extras\n"
+        "T = ('region', 'nation', 'customer')\n"
+    )
+    assert _duckdb_imports([oracle]) == []
+    assert _driver_table_copies([oracle]) == []
+    oracle.write_text(
+        "import duckdb\n"
+        "from duckdb.typing import BIGINT\n"
+        "A = ('region nation customer supplier part orders lineitem '\n"
+        "     'events documents embeddings').split()\n"
+        "B = ['embeddings', 'documents', 'events', 'lineitem', 'orders',\n"
+        "     'part', 'supplier', 'customer', 'nation', 'region']\n"
+    )
+    assert _duckdb_imports([oracle]) == ["oracle.py:1", "oracle.py:2"]
+    assert _driver_table_copies([oracle]) == ["oracle.py:3", "oracle.py:5"]

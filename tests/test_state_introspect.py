@@ -494,3 +494,109 @@ def test_tws_under_changelog_checkpointing(spark, tmp_path, rocksdb):
     # offline read still works over changelog-built checkpoints
     ring = read_state(spark, ckpt, state_var="ring")
     assert ring.count() > 0
+
+
+def test_interleaved_rocksdb_builds_leave_the_session_as_found(
+    spark, monkeypatch
+):
+    """The two registry names that run a RocksDB stream at build time
+    (``streaming_sessions_finalized``, ``streaming_trailing_median``),
+    built in two threads so that the second starts after the first has
+    set up its stream and ends after the first has finished, leave the
+    caller's state-store provider conf and the workers' PYTHONPATH as
+    they found them. A build that saved and restored the caller's conf
+    put RocksDB back on the shared session here, which later stateful
+    tests then checkpointed under. Events order the builds; no sleeps."""
+    import threading
+
+    from conftest import HAVE_PROTOBUF
+
+    from celestrak_tle_data_pipeline_spark import plans
+    from celestrak_tle_data_pipeline_spark.streaming import stateful_v2
+
+    if not HAVE_PROTOBUF:
+        pytest.skip("transformWithStateInPandas needs a protobuf runtime")
+    key = "spark.sql.streaming.stateStore.providerClass"
+    env = spark.sparkContext.environment
+    monkeypatch.delitem(env, "PYTHONPATH", raising=False)
+    before = (spark.conf.get(key, None), env.get("PYTHONPATH"))
+
+    a_in, b_in, a_done = (threading.Event() for _ in range(3))
+
+    def gated(fn, arrive, wait_for):
+        def build(*args, **kw):
+            arrive.set()
+            assert wait_for.wait(timeout=300)
+            return fn(*args, **kw)
+
+        return build
+
+    # A holds inside its stream setup until B is inside its own; B then
+    # holds until A has finished and restored whatever it changed
+    monkeypatch.setattr(
+        stateful_v2,
+        "session_finalizer_v2",
+        gated(stateful_v2.session_finalizer_v2, a_in, b_in),
+    )
+    monkeypatch.setattr(
+        stateful_v2,
+        "trailing_median_v2",
+        gated(stateful_v2.trailing_median_v2, b_in, a_done),
+    )
+    qs, errors = plans.all_queries(), []
+
+    def run(name, *events):
+        try:
+            qs[name](spark, SF_DIR)
+        except Exception as exc:  # noqa: BLE001 — reported below
+            errors.append(f"{name}: {exc}")
+        finally:
+            for ev in events:  # never leave the other build waiting
+                ev.set()
+
+    a = threading.Thread(
+        target=run, args=("streaming_sessions_finalized", a_in, a_done)
+    )
+    b = threading.Thread(target=run, args=("streaming_trailing_median", b_in))
+    a.start()
+    assert a_in.wait(timeout=300)
+    b.start()
+    a.join(timeout=600)
+    b.join(timeout=600)
+    assert not a.is_alive() and not b.is_alive()
+    assert not errors, errors
+    assert (spark.conf.get(key, None), env.get("PYTHONPATH")) == before
+
+
+def test_shim_on_workers_restores_the_env_under_thread_churn():
+    """``compat.shim_on_workers`` counts overlapping blocks: 16 threads
+    entering and leaving it 200 times each, with a shortened switch
+    interval, leave the shared env as they found it, and every thread
+    sees the shim path inside its block."""
+    import sys
+    import threading
+    import types
+
+    from celestrak_tle_data_pipeline_spark import compat
+
+    sc = types.SimpleNamespace(environment={"PYTHONPATH": "/before"})
+    shim, seen = compat.worker_pythonpath(), []
+
+    def churn():
+        for _ in range(200):
+            with compat.shim_on_workers(sc):
+                seen.append(sc.environment["PYTHONPATH"] == shim)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=churn) for _ in range(16)]
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join(timeout=60)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(th.is_alive() for th in threads)
+    assert len(seen) == 3200 and all(seen)
+    assert sc.environment == {"PYTHONPATH": "/before"}

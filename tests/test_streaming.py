@@ -663,6 +663,59 @@ def test_scheduled_cycle_reference_size_payload_with_truncated_triple(
     assert wh.read("fact_telemetry").count() == 9000
 
 
+def test_scheduled_cycle_crash_between_dim_and_fact_appends_converges(
+    spark, tmp_path, monkeypatch
+):
+    """A cycle that dies after ``dim_satellites`` is written and before
+    the fact append (the sink's fact append raises once) leaves a
+    warehouse that the next, unpatched cycle brings to what one clean
+    cycle over the same landing files writes: equal ``table_digest`` of
+    the dim, and of the fact without the per-run ``fetched_at_utc``."""
+    from celestrak_tle_data_pipeline_spark.orchestration import (
+        run_scheduled_cycle,
+    )
+    from celestrak_tle_data_pipeline_spark.sinks.maintenance import (
+        table_digest,
+    )
+    from celestrak_tle_data_pipeline_spark.streaming import incremental
+
+    def land(root):
+        tle_land = root / "landing" / "tle"
+        tle_land.mkdir(parents=True)
+        for i, first in enumerate((62000, 62003)):  # 3 shared, 8 in all
+            (tle_land / f"t{i}.txt").write_text(
+                "".join(_payload(n, NOW) for n in range(first, first + 5))
+            )
+        return str(root)
+
+    def digests(root):
+        wh = ParquetWarehouse(spark, os.path.join(root, "warehouse"))
+        fact = wh.read("fact_telemetry")
+        return (
+            table_digest(wh.read("dim_satellites")),
+            table_digest(fact.drop("fetched_at_utc")),
+        )
+
+    crashed, clean = land(tmp_path / "crashed"), land(tmp_path / "clean")
+    append_fact = incremental.append_new_telemetry
+
+    def crash(*args, **kw):
+        monkeypatch.setattr(incremental, "append_new_telemetry", append_fact)
+        raise RuntimeError("crash between the dim and fact appends")
+
+    monkeypatch.setattr(incremental, "append_new_telemetry", crash)
+    with pytest.raises(Exception, match="crash between"):
+        run_scheduled_cycle(spark, crashed)
+    wh = ParquetWarehouse(spark, os.path.join(crashed, "warehouse"))
+    assert wh.read("dim_satellites").count() == 8
+    assert not wh.exists("fact_telemetry")
+
+    run_scheduled_cycle(spark, crashed)
+    run_scheduled_cycle(spark, clean)
+    assert digests(crashed) == digests(clean)
+    assert digests(clean)[1][0] == 8
+
+
 def test_stream_static_join_labels_telemetry(spark, tmp_path):
     """Stream-static join: telemetry enriched against a static dim per
     micro-batch — matched rows labeled, unmatched survive with NULLs,

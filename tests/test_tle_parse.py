@@ -160,3 +160,25 @@ def test_assembly_lambda_reads_only_bound_columns_and_never_shuffles(spark):
         _kind(n) for n in iter_nodes(df._jdf.queryExecution().executedPlan())
     ]
     assert not [k for k in kinds if "Exchange" in k], kinds
+
+
+def test_assembly_strips_and_splits_each_payload_once(spark):
+    """The optimized plan splits the payload once and filters nothing:
+    a payload under one triple gets a NULL sequence, which ``explode``
+    drops. A ``size(lines) >= 3`` Filter would be pushed below the
+    projection that binds the split, and evaluate the split again."""
+    payloads = spark.createDataFrame([(GOLDEN, 7)], "payload string, k int")
+    plan = assemble_from_payloads(payloads)._jdf.queryExecution()
+    nodes, exprs, kinds = [plan.optimizedPlan()], [], []
+    while nodes:
+        node = nodes.pop()
+        kinds.append(_kind(node))
+        nodes.extend(_scala(node.children()))
+        exprs.extend(_scala(node.expressions()))
+    splits = 0
+    while exprs:
+        e = exprs.pop()
+        splits += _kind(e) == "StringSplit"
+        exprs.extend(_scala(e.children()))
+    assert splits == 1, plan.optimizedPlan().toString()
+    assert "Filter" not in kinds, kinds

@@ -30,11 +30,6 @@ sys.path.insert(0, ROOT)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_AUDIT_SF", "/root/testdata/sf0.001")
 
-TABLES = (
-    "region nation customer supplier part orders lineitem events "
-    "documents embeddings"
-).split()
-
 # Type families for the Spark-schema vs DuckDB-oracle cross-check. An
 # int-family column on one side paired with a float-family column on the
 # other renders differently under the driver's pandas canonicalizer even
@@ -101,7 +96,7 @@ SAFE = {
 
 
 def main(argv):
-    import duckdb
+    from check import connect
 
     cross = "--cross" in argv
     argv = [a for a in argv if a != "--cross"]
@@ -132,12 +127,7 @@ def main(argv):
 
         spark = get_spark(app_name="audit_oracle_types")
 
-    con = duckdb.connect()
-    for tname in TABLES:
-        path = os.path.join(SF_DIR, f"{tname}.parquet")
-        con.execute(
-            f"CREATE VIEW {tname} AS SELECT * FROM read_parquet('{path}')"
-        )
+    con = connect(SF_DIR)
 
     flagged = 0
     for name in names:

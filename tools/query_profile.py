@@ -225,13 +225,13 @@ def main(argv):
 
     from bench import SF_DIR
     from celestrak_tle_data_pipeline_spark import plans
+    from celestrak_tle_data_pipeline_spark.schemas import DRIVER_TABLES
     from celestrak_tle_data_pipeline_spark.session import get_spark
     from celestrak_tle_data_pipeline_spark.sources.tables import load_table
 
     spark = get_spark(app_name="profile")
     # first-touch listing and footer reads stay out of the first cold_s
-    for table in ("region nation customer supplier part orders lineitem "
-                  "events documents embeddings").split():
+    for table in DRIVER_TABLES:
         load_table(spark, SF_DIR, table).count()
     qs = plans.all_queries()
     out, t_start, load_start = {}, time.time(), os.getloadavg()[0]
